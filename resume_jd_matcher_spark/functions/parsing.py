@@ -1,5 +1,5 @@
 """Prompt assembly and structured-output parsing (SURVEY.md §2.B
-T2/T3/T4/T5) — the reference's LLM I/O contract as native expressions.
+T2/T3/T4) — the reference's LLM I/O contract as native expressions.
 
 Reference sites: prompt assembly ``rag_model.py:67-79`` (sections →
 ``[name]\\nbody`` blocks + bullet name list + str.format); score parse
@@ -9,6 +9,8 @@ int(), any failure degrading the whole dict to {}); templates
 """
 
 from __future__ import annotations
+
+import string
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -60,6 +62,14 @@ JOB DESCRIPTION:
 \"\"\"{jd_text}\"\"\"
 """
 
+# The template split once at its placeholders, exactly as str.format
+# parses it: [(literal, field or None), ...]. Assembly concatenates the
+# pieces, so a placeholder inside user text is never expanded again.
+PROMPT_PARTS: list[tuple[str, str | None]] = [
+    (literal, field)
+    for literal, field, _, _ in string.Formatter().parse(SCORE_ALL_SECTIONS_PROMPT)
+]
+
 
 def canonical_section(raw: Column | str) -> Column:
     """T2: raw header → canonical section key via full-match against the
@@ -82,7 +92,8 @@ def assemble_prompt(
 ) -> DataFrame:
     """T3: per document, join sections as ``[name]\\nbody`` blocks
     separated by blank lines, plus the ``- name`` bullet list, formatted
-    into SCORE_ALL_SECTIONS_PROMPT (reference rag_model.py:67-79).
+    into SCORE_ALL_SECTIONS_PROMPT with ``str.format`` semantics
+    (reference rag_model.py:67-79).
 
     Section order: ascending by name (deterministic under shuffle; the
     reference used dict insertion order, which is not reproducible in a
@@ -114,12 +125,17 @@ def assemble_prompt(
             ).alias("section_names_list"),
         )
     )
-    # str.format with a literal template = three replace()s on constants.
-    prompt = F.lit(SCORE_ALL_SECTIONS_PROMPT)
-    prompt = F.replace(prompt, F.lit("{section_names_list}"), F.col("section_names_list"))
-    prompt = F.replace(prompt, F.lit("{sections_text}"), F.col("sections_text"))
-    prompt = F.replace(prompt, F.lit("{jd_text}"), F.lit(jd_text))
-    return per_doc.select(F.col(id_col), prompt.alias("prompt"))
+    fields = {
+        "section_names_list": F.col("section_names_list"),
+        "sections_text": F.col("sections_text"),
+        "jd_text": F.lit(jd_text),
+    }
+    pieces = []
+    for literal, field in PROMPT_PARTS:
+        pieces.append(F.lit(literal))
+        if field is not None:
+            pieces.append(fields[field])
+    return per_doc.select(F.col(id_col), F.concat(*pieces).alias("prompt"))
 
 
 def parse_scores(
@@ -162,11 +178,6 @@ def parse_scores(
         .filter(F.col("all_ok"))
         .select(id_col, "section", F.col("best.score").alias("score"))
     )
-
-
-def normalize_distance_score(dist: Column) -> Column:
-    """T5: ``round(10 * 1/(1+d), 2)`` (reference rag_model_mass.py:13-15)."""
-    return F.round(F.lit(10.0) / (F.lit(1.0) + dist), 2)
 
 
 def mean_score(

@@ -1,35 +1,3 @@
 """Operator library: every module exposes plain
 ``DataFrame -> DataFrame`` functions (no custom plan nodes, no
 wrappers around Spark's API — SURVEY.md §7)."""
-
-from resume_jd_matcher_spark.operators import (  # noqa: F401
-    ann,
-    asof,
-    cluster,
-    dedup,
-    embedding,
-    multimodal,
-    relational,
-    sampling,
-    scoring,
-    sectioner,
-    similarity,
-    similarity_blas,
-    textstats,
-)
-
-__all__ = [
-    "ann",
-    "asof",
-    "cluster",
-    "dedup",
-    "embedding",
-    "multimodal",
-    "relational",
-    "sampling",
-    "scoring",
-    "sectioner",
-    "similarity",
-    "similarity_blas",
-    "textstats",
-]

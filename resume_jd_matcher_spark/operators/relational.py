@@ -1,5 +1,5 @@
-"""Relational scale helpers (SURVEY.md §4: "salting for skew",
-"persist embeddings; incremental append").
+"""Relational scale helpers (SURVEY.md §4: "persist embeddings;
+incremental append").
 
 Most relational operators ARE the DataFrame API (the queries use it
 directly); what lives here are the patterns that need deliberate
@@ -8,48 +8,7 @@ plan-shaping at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-
-def salted_aggregate(
-    df: DataFrame,
-    key_cols: list[str],
-    aggs: dict[str, str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed group keys: salt → partial agg
-    on (key, salt) → final agg on key. The hot key's rows spread over
-    ``n_salts`` reducers in phase one, so no single task owns the whole
-    key. Only algebraic aggregates (sum/count/min/max) decompose this
-    way; avg = sum/count composed by the caller.
-
-    ``aggs``: {column: 'sum'|'count'|'min'|'max'} → output column
-    ``{fn}_{column}``.
-
-    AQE's skew handling covers sort-merge JOINS automatically; explicit
-    salting remains the tool for skewed AGGREGATES and broadcast-
-    ineligible skewed joins.
-    """
-    salted = df.withColumn("_salt", (F.rand(seed=42) * n_salts).cast("int"))
-    phase1 = salted.groupBy(*key_cols, "_salt").agg(
-        *[
-            getattr(F, fn)(c).alias(f"_p_{fn}_{c}")
-            for c, fn in aggs.items()
-        ]
-    )
-    merge = {
-        "sum": F.sum,
-        "count": F.sum,  # counts add up
-        "min": F.min,
-        "max": F.max,
-    }
-    return phase1.groupBy(*key_cols).agg(
-        *[
-            merge[fn](f"_p_{fn}_{c}").alias(f"{fn}_{c}")
-            for c, fn in aggs.items()
-        ]
-    )
+from pyspark.sql import DataFrame
 
 
 def incremental_append(
@@ -64,288 +23,3 @@ def incremental_append(
     """
     fresh = incoming.join(existing, key_col, "left_anti")
     return existing.unionByName(fresh)
-
-
-def scd2_merge(
-    current: DataFrame,
-    updates: DataFrame,
-    key_col: str,
-    tracked_cols: list[str],
-    ts_col: str = "effective_ts",
-    end_col: str = "end_ts",
-) -> DataFrame:
-    """SCD2 merge without a lakehouse MERGE INTO (guide: "emulate with
-    anti-join + union + window"): close out current rows whose tracked
-    attributes changed, append the new versions, leave everything else
-    untouched. ``current`` rows have NULL ``end_col`` while open;
-    ``updates`` carries (key, tracked..., ts).
-
-    One shuffle on the key (the join); history rows pass through
-    untouched via union.
-    """
-    open_rows = current.filter(F.col(end_col).isNull())
-    closed_rows = current.filter(F.col(end_col).isNotNull())
-
-    u = updates.select(
-        F.col(key_col),
-        *[F.col(c).alias(f"_new_{c}") for c in tracked_cols],
-        F.col(ts_col).alias("_new_ts"),
-    )
-    joined = open_rows.join(u, key_col, "left")
-    change_pred = None
-    for c in tracked_cols:
-        p = ~F.col(c).eqNullSafe(F.col(f"_new_{c}"))
-        change_pred = p if change_pred is None else (change_pred | p)
-    has_update = F.col("_new_ts").isNotNull()
-
-    # unchanged (or no update) open rows stay open
-    still_open = joined.filter(~(has_update & change_pred)).select(current.columns)
-    # changed rows get closed at the update timestamp
-    closed_now = (
-        joined.filter(has_update & change_pred)
-        .withColumn(end_col, F.col("_new_ts"))
-        .select(current.columns)
-    )
-    # and their new versions open at the update timestamp
-    new_versions = (
-        joined.filter(has_update & change_pred)
-        .select(
-            key_col,
-            *[F.col(f"_new_{c}").alias(c) for c in tracked_cols],
-            F.col("_new_ts").alias(ts_col),
-            F.lit(None).cast(current.schema[end_col].dataType).alias(end_col),
-        )
-        .select(*[c for c in current.columns])
-    )
-    return closed_rows.unionByName(still_open).unionByName(closed_now).unionByName(
-        new_versions
-    )
-
-
-def binned_interval_join(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str = "ts",
-    max_gap_s: int = 300,
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Scale-safe band SELF-join: unordered pairs of ``df`` rows
-    sharing ``key_col`` whose timestamps are within ``max_gap_s``
-    seconds of each other. (Self-join by construction — the
-    ``left_id < right_id`` pair-dedup only makes sense over one id
-    space; a two-table variant would drop this filter and take both
-    inputs.)
-
-    The naive plan for ``|t_a - t_b| <= δ`` is a theta join — Spark
-    executes it as BroadcastNestedLoopJoin (O(N·M) comparisons), the
-    classic range-join bottleneck. This operator rewrites it as an
-    EQUI-join Catalyst can hash-partition: bucket time into bins of
-    width δ, explode the left side into its 3 adjacent bins
-    (bin-1, bin, bin+1), join on (key, bin), then refine with the
-    exact band predicate. A matching pair's bins differ by at most 1,
-    so the candidate set is a superset of the answer; each surviving
-    pair matches in EXACTLY one exploded bin (the right row's own),
-    so no dedup pass is needed.
-
-    Cost at scale: shuffle is keyed on (key, bin) — 3× the left input
-    rows, never N·M. Same trick Flink/Trino apply for interval joins.
-
-    Timestamps compare in integer MICROSECONDS (``unix_micros``) so
-    the refine predicate is exact — no float boundary.
-
-    Output: (left_id, right_id, key, gap_us) with left_id < right_id.
-    """
-    delta_us = max_gap_s * 1_000_000
-    a = df.select(
-        F.col(key_col).alias("k"),
-        F.col(id_col).alias("left_id"),
-        F.unix_micros(ts_col).alias("us_a"),
-    ).withColumn(
-        "bin",
-        # integer div (no float rounding near bin edges), then ±1
-        F.explode(
-            F.expr(
-                f"array(us_a div {delta_us} - 1,"
-                f" us_a div {delta_us},"
-                f" us_a div {delta_us} + 1)"
-            )
-        ),
-    )
-    b = df.select(
-        F.col(key_col).alias("k"),
-        F.col(id_col).alias("right_id"),
-        F.unix_micros(ts_col).alias("us_b"),
-    ).withColumn("bin", F.expr(f"us_b div {delta_us}"))
-    return (
-        a.join(b, ["k", "bin"])
-        .filter(
-            (F.col("left_id") < F.col("right_id"))
-            & (F.abs(F.col("us_a") - F.col("us_b")) <= delta_us)
-        )
-        .select(
-            "left_id",
-            "right_id",
-            F.col("k").alias("key"),
-            F.abs(F.col("us_a") - F.col("us_b")).alias("gap_us"),
-        )
-    )
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Skew-proof shuffle equi-join for a LOW-CARDINALITY hot join key
-    that is too large (or policy-barred) to broadcast: the fact side
-    gets a deterministic salt in [0, n_salts), the dim side replicates
-    n_salts×, and the join runs on (key, salt) — each hot key's rows
-    spread over ``n_salts`` reducers instead of one. Results are
-    row-identical to the plain join (the salt is an execution detail
-    and is dropped).
-
-    The salt must NOT derive from the join key (that would re-create
-    the hot partition); xxhash64 over ALL fact columns gives a uniform
-    spread and never leaves the executor. The shuffle_hash hint keeps
-    the demonstration honest at toy SF, where the planner would
-    otherwise broadcast the dim and no skew could exist — mirrors
-    ``bucketed_join``'s note. AQE skew-join covers sort-merge joins
-    at runtime; explicit salting remains the tool when AQE is off or
-    the skew is in a hash join.
-    """
-    salted_fact = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(*fact.columns), F.lit(n_salts)).cast("int")
-    )
-    replicated_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    joined = salted_fact.hint("shuffle_hash").join(
-        replicated_dim, [key, "_salt"]
-    )
-    return joined.drop("_salt")
-
-
-def gap_fill_daily(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Resample an event stream to a dense per-key daily grid with
-    last-observation-carried-forward fill — the time-series
-    regularization step (gap-free panels for training windows,
-    monitoring charts, feature joins) that raw event tables lack.
-
-    Per key: aggregate to (day, sum(value), n_events), generate every
-    day between that key's first and last event via sequence(), left
-    join the observed days in, and carry the last non-null daily value
-    forward (ignoreNulls last() over an unbounded-preceding window).
-    Output: (key, day_num INT days-since-epoch, n_events BIGINT with 0
-    on gap days, day_value DOUBLE NULL on gaps, filled_value DOUBLE,
-    is_gap INT).
-
-    Scale shape: the grid inherits the bounds agg's ``key_col``
-    partitioning, so the LOCF window adds no Exchange of its own; the
-    observed-days join is a broadcast at small SF and a key equi-join
-    at scale; the generated grid (bounded by keys × span-days) is
-    never itself shuffled. Day arithmetic uses integer days-since-
-    epoch (datediff from 1970-01-01), so no timezone or
-    epoch-precision drift can enter the oracle compare."""
-    daily = (
-        events.select(
-            F.col(key_col),
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01")).alias("day_num"),
-            F.col(value_col),
-        )
-        .groupBy(key_col, "day_num")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(value_col), 2).alias("day_value"),
-        )
-    )
-    bounds = daily.groupBy(key_col).agg(
-        F.min("day_num").alias("_d0"), F.max("day_num").alias("_d1")
-    )
-    grid = bounds.select(
-        key_col, F.explode(F.sequence("_d0", "_d1")).alias("day_num")
-    )
-    joined = grid.join(daily, [key_col, "day_num"], "left")
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy("day_num")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return joined.select(
-        key_col,
-        F.col("day_num").cast("int").alias("day_num"),
-        F.coalesce("n_events", F.lit(0)).cast("bigint").alias("n_events"),
-        F.col("day_value"),
-        F.last("day_value", ignorenulls=True).over(w).alias("filled_value"),
-        F.col("day_value").isNull().cast("int").alias("is_gap"),
-    )
-
-
-def gap_fill_interpolate(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Daily resample with LINEAR interpolation across gaps —
-    ``gap_fill_daily``'s companion for continuous metrics where
-    carry-forward understates a trend: a gap day's value is the linear
-    blend of the surrounding observed days,
-    ``prev + (next − prev) · (day − prev_day)/(next_day − prev_day)``.
-
-    Same dense-grid construction as gap_fill_daily; the interpolation
-    needs BOTH neighbors, so two ignoreNulls window passes (last()
-    looking back, first() looking forward) run over the same per-key
-    day order — one partitioning, two logical windows, no joins beyond
-    the grid's. Grid endpoints are observed days by construction, so
-    both neighbors always exist. Output: (key, day_num INT, day_value
-    DOUBLE NULL on gaps, interp_value DOUBLE, is_gap INT)."""
-    daily = (
-        events.select(
-            F.col(key_col),
-            F.datediff(F.to_date(ts_col), F.lit("1970-01-01")).alias("day_num"),
-            F.col(value_col),
-        )
-        .groupBy(key_col, "day_num")
-        .agg(F.round(F.sum(value_col), 2).alias("day_value"))
-    )
-    bounds = daily.groupBy(key_col).agg(
-        F.min("day_num").alias("_d0"), F.max("day_num").alias("_d1")
-    )
-    grid = bounds.select(
-        key_col, F.explode(F.sequence("_d0", "_d1")).alias("day_num")
-    )
-    joined = grid.join(daily, [key_col, "day_num"], "left")
-    back = (
-        Window.partitionBy(key_col)
-        .orderBy("day_num")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fwd = (
-        Window.partitionBy(key_col)
-        .orderBy("day_num")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    obs_day = F.when(F.col("day_value").isNotNull(), F.col("day_num"))
-    prev_v = F.last("day_value", ignorenulls=True).over(back)
-    prev_d = F.last(obs_day, ignorenulls=True).over(back)
-    next_v = F.first("day_value", ignorenulls=True).over(fwd)
-    next_d = F.first(obs_day, ignorenulls=True).over(fwd)
-    frac = (F.col("day_num") - prev_d).cast("double") / (
-        next_d - prev_d
-    ).cast("double")
-    interp = F.when(F.col("day_value").isNotNull(), F.col("day_value")).otherwise(
-        prev_v + (next_v - prev_v) * frac
-    )
-    return joined.select(
-        key_col,
-        F.col("day_num").cast("int").alias("day_num"),
-        "day_value",
-        F.round(interp, 4).alias("interp_value"),
-        F.col("day_value").isNull().cast("int").alias("is_gap"),
-    )

@@ -470,8 +470,7 @@ def negative_sampling(
     cumulative sum over the bounded vocabulary (order-exact on both
     engines — float cumsums are not, DuckDB windows sum via segment
     trees), and the draw is r = hash32(id:j#seed) mod Σw. Inversion
-    is the binned-range-join pattern (operators/relational.py
-    range_join_binned): each vocab interval [lo, hi) expands to the
+    is the binned-range-join pattern: each vocab interval [lo, hi) expands to the
     integer bins it covers, draws join on bin = r·B div Σw — an
     equi-join with ≤ (Σw span)/B interval checks per draw, never a
     draws × vocab nested loop.

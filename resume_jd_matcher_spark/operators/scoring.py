@@ -28,15 +28,13 @@ def _stub_tokens(s: str) -> set[str]:
     return set(s.lower().split())
 
 
-def stub_score_response(sections_and_jd: tuple[list[tuple[str, str]], str]) -> str:
+def _stub_scores(sections: list[tuple[str, str]], jd: str) -> str:
     """Deterministic SCORES: response — per section, score = clamped
     count of distinct section tokens also present in the JD."""
-    sections, jd = sections_and_jd
     jd_toks = _stub_tokens(jd)
     lines = ["SCORES:"]
     for name, body in sections:
-        score = min(10, len(_stub_tokens(body) & jd_toks))
-        lines.append(f"{name}: {score}")
+        lines.append(f"{name}: {min(10, len(_stub_tokens(body) & jd_toks))}")
     return "\n".join(lines)
 
 
@@ -70,27 +68,16 @@ def _stub_backend(task: str) -> Callable[[pd.DataFrame], pd.Series]:
             # output); the stub recovers sections + JD from it and
             # answers in the SCORES: contract.
             def sp(row):
-                sections, jd = _parse_prompt_sections(row["prompt"])
-                jd_toks = _stub_tokens(jd)
-                lines = ["SCORES:"]
-                for name, body in sections:
-                    lines.append(
-                        f"{name}: {min(10, len(_stub_tokens(body) & jd_toks))}"
-                    )
-                return "\n".join(lines)
+                return _stub_scores(*_parse_prompt_sections(row["prompt"]))
 
             return pdf.apply(sp, axis=1)
         if task == "score":
             # SCORES: contract (constants.py:95-100); one line per section.
             def sc(row):
-                jd_toks = _stub_tokens(row["jd_text"])
-                lines = ["SCORES:"]
-                for s in row["sections"]:
-                    name, body = s["section"], s["body"]
-                    lines.append(
-                        f"{name}: {min(10, len(_stub_tokens(body) & jd_toks))}"
-                    )
-                return "\n".join(lines)
+                return _stub_scores(
+                    [(s["section"], s["body"]) for s in row["sections"]],
+                    row["jd_text"],
+                )
 
             return pdf.apply(sc, axis=1)
         if task == "feedback":

@@ -10,20 +10,17 @@ dropped (unrecognized header text folds into the preceding body,
 since only vocabulary headers are boundaries).
 
 Span extraction over the whole string is inherently scalar — per
-SURVEY.md §7 this is one of the few legitimate Pandas-UDF stages.
-The UDF is Arrow-batched and regex state compiles once per executor
-interpreter, so the hot loop is C-regex over each batch.
+SURVEY.md §7 this is one of the few legitimate Python stages. The
+stage is Arrow-batched (``mapInArrow``) and regex state compiles once
+per executor interpreter, so the hot loop is C-regex over each batch.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from resume_jd_matcher_spark.functions.parsing import SECTION_PATTERNS
 
@@ -35,15 +32,6 @@ _FULLMATCH = [
     (key, re.compile(pattern, re.IGNORECASE))
     for key, pattern in SECTION_PATTERNS.items()
 ]
-
-_SECTIONS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("section", T.StringType()),
-            T.StructField("body", T.StringType()),
-        ]
-    )
-)
 
 
 def _chunk_one(text: str) -> list[tuple[str, str]]:
@@ -62,11 +50,6 @@ def _chunk_one(text: str) -> list[tuple[str, str]]:
         if section_key:
             chunks[section_key] = text[match.end() : end].strip()
     return list(chunks.items())
-
-
-@pandas_udf(_SECTIONS_TYPE)
-def chunk_sections_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(_chunk_one)
 
 
 def chunk_by_section(

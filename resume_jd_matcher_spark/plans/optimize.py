@@ -6,7 +6,7 @@ itself: making sure a cross-join's streamed side has enough partitions
 to use every core (a small parquet file arrives as ONE partition, and
 BroadcastNestedLoopJoin inherits the streamed side's parallelism), and
 plan-inspection utilities used by tests/bench to assert the plan shape
-(broadcast happened, filter pushed down) rather than guess.
+(filter pushed down) rather than guess.
 """
 
 from __future__ import annotations
@@ -42,11 +42,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 
 def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
-
-
-def assert_broadcast(df: DataFrame) -> None:
-    plan = physical_plan(df)
-    assert "Broadcast" in plan, f"expected a broadcast join in plan:\n{plan}"
 
 
 def assert_pushed_filter(df: DataFrame, fragment: str) -> None:

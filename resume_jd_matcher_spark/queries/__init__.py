@@ -46,8 +46,7 @@ between engines. Three classes:
    subclass is the CAN-TIE class and is kept at ZERO: every moment
    ratio (beta, theta, corr, slope) is computed from exact
    DECIMAL(38,0) integer moments and composed in DOUBLE after
-   aggregation — rolling_beta (r11), regression_stats and
-   cuped_adjustment (r12). New single-row moment-ratio readouts MUST
+   aggregation — rolling_beta (r11) and cuped_adjustment (r12). New single-row moment-ratio readouts MUST
    use this discipline (or scaled-integer exposures like beta_e4 /
    matthews_mcc / authority_e9) rather than native float
    corr/regr_*/var_pop.
@@ -90,7 +89,6 @@ def oracle_sql() -> dict[str, str]:
 # Each module registers its queries on import; _DRIVER_PRIORITY below
 # then fixes the order the driver sees (it samples the first 50).
 from resume_jd_matcher_spark.queries import vector_q  # noqa: E402,F401
-from resume_jd_matcher_spark.queries import relational_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import text_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import scoring_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import stream_q  # noqa: E402,F401
@@ -127,7 +125,11 @@ from resume_jd_matcher_spark.queries import structure_q  # noqa: E402,F401
 #    queue directly below the boundary.
 # Remaining once-confirmed r4/r5/r7/r8 names queue next for r14,
 # then the r11 structure debuts (confirmed r12), then the
-# multiply-confirmed anchors in their prior order.
+# multiply-confirmed anchors in their prior order. Deleting the
+# TPC-H-style relational family and the generic-statistics queries
+# (asof_join, approx_stats, exact_percentiles...) emptied ten window
+# slots; the r13 debuts and the head of the once-confirmed queue
+# moved up to fill them.
 _DRIVER_PRIORITY = [
     # -- r12 debuts: first driver rows --
     "stream_session_dedup",
@@ -137,7 +139,6 @@ _DRIVER_PRIORITY = [
     "media_payload_entropy",
     "sequence_packing",
     # -- r1 cohort: second confirmations (no driver row since r1) --
-    "asof_join",
     "embed_documents",
     "header_canon",
     "mean_score",
@@ -153,20 +154,11 @@ _DRIVER_PRIORITY = [
     "shortlist_e2e",
     "stream_sliding_counts",
     # -- r3 cohort: second confirmations --
-    "cdc_compact",
     "chunk_embed_pool",
-    "column_profile",
-    "dq_checks",
     "embedding_drift",
     "embedding_quantize",
     "incremental_append",
     "label_centroids",
-    "mad_stats",
-    "range_join_binned",
-    "rollup_timeseries",
-    "shipping_priority",
-    "skew_salted_agg",
-    "star_join_revenue",
     "winnow_fingerprint",
     # -- r4 head: second confirmations --
     "agg_grouping_sets",
@@ -183,37 +175,34 @@ _DRIVER_PRIORITY = [
     "lang_confusion",
     "leakage_safe_split",
     "pack_token_budget",
-    # ---- window boundary (50) ----
-    # -- r13 debuts: queue to lead r14's window --
+    # -- r13 debuts --
     "stream_view_conversion",
     "media_ihdr_histogram",
     "media_ext_quarantine",
     "media_wav_census",
-    # -- rows-only trio (held out of the hash window by design) --
-    "llm_feedback",
-    "llm_explain",
-    "mllib_lsh_join",
-    # -- remaining once-confirmed r4/r5/r7/r8: queue to lead r14 --
+    # -- remaining once-confirmed r4/r5/r7/r8 --
     "pii_redact",
     "pivot_unpivot",
     "rolling_fingerprint",
     "stats_moments",
     "stratified_sample",
     "stream_late_data",
+    # ---- window boundary (50) ----
+    # -- rows-only trio (held out of the hash window by design) --
+    "llm_feedback",
+    "llm_explain",
+    "mllib_lsh_join",
     "tfidf_topterms",
     "top_orders_global",
     "train_test_split",
     "window_stats",
     "winnow_neardup",
     "ann_recall_eval",
-    "asof_join_forward",
     "bloom_contamination",
     "cms_heavy_hitters",
     "corpus_shuffle",
     "curriculum_order",
     "embedding_outliers",
-    "ewma_smoothing",
-    "gap_fill_daily",
     "graph_triangles",
     "ivf_pq_topk",
     "kmv_distinct",
@@ -223,7 +212,6 @@ _DRIVER_PRIORITY = [
     "ngram_lm_score",
     "pagerank_neardup",
     "pq_topk",
-    "regression_stats",
     "repetition_filter",
     "rerank_e2e",
     "substring_remove",
@@ -245,7 +233,6 @@ _DRIVER_PRIORITY = [
     # -- r11 structure debuts (confirmed r12) --
     "bcubed_eval",
     "burstiness_fano",
-    "conformal_interval",
     "doremi_reweight",
     "hits_scores",
     "label_propagation",
@@ -261,12 +248,9 @@ _DRIVER_PRIORITY = [
     "link_prediction_jaccard",
     "degree_assortativity",
     "decontaminate",
-    "join_theta_band",
     "zipf_fit",
     "llr_keyness",
     "theil_sen_trend",
-    "approx_stats",
-    "exact_percentiles",
     "qte_deciles",
     "anomaly_mad_daily",
     "elasticity_by_brand",
@@ -389,20 +373,15 @@ _DRIVER_PRIORITY = [
     "inverted_index",
     "align_uniformity",
     "quantile_normalize",
-    "bootstrap_ci",
     "stream_static_enrich",
     "event_transitions",
     "ann_multiprobe_topk",
     "corpus_health_scorecard",
-    "gap_fill_interpolate",
-    "key_skew_profile",
     "mine_triplets",
     "quality_aware_dedup",
     "score_deciles",
-    "skew_salted_join",
     "tfidf_cosine_pairs",
     "topk_similarity",
-    "pricing_summary",
     "pipeline_e2e",
     "dedup_exact",
 ]

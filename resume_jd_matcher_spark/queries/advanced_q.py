@@ -1,6 +1,6 @@
-"""Advanced / composite operators: as-of join, the full shortlist
-lifecycle, map assembly, array scalar suite, pivot/unpivot, approx
-aggregates, MLlib LSH (SURVEY.md §2.D A3, §2.F J4, §2.H, §3.2).
+"""Advanced / composite operators: the full shortlist lifecycle, map
+assembly, array scalar suite, pivot/unpivot, MLlib LSH (SURVEY.md
+§2.D A3, §2.H, §3.2).
 """
 
 from __future__ import annotations
@@ -8,49 +8,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from resume_jd_matcher_spark.operators.asof import asof_join
 from resume_jd_matcher_spark.operators.embedding import embed_documents, embed_query
 from resume_jd_matcher_spark.operators.similarity_blas import topk_similarity_blas
 from resume_jd_matcher_spark.queries import register
 from resume_jd_matcher_spark.queries.scoring_q import JD_TEXT, _expected_sections
 from resume_jd_matcher_spark.sources.io import load_table
-
-
-@register(
-    "asof_join",
-    """
-WITH err AS (
-  SELECT event_id, user_id, ts FROM events
-  WHERE event_type = 'error' AND user_id < 100
-), clk AS (
-  SELECT event_id AS click_event_id, user_id, ts FROM events
-  WHERE event_type = 'click' AND user_id < 100
-)
-SELECT e.event_id, e.user_id,
-       floor(epoch(e.ts))::BIGINT AS ts_epoch,
-       c.click_event_id,
-       floor(epoch(c.ts))::BIGINT AS click_ts_epoch
-FROM err e ASOF LEFT JOIN clk c
-  ON e.user_id = c.user_id AND e.ts >= c.ts
-""",
-)
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: as-of join — for each error event, the most recent click at
-    or before it per user. Union + last_value carry-forward (one
-    shuffle, no per-key pandas); DuckDB twin is native ASOF JOIN."""
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    err = e.filter(F.col("event_type") == "error").select("event_id", "user_id", "ts")
-    clk = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_event_id"), "user_id", "ts"
-    )
-    out = asof_join(err, clk, on="user_id", ts_col="ts", right_cols=("click_event_id",))
-    return out.select(
-        "event_id",
-        "user_id",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-        F.col("click_event_id_asof").alias("click_event_id"),
-        F.unix_timestamp("ts_asof").alias("click_ts_epoch"),
-    )
 
 
 _SQL_EMBED = (
@@ -202,89 +164,6 @@ def q_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("qty").isNotNull())
 
 
-@register(
-    "approx_stats",
-    """
-SELECT l_returnflag,
-       count(DISTINCT l_orderkey)::BIGINT AS exact_orders,
-       round(quantile_cont(l_extendedprice, 0.5) + 1e-9, 2) AS exact_p50,
-       TRUE AS ok_distinct,
-       TRUE AS ok_p50,
-       TRUE AS ok_p95
-FROM lineitem GROUP BY l_returnflag
-""",
-)
-def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 approximate aggregates under a HARD oracle (was rows-only
-    through r6: HLL registers and KLL sketch cut-points are
-    engine-internal). The *accuracy contract* is not engine-internal:
-    the engine computes approx AND exact side-by-side in one agg and
-    emits per-flag ``ok_* = relative error within bound`` booleans,
-    which DuckDB replays as literal TRUE — any sketch regression
-    (rsd drift, accuracy misconfiguration, percentile_approx change)
-    flips a boolean and hash-mismatches. Bounds: HLL default rsd is
-    5% → 10% (2σ) bound; percentile_approx at accuracy 10000 → 2%
-    value-relative bound, generous next to the ~1e-4 rank guarantee
-    but tight enough to catch a broken sketch.
-
-    The two quantiles come out of ONE sketch evaluation but are
-    flattened to scalar columns — an ARRAY<DOUBLE> result column broke
-    the driver's pandas canonicalization (unhashable ndarray,
-    CORRECTNESS_r04).
-
-    Scale shape — THREE independent small aggs joined on the 3-row
-    flag key (all joins broadcast), NEVER one combined agg: putting
-    ``countDistinct`` in the same aggregate as the percentile buffers
-    makes Spark's distinct-agg Expand rewrite carry a full
-    percentile/QuantileSummaries partial buffer per (flag, orderkey)
-    group — measured 209 s at sf0.1 vs ~1 s split (r7 bench). The
-    sketch agg merges map-side; the exact count-distinct is an
-    explicit two-phase distinct-then-count (no Expand); the exact
-    percentiles use the bounded bucket-histogram plan
-    (operators/percentiles.py), so no stage buffers raw group
-    values."""
-    from resume_jd_matcher_spark.operators.percentiles import (
-        group_percentiles_exact,
-    )
-
-    l = load_table(spark, sf_dir, "lineitem")
-    eps = F.lit(1e-9)
-
-    def rel_ok(approx, exact, bound):
-        return (
-            F.abs(approx.cast("double") - exact.cast("double"))
-            / exact.cast("double")
-            <= F.lit(bound)
-        )
-
-    sk = l.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_orderkey").alias("approx_orders"),
-        F.percentile_approx("l_extendedprice", [0.5, 0.95], 10000).alias("_q"),
-    )
-    ex_cd = (
-        l.select("l_returnflag", "l_orderkey")
-        .distinct()
-        .groupBy("l_returnflag")
-        .agg(F.count("*").alias("exact_orders"))
-    )
-    ex_p = group_percentiles_exact(
-        l, "l_returnflag", "l_extendedprice", (("_e50", 0.50), ("_e95", 0.95))
-    )
-    agg = sk.join(F.broadcast(ex_cd), "l_returnflag").join(
-        F.broadcast(ex_p), "l_returnflag"
-    )
-    return agg.select(
-        "l_returnflag",
-        F.col("exact_orders").cast("bigint").alias("exact_orders"),
-        F.round(F.col("_e50") + eps, 2).alias("exact_p50"),
-        rel_ok(F.col("approx_orders"), F.col("exact_orders"), 0.10).alias(
-            "ok_distinct"
-        ),
-        rel_ok(F.element_at("_q", 1), F.col("_e50"), 0.02).alias("ok_p50"),
-        rel_ok(F.element_at("_q", 2), F.col("_e95"), 0.02).alias("ok_p95"),
-    )
-
-
 @register("mllib_lsh_join", None)
 def q_mllib_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V8/V6 via MLlib (rows-only: hash functions are MLlib-internal):
@@ -430,44 +309,6 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem_gs
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         """
-    )
-
-
-@register(
-    "exact_percentiles",
-    """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-       round(quantile_cont(l_extendedprice, 0.50), 4) AS p50,
-       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95
-FROM lineitem
-GROUP BY l_returnflag
-""",
-)
-def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: exact interpolated percentiles per group via the two-scan
-    bucket-histogram plan (operators/percentiles.py — extracted in r7
-    so approx_stats' exact verifier shares it). ``percentile()`` is an
-    ObjectHashAggregate that buffers every group value in executor
-    memory — with 3 groups over lineitem that's ~20M doubles per
-    buffer at sf10 and an OOM at 100 TB; the histogram plan's peak
-    state is the bounded integer-bucket histogram and a ≤6-bucket row
-    slice. When interpolated exactness isn't required at full scale,
-    the sketch-based approx_stats query is the documented cutover."""
-    from resume_jd_matcher_spark.operators.percentiles import (
-        group_percentiles_exact,
-    )
-
-    l = load_table(spark, sf_dir, "lineitem")
-    out = group_percentiles_exact(
-        l,
-        "l_returnflag",
-        "l_extendedprice",
-        (("p25", 0.25), ("p50", 0.50), ("p95", 0.95)),
-    )
-    return out.select(
-        "l_returnflag",
-        *[F.round(F.col(t), 4).alias(t) for t in ("p25", "p50", "p95")],
     )
 
 
@@ -745,51 +586,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "asof_join_forward",
-    """
-WITH err AS (
-  SELECT event_id, user_id, ts FROM events
-  WHERE event_type = 'error' AND user_id < 100
-), clk AS (
-  SELECT event_id AS click_event_id, user_id, ts FROM events
-  WHERE event_type = 'click' AND user_id < 100
-)
-SELECT e.event_id, e.user_id,
-       floor(epoch(e.ts))::BIGINT AS ts_epoch,
-       c.click_event_id,
-       floor(epoch(c.ts))::BIGINT AS click_ts_epoch
-FROM err e ASOF LEFT JOIN clk c
-  ON e.user_id = c.user_id AND e.ts <= c.ts
-""",
-)
-def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: FORWARD as-of join — for each error event, the next click at
-    or after it per user (did the user recover/continue?). Same
-    one-shuffle union + window carry as backward, with the frame and
-    tie order flipped; DuckDB twin is ASOF LEFT JOIN on ts <= ts."""
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    err = e.filter(F.col("event_type") == "error").select("event_id", "user_id", "ts")
-    clk = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_event_id"), "user_id", "ts"
-    )
-    out = asof_join(
-        err,
-        clk,
-        on="user_id",
-        ts_col="ts",
-        right_cols=("click_event_id",),
-        direction="forward",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-        F.col("click_event_id_asof").alias("click_event_id"),
-        F.unix_timestamp("ts_asof").alias("click_ts_epoch"),
-    )
-
-
-@register(
     "winsorize_stats",
     """
 WITH v AS (
@@ -821,8 +617,7 @@ GROUP BY v.g, cuts.n, cuts.lo_b, cuts.hi_b
 def q_winsorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 data-cleaning: per-group winsorization at nearest-rank
     p01/p99, bucket resolution — the outlier-capping pass reward/score
-    pipelines run before normalization. Same scale discipline as
-    exact_percentiles: scan 1 builds the bounded integer-bucket
+    pipelines run before normalization. Scan 1 builds the bounded integer-bucket
     histogram (map-side combined; the rank→bucket lookup is a tiny
     window over bucket rows, never over raw values), scan 2 clips and
     re-aggregates. NO per-group sort of raw values anywhere — a
@@ -900,7 +695,7 @@ FROM v JOIN cdf c ON v.b = c.b
 def q_score_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] scale-safe quantile calibration: map a per-document score
     onto corpus deciles WITHOUT a global sort/percent_rank — the
-    bucket-histogram CDF trick (exact_percentiles / winsorize family):
+    bucket-histogram CDF trick (as in winsorize_stats):
     scores bucket at fixed resolution, the cumulative window runs over
     ≤1001 BUCKET rows (never documents), and each doc joins its
     bucket's CDF. The rank-normalization step that makes heterogeneous

@@ -4,8 +4,8 @@ dedup/quality filtering): cohort retention, Wilson-bound source
 ranking, day-of-week seasonal adjustment, Benford data-quality
 screen, Heaps'-law vocabulary-growth fit, distinct-n diversity,
 trailing-window anomaly z-scores, capped inverted-index heads,
-cross-source quantile normalization, one-pass bootstrap CIs, and the
-Markov event-transition matrix.
+cross-source quantile normalization, and the Markov event-transition
+matrix.
 
 Portability contracts shared with the oracles:
 - timestamps exposed as epoch BIGINT (never raw);
@@ -703,69 +703,6 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qbin",
             F.col("pooled_b").alias("norm_chars"),
         )
-    )
-
-
-def _bootstrap_sql(n_replicates: int = 32) -> str:
-    # one md5 per FOUR replicates: digest g yields four 8-hex uniforms
-    # (lanes), mirroring operators/bootstrap.poisson1_weight
-    h = (
-        "('0x' || substr(md5(event_id::VARCHAR || ':h{g}'), {start}, 8))"
-        "::BIGINT / 4294967296.0"
-    )
-    w = (
-        "CASE WHEN {u} < 0.36788 THEN 0 WHEN {u} < 0.73576 THEN 1 "
-        "WHEN {u} < 0.91970 THEN 2 WHEN {u} < 0.98101 THEN 3 ELSE 4 END"
-    )
-    wcols = ",\n         ".join(
-        f"({w.format(u=h.format(g=b // 4, start=1 + 8 * (b % 4)))})::BIGINT AS w{b}"
-        for b in range(n_replicates)
-    )
-    sums = ",\n       ".join(
-        f"sum(value * w{b}) AS wv{b}, sum(w{b}) AS sw{b}"
-        for b in range(n_replicates)
-    )
-    mexprs = ", ".join(
-        f"CASE WHEN sw{b} > 0 THEN wv{b} / sw{b}::DOUBLE END"
-        for b in range(n_replicates)
-    )
-    return f"""
-WITH w AS (
-  SELECT event_type, event_id, value,
-         {wcols}
-  FROM events
-), g AS (
-  SELECT event_type, count(*)::BIGINT AS n, sum(value) AS sv,
-       {sums}
-  FROM w GROUP BY event_type
-), m AS (
-  SELECT event_type, n, sv,
-         list_sort(list_filter([{mexprs}], x -> x IS NOT NULL)) AS ms
-  FROM g
-)
-SELECT event_type, n,
-       round(sv / n::DOUBLE + 1e-9, 4) AS mean,
-       round(ms[least(1, len(ms))] + 1e-9, 4) AS ci_lo,
-       round(ms[least(31, len(ms))] + 1e-9, 4) AS ci_hi,
-       len(ms)::INT AS n_replicates
-FROM m
-"""
-
-
-@register("bootstrap_ci", _bootstrap_sql(32))
-def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 [EXT]: one-pass deterministic bootstrap CI for the per-type
-    mean event value (operators/bootstrap.py; Oza & Russell 2001
-    online bagging): 32 Poisson(1)-weighted resamples accumulate as
-    64 map-side-combined partial sums in ONE aggregate scan — the
-    corpus is never resampled B times — and the CI is the 1st/31st
-    order statistic of the replicate means (≈ 3%/97%). Weights are
-    hash-deterministic, so the oracle replays the exact resamples."""
-    from resume_jd_matcher_spark.operators.bootstrap import bootstrap_mean_ci
-
-    ev = load_table(spark, sf_dir, "events")
-    return bootstrap_mean_ci(
-        ev, group_col="event_type", value_col="value", key_col="event_id"
     )
 
 

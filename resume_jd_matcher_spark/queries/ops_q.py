@@ -143,8 +143,7 @@ def q_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3/J2 [EXT]: CDC changelog compaction — apply an
     insert/update/delete log to materialize the latest state
     (last-op-wins per key by sequence number, deletes drop the key):
-    the Debezium-consumer / Delta-MERGE primitive, and the
-    latest-state complement of scd2_merge (which keeps the history).
+    the Debezium-consumer / Delta-MERGE primitive.
     The changelog derives deterministically from orders (every key
     inserts at seq 1; keys ≡0 mod 3 get a 10% price update at seq 2,
     exact integer DIV; keys ≡0 mod 5 delete at seq 3) so the oracle

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.functions.parsing import (
-    SCORE_ALL_SECTIONS_PROMPT,
+    PROMPT_PARTS,
     assemble_prompt,
     canonical_section,
     mean_score,
@@ -156,6 +156,17 @@ def _sql_quote(s: str) -> str:
     return "$TPL$" + s + "$TPL$"
 
 
+def _sql_prompt(fields: dict[str, str]) -> str:
+    """The template as one ``||`` chain of literal pieces and field
+    expressions — the SQL twin of assemble_prompt's single concat."""
+    pieces = []
+    for literal, field in PROMPT_PARTS:
+        pieces.append(_sql_quote(literal))
+        if field is not None:
+            pieces.append(fields[field])
+    return " || ".join(pieces)
+
+
 @register(
     "prompt_assembly",
     f"""
@@ -168,10 +179,11 @@ agg AS (
   FROM sections GROUP BY doc_id
 )
 SELECT doc_id,
-       replace(replace(replace({_sql_quote(SCORE_ALL_SECTIONS_PROMPT)},
-         '{{section_names_list}}', section_names_list),
-         '{{sections_text}}', sections_text),
-         '{{jd_text}}', '{JD_TEXT}') AS prompt
+       {_sql_prompt({
+           "section_names_list": "section_names_list",
+           "sections_text": "sections_text",
+           "jd_text": f"'{JD_TEXT}'",
+       })} AS prompt
 FROM agg
 """,
 )

@@ -1,22 +1,19 @@
 """Round-11 family: graph structure, shard assignment, and
 calibration governance over the fixture tables.
 
-Eight operators a 100-TB training-data platform needs beyond the r10
+Seven operators a 100-TB training-data platform needs beyond the r10
 inventory: HITS hub/authority centrality (the eigenvector-family
 member pagerank_neardup doesn't cover), synchronous label-propagation
-communities (modularity structure, not connectivity — cc/k-core see
+communities (modularity structure, not connectivity — cc sees
 components, LPA sees dense sub-groups), rendezvous (HRW) shard
-routing with a resize-movement audit, split-conformal prediction
-intervals (finite-sample coverage guarantee for any point predictor),
-B-cubed cluster-quality evaluation of the dedup clustering, a
-multiplicative-weights domain-reweighting pass (DoReMi-style
+routing with a resize-movement audit, B-cubed cluster-quality
+evaluation of the dedup clustering, a multiplicative-weights domain-reweighting pass (DoReMi-style
 excess-difficulty upweighting with a frequency-rarity proxy), exact
 Shapley-value conversion attribution (the axiomatic member of the
 attribution trio), and a Fano-factor burstiness profile of the event
 stream.
 
-Determinism discipline (the r11 rolling_beta lesson, applied from
-birth): every exposed number in this module is an exact integer or a
+Determinism discipline: every exposed number in this module is an exact integer or a
 fixed-point scaled integer (``*_e6`` / ``*_e9``) computed with
 integer half-away-from-zero division — ``(num*2*scale + den) div
 (2*den)`` on nonnegative operands — in decimal(38,0) on the Spark
@@ -209,8 +206,8 @@ JOIN (SELECT lbl, count(*)::BIGINT AS community_size
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V8 [EXT]: synchronous label-propagation communities (Raghavan
     et al. 2007, Phys. Rev. E 76) on the MinHash near-dup graph (same
-    doc_id < 200 slice and est >= 0.5 edges as local_clustering /
-    k_core). Connected components answer "what is transitively
+    doc_id < 200 slice and est >= 0.5 edges as connected_components).
+    Connected components answer "what is transitively
     linked"; LPA answers "what forms a densely self-similar block
     INSIDE the linkage" — the community, not the component, is the
     template-family a curation pass reviews as one unit. Fixed
@@ -307,8 +304,7 @@ def q_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus), which this query audits directly by computing the
     {n}-shard and {n}+1-shard assignments side by side and counting
     per-shard departures. The routing layer a 100-TB ingest needs
-    under elastic shard counts; complements zorder_curve (locality)
-    and skew_salted_join (hot keys).
+    under elastic shard counts; complements zorder_curve (locality).
 
     Scale shape: linear explode to the doc x (shards+1) grain, ONE
     map-side-combinable max_by aggregation per doc (lexicographic
@@ -342,139 +338,6 @@ def q_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("n_moved"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Split-conformal prediction interval for order totals
-# ---------------------------------------------------------------------------
-
-_CONF_ALPHA_PCT = 10  # alpha = 0.10 -> 90% target coverage
-
-
-@register(
-    "conformal_interval",
-    f"""
-WITH o AS (
-  SELECT o_orderkey, o_orderpriority,
-         floor(o_totalprice * 100 + 0.5)::BIGINT AS cents,
-         {SQL_HASH32.format(c="o_orderkey::VARCHAR || '#split'")} % 10 AS sp
-  FROM orders
-), g AS (
-  SELECT o_orderpriority, (sum(cents)::HUGEINT // count(*))::BIGINT AS yhat
-  FROM o WHERE sp < 5 GROUP BY 1
-), cal AS (
-  SELECT abs(o.cents - g.yhat) AS s
-  FROM o JOIN g USING (o_orderpriority) WHERE o.sp < 5
-), k AS (
-  SELECT count(*)::BIGINT AS n_calib,
-         greatest(1, least(
-           ({100 - _CONF_ALPHA_PCT} * (count(*) + 1) + 99) // 100,
-           count(*)))::BIGINT AS k
-  FROM cal
-), cum AS (
-  SELECT s, sum(c) OVER (ORDER BY s) AS cum
-  FROM (SELECT s, count(*)::BIGINT AS c FROM cal GROUP BY s)
-), q AS (
-  SELECT min(s)::BIGINT AS qhat_cents FROM cum, k WHERE cum.cum >= k.k
-), ev AS (
-  SELECT abs(o.cents - g.yhat) AS s
-  FROM o JOIN g USING (o_orderpriority) WHERE o.sp >= 5
-), st AS (
-  SELECT count(*)::BIGINT AS n_eval,
-         sum(CASE WHEN ev.s <= q.qhat_cents THEN 1 ELSE 0 END)::BIGINT
-           AS n_covered
-  FROM ev, q
-)
-SELECT k.n_calib, st.n_eval, q.qhat_cents, st.n_covered,
-       ((st.n_covered::HUGEINT * 2000000 + st.n_eval)
-        // (2 * st.n_eval))::BIGINT AS coverage_e6
-FROM k, q, st
-""",
-)
-def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/W3 [EXT]: split-conformal prediction interval (Vovk et al.
-    2005; Lei et al. 2018 JASA) for order totals under the
-    group-mean predictor — hash-split orders into calibration/eval
-    halves, q-hat = the ceil((n+1)(1-alpha))-th smallest calibration
-    nonconformity |y - yhat| (the EXACT finite-sample order
-    statistic, not an interpolated quantile — the coverage guarantee
-    lives in that rank), then audit empirical coverage of
-    yhat ± q-hat on the held-out half. The distribution-free
-    uncertainty wrapper every production scorer should carry;
-    completes calibration_eval (probability calibration) with
-    interval calibration.
-
-    Determinism: predictor means use integer floor-division on exact
-    cents, nonconformities are exact integers, the order statistic is
-    a rank lookup, and coverage is the integer half-up e6 ratio — no
-    floats anywhere.
-
-    Scale shape: one fact pass builds split + cents; group means are
-    a 5-row broadcast; the order statistic comes from a value-grain
-    bucket-histogram rank selection (never a full sort of raw
-    scores, never a percentile buffer); the eval pass is one
-    conditional hash agg with the 1-row q-hat broadcast."""
-    from resume_jd_matcher_spark.operators.percentiles import (
-        global_value_at_rank,
-    )
-
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-        F.pmod(
-            seeded_hash32(F.col("o_orderkey").cast("string"), F.lit("split")),
-            F.lit(10),
-        ).alias("sp"),
-    )
-    cal_rows = o.filter(F.col("sp") < 5)
-    g = cal_rows.groupBy("o_orderpriority").agg(
-        F.expr("sum(cents) div count(*)").cast("bigint").alias("yhat")
-    )
-    cal = cal_rows.join(F.broadcast(g), "o_orderpriority").select(
-        F.abs(F.col("cents") - F.col("yhat")).alias("s")
-    )
-    # order statistic via the shared bucket-histogram rank selection
-    # (operators/percentiles.global_value_at_rank) — the first r11
-    # spelling ran the generic global_prefix over the ~70k-row score
-    # value grain, ~3 stages of pure latency this replaces with one
-    # histogram job + one single-bucket rank
-    kq = global_value_at_rank(
-        cal,
-        "s",
-        f"({100 - _CONF_ALPHA_PCT} * (_n + 1) + 99) div 100",
-    )
-    k = kq.select(
-        F.col("n").alias("n_calib"),
-    )
-    q = kq.select(F.col("val").cast("bigint").alias("qhat_cents"))
-    ev = (
-        o.filter(F.col("sp") >= 5)
-        .join(F.broadcast(g), "o_orderpriority")
-        .select(F.abs(F.col("cents") - F.col("yhat")).alias("s"))
-    )
-    st = ev.crossJoin(F.broadcast(q)).agg(
-        F.count("*").cast("bigint").alias("n_eval"),
-        F.sum(F.when(F.col("s") <= F.col("qhat_cents"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_covered"),
-    )
-    return (
-        k.select("n_calib")
-        .crossJoin(F.broadcast(st))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "n_calib",
-            "n_eval",
-            "qhat_cents",
-            "n_covered",
-            F.expr(_halfup_div("n_covered", "n_eval", 10**6))
-            .cast("bigint")
-            .alias("coverage_e6"),
-        )
     )
 
 

@@ -13,6 +13,13 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+# ORDER BY ... LIMIT n runs as an in-memory top-K only up to this n;
+# above it, a spilling sort. Spark's default (Int.MaxValue) sizes each
+# task's top-K heap by n up front, so a "no cap" limit such as
+# pq_fit_encode(fit_sample_rows=10**9) allocates gigabytes per task on
+# a 500-row input.
+TOPK_SORT_FALLBACK_ROWS = 1_000_000
+
 
 def get_spark(app_name: str = "resume_jd_matcher_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -31,6 +38,10 @@ def get_spark(app_name: str = "resume_jd_matcher_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(
+            "spark.sql.execution.topKSortFallbackThreshold",
+            str(TOPK_SORT_FALLBACK_ROWS),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config(
@@ -55,4 +66,8 @@ def tune(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
     )
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    spark.conf.set(
+        "spark.sql.execution.topKSortFallbackThreshold",
+        str(TOPK_SORT_FALLBACK_ROWS),
+    )
     return spark

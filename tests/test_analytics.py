@@ -483,57 +483,6 @@ class TestNegativeSamplingCDF:
             assert hi - lo > 0 and 0 <= lo < hi <= W
 
 
-class TestBootstrapCI:
-    def test_ci_brackets_mean_and_narrows_with_n(self, spark):
-        from resume_jd_matcher_spark.operators.bootstrap import bootstrap_mean_ci
-
-        def make(n, grp):
-            return [(i, grp, float(50 + (i * 37) % 100)) for i in range(n)]
-
-        df = spark.createDataFrame(
-            make(200, "small") + make(5000, "big"),
-            "event_id long, event_type string, value double",
-        )
-        out = {r["event_type"]: r for r in bootstrap_mean_ci(
-            df, "event_type", "value", "event_id").collect()}
-        for g in ("small", "big"):
-            r = out[g]
-            assert r["ci_lo"] <= r["mean"] <= r["ci_hi"]
-            assert r["n_replicates"] == 32
-        wid = lambda r: r["ci_hi"] - r["ci_lo"]  # noqa: E731
-        assert wid(out["big"]) < wid(out["small"])  # CI narrows with n
-
-    def test_deterministic(self, spark):
-        from resume_jd_matcher_spark.operators.bootstrap import bootstrap_mean_ci
-
-        df = spark.createDataFrame(
-            [(i, "t", float(i % 17)) for i in range(300)],
-            "event_id long, event_type string, value double",
-        )
-        a = bootstrap_mean_ci(df, "event_type", "value", "event_id").collect()
-        b = bootstrap_mean_ci(df, "event_type", "value", "event_id").collect()
-        assert a == b
-
-    def test_singleton_groups_never_throw(self, spark):
-        # ADVICE r6: if every replicate draws total weight 0 the means
-        # array is empty and element_at(arr, 0) throws (1-based
-        # indices). Can't force that astronomically-rare draw, but the
-        # guard must at minimum survive many 1-row groups (the only
-        # shape where it can occur) and keep ci_lo <= ci_hi when
-        # present.
-        from resume_jd_matcher_spark.operators.bootstrap import bootstrap_mean_ci
-
-        df = spark.createDataFrame(
-            [(i, f"g{i}", float(i)) for i in range(50)],
-            "event_id long, event_type string, value double",
-        )
-        rows = bootstrap_mean_ci(df, "event_type", "value", "event_id").collect()
-        assert len(rows) == 50
-        for r in rows:
-            if r["ci_lo"] is not None and r["ci_hi"] is not None:
-                assert r["ci_lo"] <= r["ci_hi"]
-
-
 class TestEventTransitions:
     def test_known_chain(self, spark, monkeypatch):
         import datetime as dt

@@ -3,7 +3,11 @@
 
 from __future__ import annotations
 
+import pytest
+
 from resume_jd_matcher_spark.functions.parsing import (
+    SCORE_ALL_SECTIONS_PROMPT,
+    assemble_prompt,
     canonical_section,
     mean_score,
     parse_scores,
@@ -62,3 +66,30 @@ def test_canonical_section(spark):
     )
     got = [r[0] for r in df.select(canonical_section("raw")).collect()]
     assert got == ["experience", "skills", "summary", None]
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        "my notes mention {jd_text} verbatim",
+        "see {sections_text} and {section_names_list} here",
+    ],
+)
+def test_assemble_prompt_matches_str_format(spark, body):
+    """The prompt equals the reference's ``str.format`` result even when
+    user text contains the template's own placeholders: each field is
+    filled exactly once, never re-expanded inside another field."""
+    jd = "spark engineer {sections_text}"
+    sections = [("skills", "python, " + body), ("summary", body)]
+    df = spark.createDataFrame(
+        [(1, name, text) for name, text in sections],
+        ["doc_id", "section", "body"],
+    )
+    [row] = assemble_prompt(df, jd).collect()
+    ordered = sorted(sections)
+    want = SCORE_ALL_SECTIONS_PROMPT.format(
+        section_names_list="\n".join(f"- {name}" for name, _ in ordered),
+        sections_text="\n\n".join(f"[{name}]\n{text}" for name, text in ordered),
+        jd_text=jd,
+    )
+    assert row.prompt == want

@@ -1,35 +1,15 @@
-"""Salted aggregation equivalence + incremental embedding append."""
+"""Incremental embedding append, single-pass observed metrics, and
+regression aggregates."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.operators.embedding import embed_documents
-from resume_jd_matcher_spark.operators.relational import (
-    incremental_append,
-    salted_aggregate,
-)
+from resume_jd_matcher_spark.operators.relational import incremental_append
 from resume_jd_matcher_spark.sources.io import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_salted_aggregate_equals_plain(spark):
-    l = load_table(spark, SF, "lineitem")
-    salted = salted_aggregate(
-        l,
-        ["l_returnflag"],
-        {"l_quantity": "sum", "l_orderkey": "count", "l_extendedprice": "max"},
-        n_salts=8,
-    )
-    plain = l.groupBy("l_returnflag").agg(
-        F.sum("l_quantity").alias("sum_l_quantity"),
-        F.count("l_orderkey").alias("count_l_orderkey"),
-        F.max("l_extendedprice").alias("max_l_extendedprice"),
-    )
-    got = {r.l_returnflag: (round(r.sum_l_quantity, 6), r.count_l_orderkey, r.max_l_extendedprice) for r in salted.collect()}
-    want = {r.l_returnflag: (round(r.sum_l_quantity, 6), r.count_l_orderkey, r.max_l_extendedprice) for r in plain.collect()}
-    assert got == want
 
 
 def test_incremental_append_embeds_only_delta(spark, tmp_path_factory):
@@ -94,95 +74,3 @@ class TestRegressionAndEWMA:
             .collect()
         )
         assert r["slope"] == 3.0 and r["icpt"] == 7.0 and r["c"] == 1.0
-
-    def test_ewma_constant_series_is_constant(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries.relational_q import q_ewma_smoothing
-
-        out = q_ewma_smoothing(spark, sf_dir)
-        assert out.count() > 0
-        # spot property: every ewma lies within the running min/max of
-        # the last 5 values (convexity of the renormalized weights)
-        import pyspark.sql.functions as F
-        from pyspark.sql import Window
-
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("ts_epoch", "event_id")
-            .rowsBetween(-4, 0)
-        )
-        chk = out.select(
-            "ewma",
-            F.min("value").over(w).alias("lo"),
-            F.max("value").over(w).alias("hi"),
-        )
-        bad = chk.filter(
-            (F.col("ewma") < F.col("lo") - 1e-6) | (F.col("ewma") > F.col("hi") + 1e-6)
-        )
-        assert bad.count() == 0
-
-    def test_ewma_first_event_equals_value(self, spark, sf_dir):
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from resume_jd_matcher_spark.queries.relational_q import q_ewma_smoothing
-
-        out = q_ewma_smoothing(spark, sf_dir)
-        w = Window.partitionBy("user_id").orderBy("ts_epoch", "event_id")
-        first = out.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
-        bad = first.filter(F.abs(F.col("ewma") - F.col("value")) > 1e-6)
-        assert bad.count() == 0
-
-
-def test_gap_fill_daily_locf(spark):
-    """Dense grid per user between first and last day; gap days get
-    n_events=0, NULL day_value, and the last observed value carried
-    forward."""
-    import datetime as dt
-
-    from resume_jd_matcher_spark.operators.relational import gap_fill_daily
-
-    rows = [
-        (1, dt.datetime(2026, 1, 1, 10), 5.0),
-        (1, dt.datetime(2026, 1, 1, 12), 7.0),
-        (1, dt.datetime(2026, 1, 4, 9), 1.5),   # 2-day gap before
-        (2, dt.datetime(2026, 1, 2, 0), 3.0),    # single-day user
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    out = {
-        (r["user_id"], r["day_num"]): r
-        for r in gap_fill_daily(df).collect()
-    }
-    base = (dt.date(2026, 1, 1) - dt.date(1970, 1, 1)).days
-    assert len(out) == 5  # 4 days for user 1, 1 day for user 2
-    assert out[(1, base)]["day_value"] == 12.0
-    g = out[(1, base + 1)]
-    assert g["is_gap"] == 1 and g["n_events"] == 0
-    assert g["day_value"] is None and g["filled_value"] == 12.0
-    assert out[(1, base + 2)]["filled_value"] == 12.0
-    assert out[(1, base + 3)]["is_gap"] == 0
-    assert out[(1, base + 3)]["filled_value"] == 1.5
-    assert out[(2, base + 1)]["is_gap"] == 0
-
-
-def test_gap_fill_interpolate_linear_blend(spark):
-    """A 3-day gap between observed values 10.0 and 2.0 interpolates
-    linearly (8, 6, 4); observed days keep their own value."""
-    import datetime as dt
-
-    from resume_jd_matcher_spark.operators.relational import (
-        gap_fill_interpolate,
-    )
-
-    rows = [
-        (1, dt.datetime(2026, 2, 1, 9), 10.0),
-        (1, dt.datetime(2026, 2, 5, 9), 2.0),  # 3 gap days between
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    base = (dt.date(2026, 2, 1) - dt.date(1970, 1, 1)).days
-    out = {r["day_num"]: r for r in gap_fill_interpolate(df).collect()}
-    assert len(out) == 5
-    assert out[base]["interp_value"] == 10.0 and out[base]["is_gap"] == 0
-    assert out[base + 1]["interp_value"] == 8.0
-    assert out[base + 2]["interp_value"] == 6.0
-    assert out[base + 3]["interp_value"] == 4.0
-    assert out[base + 4]["interp_value"] == 2.0

@@ -1,6 +1,6 @@
 """Unit tests for the round-11 structure family
 (queries/structure_q.py): hand-computed fixtures for HITS, LPA,
-rendezvous sharding, conformal intervals, B-cubed, and the
+rendezvous sharding, B-cubed, and the
 multiplicative-weights reweighting — plus the exact-integer
 discipline checks (every exposed column is integral)."""
 
@@ -167,85 +167,6 @@ class TestShardRendezvous:
         total = sum(r["n_docs"] for r in rows)
         moved = sum(r["n_moved"] for r in rows)
         assert 0 <= moved < total / 2
-
-
-class TestConformalInterval:
-    def test_matches_python_replay(self, spark, monkeypatch):
-        """Full python mirror of the spec on a controlled orders
-        table: same hash split, same floor-mean predictor, same
-        order-statistic q-hat, same coverage ratio."""
-        import datetime as dt
-        import math
-
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        ts = dt.datetime(2024, 1, 1)
-        prices = [100.0 + 7 * (i % 13) for i in range(60)]
-        o = spark.createDataFrame(
-            [(i, 1, "O", prices[i], ts, "1-URGENT") for i in range(60)],
-            "o_orderkey long, o_custkey long, o_orderstatus string,"
-            " o_totalprice double, o_orderdate timestamp,"
-            " o_orderpriority string",
-        )
-        monkeypatch.setattr(sq, "load_table", lambda *a: o)
-        [r] = sq.q_conformal_interval(spark, SF).collect()
-
-        cents = [math.floor(p * 100 + 0.5) for p in prices]
-        sp = [_hash32(f"{i}#split") % 10 for i in range(60)]
-        cal_c = [c for c, s in zip(cents, sp) if s < 5]
-        ev_c = [c for c, s in zip(cents, sp) if s >= 5]
-        yhat = sum(cal_c) // len(cal_c)
-        scores = sorted(abs(c - yhat) for c in cal_c)
-        k = (90 * (len(cal_c) + 1) + 99) // 100
-        qhat = scores[k - 1]
-        cov = sum(1 for c in ev_c if abs(c - yhat) <= qhat)
-        assert r["n_calib"] == len(cal_c)
-        assert r["n_eval"] == len(ev_c)
-        assert r["qhat_cents"] == qhat
-        assert r["n_covered"] == cov
-        assert r["coverage_e6"] == (cov * 2_000_000 + len(ev_c)) // (
-            2 * len(ev_c)
-        )
-
-    def test_tiny_calibration_engine_oracle_parity(self, spark, tmp_path):
-        """r12 ADVICE: the Spark side clamps k to [1, n] but the
-        registered DuckDB oracle used the raw ceil(0.9*(n+1)) rank —
-        for n_calib < 9 the oracle returned NULL qhat / 0 covered
-        while the engine returned the max order statistic. Both sides
-        must now select the same clamped order statistic. 12 orders →
-        n_calib = 6 (hash split), k = ceil(0.9*7) = 7 > 6 → clamp."""
-        import datetime as dt
-
-        import duckdb
-
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        ts = dt.datetime(2024, 1, 1)
-        prices = [100.0 + 7 * (i % 13) for i in range(12)]
-        o = spark.createDataFrame(
-            [(i, 1, "O", prices[i], ts, "1-URGENT") for i in range(12)],
-            "o_orderkey long, o_custkey long, o_orderstatus string,"
-            " o_totalprice double, o_orderdate timestamp,"
-            " o_orderpriority string",
-        )
-        o.coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / "orders.parquet")
-        )
-        [r] = sq.q_conformal_interval(spark, str(tmp_path)).collect()
-        con = duckdb.connect()
-        con.sql(
-            "CREATE VIEW orders AS SELECT * FROM "
-            f"'{tmp_path}/orders.parquet/*.parquet'"
-        )
-        from resume_jd_matcher_spark import queries as Q
-
-        [d] = con.sql(Q._REGISTRY["conformal_interval"].oracle).fetchall()
-        con.close()
-        duck = dict(zip(["n_calib", "n_eval", "qhat_cents", "n_covered", "coverage_e6"], d))
-        assert r["n_calib"] < 9, "fixture must exercise the clamp"
-        assert r["qhat_cents"] is not None and duck["qhat_cents"] is not None
-        for col in ("n_calib", "n_eval", "qhat_cents", "n_covered", "coverage_e6"):
-            assert r[col] == duck[col], col
 
 
 class TestBcubedEval:

@@ -19,12 +19,7 @@ HEADLINERS = {
     "topk_similarity": "broadcast query side; corpus streams; no pair sort",
     "minhash_lsh": "candidates from (band_id, band_sig) equi-join, no crossJoin",
     "dedup_clusters": "small-graph route: one bounded take, driver union-find",
-    "range_join_binned": "hash equi-join on (key, bin) - no BroadcastNestedLoopJoin",
-    "rollup_timeseries": "hour/day re-aggregate minute partials, raw scanned once",
     "winnow_fingerprint": "two Window nodes, ONE per-doc sort, no Python",
-    "join_revenue_by_nation": "dim side broadcast, fact scans filtered+pruned",
-    "star_join_revenue": "5-way star: dims broadcast, date/returnflag pushed to scans",
-    "pricing_summary": "partial+final hash agg (map-side combine)",
     "funnel_conversion": "all stages keyed on user_id (exchange reuse)",
     "scoring_e2e": "two Arrow-batched Python stages (chunker, LLM), joins native",
     "bucketed_join": "SortMergeJoin, NO shuffle Exchange (bucketed storage; "
@@ -96,17 +91,10 @@ HEADLINERS = {
     "embedding_outliers": "labels*dims centroid table broadcast; "
     "per-vector sum and per-label moments map-side-combined hash "
     "aggs; no window, no pairwise join",
-    "skew_salted_join": "ShuffledHashJoin on (key, _salt): each hot "
-    "key spreads over 8 reducers; dim replicated 8x, never broadcast "
-    "(which would hide the skew at toy SF)",
     "substring_remove": "ONE persisted (id, pos, tok) stream feeds "
     "gram build, owner reduction, AND reassembly (single tokenization "
     "pass); drop set bounded by dup positions x k; removal an "
     "anti-join; reassembly a per-doc hash agg",
-    "ewma_smoothing": "4 lag() taps share ONE per-user window sort; "
-    "fixed 5-term fold, no long float sums, no state",
-    "regression_stats": "regression moments decompose like sum/count: "
-    "one map-side-combined hash agg, pricing_summary's scale story",
     "rerank_e2e": "recall (BM25+dense RRF) cuts to a 20-row pool "
     "BEFORE the rerank scorer touches text — rerank cost independent "
     "of corpus size",
@@ -133,12 +121,6 @@ HEADLINERS = {
     "winsorize_stats": "two scans: bounded bucket histogram locates "
     "p01/p99 (window over bucket rows only), clip+re-agg; NO "
     "per-group sort of raw values anywhere",
-    "approx_stats": "sketches, exact count-distinct, and exact "
-    "percentiles in THREE independent aggs joined broadcast on the "
-    "3-row flag key — one combined agg makes the distinct-Expand "
-    "carry a percentile buffer per (flag, orderkey) partial group "
-    "(measured 209 s vs ~1 s at sf0.1); exact side: two-phase "
-    "distinct + the bounded bucket-histogram percentile plan",
     "simhash_neardup": "fingerprint pipeline persisted across both "
     "self-join sides (InMemoryTableScan x2); md5 runs per DISTINCT "
     "(doc, token) with count weighting; candidates from the "
@@ -152,10 +134,6 @@ HEADLINERS = {
     "psi_drift": "one explode + one map-side-combined token agg; "
     "only the <=top-N vocabulary and a single broadcast totals row "
     "survive the agg",
-    "gap_fill_daily": "grid inherits the bounds agg's user_id "
-    "partitioning, so the LOCF window adds NO Exchange of its own; "
-    "observed days join in (broadcast at this SF, user_id equi-join "
-    "at scale); grid rows generated by sequence(), never shuffled",
     "embedding_whiten": "per-dim stats ONE map-side-combined agg; "
     "transform a zip_with against literal arrays — pure projection, "
     "no join-back, no second shuffle",
@@ -217,9 +195,6 @@ HEADLINERS = {
     "window partitioned by source over bucket rows); pooled "
     "inverse-CDF a 20-row broadcast map; docs join by (source, "
     "bucket) equi-join — no global sort, no percent_rank over rows",
-    "bootstrap_ci": "all 32 resamples live in ONE map-side-combined "
-    "hash agg (64 partial sums per group); replicate means a bounded "
-    "array sort — the corpus is never scanned or resampled B times",
     "event_transitions": "ONE per-user window sort; transition counts "
     "and row normalizer are |types|^2-bounded hash aggs + a broadcast "
     "dim join",
@@ -486,10 +461,6 @@ HEADLINERS = {
     "map-side-combinable aggs per round, no collect_list",
     "shard_rendezvous": "linear explode to doc x (shards+1), ONE "
     "max_by(struct) hash agg per doc (no window), 16-row final agg",
-    "conformal_interval": "order statistic from the bucket-histogram "
-    "rank selection (no raw-score sort, no percentile buffer, no "
-    "generic prefix machinery); predictor means a 5-row broadcast; "
-    "scalars 1-row broadcasts",
     "bcubed_eval": "metric runs on the (pred x gold) CELL grain — "
     "bounded by cluster counts; labels from the cost-routed cc over "
     "banded candidates; fixed-point integer algebra end to end",

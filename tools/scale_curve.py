@@ -195,8 +195,8 @@ REGISTERED = [
     "k_core_graph",
     # round-11 structure family documents members (uncapped, linear
     # by construction: HRW is one explode + one agg per doc; the MW
-    # reweight joins grouped grains only). hits_scores /
-    # conformal_interval are relational inputs (rel curve);
+    # reweight joins grouped grains only). hits_scores is a
+    # relational input (rel curve);
     # label_propagation / bcubed_eval cap doc_id for oracle
     # boundedness and share the minhash-edge kernel already here.
     "shard_rendezvous",

@@ -343,7 +343,6 @@ REGISTERED = [
     # text curve's minhash-edge chain; shard_rendezvous and
     # doremi_reweight are documents kernels on the text curve):
     "hits_scores",
-    "conformal_interval",
     # round-11 batch 2 (events inputs; shapley's 2^n enumeration runs
     # on the bounded touchset census — its fact cost is the per-user
     # bitmask agg, measured here):
