@@ -138,6 +138,11 @@ def assemble_prompt(
     return per_doc.select(F.col(id_col), F.concat(*pieces).alias("prompt"))
 
 
+# Every line boundary str.splitlines honours (the reference splits the
+# SCORES body with it), as a Java regex.
+_LINE_BREAKS = r"\r\n|[\n\r\x0b\x0c\x1c\x1d\x1e\x85\u2028\u2029]"
+
+
 def parse_scores(
     responses: DataFrame, id_col: str = "doc_id", resp_col: str = "response"
 ) -> DataFrame:
@@ -156,7 +161,7 @@ def parse_scores(
     body = F.regexp_extract(F.col(resp_col), r"(?s)SCORES:\s*(.*)", 1)
     lines = responses.select(
         F.col(id_col),
-        F.posexplode(F.split(F.trim(body), r"\n")).alias("pos", "line"),
+        F.posexplode(F.split(F.trim(body), _LINE_BREAKS)).alias("pos", "line"),
     ).filter(F.col("line").contains(":"))
     parsed = lines.select(
         id_col,

@@ -37,8 +37,8 @@ def topk_similarity(
     usually a handful of JDs) → codegen'd distance projection → per-query
     rank. The rank is a shuffle keyed on query_id; with Q queries and N
     corpus rows it moves only the survivors if AQE's local top-k kicks
-    in, else Q×N — for large Q prefer `similarity_join` with a distance
-    threshold prefilter.
+    in, else Q×N — for large Q prefer `similarity_join_auto` with a
+    distance threshold prefilter.
 
     Output: (query_id, id, dist, score), dist = metric distance
     (default squared L2, FAISS IndexFlatL2 parity), score =
@@ -100,39 +100,6 @@ def argmin_per_group(
         F.round("best.dist", 4).alias("dist"),
         faiss_score(F.col("best.dist")).alias("score"),
     )
-
-
-def similarity_join(
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float,
-    left_id: str = "left_id",
-    right_id: str = "right_id",
-    left_vec: str = "left_embedding",
-    right_vec: str = "right_embedding",
-    metric: str = "sql2",
-    dedup_pairs: bool = False,
-) -> DataFrame:
-    """V6: all pairs within distance ``threshold`` — the batch
-    generalization of top-k search (and the near-dup primitive, V8).
-
-    ``dedup_pairs`` keeps only left_id < right_id (symmetric self-join).
-    The left side is broadcast (callers bound it — a query set or a
-    candidate slice); the right side streams with full parallelism.
-    Scale path: this exact form is O(N·M); for large N·M swap in the
-    LSH-bucketed variant (operators/ann.py) which prunes candidate
-    pairs to same-bucket before computing exact distances.
-    """
-    paired = ensure_parallelism(right).crossJoin(F.broadcast(left))
-    d = distance(F.col(left_vec), F.col(right_vec), metric)
-    out = paired.select(
-        F.col(left_id),
-        F.col(right_id),
-        F.round(d, 4).alias("dist"),
-    ).filter(F.col("dist") < F.lit(threshold))
-    if dedup_pairs:
-        out = out.filter(F.col(left_id) < F.col(right_id))
-    return out
 
 
 def similarity_join_auto(

@@ -59,24 +59,17 @@ _PROBE_CHUNK = 1024
 MAX_PROBE_DRIVER_ROWS = 200_000
 
 
-def _broadcast_probe(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    max_driver_rows: int | None = None,
-):
+def _broadcast_probe(df: DataFrame, id_col: str, vec_col: str):
     """Materialize the bounded probe side once and ship it via
     ``sc.broadcast`` (torrent, once per executor) instead of closing
     over it (re-serialized into every task)."""
-    if max_driver_rows is None:
-        max_driver_rows = MAX_PROBE_DRIVER_ROWS  # resolved at call time
     pdf = df.select(id_col, vec_col).toPandas()
-    if len(pdf) > max_driver_rows:
+    if len(pdf) > MAX_PROBE_DRIVER_ROWS:
         raise ValueError(
-            f"probe side has {len(pdf)} rows > {max_driver_rows}; "
-            "brute-force BLAS is the wrong plan at this size — use the "
-            "LSH/IVF candidate paths (operators/ann.py) or raise "
-            "max_driver_rows explicitly"
+            f"probe side has {len(pdf)} rows > {MAX_PROBE_DRIVER_ROWS}; "
+            "brute-force BLAS is the wrong plan at this size — use "
+            "similarity_join_auto, which routes large joins to the LSH "
+            "candidates path, or the IVF paths in operators/ann.py"
         )
     return df.sparkSession.sparkContext.broadcast(
         _query_matrix(pdf, id_col, vec_col)

@@ -101,7 +101,6 @@ from resume_jd_matcher_spark.queries import mining_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import evalops_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import curation_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import ops_q  # noqa: E402,F401
-from resume_jd_matcher_spark.queries import evalplan_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import inference_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import structure_q  # noqa: E402,F401
 
@@ -129,7 +128,9 @@ from resume_jd_matcher_spark.queries import structure_q  # noqa: E402,F401
 # TPC-H-style relational family and the generic-statistics queries
 # (asof_join, approx_stats, exact_percentiles...) emptied ten window
 # slots; the r13 debuts and the head of the once-confirmed queue
-# moved up to fill them.
+# moved up to fill them. Deleting the order/event-table queries
+# (bucketed_join, pivot_unpivot, stats_moments...) emptied seven
+# more, refilled from the head of the queue below the trio.
 _DRIVER_PRIORITY = [
     # -- r12 debuts: first driver rows --
     "stream_session_dedup",
@@ -161,17 +162,12 @@ _DRIVER_PRIORITY = [
     "label_centroids",
     "winnow_fingerprint",
     # -- r4 head: second confirmations --
-    "agg_grouping_sets",
     "array_ops",
-    "bucketed_join",
     "cap_per_source",
     "chunk_sliding",
     "corpus_clean_pipeline",
-    "date_arithmetic",
     "funnel_conversion",
-    "fuzzy_match",
     "heavy_hitters",
-    "json_struct",
     "lang_confusion",
     "leakage_safe_split",
     "pack_token_budget",
@@ -182,25 +178,21 @@ _DRIVER_PRIORITY = [
     "media_wav_census",
     # -- remaining once-confirmed r4/r5/r7/r8 --
     "pii_redact",
-    "pivot_unpivot",
     "rolling_fingerprint",
-    "stats_moments",
     "stratified_sample",
     "stream_late_data",
-    # ---- window boundary (50) ----
-    # -- rows-only trio (held out of the hash window by design) --
-    "llm_feedback",
-    "llm_explain",
-    "mllib_lsh_join",
     "tfidf_topterms",
-    "top_orders_global",
     "train_test_split",
-    "window_stats",
     "winnow_neardup",
     "ann_recall_eval",
     "bloom_contamination",
     "cms_heavy_hitters",
     "corpus_shuffle",
+    # ---- window boundary (50) ----
+    # -- rows-only trio (held out of the hash window by design) --
+    "llm_feedback",
+    "llm_explain",
+    "mllib_lsh_join",
     "curriculum_order",
     "embedding_outliers",
     "graph_triangles",
@@ -217,8 +209,6 @@ _DRIVER_PRIORITY = [
     "substring_remove",
     "token_entropy",
     "weighted_sample",
-    "winsorize_stats",
-    "zorder_curve",
     "boilerplate_ngrams",
     "fd_check",
     "keyword_tag_broadcast",
@@ -242,8 +232,6 @@ _DRIVER_PRIORITY = [
     "matthews_mcc",
     "theil_index",
     "hhi_concentration",
-    "cohens_kappa",
-    "mcnemar_test",
     "effective_sources",
     "link_prediction_jaccard",
     "degree_assortativity",
@@ -313,21 +301,6 @@ _DRIVER_PRIORITY = [
     "brier_logloss",
     "grubbs_test",
     "local_clustering",
-    "lead_lag_ccf",
-    "multitouch_attribution",
-    "ips_policy_eval",
-    "entropy_l_diversity",
-    "join_cardinality_qerror",
-    "term_dispersion",
-    "matryoshka_eval",
-    "session_overlap_join",
-    "encoding_advisor",
-    "nelson_aalen",
-    "woe_iv",
-    "pr_auc",
-    "t_closeness",
-    "cramer_von_mises",
-    "lorenz_curve",
     "market_basket",
     "rfm_segments",
     "level_shift",
@@ -362,19 +335,14 @@ _DRIVER_PRIORITY = [
     "mllib_lsh_agreement",
     "keyword_tag",
     "skill_coverage",
-    "cohort_retention",
     "wilson_ranking",
-    "seasonal_adjust",
-    "benford_dq",
     "negative_sampling",
     "margin_bitext",
     "ngram_diversity",
-    "rolling_anomaly",
     "inverted_index",
     "align_uniformity",
     "quantile_normalize",
     "stream_static_enrich",
-    "event_transitions",
     "ann_multiprobe_topk",
     "corpus_health_scorecard",
     "mine_triplets",

@@ -1,5 +1,5 @@
 """Advanced / composite operators: the full shortlist lifecycle, map
-assembly, array scalar suite, pivot/unpivot, MLlib LSH (SURVEY.md
+assembly, array scalar suite, MLlib LSH (SURVEY.md
 §2.D A3, §2.H, §3.2).
 """
 
@@ -140,30 +140,6 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pivot_unpivot",
-    """
-SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS qty
-FROM lineitem
-WHERE l_linestatus IN ('F', 'O')
-GROUP BY l_returnflag, l_linestatus
-""",
-)
-def q_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: pivot to wide (status → columns) then stack back to long —
-    the round trip must reproduce the direct group-by."""
-    l = load_table(spark, sf_dir, "lineitem")
-    wide = (
-        l.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["F", "O"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-    )
-    return wide.selectExpr(
-        "l_returnflag",
-        "stack(2, 'F', F, 'O', O) AS (l_linestatus, qty)",
-    ).filter(F.col("qty").isNotNull())
-
-
 @register("mllib_lsh_join", None)
 def q_mllib_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V8/V6 via MLlib (rows-only: hash functions are MLlib-internal):
@@ -266,267 +242,6 @@ def q_mllib_lsh_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "top_orders_global",
-    """
-SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-FROM orders
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 20
-""",
-)
-def q_top_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1: global top-N — orderBy().limit() compiles to
-    TakeOrderedAndProject (per-partition partial top-N + driver merge,
-    no full sort; the plan shape FAISS's k-NN return implies,
-    rag_model_mass.py:37-47)."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(20)
-        .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice"))
-    )
-
-
-@register(
-    "agg_grouping_sets",
-    """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       count(*)::BIGINT AS n
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-""",
-)
-def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: explicit GROUPING SETS via the SQL API (same Catalyst plan
-    as the DataFrame rollup/cube paths — the engine exposes both)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               count(*) AS n
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
-
-
-@register(
-    "fuzzy_match",
-    """
-WITH t AS (SELECT DISTINCT event_type FROM events)
-SELECT a.event_type AS left_type, b.event_type AS right_type,
-       levenshtein(a.event_type, b.event_type)::INT AS edit_dist
-FROM t a, t b
-WHERE a.event_type < b.event_type
-  AND levenshtein(a.event_type, b.event_type) <= 4
-""",
-)
-def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U5: fuzzy string matching — Levenshtein distance over distinct
-    value pairs (typo-dedup primitive; both engines implement the
-    classic DP edit distance)."""
-    t = load_table(spark, sf_dir, "events").select("event_type").distinct()
-    a = t.select(F.col("event_type").alias("left_type"))
-    b = t.select(F.col("event_type").alias("right_type"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("left_type") < F.col("right_type"))
-        .select(
-            "left_type",
-            "right_type",
-            F.levenshtein("left_type", "right_type").cast("int").alias("edit_dist"),
-        )
-        .filter(F.col("edit_dist") <= 4)
-    )
-
-
-@register(
-    "window_stats",
-    """
-SELECT o_orderkey, o_custkey,
-       ntile(4) OVER w AS quartile,
-       round(percent_rank() OVER w, 6) AS pct_rank,
-       round(cume_dist() OVER w, 6) AS cume,
-       rank() OVER w AS rnk,
-       dense_rank() OVER w AS drnk
-FROM orders
-WHERE o_custkey < 100
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
-""",
-)
-def q_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3: the full ranking-window surface — ntile / percent_rank /
-    cume_dist / rank / dense_rank per customer."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-        F.rank().over(w).cast("long").alias("rnk"),
-        F.dense_rank().over(w).cast("long").alias("drnk"),
-    )
-
-
-@register(
-    "date_arithmetic",
-    """
-SELECT o_orderkey,
-       strftime(o_orderdate::DATE + INTERVAL 30 DAY, '%Y-%m-%d') AS plus_30d,
-       strftime(last_day(o_orderdate::DATE), '%Y-%m-%d') AS month_end,
-       quarter(o_orderdate)::INT AS q,
-       (dayofweek(o_orderdate) + 1)::INT AS dow,
-       dayofyear(o_orderdate)::INT AS doy,
-       date_diff('month', DATE '1995-01-01', o_orderdate::DATE)::INT AS months_since
-FROM orders
-WHERE o_orderkey < 2000
-""",
-)
-def q_date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T8 date suite: interval arithmetic, last_day, quarter,
-    day-of-week (Spark 1=Sunday ↔ DuckDB 0=Sunday, mapped), day-of-
-    year, month deltas — exposed as strings/ints for exact compare."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
-    d = F.col("o_orderdate").cast("date")
-    return o.select(
-        "o_orderkey",
-        F.date_format(F.date_add(d, 30), "yyyy-MM-dd").alias("plus_30d"),
-        F.date_format(F.last_day(d), "yyyy-MM-dd").alias("month_end"),
-        F.quarter(d).cast("int").alias("q"),
-        F.dayofweek(d).cast("int").alias("dow"),
-        F.dayofyear(d).cast("int").alias("doy"),
-        (
-            (F.year(d) - F.lit(1995)) * 12 + F.month(d) - F.lit(1)
-        ).cast("int").alias("months_since"),
-    )
-
-
-@register(
-    "json_struct",
-    """
-SELECT event_id,
-       json_extract_string(props, '$.k')::INT AS k_int,
-       (json_extract_string(props, '$.k')::INT * 2)::INT AS k_doubled,
-       (json_extract_string(props, '$.k') IS NOT NULL)::INT AS has_k
-FROM events
-WHERE user_id < 30
-""",
-)
-def q_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T8 json: from_json into a typed struct, then project/compute on
-    the parsed fields (schema-on-read for the props column)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("k", T.IntegerType())])
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 30)
-    parsed = e.select("event_id", F.from_json("props", schema).alias("p"))
-    return parsed.select(
-        "event_id",
-        F.col("p.k").alias("k_int"),
-        (F.col("p.k") * 2).cast("int").alias("k_doubled"),
-        F.col("p.k").isNotNull().cast("int").alias("has_k"),
-    )
-
-
-@register(
-    "stats_moments",
-    """
-SELECT l_returnflag,
-       round(avg(l_extendedprice), 4) AS mean_price,
-       round(stddev_samp(l_extendedprice), 4) AS sd_price,
-       round(var_samp(l_extendedprice), 2) AS var_price,
-       round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
-       round(covar_samp(l_quantity, l_extendedprice), 2) AS qty_price_covar
-FROM lineitem
-GROUP BY l_returnflag
-""",
-)
-def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: second-moment statistics — sample stddev/variance and
-    bivariate corr/covar per group (single-pass algebraic aggregates;
-    both engines agree to the exposed rounding)."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.round(F.avg("l_extendedprice"), 4).alias("mean_price"),
-        F.round(F.stddev("l_extendedprice"), 4).alias("sd_price"),
-        F.round(F.var_samp("l_extendedprice"), 2).alias("var_price"),
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("qty_price_corr"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias(
-            "qty_price_covar"
-        ),
-    )
-
-
-def _bucketed_pair(spark: SparkSession, sf_dir: str):
-    """Write orders/customer as bucketed+sorted tables once per
-    (session, sf_dir) — the storage-side lever that makes every later
-    join on the bucket key shuffle-free (tests/test_bucketing.py
-    asserts the no-Exchange plan). Lives in the session warehouse dir;
-    reused on subsequent calls."""
-    import hashlib
-    import shutil
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-
-    def ensure(table: str, source: str, bucket_col: str) -> None:
-        if spark.catalog.tableExists(table):
-            return
-        # A fresh session's in-memory catalog forgets managed tables,
-        # but their warehouse directories survive — clear the stale
-        # location so saveAsTable can recreate deterministically.
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(f"{wh.rstrip('/')}/{table}", ignore_errors=True)
-        (
-            load_table(spark, sf_dir, source)
-            .write.bucketBy(8, bucket_col)
-            .sortBy(bucket_col)
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-
-    to, tc = f"bkt_orders_{key}", f"bkt_customer_{key}"
-    ensure(to, "orders", "o_custkey")
-    ensure(tc, "customer", "c_custkey")
-    return spark.table(to), spark.table(tc)
-
-
-@register(
-    "bucketed_join",
-    """
-SELECT c.c_nationkey AS nationkey,
-       count(*)::BIGINT AS n_orders,
-       round(sum(o.o_totalprice), 2) AS revenue
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY c.c_nationkey
-""",
-)
-def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 via bucketed storage: both sides pre-bucketed (and sorted)
-    on the join key, so the join needs no shuffle exchange — at scale
-    this is THE repeated-join lever (write once, join shuffle-free
-    forever). Result is identical to the plain join, which is what the
-    oracle checks; the plan shape (SortMergeJoin, zero Exchange) is
-    asserted in tests/test_bucketing.py."""
-    bo, bc = _bucketed_pair(spark, sf_dir)
-    return (
-        bo.join(bc, bo.o_custkey == bc.c_custkey)
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
-
-
-@register(
     "pipeline_e2e",
     f"""
 WITH scored AS (
@@ -586,90 +301,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "winsorize_stats",
-    """
-WITH v AS (
-  SELECT l_returnflag AS g, l_extendedprice AS x,
-         floor(l_extendedprice)::BIGINT AS b
-  FROM lineitem
-), hist AS (
-  SELECT g, b, count(*)::BIGINT AS cnt FROM v GROUP BY g, b
-), tot AS (
-  SELECT g, sum(cnt)::BIGINT AS n FROM hist GROUP BY g
-), cum AS (
-  SELECT hist.g, b, cnt, n,
-         sum(cnt) OVER (PARTITION BY hist.g ORDER BY b) AS c
-  FROM hist JOIN tot ON hist.g = tot.g
-), cuts AS (
-  SELECT g, max(n)::BIGINT AS n,
-         min(CASE WHEN c >= ceil(0.01 * n) THEN b END)::BIGINT AS lo_b,
-         min(CASE WHEN c >= ceil(0.99 * n) THEN b END)::BIGINT AS hi_b
-  FROM cum GROUP BY g
-)
-SELECT v.g AS l_returnflag, cuts.n, cuts.lo_b, cuts.hi_b,
-       round(avg(x) + 1e-9, 4) AS mean_raw,
-       round(avg(least(greatest(x, lo_b::DOUBLE), hi_b::DOUBLE)) + 1e-9, 4)
-         AS mean_winsorized
-FROM v JOIN cuts ON v.g = cuts.g
-GROUP BY v.g, cuts.n, cuts.lo_b, cuts.hi_b
-""",
-)
-def q_winsorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 data-cleaning: per-group winsorization at nearest-rank
-    p01/p99, bucket resolution — the outlier-capping pass reward/score
-    pipelines run before normalization. Scan 1 builds the bounded integer-bucket
-    histogram (map-side combined; the rank→bucket lookup is a tiny
-    window over bucket rows, never over raw values), scan 2 clips and
-    re-aggregates. NO per-group sort of raw values anywhere — a
-    window over values would hand each group's 33 TB to one reducer.
-    Cutoffs are exact integers (no float boundary risk); only the two
-    means are rounded floats."""
-    from pyspark.sql import Window
-
-    v = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("g"),
-        F.col("l_extendedprice").alias("x"),
-        F.floor("l_extendedprice").alias("b"),
-    )
-    hist = v.groupBy("g", "b").agg(F.count("*").alias("cnt"))
-    tot = hist.groupBy("g").agg(F.sum("cnt").alias("n"))
-    wb = Window.partitionBy("g").orderBy("b")
-    cum = hist.join(F.broadcast(tot), "g").withColumn(
-        "c", F.sum("cnt").over(wb)
-    )
-    cuts = cum.groupBy("g").agg(
-        F.max("n").alias("n"),
-        F.min(
-            F.when(F.col("c") >= F.ceil(F.lit(0.01) * F.col("n")), F.col("b"))
-        ).alias("lo_b"),
-        F.min(
-            F.when(F.col("c") >= F.ceil(F.lit(0.99) * F.col("n")), F.col("b"))
-        ).alias("hi_b"),
-    )
-    clipped = F.least(
-        F.greatest(F.col("x"), F.col("lo_b").cast("double")),
-        F.col("hi_b").cast("double"),
-    )
-    eps = F.lit(1e-9)
-    return (
-        v.join(F.broadcast(cuts), "g")
-        .groupBy("g", "n", "lo_b", "hi_b")
-        .agg(
-            F.round(F.avg("x") + eps, 4).alias("mean_raw"),
-            F.round(F.avg(clipped) + eps, 4).alias("mean_winsorized"),
-        )
-        .select(
-            F.col("g").alias("l_returnflag"),
-            "n",
-            "lo_b",
-            "hi_b",
-            "mean_raw",
-            "mean_winsorized",
-        )
-    )
-
-
-@register(
     "score_deciles",
     """
 WITH q AS (
@@ -695,12 +326,12 @@ FROM v JOIN cdf c ON v.b = c.b
 def q_score_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] scale-safe quantile calibration: map a per-document score
     onto corpus deciles WITHOUT a global sort/percent_rank — the
-    bucket-histogram CDF trick (as in winsorize_stats):
-    scores bucket at fixed resolution, the cumulative window runs over
-    ≤1001 BUCKET rows (never documents), and each doc joins its
-    bucket's CDF. The rank-normalization step that makes heterogeneous
-    quality signals comparable before blending; docs sharing a bucket
-    share a decile (deterministic). Score = the length component of
+    bucket-histogram CDF trick: scores bucket at fixed resolution,
+    the cumulative window runs over ≤1001 BUCKET rows (never
+    documents), and each doc joins its bucket's CDF. The
+    rank-normalization step that makes heterogeneous quality signals
+    comparable before blending; docs sharing a bucket share a decile
+    (deterministic). Score = the length component of
     text_quality, recomputed with pure string functions so the oracle
     replays it exactly."""
     d = load_table(spark, sf_dir, "documents")

@@ -1,18 +1,11 @@
-"""Corpus/event analytics queries (SURVEY.md §2.D A4 / §2.E W4 [EXT]
-— the monitoring layer a training-data pipeline runs beside
-dedup/quality filtering): cohort retention, Wilson-bound source
-ranking, day-of-week seasonal adjustment, Benford data-quality
-screen, Heaps'-law vocabulary-growth fit, distinct-n diversity,
-trailing-window anomaly z-scores, capped inverted-index heads,
-cross-source quantile normalization, and the Markov event-transition
-matrix.
+"""Corpus analytics queries (SURVEY.md §2.D A4 / §2.E W4 [EXT] — the
+monitoring layer a training-data pipeline runs beside dedup/quality
+filtering): Wilson-bound source ranking, Heaps'-law vocabulary-growth
+fit, distinct-n diversity, capped inverted-index heads, cross-source
+quantile normalization, Zipf fit, log-likelihood keyness and
+effective source count.
 
-Portability contracts shared with the oracles:
-- timestamps exposed as epoch BIGINT (never raw);
-- day-of-week computed as ``floor(epoch/86400) % 7`` (0 = Thursday,
-  1970-01-01) — both engines' native dayofweek disagree on week
-  origin, the modulo doesn't;
-- every float rounded in-query on both sides.
+Every float is rounded in-query on both sides (the oracle contract).
 """
 
 from __future__ import annotations
@@ -22,75 +15,6 @@ from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.queries import register
 from resume_jd_matcher_spark.sources.io import load_table
-
-
-@register(
-    "cohort_retention",
-    """
-WITH firsts AS (
-  SELECT user_id, date_trunc('week', min(ts)) AS cohort
-  FROM events GROUP BY user_id
-), active AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events
-), sizes AS (
-  SELECT cohort, count(*)::BIGINT AS cohort_users FROM firsts GROUP BY cohort
-), ret AS (
-  SELECT f.cohort,
-         (date_diff('day', f.cohort, a.wk) / 7)::INT AS offset_weeks,
-         count(DISTINCT a.user_id)::BIGINT AS n_active
-  FROM active a JOIN firsts f USING (user_id)
-  GROUP BY f.cohort, offset_weeks
-)
-SELECT floor(epoch(r.cohort))::BIGINT AS cohort_epoch,
-       r.offset_weeks,
-       s.cohort_users,
-       r.n_active,
-       round(r.n_active / s.cohort_users::DOUBLE, 4) AS retention
-FROM ret r JOIN sizes s USING (cohort)
-""",
-)
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4/A4 [EXT]: weekly cohort retention — users grouped by the
-    week of their first event; for each (cohort, week offset) the
-    share of the cohort still active. The standard growth-analytics
-    triangle.
-
-    Scale shape: first-activity is one user-keyed hash agg; the
-    active-week set is a distinct on (user, week) — both map-side
-    combinable; the retention agg re-keys on (cohort, offset). The
-    cohort-size dim is |weeks|-bounded and broadcast. No windows, no
-    corpus² anywhere."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    firsts = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort")
-    )
-    active = ev.select(
-        "user_id", F.date_trunc("week", "ts").alias("wk")
-    ).distinct()
-    sizes = firsts.groupBy("cohort").agg(
-        F.count("*").alias("cohort_users")
-    )
-    ret = (
-        active.join(firsts, "user_id")
-        .select(
-            "cohort",
-            (F.datediff(F.col("wk"), F.col("cohort")) / 7)
-            .cast("int")
-            .alias("offset_weeks"),
-            "user_id",
-        )
-        .groupBy("cohort", "offset_weeks")
-        .agg(F.countDistinct("user_id").alias("n_active"))
-    )
-    return ret.join(F.broadcast(sizes), "cohort").select(
-        F.unix_timestamp("cohort").alias("cohort_epoch"),
-        "offset_weeks",
-        "cohort_users",
-        "n_active",
-        F.round(
-            F.col("n_active") / F.col("cohort_users").cast("double"), 4
-        ).alias("retention"),
-    )
 
 
 @register(
@@ -169,131 +93,6 @@ def q_wilson_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s.keep_rate").alias("keep_rate"),
         F.col("s.wilson_lower").alias("wilson_lower"),
         (F.col("pos") + 1).cast("int").alias("rank"),
-    )
-
-
-@register(
-    "seasonal_adjust",
-    """
-WITH daily AS (
-  SELECT event_type,
-         floor(epoch(ts) / 86400)::BIGINT AS day_num,
-         count(*)::BIGINT AS n
-  FROM events GROUP BY event_type, day_num
-), dow AS (
-  SELECT event_type, day_num % 7 AS dow_bucket, avg(n::DOUBLE) AS dow_mean
-  FROM daily GROUP BY event_type, dow_bucket
-), overall AS (
-  SELECT event_type, avg(n::DOUBLE) AS all_mean FROM daily GROUP BY event_type
-)
-SELECT d.event_type,
-       d.day_num * 86400 AS day_epoch,
-       d.n,
-       (d.day_num % 7)::INT AS dow_bucket,
-       round(w.dow_mean / o.all_mean + 1e-9, 4) AS seasonal_index,
-       round(d.n / (w.dow_mean / o.all_mean) + 1e-9, 4) AS adjusted_n
-FROM daily d
-JOIN dow w ON d.event_type = w.event_type AND d.day_num % 7 = w.dow_bucket
-JOIN overall o ON d.event_type = o.event_type
-""",
-)
-def q_seasonal_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4 [EXT]: day-of-week seasonal decomposition of the daily event
-    count — index = dow-mean / overall-mean per event type, adjusted
-    series = raw / index (classical multiplicative deseasonalizing,
-    the first step of an ops-metrics anomaly pipeline; weekday/weekend
-    cycles otherwise drown real shifts). Day-of-week is
-    ``floor(epoch/86400) % 7`` — identical on both engines regardless
-    of week-origin conventions.
-
-    Scale shape: raw events collapse to the daily grain FIRST (one
-    map-side-combinable agg); the dow and overall dims are 7×types and
-    types-bounded, broadcast back onto the daily table."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp("ts") / 86400).alias("day_num"),
-        )
-        .groupBy("event_type", "day_num")
-        .agg(F.count("*").alias("n"))
-    )
-    dow = daily.groupBy(
-        "event_type", (F.col("day_num") % 7).alias("dow_bucket")
-    ).agg(F.avg(F.col("n").cast("double")).alias("dow_mean"))
-    overall = daily.groupBy("event_type").agg(
-        F.avg(F.col("n").cast("double")).alias("all_mean")
-    )
-    idx = F.col("dow_mean") / F.col("all_mean")
-    return (
-        daily.withColumn("dow_bucket", F.col("day_num") % 7)
-        .join(F.broadcast(dow), ["event_type", "dow_bucket"])
-        .join(F.broadcast(overall), "event_type")
-        .select(
-            "event_type",
-            (F.col("day_num") * 86400).alias("day_epoch"),
-            "n",
-            F.col("dow_bucket").cast("int").alias("dow_bucket"),
-            F.round(idx + F.lit(1e-9), 4).alias("seasonal_index"),
-            F.round(F.col("n") / idx + F.lit(1e-9), 4).alias("adjusted_n"),
-        )
-    )
-
-
-@register(
-    "benford_dq",
-    """
-WITH digits AS (
-  SELECT substr(floor(o_totalprice)::BIGINT::VARCHAR, 1, 1)::INT AS digit
-  FROM orders WHERE o_totalprice >= 1
-), counts AS (
-  SELECT digit, count(*)::BIGINT AS n FROM digits GROUP BY digit
-), tot AS (SELECT sum(n)::DOUBLE AS total FROM counts)
-SELECT d.digit,
-       coalesce(c.n, 0)::BIGINT AS n,
-       round(coalesce(c.n, 0) / t.total + 1e-9, 6) AS observed_p,
-       round(log10(1 + 1.0 / d.digit) + 1e-9, 6) AS expected_p,
-       round(t.total * pow(coalesce(c.n, 0) / t.total - log10(1 + 1.0 / d.digit), 2)
-             / log10(1 + 1.0 / d.digit) + 1e-9, 6) AS chi2_term
-FROM (SELECT unnest(generate_series(1, 9)) AS digit) d
-LEFT JOIN counts c USING (digit)
-CROSS JOIN tot t
-""",
-)
-def q_benford_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/DQ [EXT]: Benford's-law first-digit screen on order totals —
-    observed first-significant-digit distribution vs log10(1+1/d),
-    with per-digit chi-square contributions (Σ over the 9 rows is the
-    test statistic; a synthetic-uniform price column FAILS this
-    screen, which is the point of running it as data-quality
-    monitoring on financial-ish columns).
-
-    Scale shape: one 9-bucket hash agg over the scan + a broadcast of
-    the 1-row total; the digit dimension is a 9-row local range."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
-    digits = o.select(
-        F.substring(F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1)
-        .cast("int")
-        .alias("digit")
-    )
-    counts = digits.groupBy("digit").agg(F.count("*").alias("n"))
-    tot = counts.agg(F.sum("n").cast("double").alias("total"))
-    dim = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
-    exp_p = F.log10(1 + 1.0 / F.col("digit"))
-    obs_p = F.coalesce("n", F.lit(0)) / F.col("total")
-    return (
-        dim.join(F.broadcast(counts), "digit", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "digit",
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n"),
-            F.round(obs_p + F.lit(1e-9), 6).alias("observed_p"),
-            F.round(exp_p + F.lit(1e-9), 6).alias("expected_p"),
-            F.round(
-                F.col("total") * F.pow(obs_p - exp_p, 2) / exp_p + F.lit(1e-9),
-                6,
-            ).alias("chi2_term"),
-        )
     )
 
 
@@ -455,101 +254,6 @@ def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "rolling_anomaly",
-    """
-WITH daily AS (
-  SELECT event_type,
-         floor(epoch(ts) / 86400)::BIGINT AS day_num,
-         count(*)::BIGINT AS n
-  FROM events GROUP BY event_type, day_num
-), stats AS (
-  SELECT event_type, day_num, n,
-         count(*)   OVER w AS w_n,
-         sum(n)     OVER w AS w_sum,
-         sum(n * n) OVER w AS w_sumsq
-  FROM daily
-  WINDOW w AS (PARTITION BY event_type ORDER BY day_num
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-)
-SELECT event_type,
-       day_num * 86400 AS day_epoch,
-       n,
-       round(w_sum / w_n::DOUBLE + 1e-9, 4) AS trail_mean,
-       CASE WHEN (w_sumsq - w_sum * w_sum / w_n::DOUBLE) > 0 THEN
-         round((n - w_sum / w_n::DOUBLE)
-               / sqrt((w_sumsq - w_sum * w_sum / w_n::DOUBLE) / (w_n - 1)) + 1e-9,
-               4) END AS z,
-       CASE WHEN (w_sumsq - w_sum * w_sum / w_n::DOUBLE) > 0 THEN
-         CASE WHEN abs((n - w_sum / w_n::DOUBLE)
-               / sqrt((w_sumsq - w_sum * w_sum / w_n::DOUBLE) / (w_n - 1))) > 2.5
-              THEN 1 ELSE 0 END
-       ELSE CASE WHEN n::DOUBLE != w_sum / w_n::DOUBLE THEN 1 ELSE 0 END
-       END AS is_anomaly
-FROM stats WHERE w_n >= 4
-""",
-)
-def q_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4 [EXT]: trailing-window anomaly detection on the daily event
-    count — z-score of each day against its own previous ≤7 days
-    (frame excludes the current row, so a spike can't mask itself).
-    Variance comes from EXACT INTEGER window sums (Σn, Σn²) — counts
-    are integers, so the moments are bit-identical on both engines
-    where float running sums would not be (segment-tree vs streaming
-    accumulation).
-
-    Scale shape: raw events collapse to the daily grain first; the
-    window is partitioned by event_type over day-grain rows (≤366/yr
-    per type), never over raw events."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp("ts") / 86400).alias("day_num"),
-        )
-        .groupBy("event_type", "day_num")
-        .agg(F.count("*").alias("n"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day_num")
-        .rowsBetween(-7, -1)
-    )
-    stats = daily.select(
-        "event_type",
-        "day_num",
-        "n",
-        F.count("*").over(w).alias("w_n"),
-        F.sum("n").over(w).alias("w_sum"),
-        F.sum(F.col("n") * F.col("n")).over(w).alias("w_sumsq"),
-    ).filter(F.col("w_n") >= 4)
-    mean = F.col("w_sum") / F.col("w_n").cast("double")
-    ss = F.col("w_sumsq") - F.col("w_sum") * F.col("w_sum") / F.col("w_n").cast(
-        "double"
-    )
-    var = ss / (F.col("w_n") - 1)
-    z = (F.col("n") - mean) / F.sqrt(var)
-    eps = F.lit(1e-9)
-    # A perfectly flat trailing window (ss == 0) has no scale: z is
-    # NULL by definition and any departure from the constant IS the
-    # anomaly — mirrored branch-for-branch in the oracle (a plain
-    # division would also throw under ANSI mode).
-    return stats.select(
-        "event_type",
-        (F.col("day_num") * 86400).alias("day_epoch"),
-        "n",
-        F.round(mean + eps, 4).alias("trail_mean"),
-        F.when(ss > 0, F.round(z + eps, 4)).alias("z"),
-        F.when(
-            ss > 0, F.when(F.abs(z) > 2.5, F.lit(1)).otherwise(F.lit(0))
-        )
-        .otherwise(
-            F.when(F.col("n").cast("double") != mean, F.lit(1)).otherwise(F.lit(0))
-        )
-        .alias("is_anomaly"),
-    )
-
-
-@register(
     "inverted_index",
     f"""
 WITH t AS (
@@ -703,59 +407,6 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qbin",
             F.col("pooled_b").alias("norm_chars"),
         )
-    )
-
-
-@register(
-    "event_transitions",
-    """
-WITH ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS next_type
-  FROM events
-), pairs AS (
-  SELECT event_type AS from_type, next_type AS to_type
-  FROM ordered WHERE next_type IS NOT NULL
-), counts AS (
-  SELECT from_type, to_type, count(*)::BIGINT AS n FROM pairs
-  GROUP BY from_type, to_type
-), totals AS (
-  SELECT from_type, sum(n)::BIGINT AS n_from FROM counts GROUP BY from_type
-)
-SELECT c.from_type, c.to_type, c.n,
-       round(c.n / t.n_from::DOUBLE + 1e-9, 4) AS p
-FROM counts c JOIN totals t USING (from_type)
-""",
-)
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4/A4 [EXT]: first-order Markov transition matrix of the event
-    stream — per user, each event pairs with its successor (lead over
-    the per-user time order); transition counts row-normalize into
-    P(next | current). The behavioral-model summary (and anomaly
-    baseline: a transition whose live p drifts from this table is a
-    funnel break).
-
-    Scale shape: ONE per-user window sort (partitioned by user_id —
-    state per task is one user's events), then two |types|²-bounded
-    hash aggs; the row-normalizer joins a |types|-bounded broadcast
-    dim. Deterministic tie-break (ts, event_id) in the ordering."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .filter(F.col("to_type").isNotNull())
-    )
-    counts = pairs.groupBy("from_type", "to_type").agg(F.count("*").alias("n"))
-    totals = counts.groupBy("from_type").agg(F.sum("n").alias("n_from"))
-    return counts.join(F.broadcast(totals), "from_type").select(
-        "from_type",
-        "to_type",
-        "n",
-        F.round(F.col("n") / F.col("n_from").cast("double") + F.lit(1e-9), 4).alias("p"),
     )
 
 

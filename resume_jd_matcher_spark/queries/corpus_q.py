@@ -1,5 +1,5 @@
-"""Corpus-hygiene and layout queries (round 4): Gopher repetition
-filters, Z-order multi-dim layout, product-quantization ANN.
+"""Corpus-hygiene queries (round 4): Gopher repetition filters,
+product-quantization ANN.
 
 Same oracle contract as every module: identical aliases, in-query
 rounding with the 1e-9 boundary nudge, deterministic tie-breaks.
@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.operators import quality
-from resume_jd_matcher_spark.plans.layout import zvalue, zvalue_sql
 from resume_jd_matcher_spark.queries import register
 from resume_jd_matcher_spark.queries.text_q import SQL_TOKS
 from resume_jd_matcher_spark.queries.vector_q import SQL_SQL2
@@ -70,28 +69,6 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches keyword-stuffed/templated documents exact and near dedup
     both miss (repetition is intra-doc, dedup is inter-doc)."""
     return quality.repetition_stats(load_table(spark, sf_dir, "documents"))
-
-
-@register(
-    "zorder_curve",
-    f"""
-SELECT event_id,
-       {zvalue_sql('user_id', 'floor(value)')} AS zval
-FROM events
-""",
-)
-def q_zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] Z-order (Morton) clustering key over (user_id,
-    floor(value)) — the Delta/Iceberg ZORDER BY primitive that makes
-    parquet min/max stats prune on BOTH dimensions of a selective
-    scan (plans/layout.py; the layout write itself is pytest-verified
-    for two-dim pruning in tests/test_zorder.py). One codegen'd
-    integer expression per row; the bit interleave is generated from
-    the same term list on both engines."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id", zvalue(F.col("user_id"), F.floor("value")).alias("zval")
-    )
 
 
 def _pq_sql(

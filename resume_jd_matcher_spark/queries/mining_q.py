@@ -520,11 +520,10 @@ def q_level_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     substitute).
 
     Scale shape: events collapse to the (type, day) grain FIRST (one
-    map-side-combined hash agg carrying integer micro-sums, the
-    rolling_anomaly discipline), so every window below runs over
-    day-grain rows partitioned by event_type — bounded by the
-    calendar, not event volume. Means derive from exact integer sums
-    on both engines; no float accumulation anywhere."""
+    map-side-combined hash agg carrying integer micro-sums), so every
+    window below runs over day-grain rows partitioned by event_type —
+    bounded by the calendar, not event volume. Means derive from exact
+    integer sums on both engines; no float accumulation anywhere."""
     e = load_table(spark, sf_dir, "events")
     daily = (
         e.select(
@@ -1010,9 +1009,8 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: collapse to the (flag, price-cents) VALUE grain
     first — one map-side-combined hash agg, so the cumulative-weight
-    window runs over distinct values per group, not fact rows (the
-    winsorize_stats discipline). All weights are exact integers;
-    the window partitions by flag."""
+    window runs over distinct values per group, not fact rows. All
+    weights are exact integers; the window partitions by flag."""
     li = load_table(spark, sf_dir, "lineitem")
     grain = (
         li.select(
@@ -2007,7 +2005,7 @@ FROM rz CROSS JOIN med CROSS JOIN mad CROSS JOIN top
 def q_anomaly_mad_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4/A4 [EXT]: robust daily-revenue anomaly screen — modified
     z-scores 0.6745·(x − median)/MAD with the Iglewicz-Hoaglin 3.5
-    cut (the robust twin of rolling_anomaly's mean/std window: one
+    cut (the robust twin of a mean/std window: one
     bad day inflates a stddev and masks itself; the median/MAD pair
     has a 50% breakdown point). Emits a 1-row summary (always
     non-vacuous): day count, median, MAD, anomaly count, and the

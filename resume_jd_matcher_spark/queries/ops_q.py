@@ -749,9 +749,9 @@ ORDER BY rnk LIMIT {_PATH_TOP_K}
 def q_event_paths_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4/A4 [EXT]: top behavioral paths — the {_PATH_TOP_K} most
     frequent 3-step event-type sequences across user timelines (the
-    path-analysis readout behind funnel tools; event_transitions is
-    its first-order Markov projection, this keeps second-order
-    structure). Deterministic time order via the (ts, event_id)
+    path-analysis readout behind funnel tools; it keeps the
+    second-order structure a first-order transition matrix drops).
+    Deterministic time order via the (ts, event_id)
     tie-break.
 
     Scale shape: ONE per-user window sort (partitioned by user_id —

@@ -304,7 +304,7 @@ def q_shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus), which this query audits directly by computing the
     {n}-shard and {n}+1-shard assignments side by side and counting
     per-shard departures. The routing layer a 100-TB ingest needs
-    under elastic shard counts; complements zorder_curve (locality).
+    under elastic shard counts.
 
     Scale shape: linear explode to the doc x (shards+1) grain, ONE
     map-side-combinable max_by aggregation per doc (lexicographic

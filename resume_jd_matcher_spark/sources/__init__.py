@@ -1,7 +1,5 @@
 from resume_jd_matcher_spark.sources.io import (
     load_table,
-    load_tables,
-    scan_documents,
     scan_text_files,
     scan_binary_files,
     format_dispatch,
@@ -11,8 +9,6 @@ from resume_jd_matcher_spark.sources.io import (
 
 __all__ = [
     "load_table",
-    "load_tables",
-    "scan_documents",
     "scan_text_files",
     "scan_binary_files",
     "format_dispatch",

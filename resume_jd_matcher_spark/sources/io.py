@@ -166,17 +166,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     )
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def scan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's corpus table — stands in for the resume corpus
-    (reference shape ``{"file_name", "content"}``, vectorDB.py:19-25).
-    """
-    return load_table(spark, sf_dir, "documents")
-
-
 def scan_text_files(spark: SparkSession, glob: str) -> DataFrame:
     """SRC3: whole-file text scan (reference: TextLoader, utils.py:16-17).
 

@@ -1,11 +1,10 @@
 """Semantics tests for the round-6 analytics additions: dictionary
-keyword tagging / skill coverage, cohort retention, Wilson-bound
-ranking, day-of-week seasonal adjustment, Benford screen.
+keyword tagging / skill coverage, Wilson-bound ranking, and the
+corpus analytics queries.
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 
 import pytest
@@ -100,25 +99,6 @@ class TestSkillCoverage:
         assert out == {1: "high", 2: "medium", 3: "low"}
 
 
-def _ts(day: int, hour: int = 12) -> dt.datetime:
-    return dt.datetime(2024, 1, day, hour, 0, 0)
-
-
-class TestCohortRetention:
-    def test_triangle(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries.analytics_q import q_cohort_retention
-
-        out = q_cohort_retention(spark, sf_dir).collect()
-        by_key = {(r["cohort_epoch"], r["offset_weeks"]): r for r in out}
-        # offset-0 retention is 1.0 by construction (every user is
-        # active in their first week)
-        for (c, off), r in by_key.items():
-            if off == 0:
-                assert r["retention"] == 1.0
-            assert 0 < r["n_active"] <= r["cohort_users"]
-            assert off >= 0
-
-
 class TestWilsonRanking:
     def test_small_sample_demoted(self, spark):
         # 3/3 perfect vs 95/100: naive rate says tiny source wins,
@@ -146,65 +126,6 @@ class TestWilsonRanking:
         assert got["tiny"][0] > got["big"][0]   # naive rate: tiny "wins"
         assert got["big"][1] > got["tiny"][1]   # wilson: big wins
         assert 0 <= got["tiny"][1] <= 1
-
-
-class TestSeasonalAdjust:
-    def test_planted_cycle_flattens(self, spark, monkeypatch):
-        """Counts follow a pure day-of-week cycle → the adjusted
-        series is flat at the overall mean."""
-        from resume_jd_matcher_spark.queries import analytics_q
-
-        # 4 full weeks; count for dow d is 10*(d+1) via value rows
-        rows = []
-        eid = 0
-        for day in range(1, 29):
-            daynum = (dt.date(2024, 1, day) - dt.date(1970, 1, 1)).days
-            for _ in range(10 * (daynum % 7 + 1)):
-                rows.append((eid, _ts(day), 1, "view", 0.0, "{}"))
-                eid += 1
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-        monkeypatch.setattr(
-            analytics_q, "load_table", lambda s, d, n: df
-        )
-        out = analytics_q.q_seasonal_adjust(spark, "ignored").collect()
-        adj = [r["adjusted_n"] for r in out]
-        assert len(out) == 28
-        assert max(adj) - min(adj) < 1e-6  # perfectly deseasonalized
-        # index proportional to the planted 1..7 cycle
-        idx = {r["dow_bucket"]: r["seasonal_index"] for r in out}
-        assert idx[6] / idx[0] == pytest.approx(7.0, rel=1e-3)
-
-
-class TestBenford:
-    def test_benford_sample_passes_uniform_fails(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import analytics_q
-
-        # Benford-ish: exponential spread 10^u
-        ben = [(i, 0, 0, None, float(10 ** (1 + (i * 0.6180339887) % 1) * 100), "{}")
-               for i in range(3000)]
-        uni = [(i, 0, 0, None, float(1000 + i), "{}") for i in range(3000)]
-
-        def run(rows):
-            df = spark.createDataFrame(
-                rows,
-                "o_orderkey long, o_custkey long, x long, o_orderdate date, o_totalprice double, props string",
-            )
-            monkeypatch.setattr(analytics_q, "load_table", lambda s, d, n: df)
-            out = analytics_q.q_benford_dq(spark, "ignored").collect()
-            assert len(out) == 9
-            assert sum(r["observed_p"] for r in out) == pytest.approx(1.0, abs=1e-3)
-            assert sum(r["expected_p"] for r in out) == pytest.approx(1.0, abs=1e-3)
-            return sum(r["chi2_term"] for r in out)
-
-        chi_ben = run(ben)
-        chi_uni = run(uni)
-        # chi2 df=8: 0.05 critical ~15.5. The golden-ratio sequence is
-        # equidistributed → near-Benford; 1000..3999 uniform is wildly
-        # non-Benford.
-        assert chi_ben < 30
-        assert chi_uni > 300
 
 
 class TestNegativeSampling:
@@ -314,27 +235,6 @@ class TestBatch3Analytics:
         assert out["loop"]["n_bigrams"] == 5
         assert out["loop"]["n_distinct"] == 2
         assert out["loop"]["distinct_2"] == 0.4
-
-    def test_rolling_anomaly_flags_planted_spike(self, spark, monkeypatch):
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import analytics_q
-
-        rows, eid = [], 0
-        for day in range(1, 21):
-            n = 200 if day == 15 else 10   # massive spike on day 15
-            for _ in range(n):
-                rows.append((eid, dt.datetime(2024, 1, day, 12), 1, "view", 0.0, "{}"))
-                eid += 1
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-        monkeypatch.setattr(analytics_q, "load_table", lambda s, d, n: df)
-        out = analytics_q.q_rolling_anomaly(spark, "ignored").collect()
-        spike_day = (dt.date(2024, 1, 15) - dt.date(1970, 1, 1)).days * 86400
-        flags = {r["day_epoch"]: r["is_anomaly"] for r in out}
-        assert flags[spike_day] == 1
-        assert sum(flags.values()) <= 2  # spike day (+ possibly the day after)
 
     def test_inverted_index_head(self, spark, monkeypatch):
         from resume_jd_matcher_spark.queries import analytics_q
@@ -481,40 +381,6 @@ class TestNegativeSamplingCDF:
         for r in out:
             lo, hi = tok_of[r["neg_token"]]
             assert hi - lo > 0 and 0 <= lo < hi <= W
-
-
-class TestEventTransitions:
-    def test_known_chain(self, spark, monkeypatch):
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import analytics_q
-
-        # user 1: a->b->a->b ; user 2: a->c
-        rows = [
-            (1, dt.datetime(2024, 1, 1, 1), 1, "a", 0.0, "{}"),
-            (2, dt.datetime(2024, 1, 1, 2), 1, "b", 0.0, "{}"),
-            (3, dt.datetime(2024, 1, 1, 3), 1, "a", 0.0, "{}"),
-            (4, dt.datetime(2024, 1, 1, 4), 1, "b", 0.0, "{}"),
-            (5, dt.datetime(2024, 1, 1, 1), 2, "a", 0.0, "{}"),
-            (6, dt.datetime(2024, 1, 1, 2), 2, "c", 0.0, "{}"),
-        ]
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-        monkeypatch.setattr(analytics_q, "load_table", lambda s, d, n: df)
-        out = {(r["from_type"], r["to_type"]): r for r in
-               analytics_q.q_event_transitions(spark, "ignored").collect()}
-        assert out[("a", "b")]["n"] == 2
-        assert out[("a", "c")]["n"] == 1
-        assert out[("b", "a")]["n"] == 1
-        assert out[("a", "b")]["p"] == pytest.approx(2 / 3, abs=1e-4)
-        # rows of the matrix sum to 1
-        from collections import defaultdict
-        rowsum = defaultdict(float)
-        for (f, t), r in out.items():
-            rowsum[f] += r["p"]
-        for f, s in rowsum.items():
-            assert s == pytest.approx(1.0, abs=1e-3)
 
 
 class TestZipfFit:

@@ -59,24 +59,3 @@ def test_bucketed_join_has_no_shuffle(spark):
         for t in (t_orders, t_customer):
             shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
 
-
-@pytest.mark.slow
-def test_registered_bucketed_join_no_shuffle(spark):
-    """The oracle-checked bucketed_join query takes the shuffle-free
-    path when broadcast is off (its correctness is driver-checked)."""
-    from resume_jd_matcher_spark.queries.advanced_q import q_bucketed_join
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = q_bucketed_join(spark, SF)
-        plan = physical_plan(df)
-        assert "SortMergeJoin" in plan
-        # the only Exchange allowed is the groupBy's, keyed on the agg
-        # column — the JOIN itself must not repartition either side
-        join_part = plan.split("SortMergeJoin")[-1]
-        assert "Exchange hashpartitioning(o_custkey" not in join_part
-        assert "Exchange hashpartitioning(c_custkey" not in join_part
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

@@ -1,583 +1,22 @@
-"""Round-10: invariants of the evalplan_q queries — lead-lag CCF,
-multi-touch attribution, IPS policy eval, entropy l-diversity, the
-histogram join-cardinality estimator, term dispersion, matryoshka
-truncation fidelity, the interval-overlap join, the encoding advisor,
-Nelson-Aalen, and WOE/IV — each against a hand-computable fixture."""
+"""The ANSI-mode division guard of ops_q's degree assortativity: a
+degenerate input must yield NULL (matching the DuckDB oracle) instead
+of DIVIDE_BY_ZERO."""
 
 from __future__ import annotations
 
 import datetime as dt
-import math
-
-import pytest
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
-_EV_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
 _LI_SCHEMA = (
     "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
     "l_quantity double, l_extendedprice double, l_discount double, "
     "l_tax double, l_returnflag string, l_linestatus string, "
     "l_shipdate timestamp"
 )
-_ORD_SCHEMA = (
-    "o_orderkey long, o_custkey long, o_orderstatus string, "
-    "o_totalprice double, o_orderdate timestamp, o_orderpriority string"
-)
-
-
-def _ev(eid, day_off, sec, uid, etype, val):
-    ts = dt.datetime(2024, 1, 1) + dt.timedelta(days=day_off, seconds=sec)
-    return (eid, ts, uid, etype, val, "{}")
-
-
-class TestLeadLagCcf:
-    def test_shifted_signal_peaks_at_its_lag(self, spark, monkeypatch):
-        """Purchases are views shifted by exactly +2 days (same daily
-        counts): ccf at lag +2 must be ~1.0 and strictly top."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows, eid = [], 0
-        # aperiodic daily counts (pi digits): a periodic pattern would
-        # make every lag congruent to +2 mod the period also score 1.0
-        counts = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9, 3, 2, 3, 8, 4]
-        for day in range(20):
-            n = counts[day]
-            for i in range(n):
-                rows.append(_ev(eid, day, 60 * i, 1, "view", 1.0))
-                eid += 1
-            for i in range(n):
-                rows.append(_ev(eid, day + 2, 60 * i + 30, 2, "purchase", 1.0))
-                eid += 1
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        out = {
-            r["lag"]: r for r in evalplan_q.q_lead_lag_ccf(spark, SF).collect()
-        }
-        assert len(out) == 15
-        assert out[2]["ccf"] == pytest.approx(1.0, abs=1e-6)
-        for lag, r in out.items():
-            if lag != 2 and r["ccf"] is not None:
-                assert r["ccf"] < 1.0
-
-    def test_constant_side_yields_null(self, spark, monkeypatch):
-        """A zero-variance daily count must yield NULL ccf (the
-        guarded CASE), not a division error — on every lag."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows, eid = [], 0
-        for day in range(10):
-            rows.append(_ev(eid, day, 0, 1, "view", 1.0))  # constant 1/day
-            eid += 1
-            for i in range(day % 3 + 1):
-                rows.append(_ev(eid, day, 60 + i, 2, "purchase", 1.0))
-                eid += 1
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        out = evalplan_q.q_lead_lag_ccf(spark, SF).collect()
-        assert all(r["ccf"] is None for r in out)
-
-
-class TestMultitouchAttribution:
-    def test_three_models_credit_correctly(self, spark, monkeypatch):
-        """view then click then a 10.0 purchase: last->click=10,
-        first->view=10, linear->5+5; a touch older than the window
-        and another user's touch must not receive credit."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = [
-            _ev(1, 0, 0, 1, "view", 0.0),
-            _ev(2, 0, 600, 1, "click", 0.0),
-            _ev(3, 0, 1200, 1, "purchase", 10.0),
-            # 8 days before the purchase: outside the 7-day window
-            _ev(4, -8, 1200, 1, "click", 0.0),
-            # other user's touch: ignored
-            _ev(5, 0, 300, 2, "view", 0.0),
-        ]
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        out = {
-            (r["model"], r["event_type"]): r
-            for r in evalplan_q.q_multitouch_attribution(spark, SF).collect()
-        }
-        assert out[("last_touch", "click")]["credited_value"] == 10.0
-        assert ("last_touch", "view") not in out
-        assert out[("first_touch", "view")]["credited_value"] == 10.0
-        assert out[("linear", "view")]["credited_value"] == 5.0
-        assert out[("linear", "click")]["credited_value"] == 5.0
-
-
-class TestIpsPolicyEval:
-    def test_hand_computed_estimates(self, spark, monkeypatch):
-        """One segment, two actions: A logged 3x (reward 1), B logged
-        once (reward 2). Uniform target over k=2 actions: w_A = 2/3,
-        w_B = 2 -> IPS = (3*2/3*1 + 2*2)/4 = 1.5 = SNIPS,
-        logged_mean = 5/4."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = [
-            _ev(1, 0, 0, 3, "A", 1.0),
-            _ev(2, 0, 60, 3, "A", 1.0),
-            _ev(3, 1, 0, 3, "A", 1.0),
-            _ev(4, 1, 60, 3, "B", 2.0),
-        ]
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        out = {
-            r["estimator"]: r["value"]
-            for r in evalplan_q.q_ips_policy_eval(spark, SF).collect()
-        }
-        assert out["logged_mean"] == pytest.approx(1.25, abs=1e-6)
-        assert out["ips"] == pytest.approx(1.5, abs=1e-6)
-        assert out["snips"] == pytest.approx(1.5, abs=1e-6)
-
-
-class TestEntropyLDiversity:
-    def test_uniform_and_degenerate_classes(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = [
-            # class (1, SEG): 4 customers in 4 distinct $1000 buckets
-            (1, "c1", 1, 500.0, "SEG"),
-            (2, "c2", 1, 1500.0, "SEG"),
-            (3, "c3", 1, 2500.0, "SEG"),
-            (4, "c4", 1, 3500.0, "SEG"),
-            # class (2, SEG): 3 customers all in one bucket
-            (5, "c5", 2, 100.0, "SEG"),
-            (6, "c6", 2, 200.0, "SEG"),
-            (7, "c7", 2, 300.0, "SEG"),
-        ]
-        c = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: c)
-        out = {
-            r["c_nationkey"]: r
-            for r in evalplan_q.q_entropy_l_diversity(spark, SF).collect()
-        }
-        assert out[1]["k_size"] == 4
-        assert out[1]["l_distinct"] == 4
-        assert out[1]["entropy_l"] == pytest.approx(4.0, abs=1e-6)
-        assert not out[1]["at_risk"]
-        assert out[2]["l_distinct"] == 1
-        assert out[2]["entropy_l"] == pytest.approx(1.0, abs=1e-6)
-        assert out[2]["at_risk"]
-
-
-class TestJoinCardinalityQerror:
-    def test_actual_is_exact_and_qerror_sane(self, spark, sf_dir, duck):
-        """actual_rows must equal the TRUE join cardinality (computed
-        independently); q_error >= 1 by construction; the FK joins'
-        histogram estimate should be within 2x here (uniform keys)."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        out = {
-            r["relation"]: r
-            for r in evalplan_q.q_join_cardinality_qerror(
-                spark, sf_dir
-            ).collect()
-        }
-        truth = {
-            "lineitem_part": duck.sql(
-                "SELECT count(*) FROM lineitem JOIN part"
-                " ON l_partkey = p_partkey"
-            ).fetchone()[0],
-            "lineitem_supplier": duck.sql(
-                "SELECT count(*) FROM lineitem JOIN supplier"
-                " ON l_suppkey = s_suppkey"
-            ).fetchone()[0],
-            "orders_customer": duck.sql(
-                "SELECT count(*) FROM orders JOIN customer"
-                " ON o_custkey = c_custkey"
-            ).fetchone()[0],
-        }
-        assert len(out) == 3
-        for rel, row in out.items():
-            assert row["actual_rows"] == truth[rel]
-            assert row["q_error"] >= 1.0
-            assert row["q_error"] < 2.0
-
-
-class TestTermDispersion:
-    def test_clumped_vs_spread_terms(self, spark, monkeypatch):
-        """Two sources with equal token mass: a term living ONLY in
-        source A gets DP = 0.5; a term spread exactly like the corpus
-        gets DP = 0."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        # srcA: 'boiler' x4 + 'common' x4; srcB: 'filler' x4 + 'common' x4
-        rows = [
-            (1, "boiler boiler boiler boiler common common common common",
-             "en", "srcA", 0),
-            (2, "filler filler filler filler common common common common",
-             "en", "srcB", 0),
-        ]
-        d = spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        )
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: d)
-        out = {
-            r["term"]: r
-            for r in evalplan_q.q_term_dispersion(spark, SF).collect()
-        }
-        assert out["common"]["dp"] == pytest.approx(0.0, abs=1e-6)
-        assert out["boiler"]["dp"] == pytest.approx(0.5, abs=1e-6)
-        assert out["filler"]["dp"] == pytest.approx(0.5, abs=1e-6)
-
-
-class TestMatryoshkaEval:
-    def test_mass_in_prefix_dims_is_lossless(self, spark, monkeypatch):
-        """Vectors whose mass lives entirely in the first 16 dims:
-        truncated cosine == full cosine -> pearson 1, mae 0."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        import random
-
-        rng = random.Random(7)
-        rows = []
-        for i in range(6):
-            v = [rng.uniform(-1, 1) for _ in range(16)] + [0.0] * 48
-            rows.append((i, v, 0))
-        e = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        )
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        out = {
-            r["trunc_dim"]: r
-            for r in evalplan_q.q_matryoshka_eval(spark, SF).collect()
-        }
-        assert out[16]["n_pairs"] == 5
-        assert out[16]["pearson_r"] == pytest.approx(1.0, abs=1e-4)
-        assert out[16]["mae"] == pytest.approx(0.0, abs=1e-4)
-        assert out[32]["mae"] == pytest.approx(0.0, abs=1e-4)
-
-
-class TestSessionOverlapJoin:
-    def test_coactive_pair_counted_once(self, spark, monkeypatch):
-        """Users 1+2 active within 5 minutes -> exactly ONE pair even
-        though their padded intervals share several 10-min bins; user
-        3 hours away -> no pair with anyone."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = [
-            _ev(1, 0, 0, 1, "view", 0.0),
-            _ev(2, 0, 900, 1, "click", 0.0),  # u1 session 00:00-00:15
-            _ev(3, 0, 1000, 2, "view", 0.0),  # u2 overlaps u1
-            _ev(4, 0, 30000, 3, "view", 0.0),  # u3 ~8h later
-        ]
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        out = evalplan_q.q_session_overlap_join(spark, SF).collect()
-        assert len(out) == 1
-        assert out[0]["day"] == "2024-01-01"
-        assert out[0]["n_pairs"] == 1
-
-    def test_same_user_never_pairs(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = [
-            _ev(1, 0, 0, 1, "view", 0.0),
-            # second session of the SAME user 2h later, overlapping
-            # nothing else
-            _ev(2, 0, 7200, 1, "view", 0.0),
-        ]
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        assert evalplan_q.q_session_overlap_join(spark, SF).count() == 0
-
-
-class TestEncodingAdvisor:
-    def test_runs_and_advice(self, spark, monkeypatch):
-        """Constant returnflag -> one run per order (avg 4.0, RLE);
-        all-distinct partkey -> every row a run (avg 1.0, PLAIN)."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        rows = []
-        pk = 0
-        for ok in range(1, 11):
-            for ln in range(1, 5):
-                pk += 1
-                rows.append(
-                    (ok, pk, 1, ln, 5.0, 1.0, 0.0, 0.0, "N", "O", d0)
-                )
-        li = spark.createDataFrame(rows, _LI_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: li)
-        out = {
-            r["column_name"]: r
-            for r in evalplan_q.q_encoding_advisor(spark, SF).collect()
-        }
-        rf = out["l_returnflag"]
-        assert rf["n_runs"] == 10 and rf["avg_run_len"] == 4.0
-        assert rf["advice"] == "RLE"
-        pkr = out["l_partkey"]
-        assert pkr["n_runs"] == 40 and pkr["advice"] == "PLAIN"
-
-
-class TestNelsonAalen:
-    def test_hand_lifetable(self, spark, monkeypatch):
-        """4 users from day 0; users 1-2 convert on day 2, users 3-4
-        never do (censored at corpus end day 5): one hazard row at
-        t=2 with n_risk=4, H=0.5, var=2/16."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = []
-        eid = 0
-        for uid in (1, 2, 3, 4):
-            rows.append(_ev(eid := eid + 1, 0, uid, uid, "view", 0.0))
-            rows.append(_ev(eid := eid + 1, 5, uid, uid, "view", 0.0))
-        rows.append(_ev(eid := eid + 1, 2, 10, 1, "purchase", 95.0))
-        rows.append(_ev(eid := eid + 1, 2, 20, 2, "purchase", 99.0))
-        # a LOW-value purchase is not a conversion
-        rows.append(_ev(eid := eid + 1, 1, 30, 3, "purchase", 10.0))
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        out = evalplan_q.q_nelson_aalen(spark, SF).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["t_days"] == 2 and r["n_risk"] == 4 and r["d_events"] == 2
-        assert r["cum_hazard"] == pytest.approx(0.5, abs=1e-6)
-        assert r["hazard_var"] == pytest.approx(0.125, abs=1e-6)
-
-
-class TestWoeIv:
-    def test_hand_computed_woe(self, spark, monkeypatch):
-        """P1: 2 bad / 2 good; P2: 1 bad / 3 good. B=3, G=5:
-        woe_P1 = ln((2/5)/(2/3)), woe_P2 = ln((3/5)/(1/3)),
-        iv = sum (g_share - b_share) * woe."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        orders, lines = [], []
-        # orderkey, prio, bad?
-        spec = [
-            (1, "P1", True),
-            (2, "P1", True),
-            (3, "P1", False),
-            (4, "P1", False),
-            (5, "P2", True),
-            (6, "P2", False),
-            (7, "P2", False),
-            (8, "P2", False),
-        ]
-        for ok, prio, bad in spec:
-            orders.append((ok, 1, "O", 100.0, d0, prio))
-            lines.append(
-                (ok, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "R" if bad else "N", "O", d0)
-            )
-            # every order also has a non-returned second line
-            lines.append((ok, 2, 1, 2, 1.0, 1.0, 0.0, 0.0, "N", "O", d0))
-        o = spark.createDataFrame(orders, _ORD_SCHEMA)
-        li = spark.createDataFrame(lines, _LI_SCHEMA)
-
-        def fake_load(spark_, sf_dir_, name):
-            return o if name == "orders" else li
-
-        from resume_jd_matcher_spark.queries import evalplan_q as m
-
-        monkeypatch.setattr(m, "load_table", fake_load)
-        out = {r["prio"]: r for r in m.q_woe_iv(spark, SF).collect()}
-        w1 = math.log((2 / 5) / (2 / 3))
-        w2 = math.log((3 / 5) / (1 / 3))
-        iv = (2 / 5 - 2 / 3) * w1 + (3 / 5 - 1 / 3) * w2
-        assert out["P1"]["n_bad"] == 2 and out["P1"]["n_good"] == 2
-        assert out["P1"]["woe"] == pytest.approx(w1, abs=1e-4)
-        assert out["P2"]["woe"] == pytest.approx(w2, abs=1e-4)
-        assert out["P1"]["iv"] == pytest.approx(iv, abs=1e-4)
-        assert out["P1"]["iv"] == out["P2"]["iv"]
-
-
-class TestPrAuc:
-    def test_perfect_and_random_rankers(self, spark, monkeypatch):
-        """Scores that perfectly separate the classes -> AP 1.0; a
-        constant score (one tie block) -> AP == prevalence."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = []
-        eid = 0
-        # 5 positives scoring 90+i, 15 negatives scoring 10+i
-        for i in range(5):
-            rows.append(_ev(eid := eid + 1, 0, eid, 1, "purchase", 90.0 + i))
-        for i in range(15):
-            rows.append(_ev(eid := eid + 1, 0, eid, 1, "view", 10.0 + i))
-        e = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e)
-        r = evalplan_q.q_pr_auc(spark, SF).collect()[0]
-        assert r["n_pos"] == 5 and r["n_total"] == 20
-        assert r["avg_precision"] == pytest.approx(1.0, abs=1e-6)
-        assert r["prevalence"] == pytest.approx(0.25, abs=1e-6)
-
-        rows2 = [
-            _ev(i, 0, i, 1, "purchase" if i < 5 else "view", 42.0)
-            for i in range(1, 21)
-        ]
-        e2 = spark.createDataFrame(rows2, _EV_SCHEMA)
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: e2)
-        r2 = evalplan_q.q_pr_auc(spark, SF).collect()[0]
-        # one all-tied block: precision at the block boundary is the
-        # prevalence, so AP collapses to it
-        assert r2["avg_precision"] == pytest.approx(
-            r2["prevalence"], abs=1e-6
-        )
-
-
-class TestCohensKappa:
-    def test_perfect_and_chance_agreement(self, spark, monkeypatch):
-        """Raters that always agree -> kappa 1; raters with exactly
-        independent-chance agreement -> kappa ~0."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-
-        def build(spec):
-            orders, lines = [], []
-            for ok, (high, ret) in enumerate(spec, start=1):
-                price = 300_000.0 if high else 100_000.0
-                orders.append((ok, 1, "O", price, d0, "P"))
-                lines.append(
-                    (ok, 1, 1, 1, 1.0, 1.0, 0.0, 0.0,
-                     "R" if ret else "N", "O", d0)
-                )
-            o = spark.createDataFrame(orders, _ORD_SCHEMA)
-            li = spark.createDataFrame(lines, _LI_SCHEMA)
-            return lambda s_, d_, name: o if name == "orders" else li
-
-        # perfect agreement: r1 == r2 on every order
-        monkeypatch.setattr(
-            evalplan_q, "load_table",
-            build([(1, 1)] * 6 + [(0, 0)] * 6),
-        )
-        r = evalplan_q.q_cohens_kappa(spark, SF).collect()[0]
-        assert r["kappa"] == pytest.approx(1.0, abs=1e-6)
-        assert r["p_o"] == pytest.approx(1.0, abs=1e-6)
-
-        # independent 2x2 with balanced margins: a=b=c=d -> kappa 0
-        monkeypatch.setattr(
-            evalplan_q, "load_table",
-            build([(1, 1), (1, 0), (0, 1), (0, 0)] * 3),
-        )
-        r2 = evalplan_q.q_cohens_kappa(spark, SF).collect()[0]
-        assert r2["a"] == r2["b"] == r2["c"] == r2["d"] == 3
-        assert r2["kappa"] == pytest.approx(0.0, abs=1e-6)
-
-
-class TestTCloseness:
-    def test_global_matching_and_extreme_classes(self, spark, monkeypatch):
-        """A class distributed exactly like the global distribution
-        has t = 0; a class concentrated at the far end of the ordered
-        domain approaches the max and breaches."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        rows = []
-        ck = 0
-        # class (1, SEG): 2 customers per bucket 0..4 (mirrors global
-        # shape contributed by itself + class 3 below)
-        for b in range(5):
-            for _ in range(2):
-                ck += 1
-                rows.append((ck, f"c{ck}", 1, b * 1000.0 + 10, "SEG"))
-        # class (2, SEG): all 10 at bucket 4 (the far end)
-        for _ in range(10):
-            ck += 1
-            rows.append((ck, f"c{ck}", 2, 4010.0, "SEG"))
-        # class (3, SEG): 2 per bucket 0..4 (keeps global uniform-ish)
-        for b in range(5):
-            for _ in range(2):
-                ck += 1
-                rows.append((ck, f"c{ck}", 3, b * 1000.0 + 20, "SEG"))
-        c = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: c)
-        out = {
-            r["c_nationkey"]: r
-            for r in evalplan_q.q_t_closeness(spark, SF).collect()
-        }
-        # global: buckets 0..3 have 4/30 each, bucket 4 has 14/30.
-        # class 1 (uniform 2/10 per bucket): gaps |cum_c - cum_g| at
-        # b=0..3 are 0.2k-0.1333k... compute directly:
-        import itertools
-
-        glob = [4, 4, 4, 4, 14]
-        gn = sum(glob)
-        cls1 = [2, 2, 2, 2, 2]
-        t1 = sum(
-            abs(
-                sum(cls1[: i + 1]) / 10 - sum(glob[: i + 1]) / gn
-            )
-            for i in range(5)
-        ) / 4
-        assert out[1]["t_dist"] == pytest.approx(t1, abs=1e-6)
-        cls2 = [0, 0, 0, 0, 10]
-        t2 = sum(
-            abs(sum(cls2[: i + 1]) / 10 - sum(glob[: i + 1]) / gn)
-            for i in range(5)
-        ) / 4
-        assert out[2]["t_dist"] == pytest.approx(t2, abs=1e-6)
-        assert out[2]["breach"]
-        assert not out[1]["breach"]
 
 
 class TestDegenerateGuards:
-    """The ANSI-mode division guards: degenerate inputs must yield
-    NULL (matching the DuckDB oracles) instead of DIVIDE_BY_ZERO."""
-
-    def test_kappa_null_when_pe_is_one(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        # every order high-value AND returned: a = n -> p_e = 1
-        orders = [(k, 1, "O", 300_000.0, d0, "P") for k in range(1, 7)]
-        lines = [
-            (k, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "R", "O", d0)
-            for k in range(1, 7)
-        ]
-        o = spark.createDataFrame(orders, _ORD_SCHEMA)
-        li = spark.createDataFrame(lines, _LI_SCHEMA)
-        monkeypatch.setattr(
-            evalplan_q,
-            "load_table",
-            lambda s_, d_, name: o if name == "orders" else li,
-        )
-        r = evalplan_q.q_cohens_kappa(spark, SF).collect()[0]
-        assert r["p_e"] == pytest.approx(1.0, abs=1e-9)
-        assert r["kappa"] is None
-
-    def test_woe_null_on_zero_cell_iv_skips_it(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        # P1 all bad (zero good -> ln(0) territory); P2 mixed
-        spec = [(1, "P1", True), (2, "P1", True),
-                (3, "P2", True), (4, "P2", False), (5, "P2", False)]
-        orders = [(ok, 1, "O", 100.0, d0, p) for ok, p, _ in spec]
-        lines = [
-            (ok, 1, 1, 1, 1.0, 1.0, 0.0, 0.0, "R" if bad else "N", "O", d0)
-            for ok, _, bad in spec
-        ]
-        o = spark.createDataFrame(orders, _ORD_SCHEMA)
-        li = spark.createDataFrame(lines, _LI_SCHEMA)
-        monkeypatch.setattr(
-            evalplan_q,
-            "load_table",
-            lambda s_, d_, name: o if name == "orders" else li,
-        )
-        out = {r["prio"]: r for r in evalplan_q.q_woe_iv(spark, SF).collect()}
-        assert out["P1"]["woe"] is None
-        assert out["P2"]["woe"] is not None
-        # IV sums only the defined categories - and is non-NULL
-        assert out["P2"]["iv"] is not None
-
     def test_assortativity_null_on_constant_degrees(self, spark, monkeypatch):
         from resume_jd_matcher_spark.queries import ops_q
 
@@ -593,111 +32,3 @@ class TestDegenerateGuards:
         r = ops_q.q_degree_assortativity(spark, SF).collect()[0]
         assert r["n_edges"] == 4
         assert r["assortativity"] is None
-
-
-class TestCramerVonMises:
-    def test_identical_vs_shifted(self, spark, monkeypatch):
-        """Identical even/odd halves -> T ~ 0, no reject; a shifted
-        odd half -> large T, reject."""
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-
-        def orders(shift):
-            rows = []
-            for k in range(1, 401):
-                base = 100.0 + (k // 2) % 50
-                price = base + (shift if k % 2 == 1 else 0.0)
-                rows.append((k, 1, "O", price, d0, "P"))
-            return spark.createDataFrame(rows, _ORD_SCHEMA)
-
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: orders(0.0))
-        r = evalplan_q.q_cramer_von_mises(spark, SF).collect()[0]
-        assert r["n_a"] == 200 and r["n_b"] == 200
-        assert r["t_stat"] < 0.05 and not r["reject"]
-
-        monkeypatch.setattr(evalplan_q, "load_table", lambda *a: orders(500.0))
-        r2 = evalplan_q.q_cramer_von_mises(spark, SF).collect()[0]
-        assert r2["t_stat"] > 0.461 and r2["reject"]
-
-
-class TestLorenzCurve:
-    def test_equal_and_whale_distributions(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        cust = spark.createDataFrame(
-            [(k, f"c{k}", 0, 0.0, "SEG") for k in range(1, 101)],
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-
-        def run(order_rows):
-            o = spark.createDataFrame(order_rows, _ORD_SCHEMA)
-            from resume_jd_matcher_spark.queries import evalplan_q as m
-
-            def fake(s_, d_, name):
-                return cust if name == "customer" else o
-
-            return fake
-
-        # equal spends: every decile's spend share == pop share
-        monkeypatch.setattr(
-            evalplan_q,
-            "load_table",
-            run([(k, k, "O", 100.0, d0, "P") for k in range(1, 101)]),
-        )
-        out = {
-            r["decile"]: r for r in evalplan_q.q_lorenz_curve(spark, SF).collect()
-        }
-        assert len(out) == 10
-        for dcl, r in out.items():
-            assert r["n_cust"] == 10
-            assert r["spend_share"] == pytest.approx(r["pop_share"], abs=1e-9)
-
-        # one whale: bottom 9 deciles hold ~0 of the spend
-        rows = [(k, k, "O", 1.0, d0, "P") for k in range(1, 100)]
-        rows.append((100, 100, "O", 1_000_000.0, d0, "P"))
-        monkeypatch.setattr(evalplan_q, "load_table", run(rows))
-        out2 = {
-            r["decile"]: r for r in evalplan_q.q_lorenz_curve(spark, SF).collect()
-        }
-        assert out2[9]["spend_share"] == pytest.approx(1.0, abs=1e-9)
-        assert out2[8]["spend_share"] < 0.001
-
-
-class TestMcnemarTest:
-    def test_one_sided_and_degenerate(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalplan_q
-
-        d0 = dt.datetime(2024, 1, 1)
-
-        def build(spec):
-            orders, lines = [], []
-            for ok, (high, ret) in enumerate(spec, start=1):
-                price = 300_000.0 if high else 100_000.0
-                orders.append((ok, 1, "O", price, d0, "P"))
-                lines.append(
-                    (ok, 1, 1, 1, 1.0, 1.0, 0.0, 0.0,
-                     "R" if ret else "N", "O", d0)
-                )
-            o = spark.createDataFrame(orders, _ORD_SCHEMA)
-            li = spark.createDataFrame(lines, _LI_SCHEMA)
-            return lambda s_, d_, name: o if name == "orders" else li
-
-        # 20 discordant all one way: chi2 = (20-1)^2/20 = 18.05 -> reject
-        monkeypatch.setattr(
-            evalplan_q, "load_table", build([(1, 0)] * 20 + [(1, 1)] * 5)
-        )
-        r = evalplan_q.q_mcnemar_test(spark, SF).collect()[0]
-        assert r["b"] == 20 and r["c"] == 0
-        assert r["chi2"] == pytest.approx(18.05, abs=1e-6)
-        assert r["reject"]
-
-        # no discordant pairs: chi2/reject NULL, no crash
-        monkeypatch.setattr(
-            evalplan_q, "load_table", build([(1, 1)] * 5 + [(0, 0)] * 5)
-        )
-        r2 = evalplan_q.q_mcnemar_test(spark, SF).collect()[0]
-        assert r2["b"] == 0 and r2["c"] == 0
-        assert r2["chi2"] is None and r2["reject"] is None

@@ -45,8 +45,18 @@ _line = st.one_of(
     st.builds(lambda a, b: f"{a}: {b}", st.text("abcd ", max_size=8), st.integers(-20, 20)),
 )
 
+# Every line boundary str.splitlines honours.
+_sep = st.sampled_from(
+    ["\n", "\r\n", "\r", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x85",
+     "\u2028", "\u2029"]
+)
+
 _response = st.one_of(
-    st.builds(lambda ls: "SCORES:\n" + "\n".join(ls), st.lists(_line, max_size=6)),
+    st.builds(
+        lambda sep, ls: "SCORES:" + sep + sep.join(ls),
+        _sep,
+        st.lists(_line, max_size=6),
+    ),
     st.text(alphabet=_ascii, max_size=40),
 )
 

@@ -52,6 +52,14 @@ def test_per_doc_isolation(spark):
     assert got == {(1, "summary"): 7}
 
 
+@pytest.mark.parametrize("sep", ["\r", "\r\n", "\x0c", "\x1e", "\u2028"])
+def test_lines_split_like_str_splitlines(spark, sep):
+    """Any str.splitlines boundary separates score lines; splitting on
+    '\\n' alone read the whole body as one line and voided the doc."""
+    got = _parse(spark, [(1, f"SCORES:{sep}Skills: 7{sep}Experience: 8")])
+    assert got == {(1, "Skills"): 7, (1, "Experience"): 8}
+
+
 def test_mean_score_rounding(spark):
     df = spark.createDataFrame(
         [(1, "a", 7), (1, "b", 8), (2, "a", 1)], ["doc_id", "section", "score"]

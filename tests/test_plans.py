@@ -140,9 +140,7 @@ def test_registry_wide_no_cartesian_products(spark):
         "heavy_hitters", "tfidf_topterms", "scoring_e2e",
         "llm_feedback", "llm_explain", "prompt_assembly", "mean_score",
         "score_parse", "sections_map", "section_chunk", "header_canon",
-        "embed_documents", "stats_moments",
-        # distinct-value all-pairs over a ~5-row dim (typo-dedup):
-        "fuzzy_match",
+        "embed_documents",
         # single-row scalar CTEs (max-ts, watermark cutoff) crossed in:
         "stream_late_data",
         # single-row broadcast corpus stats (N, avgdl, per-term df)
@@ -170,9 +168,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # two single-row summaries (degree census x triangle count)
         # crossed for the final one-row output:
         "graph_triangles",
-        # single-row broadcast digit total crossed into the 9-row
-        # digit dim:
-        "benford_dq",
         # single-row broadcast idf normalizer crossed into the per-doc
         # base (the idf table itself is a dictionary-bounded equi-join):
         "skill_coverage",
@@ -231,9 +226,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # single-row broadcast (n_pos, n_neg) totals crossed into the
         # global_prefix-ranked score grain for the rank-sum AUC:
         "roc_auc",
-        # same prefix-scan shape as roc_auc on the negated score key
-        # (global_prefix's 1-row bucket-stats broadcast):
-        "pr_auc",
         # single-row broadcast moment agg crossed into the event
         # grain, then the 10-cell bin table:
         "calibration_eval",
@@ -318,31 +310,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # into the gram stream (replaces the fixed id window that
         # went vacuous at sf0.1):
         "decontaminate",
-        # 15-row lag spine broadcast crossed into the calendar-bounded
-        # day grain (the shifted join itself is an equi-join):
-        "lead_lag_ccf",
-        # per relation: 1-row histogram estimate crossed with the
-        # 1-row exact cardinality:
-        "join_cardinality_qerror",
-        # 1-row corpus token total crossed into the top-k x |sources|
-        # bounded dispersion grain:
-        "term_dispersion",
-        # 1-row (corpus max date, n_users) broadcast crossed into the
-        # user grain — same lifetable shape as kaplan_meier:
-        "nelson_aalen",
-        # 1-row class totals + 1-row IV sum crossed into the 5-row
-        # priority grain:
-        "woe_iv",
-        # |classes| x |buckets| spine (both dimension-bounded,
-        # buckets broadcast) + 1-row global-total/bucket-count
-        # broadcasts:
-        "t_closeness",
-        # ks_test's dual-ECDF prefix-scan shape: 1-row (n_a, n_b)
-        # totals broadcast + global_prefix's 1-row stats broadcast:
-        "cramer_von_mises",
-        # 1-row (n, total) broadcast over the prefix-ranked customer
-        # grain + global_prefix's height-mode stats broadcast:
-        "lorenz_curve",
         # -- round 10, inference family --
         # 1-row (mu, sd) scorer-moment broadcast crossed into the fact
         # before the single global agg (the calibration_eval shape):

@@ -22,9 +22,6 @@ HEADLINERS = {
     "winnow_fingerprint": "two Window nodes, ONE per-doc sort, no Python",
     "funnel_conversion": "all stages keyed on user_id (exchange reuse)",
     "scoring_e2e": "two Arrow-batched Python stages (chunker, LLM), joins native",
-    "bucketed_join": "SortMergeJoin, NO shuffle Exchange (bucketed storage; "
-    "broadcast disabled here because at this toy SF the planner would "
-    "broadcast the dim - at scale both sides exceed the threshold)",
     "stream_attribution_join": "time-bounded join condition (watermark-evictable)",
     "stream_view_conversion": "LEFT OUTER interval join on the user equi-key "
     "(SortMergeJoin, range as join condition — no nested loop); in stream "
@@ -118,9 +115,6 @@ HEADLINERS = {
     "crossJoin; only two single-row summaries broadcast",
     "ann_recall_eval": "LSH and exact rankings in ONE plan; recall "
     "comparison an equi-join on (query, vec), no collect",
-    "winsorize_stats": "two scans: bounded bucket histogram locates "
-    "p01/p99 (window over bucket rows only), clip+re-agg; NO "
-    "per-group sort of raw values anywhere",
     "simhash_neardup": "fingerprint pipeline persisted across both "
     "self-join sides (InMemoryTableScan x2); md5 runs per DISTINCT "
     "(doc, token) with count weighting; candidates from the "
@@ -158,15 +152,8 @@ HEADLINERS = {
     "mllib_lsh_agreement": "MLlib candidates from the exploded "
     "hash-table equi-join; exact distances recomputed via bounded id "
     "joins so the oracle fold matches bit-for-bit",
-    "cohort_retention": "first-activity and active-week aggs both "
-    "keyed on user_id; cohort-size dim |weeks|-bounded broadcast; "
-    "no windows anywhere",
     "wilson_ranking": "one source-keyed hash agg; rank over the "
     "|sources|-bounded array fold, no unbounded window",
-    "seasonal_adjust": "raw events collapse to the daily grain "
-    "FIRST; dow and overall dims (7 x types, types) broadcast back",
-    "benford_dq": "one 9-bucket map-side-combined hash agg + a "
-    "single-row broadcast total; digit dim is a local 9-row range",
     "negative_sampling": "integer CDF over the bounded vocab; draws "
     "equi-join the BROADCAST bin table (binned-range-join pattern) — "
     "never a draws x vocab nested loop",
@@ -176,9 +163,6 @@ HEADLINERS = {
     "ngram_diversity": "pre-aggregated to (source, bigram, n) first "
     "(map-side combined) then rolled up — no multi-distinct Expand "
     "doubling the exploded stream",
-    "rolling_anomaly": "events collapse to the daily grain before "
-    "the window; trailing frame runs over day-grain rows partitioned "
-    "by event_type; moments are exact integer window sums",
     "inverted_index": "df cut = TakeOrderedAndProject; posting "
     "assembly joins the BROADCAST 20-term dim against the distinct "
     "(doc, token) stream",
@@ -195,9 +179,6 @@ HEADLINERS = {
     "window partitioned by source over bucket rows); pooled "
     "inverse-CDF a 20-row broadcast map; docs join by (source, "
     "bucket) equi-join — no global sort, no percent_rank over rows",
-    "event_transitions": "ONE per-user window sort; transition counts "
-    "and row normalizer are |types|^2-bounded hash aggs + a broadcast "
-    "dim join",
     # -- round 7 --
     "market_basket": "ONE groupBy(order) collect_set basket build "
     "(doubles as the (order, brand) distinct); pairs generated "
@@ -401,55 +382,6 @@ HEADLINERS = {
     "cross_source_leakage": "the dedup family's banded equi-join "
     "candidates + doc-keyed source joins; |sources|^2-bounded matrix "
     "agg",
-    # -- round 10 --
-    "lead_lag_ccf": "fact collapses to the calendar-bounded day grain "
-    "FIRST; the lag sweep is a 15-row broadcast over that grain; "
-    "exact-integer moments, 15-row out",
-    "multitouch_attribution": "purchase-touch pairs from a user-keyed "
-    "equi-join with a time band (never user^2); purchase-partitioned "
-    "rank windows; three models read ONE pair frame",
-    "ips_policy_eval": "one (segment x action) hash agg (15 cells), "
-    "segment rollup broadcast back, 1-row finalize - no per-event "
-    "weight column",
-    "entropy_l_diversity": "two nested dimension-bounded hash aggs "
-    "(QI x sensitive, then QI); entropy a closed form of exact cell "
-    "counts - no window, no join",
-    "join_cardinality_qerror": "estimates from 16-row histograms; "
-    "EXACT cardinality from key-grain aggs joined key-to-key - no "
-    "joined row ever materialized",
-    "term_dispersion": "(term x source) hash agg; top-k = "
-    "TakeOrderedAndProject bounds the dispersion grain; absent cells "
-    "folded algebraically, never materialized",
-    "matryoshka_eval": "consecutive-id equi self-join (LINEAR pair "
-    "generator); all three cosines fold in one projection; 2-row "
-    "moment finalize",
-    "session_overlap_join": "bin-replicated interval join: explode to "
-    "covered bins, hash equi-join on bin, first-shared-bin predicate "
-    "dedups pairs WITHOUT a distinct shuffle",
-    "encoding_advisor": "per-column runs from (orderkey)-partitioned "
-    "lag windows (order-bounded, never global); 4-row union of "
-    "1-row profiles",
-    "nelson_aalen": "kaplan_meier's lifetable shape: user-grain agg, "
-    "calendar-bounded lifetime grain, cumulative windows only over "
-    "that bounded grain",
-    "woe_iv": "order-grain label by key equi-join + hash agg; 5-row "
-    "category grain; totals and IV are 1-row broadcasts",
-    "pr_auc": "value-grain agg + ONE distributed prefix scan over "
-    "distinct scores descending (global_prefix multi-sum, negated "
-    "key); no per-row global rank; 1-row finalize",
-    "cohens_kappa": "order-grain label join + ONE map-side-combined "
-    "2x2 confusion agg; closed-form 1-row finalize",
-    "t_closeness": "|classes| x |buckets| bounded spine (broadcast); "
-    "cumulative windows partitioned BY CLASS; absent buckets filled "
-    "by left join, never enumerated row-wise",
-    "cramer_von_mises": "ks_test's dual-ECDF shape: value-grain agg, "
-    "both cumulative counters on ONE global_prefix scan, exact "
-    "integer ECDF gaps, 1-row finalize",
-    "lorenz_curve": "customer-grain spend agg; rank + cumulative "
-    "spend on ONE height-mode prefix scan (power-law key); decile "
-    "rollup - no single-partition window",
-    "mcnemar_test": "order-grain label join + ONE discordant-cell "
-    "agg; 1-row closed form",
     # -- round 11, structure family --
     "hits_scores": "fact collapses ONCE to the distinct edge grain; "
     "M = EtE from one user-keyed self-join hash agg; the iteration "
@@ -495,20 +427,11 @@ def main() -> None:
         import contextlib
         import io
 
-        no_bcast = name == "bucketed_join"
-        if no_bcast:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        try:
-            df = Q._REGISTRY[name].fn(spark, SF)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-        finally:
-            if no_bcast:
-                spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-                spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+        df = Q._REGISTRY[name].fn(spark, SF)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
         # keep the node tree, drop the verbose per-node details
         tree = plan.split("\n\n")[0]
         out += [f"## {name}", "", f"**Audit claim:** {claim}", "", "```"]

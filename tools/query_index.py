@@ -20,6 +20,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # docstring an f-string would force escaping the literal braces they
 # also contain ({P, Q}, {0,1}). Substitute just the module-constant
 # tokens here instead (r9 ADVICE item #2).
+QUERIES_MD = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "..", "QUERIES.md"
+)
+
 _PLACEHOLDER = re.compile(r"\{(_[A-Z][A-Z0-9_]*)\}")
 
 
@@ -29,7 +33,8 @@ def _fill(doc: str, module_globals: dict) -> str:
     )
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's text for the registry as imported."""
     from resume_jd_matcher_spark import queries as Q
 
     rows = []
@@ -56,10 +61,15 @@ def main() -> None:
     ]
     for name, mode, first in rows:
         out.append(f"| `{name}` | {mode} | {first} |")
-    path = os.path.join(os.path.dirname(__file__), "..", "QUERIES.md")
-    with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote QUERIES.md ({len(rows)} queries)")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    from resume_jd_matcher_spark import queries as Q
+
+    with open(QUERIES_MD, "w") as f:
+        f.write(render())
+    print(f"wrote QUERIES.md ({len(Q._REGISTRY)} queries)")
 
 
 if __name__ == "__main__":

@@ -176,12 +176,6 @@ REGISTERED = [
     "ngram_contamination",
     "intradoc_repetition",
     "unigram_logprob_quality",
-    # round-10 documents-only member (Gries DP over the token grain;
-    # matryoshka_eval is the round's other corpus kernel but needs an
-    # embeddings table this corpus doesn't synthesize — its pair
-    # generator is a consecutive-id equi self-join, LINEAR by
-    # construction, measured via bench + the three-sf sims instead)
-    "term_dispersion",
     # round-10 inference-batch documents members: shingle-grain
     # frequency-of-frequencies, the smoothed-distribution drift pair,
     # and the co-occurrence-graph PageRank (local_clustering shares
@@ -216,8 +210,7 @@ REGISTERED = [
     # bounded (route x detected) rollup. stream_view_conversion
     # reads the events table this corpus doesn't synthesize — a
     # watermark-bounded user+time equi/range join, linear by
-    # construction, measured via bench + the three-sf sims instead
-    # (the matryoshka_eval precedent).
+    # construction, measured via bench + the three-sf sims instead.
     "media_ihdr_histogram",
     "media_ext_quarantine",
     # the little-endian twin of the IHDR parse — same narrow shape

@@ -276,25 +276,6 @@ REGISTERED = [
     "anomaly_mad_daily",
     "elasticity_by_brand",
     "funnel_time_to_convert",
-    # round-10 evalplan members with relational inputs. Excluded:
-    # term_dispersion / matryoshka_eval (documents / embeddings
-    # kernels — same boundary as cross_source_leakage) and
-    # session_overlap_join: its OUTPUT is the co-active pair set,
-    # which is Theta(event-density^2 x time) by definition — on this
-    # synth corpus the 10x point multiplies density 10x and the pair
-    # count 100x, so a wall-clock ratio would grade the readout's
-    # size, not the plan (the bin-replicated join enumerates exactly
-    # the pairs it returns). Its scale signal is the committed
-    # three-sf sims + bench at sf0.1, where testdata keeps per-user
-    # density constant.
-    "lead_lag_ccf",
-    "multitouch_attribution",
-    "ips_policy_eval",
-    "entropy_l_diversity",
-    "join_cardinality_qerror",
-    "encoding_advisor",
-    "nelson_aalen",
-    "woe_iv",
     # round-10 inference family (all relational inputs; the one
     # documents member, local_clustering, shares graph_triangles'
     # minhash-edge kernel already covered by the text curve):
