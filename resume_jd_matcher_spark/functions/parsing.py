@@ -142,6 +142,19 @@ def assemble_prompt(
 # SCORES body with it), as a Java regex.
 _LINE_BREAKS = r"\r\n|[\n\r\x0b\x0c\x1c\x1d\x1e\x85\u2028\u2029]"
 
+# Every character str.isspace accepts, i.e. what the reference's
+# str.strip() removes; F.trim alone strips only U+0020.
+_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
+)
+
+
+def _strip(c: Column) -> Column:
+    """``str.strip()``: drop leading and trailing whitespace."""
+    return F.btrim(c, F.lit(_WHITESPACE))
+
 
 def parse_scores(
     responses: DataFrame, id_col: str = "doc_id", resp_col: str = "response"
@@ -161,15 +174,15 @@ def parse_scores(
     body = F.regexp_extract(F.col(resp_col), r"(?s)SCORES:\s*(.*)", 1)
     lines = responses.select(
         F.col(id_col),
-        F.posexplode(F.split(F.trim(body), _LINE_BREAKS)).alias("pos", "line"),
+        F.posexplode(F.split(_strip(body), _LINE_BREAKS)).alias("pos", "line"),
     ).filter(F.col("line").contains(":"))
     parsed = lines.select(
         id_col,
         "pos",
-        F.trim(F.element_at(F.split(F.col("line"), ":", 2), 1)).alias("section"),
-        F.expr(
-            "try_cast(trim(element_at(split(line, ':', 2), 2)) AS INT)"
-        ).alias("score"),
+        _strip(F.element_at(F.split(F.col("line"), ":", 2), 1)).alias("section"),
+        _strip(F.element_at(F.split(F.col("line"), ":", 2), 2))
+        .try_cast("int")
+        .alias("score"),
     )
     validity = parsed.groupBy(id_col).agg(
         (F.count(F.when(F.col("score").isNull(), 1)) == 0).alias("all_ok")

@@ -22,23 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("modality", T.StringType()),
-                    T.StructField("codec", T.StringType()),
-                    T.StructField("source", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -30,10 +30,10 @@ paid is the caller's choice via ``checkpoint``:
   where the materialization is much smaller than re-running the agg.
 - ``checkpoint=False`` recomputes the lineage per consumer — right
   when the input is a bare column-pruned SCAN projection
-  (equi_depth_histogram, token_budget_curriculum, compaction_plan
-  pass fact-sized frames straight off parquet): three pruned scans
-  beat storing the whole fact in executor memory at large sf, and
-  the scans stay pushdown-pruned.
+  (token_budget_curriculum, compaction_plan pass fact-sized frames
+  straight off parquet): three pruned scans beat storing the whole
+  fact in executor memory at large sf, and the scans stay
+  pushdown-pruned.
 
 Monotone-bucket caveat: the default ``bounds="width"`` is equal-WIDTH
 (width_bucket), not equal-height; a skewed key distribution
@@ -64,7 +64,7 @@ DEFAULT_BUCKETS = 64
 def global_prefix(
     df: DataFrame,
     order_cols: list[str],
-    sum_col: str | list[str] | None = None,
+    sum_col: str | None = None,
     ascending: bool = True,
     n_buckets: int = DEFAULT_BUCKETS,
     sum_type: str = "double",
@@ -76,17 +76,11 @@ def global_prefix(
     given by ``order_cols``. The leading order column drives the
     bucketing and must be numeric and non-null. ``sum_col=None``
     skips the running totals entirely (rank-only callers like
-    equi-depth binning — no per-bucket sums, no data-sized running
-    aggregate, just the row_number over each bucket).
+    sort_key_advisor's block numbering — no per-bucket sums, no
+    data-sized running aggregate, just the row_number over each
+    bucket).
 
     Output: input columns + (rank BIGINT, cum_sum of ``sum_type``).
-
-    ``sum_col`` may be a LIST of columns: the same single bucketed
-    shuffle then carries one running total per column, emitted as
-    ``cum_<col>`` (an r8 need: the two-sample KS statistic walks two
-    ECDFs — two cumulative counters — over one global value order;
-    two separate prefix passes would double the shuffle for no
-    reason).
 
     Pass ``sum_type="bigint"`` with an integer-valued column (e.g.
     prices pre-converted to cents) when the caller needs
@@ -114,13 +108,7 @@ def global_prefix(
     """
     if bounds not in ("width", "height"):
         raise ValueError(f"bounds must be 'width' or 'height': {bounds!r}")
-    multi = isinstance(sum_col, (list, tuple))
-    if sum_col is None:
-        sum_cols: list[str] = []
-        out_names: list[str] = []
-    else:
-        sum_cols = list(sum_col) if multi else [sum_col]
-        out_names = [f"cum_{c}" for c in sum_cols] if multi else ["cum_sum"]
+    sum_cols = [] if sum_col is None else [sum_col]
     cols = [
         F.col(c).asc() if ascending else F.col(c).desc() for c in order_cols
     ]
@@ -217,8 +205,8 @@ def global_prefix(
                 (
                     F.col(f"_off_s{i}")
                     + F.sum(F.col(c).cast(sum_type)).over(intra_run)
-                ).alias(out)
-                for i, (c, out) in enumerate(zip(sum_cols, out_names))
+                ).alias("cum_sum")
+                for i, c in enumerate(sum_cols)
             ],
         )
     )

@@ -46,7 +46,7 @@ between engines. Three classes:
    subclass is the CAN-TIE class and is kept at ZERO: every moment
    ratio (beta, theta, corr, slope) is computed from exact
    DECIMAL(38,0) integer moments and composed in DOUBLE after
-   aggregation — rolling_beta (r11) and cuped_adjustment (r12). New single-row moment-ratio readouts MUST
+   aggregation — rolling_beta (r11). New single-row moment-ratio readouts MUST
    use this discipline (or scaled-integer exposures like beta_e4 /
    matthews_mcc / authority_e9) rather than native float
    corr/regr_*/var_pop.
@@ -216,7 +216,6 @@ _DRIVER_PRIORITY = [
     "readability_ari",
     "weighted_median",
     "cusum_changepoint",
-    "diff_in_did",
     "hurst_exponent",
     "silhouette_score",
     "stl_decompose",
@@ -239,10 +238,8 @@ _DRIVER_PRIORITY = [
     "zipf_fit",
     "llr_keyness",
     "theil_sen_trend",
-    "qte_deciles",
     "anomaly_mad_daily",
     "elasticity_by_brand",
-    "funnel_time_to_convert",
     "incremental_agg_merge",
     "changelog_apply",
     "theta_sketch_setops",
@@ -258,13 +255,7 @@ _DRIVER_PRIORITY = [
     "sort_key_advisor",
     "obrien_fleming_monitor",
     "benjamini_hochberg",
-    "kaplan_meier",
-    "mde_power",
-    "join_plan_advisor",
-    "calibration_eval",
     "pareto_frontier",
-    "k_anonymity",
-    "dp_noisy_counts",
     "mann_kendall",
     "rolling_beta",
     "rmst",
@@ -309,28 +300,14 @@ _DRIVER_PRIORITY = [
     "heaps_law",
     "cramers_v",
     "chi2_independence",
-    "snapshot_diff",
     "abc_pareto",
     "gini_concentration",
-    "equi_depth_histogram",
     "token_budget_curriculum",
     "compaction_plan",
-    "ks_test",
-    "roc_auc",
-    "ab_test_ztest",
-    "mutual_information",
-    "entity_resolution",
     "ndcg_eval",
     "vocab_overlap",
-    "acf_daily",
-    "welch_ttest",
-    "ratio_metric_delta",
-    "cuped_adjustment",
-    "srm_check",
-    "jackknife_ratio_ci",
     "zone_map_pruning",
     "user_streaks",
-    "forecast_backtest",
     "ensemble_neardup",
     "mllib_lsh_agreement",
     "keyword_tag",

@@ -606,8 +606,8 @@ FROM cur GROUP BY 1, 2
 )
 def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.G [EXT] batch twin of the streaming PSI drift monitor — the
-    streaming member of the drift family (`psi_drift`/`ks_test` are
-    its static cousins): per tumbling event-time day and event type,
+    streaming member of the drift family (`psi_drift` is
+    its static cousin): per tumbling event-time day and event type,
     PSI of the in-window value-bucket distribution against the
     offline full-corpus baseline, alerting at the standard 0.2
     threshold. tests/test_streaming.py asserts the real streamed run

@@ -1,7 +1,7 @@
 """Streaming distribution-drift monitor: PSI per event-time window
 against an offline baseline.
 
-The batch drift family (`psi_drift`, `ks_test`) answers "did the
+The batch drift query (`psi_drift`) answers "did the
 distribution move between two static snapshots?". This module is the
 STREAMING member: arriving events are bucketed and counted per
 tumbling window with ONE streaming aggregation (state bounded by

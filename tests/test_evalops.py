@@ -1,8 +1,6 @@
 """Round-8 evaluation & data-ops layer: invariants of the evalops_q
-queries — vocabulary overlap, A/B z-test, mutual information, blocked
-entity resolution, equi-depth histograms, snapshot diff, token-budget
-curriculum, graded nDCG, exact two-sample KS, Kaplan-Meier survival,
-and daily-revenue autocorrelation."""
+queries — vocabulary overlap, token-budget curriculum, graded nDCG,
+zone-map pruning and compaction planning."""
 
 from __future__ import annotations
 
@@ -35,176 +33,6 @@ class TestVocabOverlap:
         assert rows[("s1", "s2")]["n_common"] == 3
         # disjoint vocabularies never meet the equi-join -> no row
         assert ("s1", "s3") not in rows and ("s2", "s3") not in rows
-
-
-class TestAbTest:
-    def test_planted_effect_is_significant(self, spark, monkeypatch):
-        """Construct users whose arms are known from the portable hash
-        and give one arm a much higher purchase share."""
-        from resume_jd_matcher_spark.functions.text import hash32
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        ids = spark.range(0, 400).select(F.col("id").alias("user_id"))
-        arms = {
-            r["user_id"]: r["arm"]
-            for r in ids.select(
-                "user_id",
-                (
-                    hash32(
-                        F.concat(F.col("user_id").cast("string"), F.lit("#ab"))
-                    )
-                    % 2
-                ).alias("arm"),
-            ).collect()
-        }
-        # arm 0: 4/5 purchases per user (converts); arm 1: 0/5
-        rows = []
-        eid = 0
-        for uid, arm in arms.items():
-            kinds = (
-                ["purchase"] * 4 + ["view"] if arm == 0 else ["view"] * 5
-            )
-            for k in kinds:
-                rows.append((eid, None, uid, k, 0.0, "{}"))
-                eid += 1
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_ab_test_ztest(spark, SF).collect()[0]
-        assert r["n_a"] + r["n_b"] == 400
-        assert r["rate_a"] == pytest.approx(1.0)
-        assert r["rate_b"] == pytest.approx(0.0)
-        assert r["significant"] is True
-
-    def test_zero_variance_is_not_significant(self, spark, monkeypatch):
-        """Every user converts -> pooled variance 0 -> z NULL,
-        significant coalesced to False (no divide-by-zero abort)."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [
-            (i, None, i, "purchase", 0.0, "{}") for i in range(40)
-        ]
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_ab_test_ztest(spark, SF).collect()[0]
-        assert r["z"] is None
-        assert r["significant"] is False
-
-
-class TestMutualInformation:
-    def test_independent_columns_give_zero(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [
-            (i, f"c{i}", n, 0.0, s)
-            for i, (n, s) in enumerate(
-                [(0, "A"), (0, "B"), (1, "A"), (1, "B")] * 10
-            )
-        ]
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: cust)
-        r = evalops_q.q_mutual_information(spark, SF).collect()[0]
-        assert r["mi_nats"] == pytest.approx(0.0, abs=1e-6)
-        assert r["n_rows"] == 40
-
-    def test_deterministic_mapping_maximizes_nmi(self, spark, monkeypatch):
-        """Y = f(X) bijectively -> I(X;Y) = H(X) = H(Y) -> NMI = 1."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [
-            (i, f"c{i}", i % 4, 0.0, f"SEG{i % 4}") for i in range(80)
-        ]
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: cust)
-        r = evalops_q.q_mutual_information(spark, SF).collect()[0]
-        assert r["nmi"] == pytest.approx(1.0, abs=1e-6)
-        assert r["mi_nats"] == pytest.approx(math.log(4), abs=1e-6)
-
-
-class TestEntityResolution:
-    def test_every_typo_recovers_its_source(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        out = evalops_q.q_entity_resolution(spark, sf_dir).collect()
-        assert out, "no matches produced"
-        assert all(r["correct"] for r in out)
-        assert all(r["dist"] == 1 for r in out)  # 'Customer'->'Custmer'
-
-    def test_one_row_per_dirty_record(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-        from resume_jd_matcher_spark.sources.io import load_table
-
-        n_cust = load_table(spark, sf_dir, "customer").count()
-        assert evalops_q.q_entity_resolution(spark, sf_dir).count() == n_cust
-
-
-class TestEquiDepthHistogram:
-    def test_bins_partition_rows_with_ntile_sizes(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-        from resume_jd_matcher_spark.sources.io import load_table
-
-        out = evalops_q.q_equi_depth_histogram(spark, sf_dir).collect()
-        n = load_table(spark, sf_dir, "orders").count()
-        sizes = {r["bin"]: r["n_rows"] for r in out}
-        assert sum(sizes.values()) == n
-        assert set(sizes) == set(range(1, 17))
-        size, rem = divmod(n, 16)
-        for b, cnt in sizes.items():
-            assert cnt == (size + 1 if b <= rem else size), (b, cnt)
-
-    def test_bin_ranges_are_ordered(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        out = sorted(
-            evalops_q.q_equi_depth_histogram(spark, sf_dir).collect(),
-            key=lambda r: r["bin"],
-        )
-        for a, b in zip(out, out[1:]):
-            assert a["hi"] <= b["lo"] + 1e-9  # depth-contiguous ranges
-
-
-class TestSnapshotDiff:
-    def test_statuses_reconcile_exactly(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-        from resume_jd_matcher_spark.sources.io import load_table
-
-        o = load_table(spark, sf_dir, "orders")
-        n = o.count()
-        exp_added = o.filter(
-            (F.col("o_orderkey") % 1000 == 0)
-            & (F.col("o_orderkey") % 997 != 0)
-        ).count()
-        exp_removed = o.filter(
-            (F.col("o_orderkey") % 997 == 0)
-            & (F.col("o_orderkey") % 1000 != 0)
-        ).count()
-        got = {
-            r["status"]: r["n_rows"]
-            for r in evalops_q.q_snapshot_diff(spark, sf_dir).collect()
-        }
-        assert got.get("added", 0) == exp_added
-        assert got.get("removed", 0) == exp_removed
-        # keys dropped from BOTH versions appear nowhere
-        both_dropped = o.filter(
-            (F.col("o_orderkey") % 1000 == 0)
-            & (F.col("o_orderkey") % 997 == 0)
-        ).count()
-        assert sum(got.values()) == n - both_dropped
 
 
 class TestTokenBudgetCurriculum:
@@ -242,390 +70,6 @@ class TestNdcg:
         # the self-match (dist 0, rel 10, rank 1) is always retrieved:
         # every query's own vector shares its bucket, so ndcg > 0
         assert all(r["ndcg"] > 0.0 for r in out)
-
-
-def _orders(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string, "
-        "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    )
-
-
-class TestKsTest:
-    def test_identical_halves_do_not_reject(self, spark, monkeypatch):
-        """Even and odd keys get the SAME price multiset -> D = 0."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = []
-        for i in range(200):
-            price = 100.0 + (i % 50)
-            rows.append((2 * i, 1, "O", price, None, "1-URGENT"))
-            rows.append((2 * i + 1, 1, "O", price, None, "1-URGENT"))
-        monkeypatch.setattr(
-            evalops_q, "load_table", lambda *a: _orders(spark, rows)
-        )
-        r = evalops_q.q_ks_test(spark, SF).collect()[0]
-        assert r["n_a"] == 200 and r["n_b"] == 200
-        assert r["d_stat"] == pytest.approx(0.0)
-        assert r["p_approx"] == pytest.approx(1.0)
-        assert r["reject"] is False
-
-    def test_disjoint_supports_reject(self, spark, monkeypatch):
-        """Even keys ~ [100, 150), odd keys ~ [900, 950) -> D = 1."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = []
-        for i in range(200):
-            rows.append((2 * i, 1, "O", 100.0 + (i % 50), None, "x"))
-            rows.append((2 * i + 1, 1, "O", 900.0 + (i % 50), None, "x"))
-        monkeypatch.setattr(
-            evalops_q, "load_table", lambda *a: _orders(spark, rows)
-        )
-        r = evalops_q.q_ks_test(spark, SF).collect()[0]
-        assert r["d_stat"] == pytest.approx(1.0)
-        assert r["reject"] is True
-
-
-class TestKaplanMeier:
-    def test_hand_computed_curve(self, spark, monkeypatch):
-        """10 users, conversion = first purchase with value >= 90:
-        4 convert at t=2, 2 never convert (first event day 25 →
-        censored at t = 30-25 = 5; their low-value purchase must NOT
-        count), 3 convert at t=10, 1 never converts (first event day
-        0, corpus max day 30 → censored at t=30).
-        KM: S(2) = 1 - 4/10 = 0.6; at t=10 risk = 10-4-2 = 4,
-        S(10) = 0.6 * (1 - 3/4) = 0.15."""
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        day = dt.timedelta(days=1)
-        rows, eid = [], 0
-
-        def ev(uid, offset, etype="view", value=0.0):
-            nonlocal eid
-            rows.append((eid, d0 + day * offset, uid, etype, value, "{}"))
-            eid += 1
-
-        for uid in range(4):          # convert at t=2
-            ev(uid, 1)
-            ev(uid, 3, "purchase", 150.0)
-        for uid in range(4, 6):       # censored at t=5 (30-25)
-            ev(uid, 25)
-            ev(uid, 26, "purchase", 50.0)   # below cutoff: no death
-            ev(uid, 27)
-        for uid in range(6, 9):       # convert at t=10
-            ev(uid, 2)
-            ev(uid, 12, "purchase", 90.0)   # boundary: >= counts
-        ev(9, 0)                      # censored at t=30
-        ev(9, 30)                     # defines corpus max
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        out = {
-            r["t_days"]: r for r in evalops_q.q_kaplan_meier(spark, SF).collect()
-        }
-        assert set(out) == {2, 10}  # death times only
-        assert out[2]["n_risk"] == 10 and out[2]["d_deaths"] == 4
-        assert out[2]["survival"] == pytest.approx(0.6)
-        assert out[10]["n_risk"] == 4 and out[10]["d_deaths"] == 3
-        assert out[10]["survival"] == pytest.approx(0.15)
-
-    def test_fixture_curve_is_monotone(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        out = sorted(
-            evalops_q.q_kaplan_meier(spark, sf_dir).collect(),
-            key=lambda r: r["t_days"],
-        )
-        # the r8 vacuous-row lesson: an empty curve hash-matches the
-        # oracle's empty set and certifies nothing — the fixture MUST
-        # produce deaths at every sf for the driver row to be signal
-        assert len(out) > 0
-        surv = [r["survival"] for r in out]
-        assert all(a >= b - 1e-9 for a, b in zip(surv, surv[1:]))
-        assert all(0.0 <= s <= 1.0 + 1e-9 for s in surv)
-        risks = [r["n_risk"] for r in out]
-        assert all(a >= b for a, b in zip(risks, risks[1:]))
-
-
-class TestAcfDaily:
-    def test_alternating_series_flips_sign(self, spark, monkeypatch):
-        """Revenue alternating a, 3a, a, 3a... over 60 consecutive
-        days: acf at odd lags ~ -1, even lags ~ +1 (scaled by the
-        (n-k)/n pair shortfall)."""
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        rows = [
-            (i, 1, "O", 100.0 if i % 2 == 0 else 300.0,
-             d0 + dt.timedelta(days=i), "x")
-            for i in range(60)
-        ]
-        monkeypatch.setattr(
-            evalops_q, "load_table", lambda *a: _orders(spark, rows)
-        )
-        out = {r["lag_days"]: r for r in evalops_q.q_acf_daily(spark, SF).collect()}
-        assert set(out) == set(range(1, 8))
-        for k in range(1, 8):
-            assert out[k]["n_pairs"] == 60 - k
-            expected = (-1 if k % 2 else 1) * (60 - k) / 60
-            assert out[k]["acf"] == pytest.approx(expected, abs=1e-6)
-
-
-class TestWelchTtest:
-    def test_planted_mean_shift_is_significant(self, spark, monkeypatch):
-        """Arm 0 values ~ 10x arm 1 values -> huge t, d > 0."""
-        from resume_jd_matcher_spark.functions.text import hash32
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        ids = spark.range(0, 200).select(F.col("id").alias("user_id"))
-        arms = {
-            r["user_id"]: r["arm"]
-            for r in ids.select(
-                "user_id",
-                (
-                    hash32(
-                        F.concat(F.col("user_id").cast("string"), F.lit("#ab"))
-                    )
-                    % 2
-                ).alias("arm"),
-            ).collect()
-        }
-        rows = []
-        for eid, (uid, arm) in enumerate(arms.items()):
-            base = 100.0 if arm == 0 else 10.0
-            rows.append((eid, None, uid, "view", base + uid % 7, "{}"))
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_welch_ttest(spark, SF).collect()[0]
-        assert r["n_a"] + r["n_b"] == 200
-        assert r["mean_a"] > r["mean_b"]
-        assert r["significant"] is True
-        assert r["cohens_d"] > 2.0  # enormous planted effect
-        # Welch-Satterthwaite df is bounded by n_a + n_b - 2
-        assert 1.0 <= r["df"] <= r["n_a"] + r["n_b"] - 2
-
-    def test_one_sided_split_yields_nulls_not_abort(self, spark, monkeypatch):
-        """Every event from ONE hash arm: all per-arm divisors hit the
-        nullif guards, stats come back NULL on both engines instead of
-        an ANSI divide-by-zero abort (Spark) vs inf/NaN (DuckDB)."""
-        from resume_jd_matcher_spark.functions.text import hash32
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        ids = spark.range(0, 200).select(F.col("id").alias("user_id"))
-        arm0 = [
-            r["user_id"]
-            for r in ids.select(
-                "user_id",
-                (
-                    hash32(
-                        F.concat(F.col("user_id").cast("string"), F.lit("#ab"))
-                    )
-                    % 2
-                ).alias("arm"),
-            ).collect()
-            if r["arm"] == 0
-        ]
-        rows = [(i, None, uid, "view", 5.0, "{}") for i, uid in enumerate(arm0)]
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_welch_ttest(spark, SF).collect()[0]
-        assert r["n_b"] == 0
-        assert r["mean_b"] is None
-        assert r["t_stat"] is None
-        assert r["cohens_d"] is None
-        assert r["significant"] is False
-        assert r["df"] is None
-
-    def test_same_distribution_small_t(self, spark, monkeypatch):
-        """Both arms drawn from the same deterministic values -> the
-        mean gap is sub-threshold."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [
-            (i, None, i, "view", 50.0 + (i % 13), "{}") for i in range(400)
-        ]
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_welch_ttest(spark, SF).collect()[0]
-        assert abs(r["cohens_d"]) < 0.5
-
-
-class TestRatioMetricDelta:
-    def test_constant_per_user_ratio_has_zero_se(self, spark, monkeypatch):
-        """Every user has identical (y, x) -> Y/X constant across the
-        resample -> delta-method variance is exactly 0 and the CI
-        collapses onto the ratio."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = []
-        eid = 0
-        for uid in range(100):
-            for _ in range(4):  # 4 events x 25.0 -> y=100, x=4 per user
-                rows.append((eid, None, uid, "view", 25.0, "{}"))
-                eid += 1
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        out = evalops_q.q_ratio_metric_delta(spark, SF).collect()
-        assert {r["arm"] for r in out} == {0, 1}
-        for r in out:
-            assert r["ratio"] == pytest.approx(25.0)
-            assert r["se"] == pytest.approx(0.0)
-            assert r["ci_lo"] == pytest.approx(25.0)
-            assert r["ci_hi"] == pytest.approx(25.0)
-
-    def test_fixture_ci_brackets_ratio(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        for r in evalops_q.q_ratio_metric_delta(spark, sf_dir).collect():
-            assert r["ci_lo"] <= r["ratio"] <= r["ci_hi"]
-            assert r["se"] >= 0.0
-
-
-class TestCupedAdjustment:
-    def test_perfect_covariate_kills_variance(self, spark, monkeypatch):
-        """y = 2x per user -> theta = 2 exactly and the adjusted
-        metric is constant within each arm -> var_reduction = 1."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = []
-        eid = 0
-        for uid in range(120):
-            pre = float(1 + uid % 7)  # varies across users
-            rows.append((eid, "2024-01-05 00:00:00", uid, "view", pre, "{}"))
-            eid += 1
-            rows.append(
-                (eid, "2024-01-20 00:00:00", uid, "view", 2.0 * pre, "{}")
-            )
-            eid += 1
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts string, user_id long, event_type string, "
-            "value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        out = evalops_q.q_cuped_adjustment(spark, SF).collect()
-        assert {r["arm"] for r in out} == {0, 1}
-        for r in out:
-            assert r["theta"] == pytest.approx(2.0, abs=1e-4)
-            assert r["var_reduction"] == pytest.approx(1.0, abs=1e-3)
-
-    def test_fixture_sane(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        out = evalops_q.q_cuped_adjustment(spark, sf_dir).collect()
-        assert {r["arm"] for r in out} == {0, 1}
-        for r in out:
-            # theta is the POOLED OLS optimum, so a single arm may see
-            # a marginally negative reduction; only the pooled variance
-            # is guaranteed non-increasing.
-            assert -0.05 <= r["var_reduction"] <= 1.0
-
-
-class TestSrmCheck:
-    def test_uniform_hash_not_detected(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        r = evalops_q.q_srm_check(spark, sf_dir).collect()[0]
-        assert r["chi2"] >= 0.0
-        assert r["srm_detected"] is False
-
-    def test_planted_imbalance_detected(self, spark, monkeypatch):
-        """Keep only users hashing to bucket 0 -> all mass in one
-        cell -> chi2 = 9n >> 27.877."""
-        import hashlib
-
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        def bkt(uid: int) -> int:
-            h = hashlib.md5(f"{uid}#srm".encode()).hexdigest()[:8]
-            return int(h, 16) % 10
-
-        uids = [u for u in range(3000) if bkt(u) == 0][:100]
-        assert len(uids) == 100
-        ev = spark.createDataFrame(
-            [(i, None, u, "view", 1.0, "{}") for i, u in enumerate(uids)],
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_srm_check(spark, SF).collect()[0]
-        assert r["n_users"] == 100
-        assert r["n_buckets_observed"] == 1
-        assert r["chi2"] == pytest.approx(900.0)
-        assert r["srm_detected"] is True
-
-
-class TestJackknifeRatioCi:
-    def test_constant_value_zero_se(self, spark, monkeypatch):
-        """Every event carries value 25.0 -> every leave-one-out
-        ratio is 25 -> jackknife variance is exactly 0."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = []
-        eid = 0
-        for uid in range(100):
-            for _ in range(3):
-                rows.append((eid, None, uid, "view", 25.0, "{}"))
-                eid += 1
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        for r in evalops_q.q_jackknife_ratio_ci(spark, SF).collect():
-            assert r["ratio"] == pytest.approx(25.0)
-            assert r["se_jk"] == pytest.approx(0.0)
-            assert r["ci_lo"] == pytest.approx(25.0)
-            assert r["ci_hi"] == pytest.approx(25.0)
-
-    def test_fixture_agrees_with_delta_method(self, spark, sf_dir):
-        """Same ratio point estimate as ratio_metric_delta; the two
-        SEs are different estimators of the same quantity — same
-        order of magnitude, not equal."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        jk = {
-            r["arm"]: r
-            for r in evalops_q.q_jackknife_ratio_ci(spark, sf_dir).collect()
-        }
-        dm = {
-            r["arm"]: r
-            for r in evalops_q.q_ratio_metric_delta(spark, sf_dir).collect()
-        }
-        assert set(jk) == set(dm)
-        for arm in jk:
-            assert jk[arm]["ratio"] == pytest.approx(
-                dm[arm]["ratio"], abs=1e-3
-            )
-            assert jk[arm]["ci_lo"] <= jk[arm]["ratio"] <= jk[arm]["ci_hi"]
-            if dm[arm]["se"] > 0:
-                assert 0.2 < jk[arm]["se_jk"] / dm[arm]["se"] < 5.0
 
 
 class TestZoneMapPruning:
@@ -673,127 +117,6 @@ class TestZoneMapPruning:
             assert r["read_amp"] == pytest.approx(1.0)
 
 
-class TestForecastBacktest:
-    def test_weekly_periodic_series_naive7_is_exact(self, spark, monkeypatch):
-        """Revenue an exact function of day-of-week -> the seasonal
-        naive forecast is perfect (MAE = sMAPE = 0) while the 28-day
-        moving average smears the seasonality and must err."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = []
-        for d in range(70):
-            price = float(100 + 50 * (d % 7))
-            rows.append((d, d, "O", price, f"1995-03-{1:02d}", "1-URGENT"))
-        o = spark.createDataFrame(
-            rows,
-            "o_orderkey long, o_custkey long, o_orderstatus string, "
-            "o_totalprice double, o_orderdate string, o_orderpriority string",
-        ).withColumn(
-            "o_orderdate",
-            (
-                F.lit("1995-03-01").cast("timestamp")
-                + F.make_interval(days=F.col("o_orderkey").cast("int"))
-            ),
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: o)
-        out = {
-            r["method"]: r
-            for r in evalops_q.q_forecast_backtest(spark, SF).collect()
-        }
-        assert out["naive7"]["n_eval_days"] == 70 - 28
-        assert out["naive7"]["mae_cents"] == pytest.approx(0.0)
-        assert out["naive7"]["smape"] == pytest.approx(0.0)
-        assert out["ma28"]["mae_cents"] > 0.0
-
-    def test_fixture_sane(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        out = {
-            r["method"]: r
-            for r in evalops_q.q_forecast_backtest(spark, sf_dir).collect()
-        }
-        assert set(out) == {"naive7", "ma28"}
-        n = {r["n_eval_days"] for r in out.values()}
-        assert len(n) == 1  # same evaluation window for both methods
-        for r in out.values():
-            assert r["mae_cents"] >= 0.0
-            assert 0.0 <= r["smape"] <= 2.0  # sMAPE is bounded by 2
-
-
-class TestMdePower:
-    def test_constant_metric_zero_mde(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        ev = spark.createDataFrame(
-            [(i, None, i, "view", 10.0, "{}") for i in range(200)],
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_mde_power(spark, SF).collect()[0]
-        assert r["n_a"] + r["n_b"] == 200
-        assert r["sd_pooled"] == pytest.approx(0.0)
-        assert r["mde_abs"] == pytest.approx(0.0)
-
-    def test_fixture_mde_scales_with_se(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        r = evalops_q.q_mde_power(spark, sf_dir).collect()[0]
-        assert r["mde_abs"] > 0
-        assert r["mde_rel"] == pytest.approx(
-            r["mde_abs"] / r["mean_control"], rel=1e-2
-        )
-
-
-class TestQteDeciles:
-    def test_planted_uniform_shift(self, spark, monkeypatch):
-        """Treatment users get the control distribution shifted by
-        exactly $1 -> every decile's QTE is 100 cents."""
-        import hashlib
-
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        def arm(uid: int) -> int:
-            h = hashlib.md5(f"{uid}#ab".encode()).hexdigest()[:8]
-            return int(h, 16) % 2
-
-        by_arm = {0: [], 1: []}
-        uid = 0
-        while len(by_arm[0]) < 100 or len(by_arm[1]) < 100:
-            a = arm(uid)
-            if len(by_arm[a]) < 100:
-                by_arm[a].append(uid)
-            uid += 1
-        rows = []
-        eid = 0
-        for a in (0, 1):
-            for i, u in enumerate(by_arm[a]):
-                rows.append((eid, None, u, "view", float(i) + a * 1.0, "{}"))
-                eid += 1
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        out = evalops_q.q_qte_deciles(spark, SF).collect()
-        assert len(out) == 9
-        for r in out:
-            assert r["qte"] == pytest.approx(100.0)
-
-    def test_fixture_deciles_monotone(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = {
-            r["decile"]: r
-            for r in evalops_q.q_qte_deciles(spark, sf_dir).collect()
-        }
-        order = [f"p{i * 10}" for i in range(1, 10)]
-        for lo, hi in zip(order, order[1:]):
-            assert rows[lo]["q_control"] <= rows[hi]["q_control"]
-            assert rows[lo]["q_treat"] <= rows[hi]["q_treat"]
-
-
 class TestCompactionPlan:
     def test_exact_packing(self, spark, monkeypatch):
         """10 files of exactly 50k chars -> 5 bins of 2 contiguous
@@ -831,303 +154,3 @@ class TestCompactionPlan:
             # every bin except possibly the last crosses the target
             assert prev["total_chars"] + cur["total_chars"] > 100_000
 
-
-class TestJoinPlanAdvisor:
-    def test_fixture_recommendations(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = {
-            r["join_name"]: r
-            for r in evalops_q.q_join_plan_advisor(spark, sf_dir).collect()
-        }
-        assert set(rows) == {
-            "orders_customer", "lineitem_part", "lineitem_orders"
-        }
-        # customer is always the smallest dimension -> broadcast
-        assert rows["orders_customer"]["strategy"] == "broadcast"
-        for r in rows.values():
-            assert 0.0 < r["top_key_share"] <= 1.0
-            assert r["probe_ndv"] <= r["probe_rows"]
-
-    def test_planted_skew_triggers_salting(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        big_build = spark.range(30_000).select(
-            F.col("id").alias("o_orderkey"),
-            F.col("id").alias("o_custkey"),
-        )
-        # one key owns half the probe side
-        probe = spark.range(40_000).select(
-            F.when(F.col("id") < 20_000, F.lit(7))
-            .otherwise(F.col("id"))
-            .alias("l_orderkey"),
-            F.col("id").alias("l_partkey"),
-            F.col("id").alias("o_custkey"),
-        )
-        tables = {
-            "customer": big_build, "orders": big_build,
-            "part": big_build, "lineitem": probe,
-        }
-        monkeypatch.setattr(
-            evalops_q, "load_table", lambda s, d, name: tables[name]
-        )
-        rows = {
-            r["join_name"]: r
-            for r in evalops_q.q_join_plan_advisor(spark, SF).collect()
-        }
-        r = rows["lineitem_orders"]
-        assert r["build_rows"] == 30_000
-        assert r["top_key_share"] == pytest.approx(0.5, abs=1e-4)
-        assert r["strategy"] == "salted-smj"
-        # same build size but uniform probe key -> plain sort-merge
-        assert rows["lineitem_part"]["strategy"] == "sort-merge"
-
-
-class TestRocAuc:
-    def test_perfect_separation(self, spark, monkeypatch):
-        """Every purchase value strictly above every non-purchase ->
-        AUC = 1, Gini = 1."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [(i, None, i, "view", float(i % 50), "{}") for i in range(200)]
-        rows += [
-            (1000 + i, None, 1000 + i, "purchase", 100.0 + i, "{}")
-            for i in range(50)
-        ]
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_roc_auc(spark, SF).collect()[0]
-        assert r["n_pos"] == 50 and r["n_neg"] == 200
-        assert r["auc"] == pytest.approx(1.0)
-        assert r["gini"] == pytest.approx(1.0)
-
-    def test_all_tied_is_half(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [
-            (i, None, i, "purchase" if i % 4 == 0 else "view", 7.0, "{}")
-            for i in range(100)
-        ]
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_roc_auc(spark, SF).collect()[0]
-        assert r["auc"] == pytest.approx(0.5)
-        assert r["gini"] == pytest.approx(0.0)
-
-    def test_fixture_bounded(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        r = evalops_q.q_roc_auc(spark, sf_dir).collect()[0]
-        assert 0.0 <= r["auc"] <= 1.0
-        assert r["gini"] == pytest.approx(2 * r["auc"] - 1, abs=2e-6)
-
-
-class TestCalibrationEval:
-    def test_constant_score_single_bin(self, spark, monkeypatch):
-        """Constant value -> sd floored -> p_hat = 0.5 exactly -> one
-        bin (5) whose observed rate is the purchase share."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [
-            (i, None, i, "purchase" if i < 30 else "view", 4.0, "{}")
-            for i in range(100)
-        ]
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        out = evalops_q.q_calibration_eval(spark, SF).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["bin"] == 5
-        assert r["n"] == 100
-        assert r["mean_pred"] == pytest.approx(0.5)
-        assert r["obs_rate"] == pytest.approx(0.3)
-        assert r["abs_gap"] == pytest.approx(0.2)
-
-    def test_fixture_bins_partition(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-        from resume_jd_matcher_spark.sources.io import load_table
-
-        out = sorted(
-            evalops_q.q_calibration_eval(spark, sf_dir).collect(),
-            key=lambda r: r["bin"],
-        )
-        n = load_table(spark, sf_dir, "events").count()
-        assert sum(r["n"] for r in out) == n
-        for a, b in zip(out, out[1:]):
-            assert a["mean_pred"] < b["mean_pred"]  # bins order the score
-        for r in out:
-            assert 0 <= r["bin"] <= 9
-            assert r["abs_gap"] == pytest.approx(
-                abs(r["mean_pred"] - r["obs_rate"]), abs=2e-4
-            )
-
-
-class TestKAnonymity:
-    def test_planted_small_group(self, spark, monkeypatch):
-        """49 rows in one big class + 1 singleton -> k_min 1, 1 row
-        below k=5, verdict False."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = [(i, f"c{i}", 0, float(1000 * (i % 3)), "BIG") for i in range(49)]
-        rows.append((99, "c99", 7, 0.0, "LONER"))
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: cust)
-        r = evalops_q.q_k_anonymity(spark, SF).collect()[0]
-        assert r["n_groups"] == 2
-        assert r["k_min"] == 1
-        assert r["rows_below_k"] == 1
-        assert r["pct_below_k"] == pytest.approx(0.02)
-        assert r["anonymity_ok"] is False
-
-    def test_fixture_consistency(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-        from resume_jd_matcher_spark.sources.io import load_table
-
-        r = evalops_q.q_k_anonymity(spark, sf_dir).collect()[0]
-        n = load_table(spark, sf_dir, "customer").count()
-        assert 1 <= r["k_min"]
-        assert r["l_min"] >= 1
-        assert 0 <= r["rows_below_k"] <= n
-        assert r["pct_below_k"] == pytest.approx(
-            r["rows_below_k"] / n, abs=2e-4
-        )
-
-
-class TestDpNoisyCounts:
-    def test_noise_is_laplace_deterministic(self, spark, sf_dir):
-        """Noise must be reproducible, nonzero somewhere, and
-        concentrated like Laplace(1): P(|x| <= 3) ~ 95%; with 25
-        nations all within 10 is a safe deterministic bound."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        a = {
-            r["c_nationkey"]: r["noisy_count"]
-            for r in evalops_q.q_dp_noisy_counts(spark, sf_dir).collect()
-        }
-        b = {
-            r["c_nationkey"]: r["noisy_count"]
-            for r in evalops_q.q_dp_noisy_counts(spark, sf_dir).collect()
-        }
-        assert a == b  # seeded, not RNG
-        out = evalops_q.q_dp_noisy_counts(spark, sf_dir).collect()
-        noises = [r["noisy_count"] - r["true_count"] for r in out]
-        assert any(abs(x) > 1e-6 for x in noises)
-        assert all(abs(x) < 10.0 for x in noises)
-        assert all(r["epsilon"] == 1.0 for r in out)
-
-
-class TestDiffInDid:
-    def test_planted_parallel_trends_effect(self, spark, monkeypatch):
-        """Both arms drift +2.0 post; the treated arm gets +5.0 on
-        top. DiD must isolate the +5.0 and discard the shared drift;
-        arms are derived from the portable hash so the planted values
-        land in known cells."""
-        from resume_jd_matcher_spark.functions.text import hash32
-        from resume_jd_matcher_spark.queries import evalops_q
-        import datetime
-
-        ids = spark.range(0, 200).select(F.col("id").alias("user_id"))
-        arms = {
-            r["user_id"]: r["arm"]
-            for r in ids.select(
-                "user_id",
-                (
-                    hash32(
-                        F.concat(
-                            F.col("user_id").cast("string"), F.lit("#did")
-                        )
-                    )
-                    % 2
-                ).alias("arm"),
-            ).collect()
-        }
-        rows, eid = [], 0
-        pre = datetime.datetime(2024, 1, 1)
-        post = datetime.datetime(2024, 1, 31)  # midpoint cutoff = day 15
-        for uid, arm in arms.items():
-            base = 10.0
-            rows.append((eid, pre, uid, "view", base, "{}")); eid += 1
-            lift = 2.0 + (5.0 if arm == 1 else 0.0)
-            rows.append((eid, post, uid, "view", base + lift, "{}")); eid += 1
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_diff_in_did(spark, SF).collect()[0]
-        assert r["n_c_pre"] == r["n_c_post"]
-        assert r["n_t_pre"] == r["n_t_post"]
-        assert r["n_c_pre"] + r["n_t_pre"] == 200
-        assert r["mean_c_pre"] == pytest.approx(10.0)
-        assert r["mean_c_post"] == pytest.approx(12.0)
-        assert r["mean_t_pre"] == pytest.approx(10.0)
-        assert r["mean_t_post"] == pytest.approx(17.0)
-        assert r["did"] == pytest.approx(5.0)
-        # constant values inside every cell -> zero variance -> z NULL
-        assert r["se"] == pytest.approx(0.0)
-        assert r["z"] is None
-
-    def test_fixture_identity(self, spark, sf_dir):
-        """did == (t_post - t_pre) - (c_post - c_pre) on the real
-        fixture, and the four cells partition the events."""
-        from resume_jd_matcher_spark.queries import evalops_q
-        from resume_jd_matcher_spark.sources.io import load_table
-
-        r = evalops_q.q_diff_in_did(spark, sf_dir).collect()[0]
-        n = load_table(spark, sf_dir, "events").count()
-        assert (
-            r["n_c_pre"] + r["n_c_post"] + r["n_t_pre"] + r["n_t_post"] == n
-        )
-        assert r["did"] == pytest.approx(
-            (r["mean_t_post"] - r["mean_t_pre"])
-            - (r["mean_c_post"] - r["mean_c_pre"]),
-            abs=5e-4,
-        )
-        assert r["se"] >= 0.0
-
-    def test_large_constant_cells_exact_zero_variance(self, spark, monkeypatch):
-        """2000 identical large values: ss ~ 2e21 is far past 2^53, so
-        the ss/n - mean^2 double spelling can cancel to a tiny NEGATIVE
-        and abort sqrt on the oracle side; the exact integer identity
-        n*ss - s^2 gives se == 0.0 bit-exactly (z NULL, no NaN)."""
-        import datetime
-        import math
-
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        pre = datetime.datetime(2024, 1, 1)
-        post = datetime.datetime(2024, 1, 31)
-        rows = []
-        for i in range(1000):
-            rows.append((2 * i, pre, i, "view", 1000.0, "{}"))
-            rows.append((2 * i + 1, post, i, "view", 1000.0, "{}"))
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_diff_in_did(spark, SF).collect()[0]
-        assert r["se"] == 0.0
-        assert r["did"] == pytest.approx(0.0)
-        assert r["z"] is None
-        for col in ("mean_c_pre", "mean_c_post", "mean_t_pre", "mean_t_post"):
-            assert r[col] == pytest.approx(1000.0)
-            assert not math.isnan(r[col])

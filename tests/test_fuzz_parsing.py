@@ -34,6 +34,9 @@ _ascii = st.characters(
     min_codepoint=32, max_codepoint=126, exclude_characters="_"
 )
 
+# Padding str.strip() removes but F.trim would not (except " ").
+_pad = st.sampled_from([" ", "\t", "\xa0", "\u3000"])
+
 _line = st.one_of(
     st.just("summary: 7"),
     st.just("skills:10"),
@@ -42,7 +45,13 @@ _line = st.one_of(
     st.just("no separator here"),
     st.just(""),
     st.just("summary: 2"),  # duplicate section → keep-last
-    st.builds(lambda a, b: f"{a}: {b}", st.text("abcd ", max_size=8), st.integers(-20, 20)),
+    st.builds(
+        lambda p, a, q, b: f"{p}{a}{q}:{p}{b}{q}",
+        _pad,
+        st.text("abcd ", max_size=8),
+        _pad,
+        st.integers(-20, 20),
+    ),
 )
 
 # Every line boundary str.splitlines honours.

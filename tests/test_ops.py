@@ -293,33 +293,6 @@ class TestBatch3:
         assert r["elasticity"] == pytest.approx(-2.0, abs=1e-3)
         assert r["r2"] == pytest.approx(1.0, abs=1e-3)
 
-    def test_funnel_latency_hand_computed(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        rows = [
-            # user 1: signup then purchase 2h later
-            (0, d0, 1, "signup", 0.0, "{}"),
-            (1, d0 + dt.timedelta(hours=2), 1, "purchase", 10.0, "{}"),
-            # user 2: PRE-signup purchase must not count; converts 10h
-            (2, d0 - dt.timedelta(hours=5), 2, "purchase", 10.0, "{}"),
-            (3, d0, 2, "signup", 0.0, "{}"),
-            (4, d0 + dt.timedelta(hours=10), 2, "purchase", 10.0, "{}"),
-            # user 3: signup, never purchases
-            (5, d0, 3, "signup", 0.0, "{}"),
-            # user 4: purchases but never signs up -> outside the base
-            (6, d0, 4, "purchase", 10.0, "{}"),
-        ]
-        ev = spark.createDataFrame(rows, _EV_SCHEMA)
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: ev)
-        r = evalops_q.q_funnel_time_to_convert(spark, SF).collect()[0]
-        assert r["n_signup"] == 3
-        assert r["n_converted"] == 2
-        assert r["conv_rate"] == pytest.approx(0.6667)
-        # DISCRETE percentile: first element with cume_dist >= 0.5
-        assert r["p50_hours"] == pytest.approx(2.0)
-        assert r["p90_hours"] == pytest.approx(10.0)
-
     def test_cross_source_leakage_detects_verbatim_copy(
         self, spark, monkeypatch
     ):

@@ -60,6 +60,25 @@ def test_lines_split_like_str_splitlines(spark, sep):
     assert got == {(1, "Skills"): 7, (1, "Experience"): 8}
 
 
+@pytest.mark.parametrize("pad", ["\t", "\xa0", "\u3000"])
+def test_whitespace_stripped_like_str_strip(spark, pad):
+    """Section names and scores lose every str.isspace character at
+    both ends, so a padded duplicate still overrides the earlier line;
+    F.trim stripped only ' ', which split 'Skills' in two or voided
+    the document."""
+    resp = f"SCORES:\n{pad}Skills{pad}:{pad}7{pad}\nExperience: 8\n{pad}Skills:{pad}3"
+    got = _parse(spark, [(1, resp)])
+    assert got == {(1, "Skills"): 3, (1, "Experience"): 8}
+
+
+def test_whitespace_set_is_str_isspace():
+    from resume_jd_matcher_spark.functions.parsing import _WHITESPACE
+
+    assert set(_WHITESPACE) == {
+        chr(c) for c in range(0x110000) if chr(c).isspace()
+    }
+
+
 def test_mean_score_rounding(spark):
     df = spark.createDataFrame(
         [(1, "a", 7), (1, "b", 8), (2, "a", 1)], ["doc_id", "section", "score"]

@@ -199,45 +199,15 @@ def test_registry_wide_no_cartesian_products(spark):
         # |nations|x|segments|-bounded cell table:
         "chi2_independence",
         # -- round 8 --
-        # single-row broadcast n/ss totals crossed into the
-        # calendar-bounded day grain:
-        "acf_daily",
-        # global_prefix single-row equal-height bounds broadcast +
-        # single-row n_orders total for the ntile arithmetic:
-        "equi_depth_histogram",
-        # single-row broadcast (max date, n_users) crossed into the
-        # user grain, then the lifetime-day grain:
-        "kaplan_meier",
-        # global_prefix single-row bucket-stats broadcast + single-row
-        # (n_a, n_b) totals crossed into the distinct-cents grain:
-        "ks_test",
-        # single-row broadcast grand total + entropies crossed into
-        # dimension-bounded cell/marginal tables:
-        "mutual_information",
         # 3-row broadcast query side crossed into the corpus for the
         # exact ground-truth ranking (the standard similarity shape):
         "ndcg_eval",
         # single-row broadcast character-budget total crossed into the
         # ranked document grain:
         "token_budget_curriculum",
-        # single-row broadcast pooled-moment agg (theta) crossed into
-        # the per-user grain before the per-arm finalize:
-        "cuped_adjustment",
-        # single-row broadcast (n_pos, n_neg) totals crossed into the
-        # global_prefix-ranked score grain for the rank-sum AUC:
-        "roc_auc",
-        # single-row broadcast moment agg crossed into the event
-        # grain, then the 10-cell bin table:
-        "calibration_eval",
-        # per-arm quantile boundary row (2-row broadcast) crossed into
-        # the event grain for decile assignment:
-        "qte_deciles",
         # global_prefix single-row bucket-stats broadcast + single-row
         # byte-budget total crossed into the file-grain plan:
         "compaction_plan",
-        # single-row broadcast probe_stats summary crossed into the
-        # <=|keys|-bounded build-side census:
-        "join_plan_advisor",
         # single-row broadcast global (min,max) bounds crossed into
         # the event grain for zone assignment:
         "zone_map_pruning",
@@ -254,9 +224,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row calendar bounds + 1-row/7-row seasonal summaries
         # crossed back onto the bounded day grain:
         "stl_decompose",
-        # single-row calendar-midpoint cutoff broadcast crossed into
-        # the fact before the 4-group conditional agg:
-        "diff_in_did",
         # two 1-row summaries (OLS fit, corpus mass) crossed with the
         # 1-row top-k mass agg:
         "zipf_fit",
@@ -302,9 +269,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row median/MAD/limits + 1-row top-day broadcast crossed
         # over the calendar-bounded day grain:
         "anomaly_mad_daily",
-        # 1-row signup-base count broadcast crossed into the
-        # converted-user grain:
-        "funnel_time_to_convert",
         # -- round 10 --
         # 1-row span-derived train/bench cutoff broadcast crossed
         # into the gram stream (replaces the fixed id window that
@@ -312,13 +276,12 @@ def test_registry_wide_no_cartesian_products(spark):
         "decontaminate",
         # -- round 10, inference family --
         # 1-row (mu, sd) scorer-moment broadcast crossed into the fact
-        # before the single global agg (the calibration_eval shape):
+        # before the single global agg:
         "brier_logloss",
         # same 1-row (mu, sd) broadcast before the 4-cell confusion agg:
         "matthews_mcc",
         # 1-row (sum, n) mean broadcast into the calendar-bounded day
-        # grain + the 1-row Σdev² broadcast into the lag frame
-        # (acf_daily's exact shape):
+        # grain + the 1-row Σdev² broadcast into the lag frame:
         "ljung_box",
         # 1-row OLS-fit broadcast back over the calendar-bounded day
         # grain to form residuals:
@@ -350,8 +313,7 @@ def test_registry_wide_no_cartesian_products(spark):
         "jsd_drift",
         # 1-row censor-horizon broadcast into the user lifetable, the
         # calendar-bounded (event-times x 2-row arm census) risk grid,
-        # and the 1-row O/E/V reduction crossed with the arm census
-        # (kaplan_meier's shape + a scalar join):
+        # and the 1-row O/E/V reduction crossed with the arm census:
         "log_rank_test",
         # 1-row (y0, y1) span broadcast into the scan filter + the
         # 1-row basket reduction over the part-grain period join:
@@ -362,11 +324,11 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row OLS-fit + 1-row MSE broadcasts over the
         # calendar-bounded day grain (the durbin_watson family):
         "cooks_distance",
-        # kaplan_meier's lifetable shape: 1-row censor horizon +
+        # lifetable shape: 1-row censor horizon +
         # 1-row tau + 1-row first-segment/area scalars crossed over
         # the calendar-bounded event-time grain:
         "rmst",
-        # calibration_eval's 1-row (mu, sd) scorer-moment broadcast
+        # brier_logloss' 1-row (mu, sd) scorer-moment broadcast
         # before the 10-cell hash agg:
         "hosmer_lemeshow",
         # same 1-row moment broadcast + the <=10-row bins²/bins³
@@ -394,6 +356,8 @@ def test_registry_wide_no_cartesian_products(spark):
         # mann_whitney_u shape):
         "sequence_packing",
     }
+    stale = bnlj_by_design - set(Q.queries())
+    assert not stale, f"whitelist names unregistered queries: {sorted(stale)}"
     offenders, bnlj_unexpected = [], []
     for name, qd in sorted(Q._REGISTRY.items()):
         try:

@@ -107,7 +107,7 @@ HEADLINERS = {
     "isotonic_calibration": "ONE fact scan to the 10-cell bin agg; "
     "the bins²/bins³ minimax joins run on broadcast constant-sized "
     "frames — the 'cubic' PAV formula costs nothing",
-    "rmst": "kaplan_meier's lifetable chain: user-grain agg, 1-row "
+    "rmst": "Kaplan-Meier lifetable chain: user-grain agg, 1-row "
     "horizon broadcast, every window on the calendar-bounded "
     "event-time grain, 1-row integral reduction",
     "graph_triangles": "compact-forward: triangles from TWO hash "
@@ -234,70 +234,20 @@ HEADLINERS = {
     "vocab_overlap": "pair intersection is a token-keyed self-EQUI-"
     "join of the DISTINCT (source, token) grain — no doc x doc or "
     "source x source cross join; size dims broadcast",
-    "entity_resolution": "candidate generation is a plain equi-join "
-    "on the 4-digit block key — never a name x name cross join; "
-    "min-distance pick windowed PER dirty record",
-    "equi_depth_histogram": "ntile replay on the prefix scan with "
-    "sampled equal-height bounds (one extra approx-percentile agg); "
-    "window PARTITIONED BY _bkt, unpartitioned window only over "
-    "n_buckets summary rows",
-    "snapshot_diff": "ONE full-outer shuffle join on the snapshot "
-    "key + 4-group hash agg; both versions derived from one scan",
-    "ks_test": "both ECDF counters ride ONE multi-sum prefix scan "
-    "(one bucketed shuffle of the distinct-cents grain); sup taken "
-    "on exact decimal(38,0) integer cross-multiples",
-    "kaplan_meier": "fact -> user grain -> LIFETIME-day grain before "
-    "any window; risk-set + survival windows run over the calendar-"
-    "bounded grain only",
-    "acf_daily": "day-grain integer-cents agg, then a calendar-key "
-    "equi-join fanned by a 7-element literal explode — day x lags "
-    "rows, no window at all",
     "stream_drift_monitor": "two fact-sized bucket-count hash aggs; "
     "PSI finalize joins only bounded pre-aggregates with the "
     "baseline broadcast (streaming run keeps windows x types x 10 "
     "buckets of state)",
-    "welch_ttest": "ONE conditional aggregate computes all six "
-    "sufficient statistics map-side combined; everything after is "
-    "scalar arithmetic on a 1-row frame",
-    "ratio_metric_delta": "user-grain hash agg, then a 2-row per-arm "
-    "moment agg carrying the covariance — no per-event variance "
-    "shortcut",
-    "cuped_adjustment": "user-grain conditional agg, 1-row pooled "
-    "theta broadcast back, per-arm finalize — three bounded shuffles, "
-    "fact touched once",
-    "srm_check": "distinct users -> 10-cell hash agg -> 1-row "
-    "moment-expansion chi2; empty cells need no completion join",
-    "jackknife_ratio_ci": "one (arm,bucket)-grain agg over the fact "
-    "(64 cells), broadcast totals join, O(1) finalize — resample "
-    "grain bounded at 32 regardless of user count",
     "zone_map_pruning": "1-row bounds agg broadcast, two fact "
     "projections unioned into a 128-cell (layout,file) agg, O(1) "
     "finalize — no window",
     "user_streaks": "distinct (user,day), then window + both aggs "
     "all partitioned by user_id — one exchange reused end-to-end",
-    "forecast_backtest": "fact collapses to the day grain before any "
-    "window; the only unpartitioned window covers the bounded "
-    "calendar (~2.5k rows)",
-    "mde_power": "user-grain hash agg then one 1-row conditional "
-    "aggregate — O(1) after the user agg",
-    "qte_deciles": "user-grain agg, then the bucket-histogram exact "
-    "percentile plan per arm; melt/pivot on 18 rows",
     "compaction_plan": "bucketed prefix-scan shuffle (no "
     "single-partition window) then a bin-grain agg",
-    "join_plan_advisor": "per join one build count + one probe "
-    "per-key agg summarized map-side to 1 row; three bounded frames "
-    "unioned",
-    "roc_auc": "value-grain agg then the bucketed prefix scan over "
-    "distinct scores — AUC ranks values, not rows; 1-row finalize",
-    "calibration_eval": "1-row moments broadcast, one 10-cell hash "
-    "agg over the fact — no window, no join",
     "pareto_frontier": "day-grain max, suffix running max on the "
     "bounded day summary, broadcast join back — no dominance "
     "self-join, no fact-sized sort",
-    "k_anonymity": "one QI-grain hash agg (distinct inside the same "
-    "grouping), 1-row finalize — no window, no join",
-    "dp_noisy_counts": "one dimension-grain hash agg then scalar "
-    "seeded-hash Laplace arithmetic per group — no second pass",
     "theil_sen_trend": "day-grain collapse first; calendar-bounded "
     "broadcast self-pairing; slope median via sketch-guided exact "
     "selection — only the ~4% bracket slice is ever sorted",
@@ -307,8 +257,6 @@ HEADLINERS = {
     "cusum window over the bounded calendar summary only",
     "stl_decompose": "calendar-filled day grain; MA7/rank windows over "
     "the bounded calendar; seasonal joins are 7-row broadcasts",
-    "diff_in_did": "ONE conditional hash agg over the fact after a "
-    "1-row cutoff broadcast — no window, 4-group finalize",
     "zipf_fit": "token hash agg, global top-k via TakeOrdered (never "
     "a vocab-sized window), 1-row fit/coverage finalize",
     "llr_keyness": "token df-filter BEFORE the per-source window; "
@@ -377,8 +325,6 @@ HEADLINERS = {
     "out",
     "elasticity_by_brand": "broadcast dim join + ONE map-side-"
     "combined regression-moment hash agg per brand; no window",
-    "funnel_time_to_convert": "user-grain aggs + one user-keyed "
-    "equi-join; percentiles over the converted-user grain; 1-row out",
     "cross_source_leakage": "the dedup family's banded equi-join "
     "candidates + doc-keyed source joins; |sources|^2-bounded matrix "
     "agg",

@@ -225,32 +225,19 @@ REGISTERED = [
     "market_basket",
     "weighted_median",
     "rfm_segments",
-    # round-8 additions (orders-only inputs, so they run on the
-    # synthetic tables as-is): two more prefix-scan consumers — one
-    # with equal-height bounds, one with the multi-sum dual-ECDF —
-    # plus the full-outer diff and the day-grain lag join.
-    "equi_depth_histogram",
-    "ks_test",
-    "snapshot_diff",
-    "acf_daily",
-    # round-8 batch 2: the event-grain evaluation kernels (the synth
-    # now writes an events table at n_orders rows), the day-grain
-    # backtest, and the two data-layout advisors.
+    # round-8 batch 2: the user-grain streak window (the synth writes
+    # an events table at n_orders rows) and the zone-map layout
+    # advisor.
     "user_streaks",
-    "cuped_adjustment",
-    "jackknife_ratio_ci",
-    "forecast_backtest",
     "zone_map_pruning",
     # round-8 batch 5: the calendar-bounded trend/changepoint family.
     # theil_sen/mann_kendall build a days^2 pair space INDEPENDENT of
     # fact rows, so their 10x ratio isolates the day-grain collapse
-    # cost; cusum/stl window only the bounded calendar; diff_in_did is
-    # one conditional agg over the fact (the closest to pure-scan).
+    # cost; cusum/stl window only the bounded calendar.
     "theil_sen_trend",
     "mann_kendall",
     "cusum_changepoint",
     "stl_decompose",
-    "diff_in_did",
     # round-9 curation/governance members with relational inputs:
     # day-grain SPC/complexity/rank-corr kernels, the prefix-scan
     # layout advisor (the one fact-ranking member), the event-grain
@@ -275,7 +262,6 @@ REGISTERED = [
     # documents kernel measured via the text curve's minhash kernel)
     "anomaly_mad_daily",
     "elasticity_by_brand",
-    "funnel_time_to_convert",
     # round-10 inference family (all relational inputs; the one
     # documents member, local_clustering, shares graph_triangles'
     # minhash-edge kernel already covered by the text curve):
