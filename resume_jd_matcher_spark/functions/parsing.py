@@ -202,10 +202,12 @@ def mean_score(
     scores: DataFrame, id_col: str = "doc_id", score_col: str = "score"
 ) -> DataFrame:
     """A1: final score = round(mean(section scores), 2) (reference
-    app.py:94). Empty group → no row (the reference raised ValueError;
-    at scale absence is the signal).
+    app.py:94), rounding half-even like Python's ``round``: eight
+    lines summing to 57 give 7.12 (half-up would give 7.13). Empty
+    group → no row (the reference raised ValueError; at scale absence
+    is the signal).
 
     Output: (id, final_score DOUBLE)."""
     return scores.groupBy(id_col).agg(
-        F.round(F.avg(score_col), 2).alias("final_score")
+        F.bround(F.avg(score_col), 2).alias("final_score")
     )

@@ -43,6 +43,8 @@ from resume_jd_matcher_spark.plans.optimize import ensure_parallelism
 
 def _query_matrix(queries_pdf: pd.DataFrame, id_col: str, vec_col: str):
     qids = queries_pdf[id_col].to_numpy()
+    if not len(qids):  # empty probe: the chunk loops emit no rows
+        return qids, np.empty((0, 0))
     qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
     return qids, qmat
 

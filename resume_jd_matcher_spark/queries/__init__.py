@@ -210,15 +210,10 @@ _DRIVER_PRIORITY = [
     "token_entropy",
     "weighted_sample",
     "boilerplate_ngrams",
-    "fd_check",
     "keyword_tag_broadcast",
     "kfold_assign",
     "readability_ari",
-    "weighted_median",
-    "cusum_changepoint",
-    "hurst_exponent",
     "silhouette_score",
-    "stl_decompose",
     # -- r11 structure debuts (confirmed r12) --
     "bcubed_eval",
     "burstiness_fano",
@@ -237,9 +232,6 @@ _DRIVER_PRIORITY = [
     "decontaminate",
     "zipf_fit",
     "llr_keyness",
-    "theil_sen_trend",
-    "anomaly_mad_daily",
-    "elasticity_by_brand",
     "incremental_agg_merge",
     "changelog_apply",
     "theta_sketch_setops",
@@ -255,8 +247,6 @@ _DRIVER_PRIORITY = [
     "sort_key_advisor",
     "obrien_fleming_monitor",
     "benjamini_hochberg",
-    "pareto_frontier",
-    "mann_kendall",
     "rolling_beta",
     "rmst",
     "markov_attribution",
@@ -292,22 +282,12 @@ _DRIVER_PRIORITY = [
     "brier_logloss",
     "grubbs_test",
     "local_clustering",
-    "market_basket",
-    "rfm_segments",
-    "level_shift",
-    "time_weighted_avg",
-    "sax_symbolize",
     "heaps_law",
-    "cramers_v",
-    "chi2_independence",
-    "abc_pareto",
-    "gini_concentration",
     "token_budget_curriculum",
     "compaction_plan",
     "ndcg_eval",
     "vocab_overlap",
     "zone_map_pruning",
-    "user_streaks",
     "ensemble_neardup",
     "mllib_lsh_agreement",
     "keyword_tag",

@@ -488,9 +488,9 @@ def q_imr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily revenue — the Shewhart chart for one-observation-per-period
     processes (Montgomery, SQC): sigma is estimated from the mean
     absolute difference of CONSECUTIVE observed days divided by the
-    d2=1.128 bias constant, limits at center ± 3σ̂. The release-
-    monitoring sibling of cusum_changepoint (CUSUM finds the drift
-    point; I-MR flags the out-of-control days). Gaps in the calendar
+    d2=1.128 bias constant, limits at center ± 3σ̂. It flags the
+    out-of-control days rather than locating a single drift point
+    (what a CUSUM does). Gaps in the calendar
     contribute the range between adjacent OBSERVED days — the
     standard irregular-sampling convention, identical on both sides.
 

@@ -957,9 +957,8 @@ def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 [EXT]: Theil-T inequality index of positive account
     balances with its exact within/between-nation decomposition
     (Theil 1967 — the entropy-based inequality measure whose group
-    decomposition is additive: T = T_within + T_between). The
-    group-attribution companion of gini_concentration/lorenz_curve:
-    it answers WHERE the inequality lives.
+    decomposition is additive: T = T_within + T_between). Unlike a
+    single Gini coefficient, it answers WHERE the inequality lives.
 
     Scale shape: one hash agg to the |nations| grain carrying
     (n_g, Σx, Σx·lnx) sufficient statistics, a 1-row total, and a
@@ -1129,8 +1128,8 @@ def q_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 [EXT]: Grubbs extreme-studentized-deviate test per market
     segment — G = max|x − x̄|/s with the offending balance (ties
     broken to the smallest value on both engines). The single-
-    outlier screen run before anomaly_mad_daily's robust variant:
-    Grubbs assumes normality (pair with jarque_bera), MAD does not.
+    outlier screen under a normality assumption (pair with
+    jarque_bera); a median/MAD screen is the robust alternative.
 
     Scale shape: three map-side-combined hash aggs (group stats, max
     deviation, deterministic tie pick), stitched with |segments|-row
@@ -1223,9 +1222,9 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 [EXT]: rolling {_BETA_WIN}-day OLS beta of the BUILDING
     segment's daily revenue against the whole market — β =
     cov(mkt, seg)/var(mkt) over a trailing row window, emitted only
-    for complete windows. The exposure/sensitivity readout behind
-    elasticity_by_brand's cross-sectional version; a segment whose β
-    drifts from its long-run share flags a mix shift.
+    for complete windows. The exposure/sensitivity readout: a
+    segment whose β drifts from its long-run share flags a mix
+    shift.
 
     Scale shape: fact⋈dim equi-join (no broadcast hint — the
     customer projection is linear in sf, so the optimizer picks the
@@ -2026,9 +2025,8 @@ def q_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     indices between the corpus' first and last shipment years —
     quantity-weighted unit prices per part, base-weighted vs
     current-weighted baskets over the parts traded in BOTH periods,
-    and their geometric mean (Fisher 1922). The price-level
-    companion of elasticity_by_brand: elasticity explains quantity
-    response, the index measures pure price drift. Span-derived
+    and their geometric mean (Fisher 1922): the index measures pure
+    price drift, separate from any quantity response. Span-derived
     periods keep the comparison non-vacuous at every scale factor
     (the decontaminate fixture lesson).
 
@@ -3129,9 +3127,8 @@ def q_gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic M-step (Σr, Σrv, Σrv² per component in ONE hash agg),
     params re-rounded each iteration so the oracle replays the exact
     trajectory (the kmeans/Lloyd discipline). The model-based
-    companion of score_banding/rfm_segments' rule-based splits: it
-    answers whether the balance distribution is one population or
-    two.
+    alternative to rule-based quantile splits: it answers whether the
+    balance distribution is one population or two.
 
     Scale shape: init is one percentile agg; each EM iteration is
     ONE fact pass — a 1-row params broadcast into a map-side-

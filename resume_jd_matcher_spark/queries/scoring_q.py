@@ -238,14 +238,14 @@ def q_score_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mean_score",
     f"""
 SELECT doc_id,
-       round(((doc_id % 11) + ((doc_id * 3) % 11) + ((doc_id * 5) % 11)
+       round_even(((doc_id % 11) + ((doc_id * 3) % 11) + ((doc_id * 5) % 11)
             + ((doc_id * 7) % 11)) / 4.0, 2) AS final_score
 FROM ({_SQL_VALID_DOCS}) v
 """,
 )
 def q_mean_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: final score = round(avg(section scores), 2) (app.py:94),
-    chained after the T4 parser."""
+    half-even like Python's ``round``, chained after the T4 parser."""
     d = load_table(spark, sf_dir, "documents")
     responses = d.select("doc_id", _canned_response(F.col("doc_id")).alias("response"))
     return mean_score(parse_scores(responses))
@@ -265,7 +265,7 @@ scored AS (
            {_JD_TOKS_SQL}))) AS score
   FROM sections
 )
-SELECT doc_id, round(avg(score), 2) AS final_score
+SELECT doc_id, round_even(avg(score), 2) AS final_score
 FROM scored GROUP BY doc_id
 """,
 )

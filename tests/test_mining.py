@@ -1,7 +1,6 @@
-"""Round-7 mining/profiling layer: the distributed prefix scan
-(operators/prefix.py) and invariants of the mining_q queries —
-market-basket lift, RFM scoring, ABC classes, Gini bounds, chi²,
-level shift, TWA, SAX, ARI, boilerplate n-grams, FD checks."""
+"""The distributed prefix scan (operators/prefix.py) and invariants
+of the mining_q document-profiling queries: ARI readability,
+boilerplate n-grams and stratified k-fold assignment."""
 
 from __future__ import annotations
 
@@ -154,211 +153,6 @@ class TestGlobalPrefix:
         assert got == {2: 1, 3: 2, 1: 3}
 
 
-class TestGroupPercentilesNulls:
-    def test_null_values_are_skipped_like_quantile_cont(self, spark):
-        """quantile_cont/percentile() skip NULLs; a NULL bucket would
-        sort first in the cumulative window and shift every rank."""
-        from resume_jd_matcher_spark.operators.percentiles import (
-            group_percentiles_exact,
-        )
-
-        rows = [("g", float(v)) for v in (10, 20, 30, 40)] + [
-            ("g", None),
-            ("g", None),
-        ]
-        df = spark.createDataFrame(rows, "grp string, v double")
-        out = group_percentiles_exact(
-            df, "grp", "v", [("p50", 0.5), ("p25", 0.25)]
-        ).collect()[0]
-        # over the 4 non-null values: p50 = 25.0, p25 = 17.5
-        assert out["p50"] == pytest.approx(25.0)
-        assert out["p25"] == pytest.approx(17.5)
-
-
-class TestMarketBasket:
-    def test_lift_identity_on_crafted_baskets(self, spark, monkeypatch):
-        """Two brands always together in 4 of 4 orders: support=4,
-        lift = n/(cnt_a*cnt_b) computed exactly."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        li = spark.createDataFrame(
-            [(o, pk) for o in range(1, 5) for pk in (1, 2)]
-            + [(5, 3)],
-            "l_orderkey long, l_partkey long",
-        )
-        part = spark.createDataFrame(
-            [(1, "B1"), (2, "B2"), (3, "B3")], "p_partkey long, p_brand string"
-        )
-        monkeypatch.setattr(
-            mining_q,
-            "load_table",
-            lambda spark, sf, name: {"lineitem": li, "part": part}[name],
-        )
-        rows = mining_q.q_market_basket(spark, SF).collect()
-        assert len(rows) == 1
-        r = rows[0]
-        assert (r["brand_a"], r["brand_b"], r["support"]) == ("B1", "B2", 4)
-        # lift = support * n_orders / (cnt_a * cnt_b) = 4*5/(4*4)
-        assert r["lift"] == pytest.approx(1.25, abs=1e-6)
-
-
-class TestRfm:
-    def test_scores_partition_customers(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries.mining_q import q_rfm_segments
-
-        rows = q_rfm_segments(spark, sf_dir).collect()
-        assert len(rows) > 0
-        for r in rows:
-            assert 1 <= r["r_score"] <= 4
-            assert r["segment"] == f"R{r['r_score']}F{r['f_score']}M{r['m_score']}"
-        # quartile scoring must use all four buckets on real data
-        assert {r["m_score"] for r in rows} == {1, 2, 3, 4}
-
-
-class TestAbcGini:
-    def test_abc_classes_are_ordered_prefixes(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries.mining_q import q_abc_pareto
-
-        rows = sorted(q_abc_pareto(spark, sf_dir).collect(), key=lambda r: r["rnk"])
-        # cum_share is nondecreasing and classes change A->B->C monotonically
-        shares = [r["cum_share"] for r in rows]
-        assert shares == sorted(shares)
-        classes = "".join(r["abc_class"] for r in rows)
-        assert classes == "A" * classes.count("A") + "B" * classes.count("B") + "C" * classes.count("C")
-        assert abs(shares[-1] - 1.0) < 1e-6
-
-    def test_gini_bounds_and_uniform_zero(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        uniform = spark.createDataFrame(
-            [(i, i, "O", 100.0, None, "P") for i in range(1, 41)],
-            "o_orderkey long, o_custkey long, o_orderstatus string, "
-            "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-        )
-        monkeypatch.setattr(
-            mining_q, "load_table", lambda spark, sf, name: uniform
-        )
-        r = mining_q.q_gini_concentration(spark, SF).collect()[0]
-        assert r["n_customers"] == 40
-        assert abs(r["gini"]) < 1e-6  # equal spend -> zero concentration
-
-    def test_rank_weighted_sum_survives_int64_overflow(self, spark, monkeypatch):
-        """sum(rank*cents) is ~n²·avg_cents/2; with cents near the
-        int64 ceiling the bigint accumulator overflows (ANSI abort at
-        sf≥3 on real data). The decimal(38,0) path must survive and
-        still give gini == 0 for equal spend."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        # 10 customers x 9e15 totalprice -> cents 9e17 each;
-        # sum(rank*cents) = 55 * 9e17 = 4.95e19 > 2^63-1.
-        big = spark.createDataFrame(
-            [(i, i, "O", 9.0e15, None, "P") for i in range(1, 11)],
-            "o_orderkey long, o_custkey long, o_orderstatus string, "
-            "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-        )
-        monkeypatch.setattr(
-            mining_q, "load_table", lambda spark, sf, name: big
-        )
-        r = mining_q.q_gini_concentration(spark, SF).collect()[0]
-        assert r["n_customers"] == 10
-        assert abs(r["gini"]) < 1e-6
-
-
-class TestChi2:
-    def test_independent_uniform_is_zero(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        # perfectly balanced 2x2 -> chi2 == 0, dof == 1
-        rows = [
-            (i, f"c{i}", n, 0.0, s)
-            for i, (n, s) in enumerate(
-                [(0, "A"), (0, "B"), (1, "A"), (1, "B")] * 5
-            )
-        ]
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: cust)
-        r = mining_q.q_chi2_independence(spark, SF).collect()[0]
-        assert r["chi2"] == pytest.approx(0.0, abs=1e-6)
-        assert r["dof"] == 1 and r["n"] == 20
-
-    def test_zero_cells_enter_the_statistic(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        # nation 1 never buys segment B -> the (1, B) zero cell must
-        # contribute its expectation; chi2 > 0
-        rows = [(i, f"c{i}", 0, 0.0, "A") for i in range(5)]
-        rows += [(10 + i, f"d{i}", 0, 0.0, "B") for i in range(5)]
-        rows += [(20 + i, f"e{i}", 1, 0.0, "A") for i in range(5)]
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: cust)
-        r = mining_q.q_chi2_independence(spark, SF).collect()[0]
-        assert r["chi2"] > 0
-
-
-class TestSeries:
-    def test_level_shift_flags_injected_step(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-        from datetime import datetime, timedelta
-
-        # 14 flat days then a 2x step on day 15..21
-        rows = []
-        base = datetime(2024, 1, 1)
-        eid = 0
-        for day in range(21):
-            v = 10.0 if day < 14 else 20.0
-            for k in range(5):
-                rows.append((eid, base + timedelta(days=day, hours=k), 1, "t", v, ""))
-                eid += 1
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: ev)
-        out = {r["day_num"]: r for r in mining_q.q_level_shift(spark, SF).collect()}
-        flagged_days = [d for d, r in out.items() if r["flagged"]]
-        assert flagged_days  # the step must be detected
-        # fully pre-step windows (day 14 rn) vs post: ratio at the step > 0.2
-        assert max(r["shift_ratio"] for r in out.values()) > 0.2
-
-    def test_twa_weights_by_interval(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-        from datetime import datetime
-
-        # value 0 held 90s, value 100 held 10s -> twa = 10, plain = 50
-        ev = spark.createDataFrame(
-            [
-                (1, datetime(2024, 1, 1, 0, 0, 0), 1, "t", 0.0, ""),
-                (2, datetime(2024, 1, 1, 0, 1, 30), 1, "t", 100.0, ""),
-                (3, datetime(2024, 1, 1, 0, 1, 40), 1, "t", 55.0, ""),
-            ],
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: ev)
-        r = mining_q.q_time_weighted_avg(spark, SF).collect()[0]
-        assert r["twa"] == pytest.approx(10.0, abs=1e-6)
-        assert r["plain_avg"] == pytest.approx(50.0, abs=1e-6)
-        assert r["span_s"] == 100 and r["n_intervals"] == 2
-
-    def test_sax_word_shape(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries.mining_q import q_sax_symbolize
-
-        rows = q_sax_symbolize(spark, sf_dir).collect()
-        assert len(rows) >= 1
-        for r in rows:
-            assert len(r["sax"]) == 8 and set(r["sax"]) <= set("abcd")
-            assert r["sigma"] >= 0
-
-
 class TestTextProfiling:
     def test_ari_known_text(self, spark, monkeypatch):
         from resume_jd_matcher_spark.queries import mining_q
@@ -387,55 +181,6 @@ class TestTextProfiling:
         assert top["gram"] in ("acme corp", "copyright acme")
         assert top["df"] == 6 and top["doc_share"] == pytest.approx(1.0, abs=1e-6)
 
-    def test_fd_check_verdicts(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries.mining_q import q_fd_check
-
-        out = {r["fd"]: r for r in q_fd_check(spark, sf_dir).collect()}
-        assert out["orders.o_orderkey->o_custkey"]["holds"] is True
-        assert out["customer.c_custkey->c_nationkey"]["holds"] is True
-        assert out["lineitem.l_orderkey->l_returnflag"]["holds"] is False
-        for r in out.values():
-            assert r["n_violating"] <= r["n_keys"]
-
-
-class TestWeightedMedian:
-    def test_hand_weighted(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        # prices 1.00 x w1, 2.00 x w1, 3.00 x w10: weighted median = 3.00
-        li = spark.createDataFrame(
-            [
-                (1, 1, 1, 1, 1.0, 1.00, 0.0, 0.0, "A", "O", None),
-                (2, 1, 1, 1, 1.0, 2.00, 0.0, 0.0, "A", "O", None),
-                (3, 1, 1, 1, 10.0, 3.00, 0.0, 0.0, "A", "O", None),
-            ],
-            "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-            "l_quantity double, l_extendedprice double, l_discount double, "
-            "l_tax double, l_returnflag string, l_linestatus string, "
-            "l_shipdate timestamp",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: li)
-        r = mining_q.q_weighted_median(spark, SF).collect()[0]
-        assert r["median_cents"] == 300 and r["total_weight"] == 12
-
-    def test_unweighted_reduces_to_median(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [
-            (i, 1, 1, 1, 1.0, float(i), 0.0, 0.0, "A", "O", None)
-            for i in range(1, 10)
-        ]
-        li = spark.createDataFrame(
-            rows,
-            "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-            "l_quantity double, l_extendedprice double, l_discount double, "
-            "l_tax double, l_returnflag string, l_linestatus string, "
-            "l_shipdate timestamp",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: li)
-        r = mining_q.q_weighted_median(spark, SF).collect()[0]
-        assert r["median_cents"] == 500  # median of 1..9 = 5.00
-
 
 class TestKfold:
     def test_folds_deterministic_and_partition(self, spark, sf_dir):
@@ -455,384 +200,6 @@ class TestKfold:
             assert abs(s - 1.0) < 0.01, (lang, s)
 
 
-class TestUserStreaks:
-    def test_islands_decomposition(self, spark, monkeypatch):
-        """Days {1,2,3, 5,6, 10} -> three islands, longest 3; repeat
-        events on the same day collapse through the distinct."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        days = [1, 2, 3, 5, 6, 10, 10, 2]
-        rows = [
-            (i, f"2024-01-{d:02d} 08:00:00", 7, "view", 1.0, "{}")
-            for i, d in enumerate(days)
-        ]
-        ev = spark.createDataFrame(
-            rows,
-            "event_id long, ts string, user_id long, event_type string, "
-            "value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: ev)
-        r = mining_q.q_user_streaks(spark, SF).collect()
-        assert len(r) == 1
-        assert r[0]["user_id"] == 7
-        assert r[0]["active_days"] == 6
-        assert r[0]["n_streaks"] == 3
-        assert r[0]["max_streak"] == 3
-
-    def test_fixture_invariants(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = mining_q.q_user_streaks(spark, sf_dir).collect()
-        assert len(rows) > 0
-        for r in rows:
-            assert 1 <= r["max_streak"] <= r["active_days"]
-            assert r["n_streaks"] >= 1
-            # streak lengths partition the active days
-            assert r["active_days"] >= r["max_streak"] + r["n_streaks"] - 1
-
-
-class TestParetoFrontier:
-    def test_small_skyline(self, spark, monkeypatch):
-        """(day,price): (1,$1) dominated by (2,$2); (3,$1.5) kept
-        (nothing later beats it); equal-price tie on day 3 kept."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [
-            (1, 1, "O", 1.00, "2024-01-01", "x"),
-            (2, 1, "O", 2.00, "2024-01-02", "x"),
-            (3, 1, "O", 1.50, "2024-01-03", "x"),
-            (4, 1, "O", 1.50, "2024-01-03", "x"),
-        ]
-        o = spark.createDataFrame(
-            rows,
-            "o_orderkey long, o_custkey long, o_orderstatus string, "
-            "o_totalprice double, o_orderdate string, o_orderpriority string",
-        ).withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp"))
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        keys = {
-            r["o_orderkey"]
-            for r in mining_q.q_pareto_frontier(spark, SF).collect()
-        }
-        assert keys == {2, 3, 4}
-
-    def test_fixture_frontier_is_antichain(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        out = sorted(
-            mining_q.q_pareto_frontier(spark, sf_dir).collect(),
-            key=lambda r: r["day"],
-        )
-        assert out
-        # price along the frontier is non-increasing as recency grows
-        for a, b in zip(out, out[1:]):
-            assert a["cents"] >= b["cents"]
-
-
-class TestTheilSen:
-    def test_exact_linear_series_recovered(self, spark, monkeypatch):
-        """rev = 5000 + 300*day in cents exactly -> every pairwise
-        slope is 300, so slope_med == 300 and intercept_med == 5000
-        regardless of pairing."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = []
-        okey = 0
-        for day in range(40):
-            # one order per day priced so cents == 5000 + 300*day
-            rows.append((okey, f"1970-01-{day + 1:02d}" if day < 31
-                         else f"1970-02-{day - 30:02d}",
-                         (5000 + 300 * day) / 100.0))
-            okey += 1
-        o = spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate string, o_totalprice double"
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        r = mining_q.q_theil_sen_trend(spark, SF).collect()[0]
-        assert r["n_days"] == 40
-        assert r["n_pairs"] == 40 * 39 // 2
-        assert r["slope_cents_per_day"] == pytest.approx(300.0)
-        assert r["intercept_cents"] == pytest.approx(5000.0)
-
-    def test_outlier_robustness(self, spark, monkeypatch):
-        """One massive outlier day must not move the median slope
-        (the property OLS lacks)."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [(d, f"1970-01-{d + 1:02d}", (1000 + 100 * d) / 100.0)
-                for d in range(20)]
-        rows[10] = (10, "1970-01-11", 9_999_999.0)  # outlier
-        o = spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate string, o_totalprice double"
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        r = mining_q.q_theil_sen_trend(spark, SF).collect()[0]
-        assert r["slope_cents_per_day"] == pytest.approx(100.0)
-
-
-class TestMannKendall:
-    def test_strictly_increasing(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [(d, f"1970-01-{d + 1:02d}", (1000 + 50 * d) / 100.0)
-                for d in range(25)]
-        o = spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate string, o_totalprice double"
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        r = mining_q.q_mann_kendall(spark, SF).collect()[0]
-        n = 25
-        assert r["s_stat"] == n * (n - 1) // 2  # every pair concordant
-        assert r["var_s"] == pytest.approx(
-            n * (n - 1) * (2 * n + 5) / 18.0, abs=0.01
-        )
-        assert r["trend"] == "increasing"
-        assert r["z"] > 1.96
-
-    def test_all_tied_series_no_trend(self, spark, monkeypatch):
-        """Constant revenue: S=0, full tie correction collapses var to
-        0 -> z 0.0 via the nullif guard, verdict no-trend (no abort)."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [(d, f"1970-01-{d + 1:02d}", 10.0) for d in range(12)]
-        o = spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate string, o_totalprice double"
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        r = mining_q.q_mann_kendall(spark, SF).collect()[0]
-        assert r["s_stat"] == 0
-        assert r["var_s"] == pytest.approx(0.0)
-        assert r["z"] == pytest.approx(0.0)
-        assert r["trend"] == "no-trend"
-
-    def test_single_day_degenerate(self, spark, monkeypatch):
-        """One day -> zero pairs -> s_stat NULL, z falls to the 0.0
-        ELSE branch (matching the SQL CASE), verdict no-trend."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        o = spark.createDataFrame(
-            [(0, "1970-01-01", 10.0)],
-            "o_orderkey long, o_orderdate string, o_totalprice double",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        r = mining_q.q_mann_kendall(spark, SF).collect()[0]
-        assert r["n_days"] == 1
-        assert r["s_stat"] is None
-        assert r["z"] == pytest.approx(0.0)
-        assert r["trend"] == "no-trend"
-
-
-class TestCusumChangepoint:
-    def test_planted_step_located(self, spark, monkeypatch):
-        """Mean shift at day 15 of 30: |cusum| peaks exactly at the
-        last pre-shift day (day 14)."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = []
-        for d in range(30):
-            price = 10.0 if d < 15 else 90.0
-            rows.append((d, f"1970-01-{d + 1:02d}" if d < 31 else "",
-                         price))
-        o = spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate string, o_totalprice double"
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        r = mining_q.q_cusum_changepoint(spark, SF).collect()[0]
-        assert r["n_days"] == 30
-        assert r["cp_day_num"] == 14
-        assert r["cp_day"] == "1970-01-15"
-        # C_14 = sum_{i<=14}(x_i - mean); mean = 50.0 -> 15*(-40) cents
-        assert r["cusum_cents"] == pytest.approx(15 * -4000.0)
-
-
-class TestStlDecompose:
-    def test_pure_weekly_pattern_recovered(self, spark, monkeypatch):
-        """rev depends only on dow -> the centered MA7 is flat, the
-        seasonal indices recover the pattern (re-centered), and the
-        residual RMS is ~0 on every dow."""
-        from resume_jd_matcher_spark.queries import mining_q
-        import datetime
-
-        base = datetime.date(1970, 1, 1)
-        rows = []
-        for d in range(35):
-            day = base + datetime.timedelta(days=d)
-            dow = d % 7  # 1970-01-01 is day 0
-            rows.append((d, day.isoformat(), (1000 + 700 * dow) / 100.0))
-        o = spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate string, o_totalprice double"
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        out = {r["dow"]: r for r in mining_q.q_stl_decompose(spark, SF).collect()}
-        assert set(out) == set(range(7))
-        # pattern is 700*dow cents around its own mean 700*3
-        for dow in range(7):
-            assert out[dow]["seasonal_cents"] == pytest.approx(
-                700.0 * (dow - 3), abs=0.02
-            )
-            assert out[dow]["resid_rms"] == pytest.approx(0.0, abs=0.02)
-        # seasonal indices of an additive decomposition sum to ~0
-        assert sum(r["seasonal_cents"] for r in out.values()) == pytest.approx(
-            0.0, abs=0.1
-        )
-
-
-class TestGlobalMedianExact:
-    def test_matches_python_median_edges(self, spark):
-        """Exact (interpolated) median on odd/even counts, tiny
-        inputs, and a 30%-tie mass at one value — the cases where the
-        sketch bracket or the small-input collapse could slip."""
-        import random
-        import statistics
-
-        from resume_jd_matcher_spark.operators.percentiles import (
-            global_median_exact,
-        )
-
-        random.seed(7)
-        cases = [
-            [3.0],
-            [1.0, 2.0],
-            [5.0, 1.0, 9.0],
-            [random.uniform(-100, 100) for _ in range(101)],
-            [0.0] * 600 + [random.uniform(0, 1) for _ in range(1401)],
-        ]
-        for vals in cases:
-            df = spark.createDataFrame([(v,) for v in vals], "_x double")
-            r = global_median_exact(df, "_x").collect()[0]
-            assert r["n"] == len(vals)
-            assert r["med"] == pytest.approx(
-                statistics.median(vals), abs=1e-12
-            ), f"n={len(vals)}"
-
-    def test_nulls_skipped(self, spark):
-        from resume_jd_matcher_spark.operators.percentiles import (
-            global_median_exact,
-        )
-
-        df = spark.createDataFrame(
-            [(1.0,), (None,), (3.0,), (None,), (2.0,)], "_x double"
-        )
-        r = global_median_exact(df, "_x").collect()[0]
-        assert r["n"] == 3
-        assert r["med"] == pytest.approx(2.0)
-
-    def test_bracket_path_exact_beyond_small_n(self, spark):
-        """Above the 100k small-input cutoff the bracket slice path
-        runs; it must still be exact (even count -> interpolated)."""
-        import statistics
-
-        from resume_jd_matcher_spark.operators.percentiles import (
-            global_median_exact,
-        )
-
-        n = 120_000
-        vals = [((i * 2654435761) % 1_000_003) / 7.0 for i in range(n)]
-        df = spark.createDataFrame([(v,) for v in vals], "_x double")
-        r = global_median_exact(df, "_x").collect()[0]
-        assert r["n"] == n
-        assert r["med"] == pytest.approx(statistics.median(vals), abs=1e-9)
-
-    def test_bracket_path_mass_tie_at_median(self, spark):
-        """30% of rows tied ON the median value, above the small-n
-        cutoff: the whole tie lands inside the [48%, 52%] bracket
-        slice. The r10 value-grain rewrite must stay exact here (the
-        tie collapses to one prefix row; both middle ranks fall
-        inside its covering interval)."""
-        import statistics
-
-        from resume_jd_matcher_spark.operators.percentiles import (
-            global_median_exact,
-        )
-
-        n = 120_000
-        vals = []
-        for i in range(n):
-            h = (i * 2654435761) % 1_000_003
-            vals.append(500_000.0 if h % 10 < 3 else float(h))
-        df = spark.createDataFrame([(v,) for v in vals], "_x double")
-        r = global_median_exact(df, "_x").collect()[0]
-        assert r["n"] == n
-        assert r["med"] == pytest.approx(statistics.median(vals), abs=1e-9)
-
-
-class TestHurstExponent:
-    def _orders(self, spark, prices):
-        import datetime
-
-        base = datetime.date(1970, 1, 1)
-        rows = [
-            (i, (base + datetime.timedelta(days=i)).isoformat(), p)
-            for i, p in enumerate(prices)
-        ]
-        return spark.createDataFrame(
-            rows, "o_orderkey long, o_orderdate string, o_totalprice double"
-        )
-
-    def test_iid_noise_near_half(self, spark, monkeypatch):
-        """Deterministic hash-noise daily series: block-mean variance
-        decays ~1/m -> H near 0.5."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        import random
-
-        rng = random.Random(42)
-        prices = [100.0 + rng.uniform(0, 100) for _ in range(512)]
-        monkeypatch.setattr(
-            mining_q, "load_table", lambda *a: self._orders(spark, prices)
-        )
-        r = mining_q.q_hurst_exponent(spark, SF).collect()[0]
-        assert r["n_scales"] == 5
-        assert 0.35 < r["hurst"] < 0.65
-        assert r["r2"] > 0.9
-
-    def test_strong_trend_near_one(self, spark, monkeypatch):
-        """A pure ramp keeps block-mean variance ~constant across m
-        -> slope ~0 -> H ~ 1 (long-range structure)."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        prices = [10.0 + 0.5 * i for i in range(512)]
-        monkeypatch.setattr(
-            mining_q, "load_table", lambda *a: self._orders(spark, prices)
-        )
-        r = mining_q.q_hurst_exponent(spark, SF).collect()[0]
-        assert r["hurst"] > 0.9
-
-    def test_constant_series_no_crash(self, spark, monkeypatch):
-        """Constant revenue -> every block-mean variance is 0 ->
-        all scales filtered, NULL fit, no ln(0) abort."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        prices = [42.0] * 64
-        monkeypatch.setattr(
-            mining_q, "load_table", lambda *a: self._orders(spark, prices)
-        )
-        r = mining_q.q_hurst_exponent(spark, SF).collect()[0]
-        assert r["n_scales"] == 0
-        assert r["hurst"] is None
-
-
-class TestGroupPercentilesAllNullGroup:
-    def test_all_null_group_emits_null_row(self, spark):
-        """quantile_cont emits a group whose values are all NULL with
-        a NULL percentile; the operator must not silently drop it
-        (row-count mismatch for any oracled caller)."""
-        from resume_jd_matcher_spark.operators.percentiles import (
-            group_percentiles_exact,
-        )
-
-        rows = [("a", 10.0), ("a", 20.0), ("b", None), ("b", None)]
-        df = spark.createDataFrame(rows, "grp string, v double")
-        out = {
-            r["grp"]: r["p50"]
-            for r in group_percentiles_exact(
-                df, "grp", "v", [("p50", 0.5)]
-            ).collect()
-        }
-        assert set(out) == {"a", "b"}
-        assert out["a"] == pytest.approx(15.0)
-        assert out["b"] is None
-
-
 class TestGlobalPrefixRankOnly:
     def test_sum_col_none_ranks_match(self, spark):
         from resume_jd_matcher_spark.operators.prefix import global_prefix
@@ -845,149 +212,3 @@ class TestGlobalPrefixRankOnly:
         seq = sorted(rows, key=lambda r: (r[1], r[0]))
         for rnk, (i, _k) in enumerate(seq, start=1):
             assert got[i] == rnk
-
-
-class TestCramersV:
-    def test_perfect_association_is_one(self, spark, monkeypatch):
-        """Bijective nation<->segment mapping -> V == 1.0 exactly."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [(i, f"c{i}", i % 4, 100.0, f"SEG{i % 4}") for i in range(400)]
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: cust)
-        r = mining_q.q_cramers_v(spark, SF).collect()[0]
-        assert r["n_rows_dim"] == 4 and r["n_cols_dim"] == 4
-        assert r["cramers_v"] == pytest.approx(1.0)
-        # V = sqrt(chi2 / (n*(k-1))) consistency
-        assert r["chi2"] == pytest.approx(400 * 3, abs=0.01)
-
-    def test_independent_mix_near_zero(self, spark, monkeypatch):
-        """Every nation has the identical segment mix -> chi2 0, V 0."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [
-            (i, f"c{i}", i % 5, 100.0, f"SEG{(i // 5) % 4}")
-            for i in range(400)
-        ]
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: cust)
-        r = mining_q.q_cramers_v(spark, SF).collect()[0]
-        assert r["chi2"] == pytest.approx(0.0, abs=1e-6)
-        assert r["cramers_v"] == pytest.approx(0.0, abs=1e-6)
-
-    def test_single_level_degenerate_null(self, spark, monkeypatch):
-        """One segment only -> min(r,c)-1 = 0 -> V NULL via nullif,
-        no divide-by-zero abort."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        rows = [(i, f"c{i}", i % 3, 100.0, "ONLY") for i in range(30)]
-        cust = spark.createDataFrame(
-            rows,
-            "c_custkey long, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string",
-        )
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: cust)
-        r = mining_q.q_cramers_v(spark, SF).collect()[0]
-        assert r["cramers_v"] is None
-
-
-class TestGlobalValueAtRank:
-    def _val(self, spark, values, rank_expr):
-        from resume_jd_matcher_spark.operators.percentiles import (
-            global_value_at_rank,
-        )
-
-        df = spark.createDataFrame([(float(v),) for v in values], "_x double")
-        [r] = global_value_at_rank(df, "_x", rank_expr).collect()
-        return r["val"], r["n"]
-
-    def test_exact_order_statistics(self, spark):
-        vals = [5, 1, 9, 3, 7, 2, 8, 4, 6, 10]
-        for k in (1, 3, 5, 10):
-            v, n = self._val(spark, vals, str(k))
-            assert n == 10 and v == float(sorted(vals)[k - 1])
-
-    def test_data_dependent_rank(self, spark):
-        # conformal's ceil(0.9*(n+1)) on n=9 -> k=9 -> 9th smallest
-        v, n = self._val(spark, range(1, 10), "(9 * (_n + 1) + 9) div 10")
-        assert n == 9 and v == 9.0
-
-    def test_tie_mass_at_target(self, spark):
-        vals = [1.0] * 5 + [2.0] * 5
-        v, _ = self._val(spark, vals, "5")
-        assert v == 1.0
-        v, _ = self._val(spark, vals, "6")
-        assert v == 2.0
-
-    def test_rank_clamped_to_n(self, spark):
-        """conformal's ceil(0.9*(n+1)) exceeds n whenever n < 9; the
-        clamp must select the max order statistic and still report
-        the true n (r11 ADVICE: unclamped -> (NULL, 0))."""
-        v, n = self._val(spark, [4.0, 2.0, 7.0], "(9 * (_n + 1) + 9) div 10")
-        assert n == 3 and v == 7.0
-        # below-range rank clamps to 1 -> min order statistic
-        v, n = self._val(spark, [4.0, 2.0, 7.0], "0")
-        assert n == 3 and v == 2.0
-
-    def test_non_finite_skipped(self, spark):
-        """NaN width_buckets to a NULL bucket (shifts every rank) and
-        an infinite min/max voids the histogram; both are filtered
-        like NULLs (r11 ADVICE)."""
-        vals = [1.0, float("nan"), 3.0, float("inf"), 2.0, float("-inf")]
-        v, n = self._val(spark, vals, "2")
-        assert n == 3 and v == 2.0
-
-    def test_median_non_finite_skipped(self, spark):
-        from resume_jd_matcher_spark.operators.percentiles import (
-            global_median_exact,
-        )
-
-        df = spark.createDataFrame(
-            [(v,) for v in [1.0, float("nan"), 3.0, float("inf"), 2.0]],
-            "_x double",
-        )
-        r = global_median_exact(df, "_x").collect()[0]
-        assert r["n"] == 3
-        assert r["med"] == pytest.approx(2.0)
-
-    def test_property_matches_sorted_selection(self, spark):
-        """Hypothesis: for arbitrary finite multisets (ties, negatives,
-        duplicates, single element) and arbitrary rank expressions
-        (including out-of-range ones), the bucket-histogram selection
-        equals clamped sorted()[k-1]."""
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        from resume_jd_matcher_spark.operators.percentiles import (
-            global_value_at_rank,
-        )
-
-        @settings(max_examples=12, deadline=None)
-        @given(
-            vals=st.lists(
-                st.integers(min_value=-10**6, max_value=10**6).map(
-                    lambda c: c / 100.0  # integer-cents domain
-                ),
-                min_size=1,
-                max_size=60,
-            ),
-            k=st.integers(min_value=-3, max_value=70),
-        )
-        def check(vals, k):
-            df = spark.createDataFrame(
-                [(float(v),) for v in vals], "_x double"
-            )
-            [r] = global_value_at_rank(df, "_x", str(k)).collect()
-            kk = max(1, min(k, len(vals)))
-            assert r["n"] == len(vals)
-            assert r["val"] == sorted(vals)[kk - 1]
-
-        check()

@@ -242,57 +242,6 @@ class TestEventPaths:
 
 
 class TestBatch3:
-    def test_anomaly_mad_flags_planted_spike(self, spark, monkeypatch):
-        from resume_jd_matcher_spark.queries import mining_q
-
-        d0 = dt.datetime(2024, 1, 1)
-        revs = [100.0 + (i % 5) for i in range(40)]
-        revs[20] = 5000.0  # planted spike
-        rows = [
-            (i, 1, "O", v, d0 + dt.timedelta(days=i), "P")
-            for i, v in enumerate(revs)
-        ]
-        o = spark.createDataFrame(rows, _ORD_SCHEMA)
-        monkeypatch.setattr(mining_q, "load_table", lambda *a: o)
-        r = mining_q.q_anomaly_mad_daily(spark, SF).collect()[0]
-        assert r["n_days"] == 40
-        assert r["n_anomalies"] == 1
-        assert r["top_day"] == "2024-01-21"
-        assert r["top_robust_z"] > 3.5
-
-    def test_elasticity_recovers_planted_slope(self, spark, monkeypatch):
-        """qty = price^-2 exactly -> elasticity = -2, r2 = 1."""
-        from resume_jd_matcher_spark.queries import mining_q
-
-        part = spark.createDataFrame(
-            [(k, f"p{k}", "Brand#1", "T", 1, 1.0) for k in range(1, 21)],
-            "p_partkey long, p_name string, p_brand string, p_type string, "
-            "p_size int, p_retailprice double",
-        )
-        li_rows = []
-        for k in range(1, 21):
-            price = float(k)          # unit price
-            qty = price ** -2 * 1e4   # ln q = ln(1e4) - 2 ln p
-            li_rows.append(
-                (k, k, 1, 1, qty, qty * price, 0.0, 0.0, "N", "O",
-                 dt.datetime(2024, 1, 1))
-            )
-        li = spark.createDataFrame(
-            li_rows,
-            "l_orderkey long, l_partkey long, l_suppkey long, "
-            "l_linenumber long, l_quantity double, l_extendedprice double, "
-            "l_discount double, l_tax double, l_returnflag string, "
-            "l_linestatus string, l_shipdate timestamp",
-        )
-        monkeypatch.setattr(
-            mining_q,
-            "load_table",
-            lambda spark_, sf, name: li if name == "lineitem" else part,
-        )
-        r = mining_q.q_elasticity_by_brand(spark, SF).collect()[0]
-        assert r["elasticity"] == pytest.approx(-2.0, abs=1e-3)
-        assert r["r2"] == pytest.approx(1.0, abs=1e-3)
-
     def test_cross_source_leakage_detects_verbatim_copy(
         self, spark, monkeypatch
     ):

@@ -87,6 +87,17 @@ def test_mean_score_rounding(spark):
     assert out == {1: 7.5, 2: 1.0}
 
 
+def test_mean_score_rounds_half_even_like_python(spark):
+    """Eight section lines, seven 7s and one 8: the mean 7.125 is an
+    exact binary tie, and the reference's round(57 / 8, 2) gives 7.12."""
+    names = ["Summary", "Experience", "Skills", "Projects", "Education",
+             "Certifications", "Strengths"]
+    resp = "SCORES:\n" + "".join(f"{n}: 7\n" for n in names) + "Overall: 8"
+    df = spark.createDataFrame([(1, resp)], ["doc_id", "response"])
+    out = mean_score(parse_scores(df)).collect()
+    assert [r.final_score for r in out] == [round(57 / 8, 2)] == [7.12]
+
+
 def test_canonical_section(spark):
     df = spark.createDataFrame(
         [("Work History",), ("TECHNOLOGIES",), ("about me",), ("hobbies",)], ["raw"]

@@ -183,21 +183,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # bounded bucketx20 theta join building the pooled 20-row
         # inverse-CDF map + a single-row total crossed in:
         "quantile_normalize",
-        # -- round 7 --
-        # single-row broadcast n_orders total crossed into the
-        # |brands|^2-bounded pair table:
-        "market_basket",
-        # single-row broadcast quartile-boundary row crossed into the
-        # customer grain (replaces the ntile window):
-        "rfm_segments",
-        # global_prefix's single-row (min,max) bucket-stats broadcast
-        # + the single-row revenue total crossed into the ranked grain:
-        "abc_pareto",
-        # same global_prefix single-row stats broadcast:
-        "gini_concentration",
-        # single-row broadcast grand total crossed into the
-        # |nations|x|segments|-bounded cell table:
-        "chi2_independence",
         # -- round 8 --
         # 3-row broadcast query side crossed into the corpus for the
         # exact ground-truth ranking (the standard similarity shape):
@@ -211,28 +196,12 @@ def test_registry_wide_no_cartesian_products(spark):
         # single-row broadcast global (min,max) bounds crossed into
         # the event grain for zone assignment:
         "zone_map_pruning",
-        # calendar-bounded broadcast day-grain self-pairing (days^2
-        # pairs independent of fact rows) + the percentile operator's
-        # single-row broadcasts:
-        "theil_sen_trend",
-        # same calendar-bounded day-grain self-pairing + 1-row
-        # S/n/tie-census summaries crossed together:
-        "mann_kendall",
-        # single-row totals broadcast crossed into the bounded day
-        # grain before the calendar-sized cusum window:
-        "cusum_changepoint",
-        # 1-row calendar bounds + 1-row/7-row seasonal summaries
-        # crossed back onto the bounded day grain:
-        "stl_decompose",
         # two 1-row summaries (OLS fit, corpus mass) crossed with the
         # 1-row top-k mass agg:
         "zipf_fit",
         # single-row broadcast grand-total crossed into the
         # df-filtered (source, token) grain:
         "llr_keyness",
-        # chi2_independence's dims cross join (two bounded distinct
-        # dimension lists) + the single-row total broadcast:
-        "cramers_v",
         # single-row total broadcast crossed into the
         # |sources|-bounded share table:
         "effective_sources",
@@ -266,9 +235,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row path total broadcast crossed into the
         # |types|^3-bounded path grain:
         "event_paths_top",
-        # 1-row median/MAD/limits + 1-row top-day broadcast crossed
-        # over the calendar-bounded day grain:
-        "anomaly_mad_daily",
         # -- round 10 --
         # 1-row span-derived train/bench cutoff broadcast crossed
         # into the gram stream (replaces the fixed id window that
@@ -352,7 +318,7 @@ def test_registry_wide_no_cartesian_products(spark):
         "burstiness_fano",
         # -- round 12 --
         # global_prefix's 1-row (min, max) bucket-stats broadcast
-        # crossed into the token-count projection (the abc_pareto /
+        # crossed into the token-count projection (the
         # mann_whitney_u shape):
         "sequence_packing",
     }

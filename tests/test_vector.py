@@ -209,6 +209,27 @@ def test_blas_probe_ceiling_raises(spark):
         sb.MAX_PROBE_DRIVER_ROWS = old
 
 
+def test_blas_empty_probe_gives_no_rows(emb):
+    """A 0-row probe side is an empty result for both BLAS operators,
+    as it is for the expression path."""
+    from resume_jd_matcher_spark.operators.similarity_blas import (
+        similarity_join_blas,
+    )
+
+    probe = _queries(emb, n=0)
+    assert similarity.topk_similarity(emb, probe, k=5).collect() == []
+    assert topk_similarity_blas(emb, probe, k=5).collect() == []
+    left = probe.select(
+        F.col("query_id").alias("left_id"),
+        F.col("query_embedding").alias("left_embedding"),
+    )
+    right = emb.select(
+        F.col("vec_id").alias("right_id"),
+        F.col("embedding").alias("right_embedding"),
+    )
+    assert similarity_join_blas(left, right, threshold=1.0).collect() == []
+
+
 def test_kmeans_ivf_recall_floor(spark):
     """Learned-quantizer IVF vs brute force: the KMeans routing must
     clear the same recall floor as the label-routed path."""

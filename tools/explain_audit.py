@@ -180,11 +180,6 @@ HEADLINERS = {
     "inverse-CDF a 20-row broadcast map; docs join by (source, "
     "bucket) equi-join — no global sort, no percent_rank over rows",
     # -- round 7 --
-    "market_basket": "ONE groupBy(order) collect_set basket build "
-    "(doubles as the (order, brand) distinct); pairs generated "
-    "expression-side from the sorted arrays (per-order fanout "
-    "bounded by line count, never corpus x corpus, no self-join "
-    "shuffle); part dim + brand counts + order total all broadcast",
     "ngram_jaccard": "capped route: per-shingle doc baskets from ONE "
     "groupBy (the df cap is the basket-size filter), pairs generated "
     "expression-side from sorted <=max_df arrays — no posting "
@@ -192,33 +187,10 @@ HEADLINERS = {
     "sequence_packing": "one token-count projection, ONE bucketed "
     "prefix shuffle (exact BIGINT accumulation), 1-row summary agg; "
     "the per-bin grain never materializes",
-    "abc_pareto": "global rank/cumshare via the two-phase prefix scan "
-    "(operators/prefix.py): monotone width_bucket assignment + window "
-    "PARTITIONED BY _bkt; the ONLY unpartitioned window covers "
-    "n_buckets summary rows, never the part dimension; integer-cents "
-    "running sums",
-    "gini_concentration": "ascending spend rank from the same "
-    "distributed prefix scan; final Gini a 1-row agg of exact "
-    "integer products",
-    "rfm_segments": "customer grain ONE hash agg; quartile boundaries "
-    "a 1-row percentile agg broadcast back — no ntile window over "
-    "customers",
-    "chi2_independence": "one fact-sized hash agg; dims completion + "
-    "marginals all |nations| x |segments|-bounded broadcasts",
-    "level_shift": "events collapse to (type, day) integer-sum grain "
-    "BEFORE any window; both trailing frames run over calendar-"
-    "bounded rows",
-    "time_weighted_avg": "ONE partitioned lead() window; weighted sum "
-    "is exact integer (decimal-accumulated) arithmetic",
-    "sax_symbolize": "day-grain agg -> segment agg -> 8-element "
-    "arrays; mean/variance fold in explicit textual order (engine-"
-    "portable float determinism)",
     "readability_ari": "pure per-row projection, whole-stage codegen, "
     "no shuffle",
     "boilerplate_ngrams": "df >= 2 pre-filter bounds the vocabulary "
     "BEFORE the per-source top-k window (term_frequency lesson)",
-    "fd_check": "per-FD two-phase countDistinct hash aggs reduced to "
-    "1-row summaries; union of n_candidates rows",
     "keyword_tag_broadcast": "forced large-dictionary route: exploded "
     "candidates equi-join the BROADCAST dictionary; corpus never "
     "re-scanned per term",
@@ -241,31 +213,12 @@ HEADLINERS = {
     "zone_map_pruning": "1-row bounds agg broadcast, two fact "
     "projections unioned into a 128-cell (layout,file) agg, O(1) "
     "finalize — no window",
-    "user_streaks": "distinct (user,day), then window + both aggs "
-    "all partitioned by user_id — one exchange reused end-to-end",
     "compaction_plan": "bucketed prefix-scan shuffle (no "
     "single-partition window) then a bin-grain agg",
-    "pareto_frontier": "day-grain max, suffix running max on the "
-    "bounded day summary, broadcast join back — no dominance "
-    "self-join, no fact-sized sort",
-    "theil_sen_trend": "day-grain collapse first; calendar-bounded "
-    "broadcast self-pairing; slope median via sketch-guided exact "
-    "selection — only the ~4% bracket slice is ever sorted",
-    "mann_kendall": "same calendar-bounded pair base; S and the tie "
-    "census are integer hash aggs, 1-row finalize",
-    "cusum_changepoint": "day-grain collapse, 1-row totals broadcast, "
-    "cusum window over the bounded calendar summary only",
-    "stl_decompose": "calendar-filled day grain; MA7/rank windows over "
-    "the bounded calendar; seasonal joins are 7-row broadcasts",
     "zipf_fit": "token hash agg, global top-k via TakeOrdered (never "
     "a vocab-sized window), 1-row fit/coverage finalize",
     "llr_keyness": "token df-filter BEFORE the per-source window; "
     "source/grand totals broadcast; window over the pruned grain",
-    "hurst_exponent": "day-grain collapse, one calendar-bounded "
-    "(day x blocks) hash agg, |blocks|-row variance table, 1-row OLS "
-    "— no window",
-    "cramers_v": "the chi2_independence plan (dimension-bounded "
-    "cells, broadcast marginals) plus a 1-row scalar finalize",
     "effective_sources": "ONE source-grain hash agg over the corpus, "
     "scalar entropy arithmetic on |sources| rows",
     # -- round 9: curation / governance family --
@@ -320,11 +273,6 @@ HEADLINERS = {
     "5-row rank window — touches no data",
     "event_paths_top": "ONE per-user window produces both leads; "
     "path grain |types|^3-bounded; rank/top-k on that bounded frame",
-    "anomaly_mad_daily": "day-grain collapse; median/MAD percentiles "
-    "over the calendar-bounded grain; 1-row limits broadcast; 1-row "
-    "out",
-    "elasticity_by_brand": "broadcast dim join + ONE map-side-"
-    "combined regression-moment hash agg per brand; no window",
     "cross_source_leakage": "the dedup family's banded equi-join "
     "candidates + doc-keyed source joins; |sources|^2-bounded matrix "
     "agg",

@@ -1,5 +1,5 @@
-"""Measure the RELATIONAL/MINING scale curve (r7 verdict task #5):
-run the registered TPC-H-shaped mining queries on a synthetic 1x and
+"""Measure the RELATIONAL scale curve (r7 verdict task #5):
+run the registered TPC-H-shaped queries on a synthetic 1x and
 10x corpus (deterministic spark.range + xxhash64 columns, partition-
 parallel, no driver loops) and report wall-clock ratios, plus a
 dedicated `global_prefix` stress under a power-law-SKEWED leading key
@@ -220,24 +220,8 @@ def skew_spend(spark, n: int):
 
 
 REGISTERED = [
-    "abc_pareto",
-    "gini_concentration",
-    "market_basket",
-    "weighted_median",
-    "rfm_segments",
-    # round-8 batch 2: the user-grain streak window (the synth writes
-    # an events table at n_orders rows) and the zone-map layout
-    # advisor.
-    "user_streaks",
+    # round-8 batch 2: the zone-map layout advisor.
     "zone_map_pruning",
-    # round-8 batch 5: the calendar-bounded trend/changepoint family.
-    # theil_sen/mann_kendall build a days^2 pair space INDEPENDENT of
-    # fact rows, so their 10x ratio isolates the day-grain collapse
-    # cost; cusum/stl window only the bounded calendar.
-    "theil_sen_trend",
-    "mann_kendall",
-    "cusum_changepoint",
-    "stl_decompose",
     # round-9 curation/governance members with relational inputs:
     # day-grain SPC/complexity/rank-corr kernels, the prefix-scan
     # layout advisor (the one fact-ranking member), the event-grain
@@ -258,10 +242,6 @@ REGISTERED = [
     "degree_assortativity",
     "theta_sketch_setops",
     "event_paths_top",
-    # round-9 batch 3 (relational members; cross_source_leakage is a
-    # documents kernel measured via the text curve's minhash kernel)
-    "anomaly_mad_daily",
-    "elasticity_by_brand",
     # round-10 inference family (all relational inputs; the one
     # documents member, local_clustering, shares graph_triangles'
     # minhash-edge kernel already covered by the text curve):
@@ -386,41 +366,6 @@ def main() -> None:
             print(f"{name}: {t1:.2f}s -> {t10:.2f}s  "
                   f"ratio {ratio:.1f}  {flag}")
 
-    # --- mass-tie stress for the exact-median path (r9 verdict task
-    # #7): 30% of rows on one value, median inside the tie. The r10
-    # value-grain rewrite collapses the tie to ONE prefix row (no
-    # intra-tie window), so this row pins that the masstie floor no
-    # longer applies to global_median_exact. A tie AT the median is
-    # the adversarial placement: the whole tied mass lands inside the
-    # [48%, 52%] bracket slice.
-    from resume_jd_matcher_spark.operators.percentiles import (
-        global_median_exact,
-    )
-
-    def masstie_median_grain(n: int):
-        from pyspark.sql import functions as F
-
-        tied = F.pmod(F.xxhash64(F.col("id"), F.lit(29)), F.lit(10)) < 3
-        u = F.pmod(F.xxhash64(F.col("id"), F.lit(30)), F.lit(1_000_000))
-        # untied values uniform in [0, 1e6); the tie sits at the
-        # distribution's midpoint so the median falls ON it.
-        return spark.range(0, n, 1, 32).select(
-            F.when(tied, F.lit(500_000.0))
-            .otherwise(u.cast("double"))
-            .alias("v")
-        )
-
-    spark.sparkContext._jvm.System.gc()
-    m1 = masstie_median_grain(SKEW_N).localCheckpoint()
-    m10 = masstie_median_grain(SKEW_N * MULT).localCheckpoint()
-    t1 = min(run(lambda: global_median_exact(m1, "v")) for _ in range(2))
-    t10 = min(run(lambda: global_median_exact(m10, "v")) for _ in range(2))
-    ratio = t10 / t1 if t1 > 0 else float("inf")
-    flag = "**SUPER-LINEAR**" if ratio > SUPERLINEAR_AT else "ok"
-    skew_rows.append(("global_median_exact[masstie]", t1, t10, ratio, flag))
-    print(f"global_median_exact[masstie]: {t1:.2f}s -> {t10:.2f}s  "
-          f"ratio {ratio:.1f}  {flag}")
-
     lines = [
         "## Measured scale curve - relational (rounds 8-10)",
         "",
@@ -435,11 +380,7 @@ def main() -> None:
         "30% of rows: rank semantics force a tie into a single bucket",
         "under ANY monotone scheme, so that floor is the exact-rank",
         "semantics' cost, not a bounds-mode defect — equal-height still",
-        "rebalances the other 70%. The global_median_exact[masstie] row",
-        "plants the tie AT the median (the whole tied mass inside the",
-        "bracket slice): the r10 value-grain rewrite collapses it to",
-        "one prefix row, so the masstie floor does NOT apply to the",
-        "median path.",
+        "rebalances the other 70%.",
         "",
         "| operator | 1x s | 10x s | ratio | verdict |",
         "|---|---|---|---|---|",
