@@ -397,8 +397,7 @@ def ngram_jaccard_join(
     with a cap, worst-case candidate volume is bounded by
     |shingles|·max_df², and the capped route generates those pairs
     expression-side from per-shingle doc baskets (one groupBy, no
-    posting self-join shuffle — r12, same rewrite as
-    link_prediction_jaccard)."""
+    posting self-join shuffle — r12)."""
     from resume_jd_matcher_spark.functions.text import shingles
 
     # Materialize the token array in its own projection BEFORE the
@@ -417,9 +416,8 @@ def ngram_jaccard_join(
     # to the shingle arrays, just set sizes.
     ex = sh.select(F.col(id_col), F.explode("sh").alias("shingle"))
     if max_df is not None:
-        # Basket route (r12, the link_prediction_jaccard rewrite
-        # applied here): ONE groupBy(shingle) collects each shingle's
-        # doc list — the df cap is then just the basket size (no
+        # Basket route (r12): ONE groupBy(shingle) collects each
+        # shingle's doc list — the df cap is then just the basket size (no
         # separate df census, no broadcast anti-join), and candidate
         # pairs are generated EXPRESSION-side from each sorted
         # <=max_df-sized basket (C(max_df, 2) per shingle, never a

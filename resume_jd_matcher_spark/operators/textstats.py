@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from resume_jd_matcher_spark.functions.text import fingerprint_md5, tokens
+from resume_jd_matcher_spark.functions.text import tokens
 
 # Tiny per-language stopword lists for the n-gram/keyword heuristic.
 # Ordered dict — evaluation order is the deterministic tie-break.
@@ -245,13 +245,6 @@ def ngram_lm_score(
     )
 
 
-def fingerprints(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Document fingerprint (md5 over normalized text)."""
-    return df.select(F.col(id_col), fingerprint_md5(text_col).alias("fingerprint"))
-
-
 def winnow_fingerprints(
     df: DataFrame,
     k: int = 4,
@@ -267,8 +260,8 @@ def winnow_fingerprints(
 
     Guarantees: any shared token run of length ≥ k + w - 1 between two
     documents contributes at least one common fingerprint — the
-    position-robust containment/overlap detector the flat md5
-    fingerprint (``fingerprints``) cannot provide.
+    position-robust containment/overlap detector a flat md5
+    fingerprint of the whole text cannot provide.
 
     Long-form dataflow, no nested-lambda array ops: posexplode the
     tokens once, build each k-gram from ``lead()`` over the per-doc
@@ -371,116 +364,6 @@ def cms_estimate(
         pcells.join(F.broadcast(sketch), ["seed", "col"])
         .groupBy(tok_col)
         .agg(F.min("cnt").alias("est_count"))
-    )
-
-
-def kmv_sketch(
-    df: DataFrame, group_col: str, value_col: str, k: int = 64
-) -> DataFrame:
-    """K-minimum-values distinct sketch (Bar-Yossef et al. 2002), long
-    form: the k smallest distinct hash values per group. Deterministic
-    md5-hash32 family, so unlike HLL's engine-internal registers the
-    whole sketch is oracle-replayable. Mergeable: the union's sketch
-    is the k smallest of the parts' sketches pooled — re-rank and cut.
-
-    Shape: one distinct (group, hash) agg (map-side combined) + one
-    rank window per group; the sketch is ≤ k rows per group
-    regardless of cardinality."""
-    from resume_jd_matcher_spark.functions.text import hash32
-
-    w = Window.partitionBy(group_col).orderBy("hv")
-    return (
-        df.select(
-            F.col(group_col),
-            hash32(F.col(value_col).cast("string")).alias("hv"),
-        )
-        .distinct()
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
-
-
-def kmv_estimate(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:
-    """Distinct-count estimate from a KMV sketch: groups holding fewer
-    than k hashes are EXACT (the sketch saw everything); otherwise
-    est = (k-1) / u_k with u_k the k-th smallest hash normalized to
-    (0,1) over the 2^32 hash space."""
-    agg = sketch.groupBy(group_col).agg(
-        F.count("*").alias("_n"),
-        F.max(F.when(F.col("rk") == k, F.col("hv"))).alias("_kth"),
-    )
-    return agg.select(
-        F.col(group_col),
-        F.when(F.col("_n") < k, F.col("_n").cast("double"))
-        .otherwise(
-            F.round((k - 1) * 4294967296.0 / F.col("_kth"), 4)
-        )
-        .alias("est_distinct"),
-    )
-
-
-def hll_sketch(
-    df: DataFrame, group_col: str, value_col: str, p: int = 9
-) -> DataFrame:
-    """HyperLogLog register sketch (Flajolet et al. 2007) in long form:
-    (group, reg, mx) with m = 2^p registers, mx = max rank seen. The
-    register index is the LOW p bits of the portable md5-hash32; the
-    rank is the position of the leftmost 1-bit of the remaining
-    (32-p)-bit word (rank = 32-p+1 when that word is 0). Unlike
-    ``approx_count_distinct`` (engine-internal registers), every cell
-    here replays in the DuckDB oracle.
-
-    Scale shape: one map-side-combined max-agg — each partition
-    reduces to ≤ m rows per group before the shuffle, so corpus size
-    never crosses the wire. Sketches from different days/corpora merge
-    by union + re-max (the HLL merge law).
-    """
-    from resume_jd_matcher_spark.functions.text import hash32
-
-    m = 1 << p
-    wbits = 32 - p
-    hv = df.select(
-        F.col(group_col),
-        hash32(F.col(value_col).cast("string")).alias("hv"),
-    )
-    # bit-length via base-2 conv: len(conv(w,10,2)) == floor(log2 w)+1,
-    # exact integer arithmetic (no float log edge cases); DuckDB twin
-    # is length(bin(w)).
-    reg = hv.select(
-        group_col,
-        (F.col("hv") % m).alias("reg"),
-        F.expr(
-            f"CASE WHEN (hv div {m}) = 0 THEN {wbits + 1} "
-            f"ELSE {wbits} + 1 - length(conv(hv div {m}, 10, 2)) END"
-        ).alias("rank"),
-    )
-    return reg.groupBy(group_col, "reg").agg(F.max("rank").alias("mx"))
-
-
-def hll_estimate(sketch: DataFrame, group_col: str, p: int = 9) -> DataFrame:
-    """Distinct-count estimate from an HLL sketch, with the standard
-    small-range (linear-counting) correction. The harmonic sum is kept
-    EXACT by scaling: sum(2^-mx) · 2^(32-p+1) is an integer (mx ≤
-    32-p+1), so the only float ops are one final division and — in the
-    linear-counting branch — one ln, both rounded in-query. Absent
-    registers (never hit) contribute rank 0."""
-    m = 1 << p
-    rmax = 32 - p + 1
-    scale = 1 << rmax
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    agg = sketch.groupBy(group_col).agg(
-        F.count("*").alias("_present"),
-        F.sum(F.expr(f"cast(pow(2, {rmax} - mx) as bigint)")).alias("_zpart"),
-    )
-    z_scaled = (F.col("_zpart") + (m - F.col("_present")) * scale).cast("double")
-    est_raw = F.lit(alpha * m * m * scale) / z_scaled
-    v = m - F.col("_present")  # registers still at 0
-    lin = F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double"))
-    return agg.select(
-        F.col(group_col),
-        F.round(
-            F.when((est_raw <= 2.5 * m) & (v > 0), lin).otherwise(est_raw), 4
-        ).alias("est_distinct"),
     )
 
 

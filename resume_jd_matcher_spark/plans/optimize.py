@@ -27,11 +27,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     Caveat: the check reads the PRE-AQE partition count, so it is
     blind to runtime coalescing — a shuffle feeding a bare
     ``localCheckpoint`` can still land on ~3 partitions and pin that
-    (the r9 ``degree_assortativity`` 5.9x-at-10x trace). If a
+    (an r9 trace measured 5.9x the time at 10x the data). If a
     checkpoint must keep its parallelism, ``repartition(n)`` FIRST
     (REPARTITION_BY_NUM is exempt from AQE coalescing by contract) —
     though the better fix is usually restructuring so no checkpoint
-    is needed at all, which is how that query was actually closed.
+    is needed at all.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism

@@ -100,7 +100,6 @@ from resume_jd_matcher_spark.queries import analytics_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import mining_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import evalops_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import curation_q  # noqa: E402,F401
-from resume_jd_matcher_spark.queries import ops_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import inference_q  # noqa: E402,F401
 from resume_jd_matcher_spark.queries import structure_q  # noqa: E402,F401
 
@@ -130,12 +129,12 @@ from resume_jd_matcher_spark.queries import structure_q  # noqa: E402,F401
 # slots; the r13 debuts and the head of the once-confirmed queue
 # moved up to fill them. Deleting the order/event-table queries
 # (bucketed_join, pivot_unpivot, stats_moments...) emptied seven
-# more, refilled from the head of the queue below the trio.
+# more, refilled from the head of the queue below the trio. Deleting
+# the event-stream queries (sessionize, funnel_conversion,
+# stream_late_data...) emptied seven more, refilled the same way.
 _DRIVER_PRIORITY = [
     # -- r12 debuts: first driver rows --
-    "stream_session_dedup",
     "stream_ann_dedup_gate",
-    "stream_topk_trending",
     "media_magic_dispatch",
     "media_payload_entropy",
     "sequence_packing",
@@ -151,9 +150,7 @@ _DRIVER_PRIORITY = [
     "scoring_e2e",
     "section_chunk",
     "sections_map",
-    "sessionize",
     "shortlist_e2e",
-    "stream_sliding_counts",
     # -- r3 cohort: second confirmations --
     "chunk_embed_pool",
     "embedding_drift",
@@ -166,13 +163,11 @@ _DRIVER_PRIORITY = [
     "cap_per_source",
     "chunk_sliding",
     "corpus_clean_pipeline",
-    "funnel_conversion",
     "heavy_hitters",
     "lang_confusion",
     "leakage_safe_split",
     "pack_token_budget",
     # -- r13 debuts --
-    "stream_view_conversion",
     "media_ihdr_histogram",
     "media_ext_quarantine",
     "media_wav_census",
@@ -180,7 +175,6 @@ _DRIVER_PRIORITY = [
     "pii_redact",
     "rolling_fingerprint",
     "stratified_sample",
-    "stream_late_data",
     "tfidf_topterms",
     "train_test_split",
     "winnow_neardup",
@@ -188,19 +182,18 @@ _DRIVER_PRIORITY = [
     "bloom_contamination",
     "cms_heavy_hitters",
     "corpus_shuffle",
+    "curriculum_order",
+    "embedding_outliers",
+    "graph_triangles",
+    "ivf_pq_topk",
+    "length_buckets",
+    "mixture_sample",
+    "mixture_token_budget",
     # ---- window boundary (50) ----
     # -- rows-only trio (held out of the hash window by design) --
     "llm_feedback",
     "llm_explain",
     "mllib_lsh_join",
-    "curriculum_order",
-    "embedding_outliers",
-    "graph_triangles",
-    "ivf_pq_topk",
-    "kmv_distinct",
-    "length_buckets",
-    "mixture_sample",
-    "mixture_token_budget",
     "ngram_lm_score",
     "pagerank_neardup",
     "pq_topk",
@@ -216,27 +209,17 @@ _DRIVER_PRIORITY = [
     "silhouette_score",
     # -- r11 structure debuts (confirmed r12) --
     "bcubed_eval",
-    "burstiness_fano",
     "doremi_reweight",
-    "hits_scores",
     "label_propagation",
-    "shapley_attribution",
     "shard_rendezvous",
     # -- multiply-confirmed names in prior rotation order --
     "matthews_mcc",
     "theil_index",
     "hhi_concentration",
     "effective_sources",
-    "link_prediction_jaccard",
-    "degree_assortativity",
     "decontaminate",
     "zipf_fit",
     "llr_keyness",
-    "incremental_agg_merge",
-    "changelog_apply",
-    "theta_sketch_setops",
-    "lsh_param_planner",
-    "event_paths_top",
     "ngram_contamination",
     "intradoc_repetition",
     "unigram_logprob_quality",
@@ -250,10 +233,6 @@ _DRIVER_PRIORITY = [
     "rolling_beta",
     "rmst",
     "markov_attribution",
-    "stream_tumbling_counts",
-    "stream_attribution_join",
-    "stream_drift_monitor",
-    "session_window_agg",
     "cross_source_leakage",
     "gaussian_mixture_em",
     "periodogram",
@@ -287,7 +266,6 @@ _DRIVER_PRIORITY = [
     "compaction_plan",
     "ndcg_eval",
     "vocab_overlap",
-    "zone_map_pruning",
     "ensemble_neardup",
     "mllib_lsh_agreement",
     "keyword_tag",
@@ -299,7 +277,6 @@ _DRIVER_PRIORITY = [
     "inverted_index",
     "align_uniformity",
     "quantile_normalize",
-    "stream_static_enrich",
     "ann_multiprobe_topk",
     "corpus_health_scorecard",
     "mine_triplets",

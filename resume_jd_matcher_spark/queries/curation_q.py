@@ -811,12 +811,9 @@ def q_sort_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose values cluster along the layout (span -> 0) gets real
     zone-map/rowgroup pruning (est_skip ~ the fraction of blocks a
     point/range probe skips); a scattered column (span -> 1) tells
-    the table owner a re-sort or Z-order would pay — the measured
-    version of join_plan_advisor's heuristics, and the companion to
-    zone_map_pruning (which measures ONE column's pruning; this
-    ranks candidates). Cf. the sort-key advice in Redshift/Snowflake
-    docs and the zone-map literature (Moerkotte 1998, "Small
-    Materialized Aggregates").
+    the table owner a re-sort or Z-order would pay. Cf. the sort-key
+    advice in Redshift/Snowflake docs and the zone-map literature
+    (Moerkotte 1998, "Small Materialized Aggregates").
 
     Scale shape: the physical rank comes from operators/prefix.
     global_prefix (bucketed — no single-partition window over the

@@ -1,8 +1,8 @@
 """Evaluation & data-ops queries over the corpus and its embeddings
 (round 8, SURVEY.md §2.D/§2.F [EXT]): cross-source vocabulary overlap,
 curriculum ordering by cumulative token budget, graded nDCG evaluation
-of the ANN index against exact ground truth, zone-map pruning
-effectiveness of a file layout, and small-file compaction planning.
+of the ANN index against exact ground truth, and small-file compaction
+planning.
 
 Reuses `operators/prefix.global_prefix` (the distributed prefix scan,
 here with the r8 ``bounds="height"`` sampled equal-height buckets) for
@@ -336,144 +336,6 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Zone-map pruning effectiveness (data-layout advisor)
-# ---------------------------------------------------------------------------
-
-@register(
-    "zone_map_pruning",
-    """
-WITH l AS (
-  SELECT l_orderkey AS ok,
-         date_diff('day', DATE '1970-01-01', l_shipdate::DATE) AS day
-  FROM lineitem
-), g AS (
-  SELECT min(ok) AS min_ok, max(ok) AS max_ok,
-         min(day) AS min_day, max(day) AS max_day
-  FROM l
-), f AS (
-  SELECT 'natural' AS layout,
-         ((ok - g.min_ok) * 64 // (g.max_ok - g.min_ok + 1))
-           AS file_id,
-         day
-  FROM l, g
-  UNION ALL
-  SELECT 'clustered' AS layout,
-         ((day - g.min_day) * 64 // (g.max_day - g.min_day + 1))
-           AS file_id,
-         day
-  FROM l, g
-), z AS (
-  SELECT layout, file_id, min(day) AS zmin, max(day) AS zmax,
-         count(*)::BIGINT AS n_rows,
-         sum(CASE WHEN day BETWEEN
-               date_diff('day', DATE '1970-01-01', DATE '1998-06-01')
-               AND date_diff('day', DATE '1970-01-01', DATE '1998-08-31')
-             THEN 1 ELSE 0 END)::BIGINT AS n_match
-  FROM f GROUP BY layout, file_id
-)
-SELECT layout, count(*)::BIGINT AS n_files,
-       sum(CASE WHEN zmax >= date_diff('day', DATE '1970-01-01',
-                                       DATE '1998-06-01')
-                 AND zmin <= date_diff('day', DATE '1970-01-01',
-                                       DATE '1998-08-31')
-            THEN 1 ELSE 0 END)::BIGINT AS files_hit,
-       round(1.0 - sum(CASE WHEN zmax >= date_diff('day',
-                                DATE '1970-01-01', DATE '1998-06-01')
-                             AND zmin <= date_diff('day',
-                                DATE '1970-01-01', DATE '1998-08-31')
-                        THEN 1 ELSE 0 END)::DOUBLE / count(*)
-             + 1e-9, 4) AS skip_ratio,
-       sum(CASE WHEN zmax >= date_diff('day', DATE '1970-01-01',
-                                       DATE '1998-06-01')
-                 AND zmin <= date_diff('day', DATE '1970-01-01',
-                                       DATE '1998-08-31')
-            THEN n_rows ELSE 0 END)::BIGINT AS rows_scanned,
-       sum(n_match)::BIGINT AS rows_matched,
-       round(sum(CASE WHEN zmax >= date_diff('day', DATE '1970-01-01',
-                                             DATE '1998-06-01')
-                       AND zmin <= date_diff('day', DATE '1970-01-01',
-                                             DATE '1998-08-31')
-                  THEN n_rows ELSE 0 END)::DOUBLE
-             / nullif(sum(n_match), 0) + 1e-9, 2) AS read_amp
-FROM z GROUP BY layout
-""",
-)
-def q_zone_map_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRC8/A4 [EXT]: zone-map (min/max file statistics) pruning
-    effectiveness under two physical layouts — the quantitative
-    data-layout advisor every lakehouse table needs before choosing a
-    clustering key. 'natural' files are contiguous orderkey ranges
-    (insertion order, shipdate scattered -> zone maps nearly useless);
-    'clustered' files are contiguous shipdate ranges (the layout
-    OPTIMIZE/Z-ORDER would produce -> a 3-month predicate touches
-    ~1/24 of files). Reports files hit, skip ratio and the read
-    amplification rows_scanned/rows_matched for a fixed mid-range
-    shipdate predicate; file = floor((key - min) * 64 / span) keeps
-    both engines in exact integer agreement.
-
-    Scale shape: one 1-row global-bounds agg broadcast back, one
-    (layout, file)-grain agg over a 2x fact union (a single fact
-    pass per layout, map-side combined to 128 cells), then an O(1)
-    finalize — no window, no join wider than the broadcast."""
-    e = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"),
-        F.datediff(F.col("l_shipdate"), F.lit("1970-01-01")).alias("day"),
-    )
-    g = e.agg(
-        F.min("ok").alias("min_ok"), F.max("ok").alias("max_ok"),
-        F.min("day").alias("min_day"), F.max("day").alias("max_day"),
-    )
-    d_lo = F.datediff(F.lit("1998-06-01"), F.lit("1970-01-01"))
-    d_hi = F.datediff(F.lit("1998-08-31"), F.lit("1970-01-01"))
-    w = e.crossJoin(F.broadcast(g))
-    nat = w.select(
-        F.lit("natural").alias("layout"),
-        F.floor(
-            (F.col("ok") - F.col("min_ok")) * 64
-            / (F.col("max_ok") - F.col("min_ok") + 1)
-        ).cast("bigint").alias("file_id"),
-        "day",
-    )
-    clu = w.select(
-        F.lit("clustered").alias("layout"),
-        F.floor(
-            (F.col("day") - F.col("min_day")) * 64
-            / (F.col("max_day") - F.col("min_day") + 1)
-        ).cast("bigint").alias("file_id"),
-        "day",
-    )
-    z = nat.unionByName(clu).groupBy("layout", "file_id").agg(
-        F.min("day").alias("zmin"),
-        F.max("day").alias("zmax"),
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum(
-            F.when(F.col("day").between(d_lo, d_hi), 1).otherwise(0)
-        ).cast("bigint").alias("n_match"),
-    )
-    hit = (F.col("zmax") >= d_lo) & (F.col("zmin") <= d_hi)
-    return z.groupBy("layout").agg(
-        F.count("*").cast("bigint").alias("n_files"),
-        F.sum(F.when(hit, 1).otherwise(0)).cast("bigint").alias("files_hit"),
-        F.round(
-            F.lit(1.0)
-            - F.sum(F.when(hit, 1).otherwise(0)).cast("double")
-            / F.count("*")
-            + F.lit(1e-9),
-            4,
-        ).alias("skip_ratio"),
-        F.sum(F.when(hit, F.col("n_rows")).otherwise(0))
-        .cast("bigint").alias("rows_scanned"),
-        F.sum("n_match").cast("bigint").alias("rows_matched"),
-        F.round(
-            F.sum(F.when(hit, F.col("n_rows")).otherwise(0)).cast("double")
-            / F.nullif(F.sum("n_match"), F.lit(0))
-            + F.lit(1e-9),
-            2,
-        ).alias("read_amp"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Compaction planning (contiguous bin packing by cumulative size)
 # ---------------------------------------------------------------------------
 
@@ -502,7 +364,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups of ~100k chars by bucketing the EXCLUSIVE running total:
     bin = floor(cum_before / target). Contiguity preserves the
     doc_id sort order inside every output group (the property that
-    keeps downstream zone maps tight — see zone_map_pruning), which
+    keeps downstream zone maps tight), which
     is why this is a prefix-scan problem and not a bin-packing
     heuristic. The running total comes from operators/prefix.
     global_prefix with bigint accumulation — distributed, no

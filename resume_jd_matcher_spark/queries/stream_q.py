@@ -1,127 +1,21 @@
-"""Streaming batch-twins + multimodal queries (SURVEY.md §2.G, §2.H U6).
+"""Stream dedup gate + multimodal queries (SURVEY.md §2.G, §2.H U6).
 
-DuckDB can't run a stream, so each streaming query registers its BATCH
-TWIN here (same transformation logic over the same events table);
-tests/test_streaming.py asserts stream-result == batch-twin-result,
-closing the loop: oracle checks the twin, equivalence checks the
-stream.
+DuckDB can't run a stream, so the streaming ANN dedup gate registers
+its BATCH TWIN here (same transformation logic over the same
+embeddings table); tests/test_streaming.py asserts
+stream-result == batch-twin-result, closing the loop: oracle checks
+the twin, equivalence checks the stream. The media queries decode,
+fingerprint and dispatch the binary payload attached to each document.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.operators.multimodal import attach_media, decode_features
 from resume_jd_matcher_spark.queries import register
 from resume_jd_matcher_spark.sources.io import load_table
-
-
-@register(
-    "stream_tumbling_counts",
-    """
-SELECT floor(epoch(date_trunc('day', ts)))::BIGINT AS day_epoch,
-       event_type,
-       count(*)::BIGINT AS n,
-       round(sum(value), 2) AS total_value
-FROM events
-GROUP BY 1, 2
-""",
-)
-def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G batch twin: tumbling 1-day event-time windows per
-    event_type (streaming version: streaming/events.py
-    tumbling_counts, equivalence-tested)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("day_epoch"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-@register(
-    "stream_sliding_counts",
-    """
-WITH e AS (
-  SELECT event_type, floor(epoch(ts))::BIGINT AS te FROM events
-), w AS (
-  SELECT event_type, (te // 43200) * 43200 AS win_epoch FROM e
-  UNION ALL
-  SELECT event_type, (te // 43200) * 43200 - 43200 FROM e
-)
-SELECT win_epoch, event_type, count(*)::BIGINT AS n
-FROM w GROUP BY 1, 2
-""",
-)
-def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G batch twin: sliding windows (1 day / 12 h hop) — each event
-    lands in two windows; the oracle enumerates both hops."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 day", "12 hours").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("win_epoch"),
-            "event_type",
-            "n",
-        )
-    )
-
-
-@register(
-    "sessionize",
-    """
-WITH ordered AS (
-  SELECT user_id, event_id, ts, value,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-), flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN prev_ts IS NULL
-                   OR date_diff('second', prev_ts, ts) > 3600
-              THEN 1 ELSE 0 END AS is_new
-  FROM ordered
-), numbered AS (
-  SELECT user_id, ts, value,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id::BIGINT AS session_id,
-       floor(epoch(min(ts)))::BIGINT AS session_start,
-       count(*)::BIGINT AS n_events,
-       round(sum(value), 2) AS total_value
-FROM numbered
-GROUP BY user_id, session_id
-""",
-)
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4/§2.G: gap-based sessionization (gap > 1 h starts a session) —
-    lag + running-sum windows; the streaming analog is
-    ``session_window(ts, '1 hour')``."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(w).cast("long")
-    flagged = e.withColumn(
-        "is_new",
-        F.when(gap.isNull() | (gap > 3600), F.lit(1)).otherwise(F.lit(0)),
-    )
-    numbered = flagged.withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return numbered.groupBy("user_id", "session_id").agg(
-        F.unix_timestamp(F.min("ts")).alias("session_start"),
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
 
 
 @register(
@@ -165,323 +59,6 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return sample_frames(attach_media(d), every=64)
-
-
-@register(
-    "stream_late_data",
-    """
-WITH mx AS (
-  SELECT max(ts) AS max_all, max(ts) - INTERVAL 2 DAY AS cutoff FROM events
-), flags AS (
-  SELECT e.event_id, e.event_type, e.value, e.ts,
-         (e.ts <= mx.cutoff AND e.event_id % 5 = 0) AS straggler,
-         date_trunc('day', e.ts) + INTERVAL 1 DAY AS wend,
-         mx.cutoff, mx.max_all
-  FROM events e, mx
-), b1 AS (
-  SELECT max(ts) AS max_b1 FROM flags WHERE ts <= cutoff AND NOT straggler
-), acc AS (
-  SELECT f.* FROM flags f, b1
-  WHERE ((f.ts <= f.cutoff AND NOT f.straggler)
-         OR f.wend > b1.max_b1 - INTERVAL 1 HOUR)
-    AND f.wend <= f.max_all - INTERVAL 1 HOUR
-)
-SELECT floor(epoch(date_trunc('day', ts)))::BIGINT AS day_epoch,
-       event_type,
-       count(*)::BIGINT AS n,
-       round(sum(value), 2) AS total_value
-FROM acc
-GROUP BY 1, 2
-""",
-)
-def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G batch twin of the WATERMARK-DISCARDS-LATE-ROWS contract.
-
-    Replay model (streaming/events.stage_events_phased): rows up to
-    cutoff = max_ts − 2 days arrive first (minus every 5th event, held
-    back as stragglers); the stream tail + stragglers arrive in a
-    second micro-batch. With a 1 h watermark the first batch leaves
-    the watermark at max(on-time ts) − 1 h, so a replayed straggler is
-    accepted only if its 1-day window is still open; append mode emits
-    exactly the windows the final watermark has closed. This query
-    computes that accept/emit rule deterministically in batch;
-    tests/test_streaming.py asserts the real two-phase checkpointed
-    stream produces IDENTICAL rows."""
-    e = load_table(spark, sf_dir, "events")
-    mx = e.agg(
-        F.max("ts").alias("max_all"),
-        (F.max("ts") - F.expr("INTERVAL 2 DAYS")).alias("cutoff"),
-    )
-    f = e.crossJoin(F.broadcast(mx))
-    straggler = (F.col("ts") <= F.col("cutoff")) & (F.col("event_id") % 5 == 0)
-    b1 = (
-        f.filter((F.col("ts") <= F.col("cutoff")) & ~straggler)
-        .agg(F.max("ts").alias("max_b1"))
-    )
-    g = f.crossJoin(F.broadcast(b1))
-    wend = F.to_timestamp(F.date_trunc("day", F.col("ts"))) + F.expr(
-        "INTERVAL 1 DAY"
-    )
-    accepted = g.filter(
-        (
-            ((F.col("ts") <= F.col("cutoff")) & ~straggler)
-            | (wend > F.col("max_b1") - F.expr("INTERVAL 1 HOUR"))
-        )
-        & (wend <= F.col("max_all") - F.expr("INTERVAL 1 HOUR"))
-    )
-    return (
-        accepted.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("day_epoch"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-@register(
-    "stream_attribution_join",
-    """
-SELECT c.event_id AS click_id,
-       p.event_id AS purchase_id,
-       c.user_id,
-       epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-FROM events c
-JOIN events p
-  ON c.user_id = p.user_id
- AND c.event_type = 'click'
- AND p.event_type = 'purchase'
- AND c.ts <= p.ts
- AND epoch_us(p.ts) - epoch_us(c.ts) <= 300000000
-""",
-)
-def q_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G batch twin of streaming/events.stream_stream_join: every
-    purchase joined to the same user's clicks in the preceding 300 s.
-    On a live stream both sides carry watermarks and the time-bound
-    join condition lets Spark evict buffered state; the batch run of
-    the identical dataflow is what the oracle checks
-    (tests/test_streaming.py asserts stream == batch)."""
-    from resume_jd_matcher_spark.streaming.events import stream_stream_join
-
-    ev = load_table(spark, sf_dir, "events")
-    return stream_stream_join(ev, max_gap_s=300)
-
-
-@register(
-    "funnel_conversion",
-    """
-WITH v AS (
-  SELECT user_id, min(epoch_us(ts)) AS first_view_us
-  FROM events WHERE event_type = 'view' GROUP BY user_id
-), c AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS first_click_us
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND epoch_us(e.ts) > v.first_view_us
-  GROUP BY e.user_id
-), p AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS first_purchase_us
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > c.first_click_us
-  GROUP BY e.user_id
-)
-SELECT v.user_id, v.first_view_us, c.first_click_us, p.first_purchase_us
-FROM v
-LEFT JOIN c ON v.user_id = c.user_id
-LEFT JOIN p ON v.user_id = p.user_id
-""",
-)
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-funnel analysis (view → click-after-view →
-    purchase-after-click): each stage is a conditional min chained on
-    the previous stage's timestamp. Every aggregate and join keys on
-    user_id, so one hash partitioning serves the whole chain
-    (Exchange reuse) — three logical shuffles, one physical
-    partitioning at scale. Timestamps exposed as integer
-    microseconds."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.unix_micros("ts").alias("us")
-    )
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("us").alias("first_view_us"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("us") > F.col("first_view_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("first_click_us"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("us") > F.col("first_click_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("first_purchase_us"))
-    )
-    return v.join(c, "user_id", "left").join(p, "user_id", "left").select(
-        "user_id", "first_view_us", "first_click_us", "first_purchase_us"
-    )
-
-
-@register(
-    "kmv_distinct",
-    """
-WITH hv AS (
-  SELECT DISTINCT event_type,
-         ('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT AS hv
-  FROM events
-), rk AS (
-  SELECT event_type, hv,
-         row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rk
-  FROM hv
-), sk AS (
-  SELECT event_type, count(*) AS n,
-         max(CASE WHEN rk = 64 THEN hv END) AS kth
-  FROM rk WHERE rk <= 64 GROUP BY event_type
-), ex AS (
-  SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_distinct
-  FROM events GROUP BY event_type
-)
-SELECT s.event_type,
-       CASE WHEN s.n < 64 THEN s.n::DOUBLE
-            ELSE round(63 * 4294967296.0 / s.kth, 4) END AS est_distinct,
-       e.exact_distinct
-FROM sk s JOIN ex e ON s.event_type = e.event_type
-""",
-)
-def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] mergeable distinct-count sketch: per event_type, the KMV
-    (k=64 minimum hash values) estimate of distinct users next to the
-    exact count. The deterministic, oracle-replayable counterpart of
-    approx_count_distinct (whose HLL registers are engine-internal —
-    see approx_stats, rows-only); sketches merge by pooling and
-    re-cutting the k minima, so per-day sketches roll up without
-    rescanning (operators/textstats.py:kmv_sketch)."""
-    from resume_jd_matcher_spark.operators.textstats import (
-        kmv_estimate,
-        kmv_sketch,
-    )
-
-    e = load_table(spark, sf_dir, "events")
-    sk = kmv_sketch(e, "event_type", "user_id", k=64)
-    est = kmv_estimate(sk, "event_type", k=64)
-    exact = e.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_distinct")
-    )
-    return est.join(exact, "event_type")
-
-
-_HLL_C = repr((0.7213 / (1.0 + 1.079 / 512)) * 512 * 512 * 16777216)
-
-
-@register(
-    "hll_distinct",
-    f"""
-WITH hv AS (
-  SELECT event_type,
-         ('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT AS hv
-  FROM events
-), reg AS (
-  SELECT event_type, hv % 512 AS reg,
-         CASE WHEN hv // 512 = 0 THEN 24
-              ELSE 24 - length(bin(hv // 512)) END AS rank
-  FROM hv
-), sk AS (
-  SELECT event_type, reg, max(rank) AS mx FROM reg GROUP BY event_type, reg
-), agg AS (
-  SELECT event_type, count(*)::BIGINT AS present,
-         sum(pow(2, 24 - mx)::BIGINT)::BIGINT AS zpart
-  FROM sk GROUP BY event_type
-), est AS (
-  SELECT event_type,
-         {_HLL_C} / (zpart + (512 - present) * 16777216)::DOUBLE AS est_raw,
-         512 - present AS v
-  FROM agg
-), ex AS (
-  SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_distinct
-  FROM events GROUP BY event_type
-)
-SELECT e.event_type,
-       round(CASE WHEN est_raw <= 1280.0 AND v > 0
-                  THEN 512.0 * ln(512.0 / v::DOUBLE) ELSE est_raw END,
-             4) AS est_distinct,
-       x.exact_distinct
-FROM est e JOIN ex x ON e.event_type = x.event_type
-""",
-)
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] HyperLogLog distinct-count sketch with oracle-replayable
-    registers: per event_type, the m=512-register HLL estimate of
-    distinct users next to the exact count — KMV's constant-space
-    sibling (kmv_distinct) and the deterministic twin of Spark's
-    approx_count_distinct. Registers merge by max, so per-day sketches
-    roll up without rescanning; the harmonic sum is computed in exact
-    scaled-integer form so the only floats are one division (and the
-    linear-counting ln), rounded in-query
-    (operators/textstats.py:hll_sketch)."""
-    from resume_jd_matcher_spark.operators.textstats import (
-        hll_estimate,
-        hll_sketch,
-    )
-
-    e = load_table(spark, sf_dir, "events")
-    sk = hll_sketch(e, "event_type", "user_id", p=9)
-    est = hll_estimate(sk, "event_type", p=9)
-    exact = e.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_distinct")
-    )
-    return est.join(exact, "event_type")
-
-
-@register(
-    "session_window_agg",
-    """
-WITH ordered AS (
-  SELECT user_id, event_id, ts, value,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-), flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN prev_ts IS NULL
-                   OR date_diff('microsecond', prev_ts, ts) > 1800000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM ordered
-), numbered AS (
-  SELECT user_id, ts, value,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-)
-SELECT user_id,
-       floor(epoch(min(ts)))::BIGINT AS session_start,
-       floor(epoch(max(ts) + INTERVAL 30 MINUTE))::BIGINT AS session_end,
-       count(*)::BIGINT AS n_events,
-       round(sum(value), 2) AS total_value
-FROM numbered
-GROUP BY user_id, session_id
-""",
-)
-def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G: Spark's NATIVE session_window aggregate (30-minute gap) —
-    the engine-managed merging-session path, vs `sessionize`'s manual
-    lag/running-sum islands. The oracle replays the documented
-    semantics: window start = first event, end = last event + gap,
-    sessions split when the inter-event gap EXCEEDS 30 min. Native
-    session_window is also the streaming-safe formulation (state-store
-    merging sessions under a watermark) — the batch call here shares
-    the operator."""
-    from resume_jd_matcher_spark.streaming.events import session_window_counts
-
-    return session_window_counts(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -530,153 +107,6 @@ def q_media_binary_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = attach_media(d)
     return media_simhash_neardup(media)
-
-
-@register(
-    "stream_static_enrich",
-    """
-WITH tier AS (
-  SELECT user_id,
-         CASE WHEN count(*) >= 60 THEN 'heavy' ELSE 'light' END AS tier
-  FROM events GROUP BY user_id
-)
-SELECT floor(epoch(date_trunc('day', e.ts)))::BIGINT AS day_epoch,
-       t.tier, e.event_type, count(*)::BIGINT AS n
-FROM events e JOIN tier t USING (user_id)
-GROUP BY 1, 2, 3
-""",
-)
-def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G batch twin of the STREAM-STATIC enrichment join — the one
-    streaming join shape the suite didn't yet pin (stream-stream and
-    stateful sessions are covered): arriving events join a broadcast
-    OFFLINE dimension (user activity tier), then tumbling per-(tier,
-    type) counts. tests/test_streaming.py asserts the real streamed
-    run over the replayed file source produces IDENTICAL rows; this
-    batch twin is the oracle surface (identical projection, same
-    window grain)."""
-    from resume_jd_matcher_spark.streaming.events import (
-        stream_static_enrich,
-        user_tier_dim,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return stream_static_enrich(ev, user_tier_dim(ev))
-
-
-@register(
-    "stream_drift_monitor",
-    """
-WITH bc AS (
-  SELECT event_type, greatest(least(floor(value / 25)::INT, 9), 0) AS bkt,
-         count(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2
-), bt AS (
-  SELECT event_type, sum(n)::BIGINT AS tot FROM bc GROUP BY 1
-), grid AS (
-  SELECT bt.event_type, bt.tot, b.bkt
-  FROM bt CROSS JOIN
-       (SELECT unnest(generate_series(0, 9))::INT AS bkt) b
-), base AS (
-  SELECT g.event_type, g.bkt,
-         greatest(coalesce(c.n, 0) / g.tot::DOUBLE, 1e-4) AS p_base
-  FROM grid g LEFT JOIN bc c
-    ON c.event_type = g.event_type AND c.bkt = g.bkt
-), cc AS (
-  SELECT floor(epoch(date_trunc('day', ts)))::BIGINT AS day_epoch,
-         event_type, greatest(least(floor(value / 25)::INT, 9), 0) AS bkt,
-         count(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2, 3
-), ct AS (
-  SELECT day_epoch, event_type, sum(n)::BIGINT AS tot
-  FROM cc GROUP BY 1, 2
-), cur AS (
-  SELECT t.day_epoch, b.event_type, b.bkt, b.p_base,
-         greatest(coalesce(c.n, 0) / t.tot::DOUBLE, 1e-4) AS p_cur
-  FROM base b JOIN ct t ON t.event_type = b.event_type
-  LEFT JOIN cc c ON c.day_epoch = t.day_epoch
-    AND c.event_type = b.event_type AND c.bkt = b.bkt
-)
-SELECT day_epoch, event_type,
-       round(sum((p_cur - p_base) * ln(p_cur / p_base)) + 1e-9, 6) AS psi,
-       (round(sum((p_cur - p_base) * ln(p_cur / p_base)) + 1e-9, 6)
-        > 0.2) AS drift
-FROM cur GROUP BY 1, 2
-""",
-)
-def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G [EXT] batch twin of the streaming PSI drift monitor — the
-    streaming member of the drift family (`psi_drift` is
-    its static cousin): per tumbling event-time day and event type,
-    PSI of the in-window value-bucket distribution against the
-    offline full-corpus baseline, alerting at the standard 0.2
-    threshold. tests/test_streaming.py asserts the real streamed run
-    (ONE bounded streaming aggregation; PSI as a stateless batch
-    finalize over the windowed pre-aggregate, because chained
-    streaming aggs are unsupported by design) produces IDENTICAL
-    rows.
-
-    Scale shape: the streaming state is windows-in-flight × |types| ×
-    10 buckets, independent of event volume; the finalize joins only
-    bounded pre-aggregates (baseline broadcast). The batch twin's
-    fact-sized work is the two bucket-count hash aggs — everything
-    after is dimension-bounded."""
-    from resume_jd_matcher_spark.streaming.drift import (
-        baseline_dist,
-        psi_finalize,
-        stream_bucket_counts,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return psi_finalize(stream_bucket_counts(ev), baseline_dist(ev))
-
-
-@register(
-    "stream_session_dedup",
-    """
-WITH ordered AS (
-  SELECT user_id, event_type, event_id, ts, value,
-         lag(ts) OVER (PARTITION BY user_id, event_type
-                       ORDER BY ts, event_id) AS prev_ts
-  FROM events
-), flagged AS (
-  SELECT user_id, event_type, event_id, ts, value,
-         CASE WHEN prev_ts IS NULL
-                   OR date_diff('microsecond', prev_ts, ts) > 1800000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM ordered
-), numbered AS (
-  SELECT user_id, event_type, ts, value,
-         sum(is_new) OVER (PARTITION BY user_id, event_type
-                           ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-)
-SELECT user_id, event_type,
-       floor(epoch(min(ts)))::BIGINT AS session_start,
-       count(*)::BIGINT AS n_dupes,
-       round(sum(value), 2) AS total_value
-FROM numbered
-GROUP BY user_id, event_type, session_id
-""",
-)
-def q_stream_session_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G [EXT] batch twin of SESSION-GAP DEDUP: repeated events of
-    the same type by the same user within a 30-minute session collapse
-    to one row carrying their multiplicity — the ingest compaction
-    that keeps retries / double-fires from inflating downstream
-    counts. Native session_window keyed on (user_id, event_type), so
-    in stream mode the state store holds only open per-(user, type)
-    sessions under the watermark; tests/test_streaming.py asserts the
-    streamed run (including a duplicate-replay phase) produces
-    IDENTICAL rows (streaming/events.py:session_type_dedup).
-
-    Scale shape: ONE keyed session aggregation over the fact — no
-    joins, no windows over data; state is open-sessions-bounded."""
-    from resume_jd_matcher_spark.streaming.events import session_type_dedup
-
-    return session_type_dedup(load_table(spark, sf_dir, "events"))
 
 
 from resume_jd_matcher_spark.queries.vector_q import (  # noqa: E402
@@ -736,44 +166,6 @@ def q_stream_ann_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=1.5,
         n_planes=_LSH_PLANES,
     )
-
-
-@register(
-    "stream_topk_trending",
-    """
-WITH c AS (
-  SELECT floor(epoch(date_trunc('day', ts)))::BIGINT AS day_epoch,
-         event_type, count(*)::BIGINT AS n
-  FROM events GROUP BY 1, 2
-), r AS (
-  SELECT day_epoch, event_type, n,
-         row_number() OVER (PARTITION BY day_epoch
-                            ORDER BY n DESC, event_type) AS rank
-  FROM c
-)
-SELECT day_epoch, rank::INT AS rank, event_type, n
-FROM r WHERE rank <= 3
-""",
-)
-def q_stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G [EXT] batch twin of the TRENDING-TOPK monitor: per
-    tumbling event-time day, the top-3 event types by count with a
-    full deterministic tie-break — the dashboard feed shape. Rank
-    windows can't run inside a streaming aggregation, so the streamed
-    run is the tumbling pre-aggregate with a STATELESS rank finalize
-    (the drift-monitor precedent); tests/test_streaming.py asserts
-    equality (streaming/events.py:trending_finalize)."""
-    from resume_jd_matcher_spark.streaming.events import trending_finalize
-
-    e = load_table(spark, sf_dir, "events")
-    counts = e.groupBy(
-        F.window("ts", "1 day").alias("w"), "event_type"
-    ).agg(F.count("*").alias("n")).select(
-        F.unix_timestamp(F.col("w.start")).alias("day_epoch"),
-        "event_type",
-        "n",
-    )
-    return trending_finalize(counts, k=3)
 
 
 _MAGIC_CASE = """CASE WHEN doc_id % 7 = 0 THEN ''
@@ -868,46 +260,6 @@ def q_media_payload_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return payload_entropy(attach_media_encoded(d))
-
-
-@register(
-    "stream_view_conversion",
-    """
-WITH v AS (
-  SELECT event_id AS view_id, user_id, ts
-  FROM events WHERE event_type = 'view'
-), p AS (
-  SELECT event_id AS purchase_id, user_id, ts
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT v.view_id, v.user_id,
-       coalesce(p.purchase_id, -1)::BIGINT AS purchase_id,
-       coalesce((epoch_us(p.ts) - epoch_us(v.ts)) // 1000000, -1)::BIGINT
-         AS lag_s,
-       (p.purchase_id IS NOT NULL) AS converted
-FROM v LEFT JOIN p
-  ON v.user_id = p.user_id
- AND p.ts >= v.ts
- AND p.ts < v.ts + INTERVAL 1 HOUR
-""",
-)
-def q_stream_view_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G [EXT] batch twin of the LEFT OUTER stream-stream interval
-    join (streaming/events.view_conversion_outer): every view joined
-    to same-user purchases in the following hour; unmatched views
-    emit one purchase_id=-1 row — the per-impression conversion
-    ledger. The OUTER side is the new streaming surface vs
-    stream_attribution_join's inner join: the no-conversion verdict
-    is watermark-driven state eviction, which
-    tests/test_streaming.py asserts agrees with this twin on the
-    watermark-closed cohort (matched pairs emit immediately; NULL
-    rows emit when the purchase watermark passes view_ts + 1h)."""
-    from resume_jd_matcher_spark.streaming.events import (
-        view_conversion_outer,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return view_conversion_outer(ev, window_s=3600)
 
 
 @register(

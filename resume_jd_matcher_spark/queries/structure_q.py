@@ -1,17 +1,13 @@
 """Round-11 family: graph structure, shard assignment, and
-calibration governance over the fixture tables.
+calibration governance over the document corpus.
 
-Seven operators a 100-TB training-data platform needs beyond the r10
-inventory: HITS hub/authority centrality (the eigenvector-family
-member pagerank_neardup doesn't cover), synchronous label-propagation
+Four operators a 100-TB training-data platform needs beyond the r10
+inventory: synchronous label-propagation
 communities (modularity structure, not connectivity — cc sees
 components, LPA sees dense sub-groups), rendezvous (HRW) shard
 routing with a resize-movement audit, B-cubed cluster-quality
-evaluation of the dedup clustering, a multiplicative-weights domain-reweighting pass (DoReMi-style
-excess-difficulty upweighting with a frequency-rarity proxy), exact
-Shapley-value conversion attribution (the axiomatic member of the
-attribution trio), and a Fano-factor burstiness profile of the event
-stream.
+evaluation of the dedup clustering, and a multiplicative-weights domain-reweighting pass (DoReMi-style
+excess-difficulty upweighting with a frequency-rarity proxy).
 
 Determinism discipline: every exposed number in this module is an exact integer or a
 fixed-point scaled integer (``*_e6`` / ``*_e9``) computed with
@@ -49,106 +45,6 @@ def _halfup_div(num: str, den: str, scale: int) -> str:
     as pure integer arithmetic (Spark ``div`` truncates toward zero,
     DuckDB ``//`` floors — identical on nonnegative values)."""
     return f"(({num}) * {2 * scale} + ({den})) div (2 * ({den}))"
-
-
-# ---------------------------------------------------------------------------
-# HITS hubs & authorities on the user -> event_type bipartite graph
-# ---------------------------------------------------------------------------
-
-_HITS_ITER = 3
-
-
-def _hits_sql(n_iter: int = _HITS_ITER) -> str:
-    """Unrolled HITS authority iteration in HUGEINT fixed-point on
-    the compacted co-occurrence matrix M = EᵀE (hub normalization is
-    a scalar multiple, so it cancels inside the next authority L1
-    normalization — deferring it collapses the user-grain half-step
-    entirely; M is |event_types|²-bounded). Each normalization is
-    the shared integer half-up division — zero float steps."""
-    head = """WITH e AS MATERIALIZED (
-  SELECT DISTINCT user_id, event_type FROM events
-), m AS MATERIALIZED (
-  SELECT a.event_type AS t1, b.event_type AS t2, count(*)::HUGEINT AS m
-  FROM e a JOIN e b USING (user_id) GROUP BY 1, 2
-), a0 AS MATERIALIZED (
-  SELECT DISTINCT t1 AS event_type, 1000000000::HUGEINT AS a FROM m
-)"""
-    its = []
-    for i in range(1, n_iter + 1):
-        its.append(
-            f""", a{i}r AS MATERIALIZED (
-  SELECT m.t1 AS event_type, sum(m.m * p.a)::HUGEINT AS ar
-  FROM m JOIN a{i - 1} p ON p.event_type = m.t2 GROUP BY 1
-), a{i} AS MATERIALIZED (
-  SELECT event_type,
-         ((ar * 2000000000 + t.ta) // (2 * t.ta))::HUGEINT AS a
-  FROM a{i}r, (SELECT sum(ar)::HUGEINT AS ta FROM a{i}r) t
-)"""
-        )
-    tail = f"""
-SELECT d.event_type, d.n_users, a{n_iter}.a::BIGINT AS authority_e9
-FROM (SELECT event_type, count(*)::BIGINT AS n_users FROM e GROUP BY 1) d
-JOIN a{n_iter} USING (event_type)
-"""
-    return head + "".join(its) + tail
-
-
-@register("hits_scores", _hits_sql())
-def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2/A4 [EXT]: HITS (Kleinberg 1999, JACM 46(5)) on the
-    user->event_type bipartite graph — users are hubs, event types
-    are authorities; {n}-step mutual-reinforcement iteration with L1
-    normalization. The eigenvector-centrality member of the graph
-    family that pagerank_neardup (random-walk, symmetric graph)
-    doesn't cover: HITS separates "broad-activity users" from
-    "activity-defining event types" on a DIRECTED bipartite shape.
-
-    Determinism AND scale shape share one trick: hub L1
-    normalization is a scalar multiple, so deferring it makes the
-    authority recurrence a_k+1 = normalize(M a_k) with M = EᵀE the
-    co-occurrence matrix — |event_types|²-bounded BY CONSTRUCTION.
-    The fact collapses once to the distinct edge grain, M comes from
-    ONE user-keyed self-join hash agg, and the iteration runs
-    driver-side on the collected ≤|types|² exact integers (the
-    markov_attribution precedent for bounded-grain trajectories);
-    every normalization is the integer half-up e9 division, so the
-    oracle's unrolled CTEs replay it bit-for-bit. No per-iteration
-    job over the user grain at any scale."""
-    from resume_jd_matcher_spark.operators.dedup import _PERSISTED
-
-    e = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-        .persist()
-    )
-    _PERSISTED.append(e)
-    eb = e.select(F.col("user_id"), F.col("event_type").alias("t2"))
-    m = (
-        e.join(eb, "user_id")
-        .groupBy(F.col("event_type").alias("t1"), "t2")
-        .agg(F.count("*").cast("bigint").alias("m"))
-    )
-    # bounded: |event_types|^2 rows
-    mm = [(r["t1"], r["t2"], r["m"]) for r in m.collect()]
-    deg_rows = {
-        r["event_type"]: r["n"]
-        for r in e.groupBy("event_type")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .collect()
-    }
-    types = sorted(deg_rows)
-    a = {t: 10**9 for t in types}
-    for _ in range(_HITS_ITER):
-        raw = {t: 0 for t in types}
-        for t1, t2, cnt in mm:
-            raw[t1] += cnt * a[t2]
-        tot = sum(raw.values())
-        a = {t: (raw[t] * 2 * 10**9 + tot) // (2 * tot) for t in types}
-    return spark.createDataFrame(
-        [(t, deg_rows[t], a[t]) for t in types],
-        "event_type string, n_users bigint, authority_e9 bigint",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -608,291 +504,4 @@ def q_doremi_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_halfup_div("wraw", "tw", 10**6))
         .cast("bigint")
         .alias("weight_e6"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Exact Shapley-value attribution over conversion journeys
-# ---------------------------------------------------------------------------
-
-# 2^n coalition enumeration guard. 15, not 20: phi_scaled is the
-# n!-scaled credit, and by efficiency sum(phi) = n! * v(N), so any
-# single channel's credit can reach n! * total_conversions — at n=20
-# that overflows BIGINT with as few as 4 conversions (20!*4 > 2^63;
-# r11 ADVICE). 15! ~ 1.3e12 keeps ~7e6 conversions inside int64, and
-# a runtime assert below re-checks the exact product per input.
-_SHAP_MAX_CH = 15
-
-
-def _shapley_sql() -> str:
-    # factorial via ln/exp is float-unsafe; build it as a self-join
-    # product of a small literal spine instead (n <= _SHAP_MAX_CH)
-    return """WITH fp AS (
-  SELECT user_id, min(ts) AS pts FROM events
-  WHERE event_type = 'purchase' GROUP BY user_id
-), journey AS (
-  SELECT e.user_id, e.event_type,
-         CASE WHEN fp.pts IS NOT NULL THEN 1 ELSE 0 END AS conv
-  FROM events e LEFT JOIN fp ON fp.user_id = e.user_id
-  WHERE (fp.pts IS NULL OR e.ts <= fp.pts)
-    AND e.event_type <> 'purchase'
-), ch AS MATERIALIZED (
-  SELECT event_type,
-         (row_number() OVER (ORDER BY event_type) - 1)::BIGINT AS idx
-  FROM (SELECT DISTINCT event_type FROM journey)
-), n AS (SELECT count(*)::BIGINT AS n FROM ch),
-um AS (
-  SELECT j.user_id, sum(DISTINCT (1::BIGINT << ch.idx))::BIGINT AS mask,
-         max(j.conv) AS conv
-  FROM journey j JOIN ch USING (event_type)
-  GROUP BY j.user_id
-), msk AS MATERIALIZED (
-  SELECT mask, sum(conv)::HUGEINT AS n_conv FROM um GROUP BY mask
-), subsets AS MATERIALIZED (
-  SELECT s.s AS smask,
-         len(replace(bin(s.s::UBIGINT), '0', ''))::BIGINT AS sz
-  FROM (SELECT unnest(generate_series(0::BIGINT,
-               ((1::BIGINT << (SELECT n FROM n)) - 1)::BIGINT)) AS s) s
-), v AS MATERIALIZED (
-  SELECT s.smask, s.sz, coalesce(sum(m.n_conv), 0)::HUGEINT AS v
-  FROM subsets s LEFT JOIN msk m ON (m.mask & ~s.smask) = 0
-  GROUP BY s.smask, s.sz
-), fact AS MATERIALIZED (
-  SELECT a.k,
-         coalesce((SELECT product(b.k::DOUBLE) FROM
-                   (SELECT unnest(generate_series(1, a.k)) AS k) b),
-                  1)::HUGEINT AS f
-  FROM (SELECT unnest(generate_series(0, (SELECT n FROM n))) AS k) a
-), phi AS (
-  SELECT ch.event_type,
-         sum(fs.f * fns.f * (vi.v - vs.v))::HUGEINT AS phi_scaled
-  FROM ch
-  JOIN v vs ON (vs.smask & (1::BIGINT << ch.idx)) = 0
-  JOIN v vi ON vi.smask = (vs.smask | (1::BIGINT << ch.idx))
-  JOIN fact fs ON fs.k = vs.sz
-  JOIN fact fns ON fns.k = (SELECT n FROM n) - 1 - vs.sz
-  GROUP BY ch.event_type
-), tot AS (SELECT sum(phi_scaled)::HUGEINT AS t FROM phi)
-SELECT phi.event_type AS channel, phi.phi_scaled::BIGINT AS phi_scaled,
-       CASE WHEN tot.t = 0 THEN 0
-            ELSE ((phi.phi_scaled * 2000000 + tot.t) // (2 * tot.t))
-       END::BIGINT AS share_e6
-FROM phi, tot
-"""
-
-
-@register("shapley_attribution", _shapley_sql())
-def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/W4 [EXT]: exact Shapley-value attribution (Shapley 1953;
-    Zhao et al. 2018 for the marketing formulation) — channels are
-    players, v(S) = conversions among users whose pre-conversion
-    touchset is contained in coalition S, and each channel's credit
-    is its exact Shapley sum. The AXIOMATIC member of the attribution
-    trio: multitouch divides by position, markov_attribution asks the
-    counterfactual, Shapley is the unique efficient/symmetric/
-    additive split. phi is exposed scaled by n! (every coalition
-    weight |S|!(n-1-|S|)! is then an integer) plus the e6 share —
-    exact integers end to end.
-
-    Scale shape: the fact collapses to per-user touchset BITMASKS
-    (one conditional agg per user), then to the <= 2^n-bounded
-    (mask, conversions) grain; the 2^n coalition enumeration and the
-    Shapley sum run driver-side on that bounded census (the
-    markov/HITS precedent), guarded at n <= {n} channels. The oracle
-    replays the identical enumeration with DuckDB bit algebra.""".format(
-        n=_SHAP_MAX_CH
-    )
-    e = load_table(spark, sf_dir, "events")
-    fp = (
-        e.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("pts"))
-    )
-    j = (
-        e.join(fp, "user_id", "left")
-        .filter(
-            (F.col("pts").isNull() | (F.col("ts") <= F.col("pts")))
-            & (F.col("event_type") != "purchase")
-        )
-        .select(
-            "user_id",
-            "event_type",
-            F.when(F.col("pts").isNotNull(), 1).otherwise(0).alias("conv"),
-        )
-    )
-    # bounded: |channels| rows
-    channels = sorted(
-        r["event_type"]
-        for r in j.select("event_type").distinct().collect()
-    )
-    n = len(channels)
-    if n > _SHAP_MAX_CH:
-        raise ValueError(
-            f"shapley_attribution: {n} channels exceeds the 2^n "
-            f"enumeration guard ({_SHAP_MAX_CH}); bucket channels first"
-        )
-    idx = {c: i for i, c in enumerate(channels)}
-    idx_map = F.create_map(
-        *[x for c, i in idx.items() for x in (F.lit(c), F.lit(i))]
-    )
-    # per-user DISTINCT bit set via bit_or (a sum would
-    # double-count repeated touches of the same channel)
-    um = (
-        j.select(
-            "user_id",
-            F.element_at(idx_map, F.col("event_type")).alias("idx"),
-            "conv",
-        )
-        .select(
-            "user_id",
-            F.expr("shiftleft(cast(1 as bigint), idx)").alias("bit"),
-            "conv",
-        )
-        .groupBy("user_id")
-        .agg(
-            F.expr("bit_or(bit)").alias("mask"),
-            F.max("conv").alias("conv"),
-        )
-    )
-    # bounded: <= 2^n rows
-    msk = [
-        (r["mask"], r["nc"])
-        for r in um.groupBy("mask")
-        .agg(F.sum("conv").cast("bigint").alias("nc"))
-        .collect()
-    ]
-    # driver-side exact enumeration (bounded census)
-    full = 1 << n
-    v = [0] * full
-    for mask, nc in msk:
-        # add nc to every superset of mask: iterate supersets directly
-        s = mask
-        while True:
-            v[s] += nc
-            if s == full - 1:
-                break
-            s = (s + 1) | mask
-    import math
-
-    # exact overflow re-check: sum(phi) = n! * v(N), so the largest
-    # possible phi_scaled is factorial(n) * v_full; both the oracle's
-    # HUGEINT::BIGINT cast and Spark's bigint schema need it in int64.
-    if math.factorial(n) * v[full - 1] >= 2**63:
-        raise ValueError(
-            f"shapley_attribution: n!*v(N) = {n}! * {v[full - 1]} "
-            "overflows the BIGINT phi_scaled exposure; bucket channels "
-            "or pre-aggregate conversions first"
-        )
-    phi = {}
-    for c in channels:
-        bit = 1 << idx[c]
-        acc = 0
-        for s in range(full):
-            if s & bit:
-                continue
-            sz = bin(s).count("1")
-            w = math.factorial(sz) * math.factorial(n - 1 - sz)
-            acc += w * (v[s | bit] - v[s])
-        phi[c] = acc
-    tot = sum(phi.values())
-    rows = [
-        (
-            c,
-            phi[c],
-            (phi[c] * 2 * 10**6 + tot) // (2 * tot) if tot else 0,
-        )
-        for c in channels
-    ]
-    return spark.createDataFrame(
-        rows, "channel string, phi_scaled bigint, share_e6 bigint"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Burstiness profile: Fano factor + CV^2 of daily event counts
-# ---------------------------------------------------------------------------
-
-@register(
-    "burstiness_fano",
-    """
-WITH d AS (
-  SELECT event_type, ts::DATE AS day, count(*)::BIGINT AS c
-  FROM events GROUP BY 1, 2
-), span AS (
-  SELECT min(ts::DATE) AS lo, max(ts::DATE) AS hi FROM events
-), spine AS (
-  SELECT unnest(generate_series(lo::TIMESTAMP, hi::TIMESTAMP,
-                                INTERVAL 1 DAY))::DATE AS day
-  FROM span
-), grid AS (
-  SELECT t.event_type, s.day
-  FROM (SELECT DISTINCT event_type FROM events) t, spine s
-), g AS (
-  SELECT grid.event_type, coalesce(d.c, 0)::HUGEINT AS c
-  FROM grid LEFT JOIN d USING (event_type, day)
-), st AS (
-  SELECT event_type, count(*)::HUGEINT AS n,
-         sum(c)::HUGEINT AS s1, sum(c * c)::HUGEINT AS s2
-  FROM g GROUP BY 1
-)
-SELECT event_type, n::BIGINT AS n_days, s1::BIGINT AS n_events,
-       (((n * s2 - s1 * s1) * 2000000 + (n - 1) * s1)
-        // nullif(2 * (n - 1) * s1, 0))::BIGINT AS fano_e6,
-       ((n * (n * s2 - s1 * s1) * 2000000 + (n - 1) * s1 * s1)
-        // nullif(2 * (n - 1) * s1 * s1, 0))::BIGINT AS cv2_e6
-FROM st
-""",
-)
-def q_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/W4 [EXT]: burstiness profile of the event stream — Fano
-    factor (variance-to-mean ratio of daily counts, 1 under Poisson)
-    and the squared coefficient of variation per event type, on the
-    zero-filled calendar spine so quiet days count. The
-    dispersion-side companion of imr_control_chart (level) and
-    permutation_entropy (order): Fano >> 1 flags bursty arrivals that
-    break per-day capacity planning and Poisson-assuming samplers.
-    Both readouts are pure integer ratios of exact count moments —
-    n·Σc² − (Σc)² over scaled denominators — so the fixed-point e6
-    exposures are bit-stable.
-
-    Scale shape: ONE (type, day) hash agg over the fact, a
-    |types| x |days| calendar-bounded zero-fill grid, one moment agg
-    per type; no windows, no joins wider than the bounded grid."""
-    e = load_table(spark, sf_dir, "events")
-    d = (
-        e.groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    span = e.agg(
-        F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
-    )
-    spine = span.select(
-        F.explode(F.sequence("lo", "hi")).alias("day")
-    )
-    types = e.select("event_type").distinct()
-    grid = types.crossJoin(F.broadcast(spine))
-    g = grid.join(d, ["event_type", "day"], "left").select(
-        "event_type", F.coalesce("c", F.lit(0)).cast(_DEC).alias("c")
-    )
-    st = g.groupBy("event_type").agg(
-        F.count("*").cast(_DEC).alias("n"),
-        F.sum("c").cast(_DEC).alias("s1"),
-        F.sum(F.col("c") * F.col("c")).cast(_DEC).alias("s2"),
-    )
-    return st.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n_days"),
-        F.col("s1").cast("bigint").alias("n_events"),
-        F.expr(
-            "((n * s2 - s1 * s1) * 2000000 + (n - 1) * s1)"
-            " div nullif(2 * (n - 1) * s1, cast(0 as decimal(38,0)))"
-        )
-        .cast("bigint")
-        .alias("fano_e6"),
-        F.expr(
-            "(n * (n * s2 - s1 * s1) * 2000000 + (n - 1) * s1 * s1)"
-            " div nullif(2 * (n - 1) * s1 * s1, cast(0 as decimal(38,0)))"
-        )
-        .cast("bigint")
-        .alias("cv2_e6"),
     )

@@ -2,16 +2,13 @@
 analog: the reference is strictly request/response).
 
 "New documents arriving for matching" is the streaming shape of the
-reference's bulk route (app.py:133-180); here the `events` fixture
-replays through a file source. Each streaming query has a BATCH TWIN
-with identical transformation logic — the correctness gate is
-stream-result == batch-result on the same data (DuckDB can't run a
+reference's bulk route (app.py:133-180); here the arriving slice of
+the `embeddings` fixture replays through a file source into the
+stream-static ANN dedup gate. The gate has a BATCH TWIN with identical
+transformation logic (`stream_ann_dedup_gate`) — the correctness gate
+is stream-result == batch-result on the same data (DuckDB can't run a
 stream, so the twin is what the oracle checks; tests assert the
 equivalence).
-
-All aggregations use event-time windows + watermarks so state is
-bounded: at scale, watermark lag — not stream length — caps state
-size. `dropDuplicates` within the watermark dedups replayed events.
 """
 
 from __future__ import annotations
@@ -19,211 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),  # normalized by staging
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def _stage_normalized_events(spark: SparkSession, sf_dir: str) -> str:
-    """Write the events fixture ONCE per (tmpdir, sf_dir) as
-    TIMESTAMP_MICROS parquet, ts normalized through the same
-    ``normalize_events_ts`` branch the batch scan uses — so the stream
-    source sees one stable representation regardless of the fixture's
-    physical ts type (the round-4 drift broke the symlink-raw-file
-    approach). Returns the staged directory, safe for a schema'd
-    readStream."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from resume_jd_matcher_spark.sources.io import load_table
-
-    # Stable digest (not Python's salted hash()) so every run of the
-    # same fixture reuses ONE staging dir instead of leaking a new
-    # /tmp/events_stream_* per process.
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"events_stream_ts_{digest}")
-    done = os.path.join(stage, "_NORMALIZED")
-    if os.path.exists(done):
-        return stage
-    if os.path.isdir(stage):  # half-written leftover from a crashed run
-        shutil.rmtree(stage, ignore_errors=True)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    tmp = f"{stage}_tmp_{os.getpid()}"
-    load_table(spark, sf_dir, "events").coalesce(1).write.mode("overwrite").parquet(tmp)
-    open(os.path.join(tmp, "_NORMALIZED"), "w").close()
-    try:
-        os.rename(tmp, stage)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # concurrent stager won
-    return stage
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of the events fixture (one parquet = one
-    micro-batch; real deployments swap in kafka here).
-
-    The file stream source requires a *directory*, and the fixture dir
-    mixes all tables — so a ts-normalized copy of the events table is
-    staged into a scratch directory once per (session, sf_dir).
-    """
-    stage = _stage_normalized_events(spark, sf_dir)
-    return spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(stage)
-
-
-def tumbling_counts(events: DataFrame, width: str = "1 day") -> DataFrame:
-    """Tumbling event-time window counts per event_type, 1h watermark.
-
-    Output: (day_epoch, event_type, n, total_value) — window start
-    exposed as epoch seconds so the batch twin / oracle compare
-    exactly.
-    """
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("day_epoch"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def sliding_counts(events: DataFrame) -> DataFrame:
-    """Sliding windows (1 day width, 12h slide) per event_type."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 day", "12 hours").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("win_epoch"),
-            "event_type",
-            "n",
-        )
-    )
-
-
-def dedup_within_watermark(events: DataFrame) -> DataFrame:
-    """Exactly-once-ish replay hygiene: drop duplicate event_ids within
-    the watermark horizon."""
-    return events.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
-
-
-def stage_events_phased(
-    spark: SparkSession,
-    sf_dir: str,
-    stage: str,
-    cutoff_days: int = 2,
-    straggler_mod: int = 5,
-    mode: str = "holdback",
-) -> tuple[str, str]:
-    """Split the events fixture into two replay files modeling late
-    data. ``mode``:
-
-    - ``holdback`` (late-aggregation demo): ``00_ontime.parquet`` =
-      rows with ts ≤ cutoff (= max_ts − 2 days) minus every
-      ``straggler_mod``-th event; ``01_late.parquet`` = everything
-      else — the stream tail PLUS the held-back stragglers, late
-      beyond the watermark for all but the most recent open window.
-    - ``duplicate`` (dedup-state demo): ``00_ontime.parquet`` = ALL
-      rows with ts ≤ cutoff; ``01_late.parquet`` = the tail PLUS an
-      exact replay of every ``straggler_mod``-th pre-cutoff event —
-      duplicates whose dedup state may already be watermark-evicted.
-
-    Returns the two file paths (ts-normalized TIMESTAMP_MICROS schema,
-    ready for EVENTS_SCHEMA readStream)."""
-    import datetime
-    import glob
-    import os
-    import shutil
-
-    from resume_jd_matcher_spark.sources.io import load_table
-
-    raw = load_table(spark, sf_dir, "events")
-    max_ts = raw.agg(F.max("ts")).collect()[0][0]
-    cutoff = F.lit(max_ts - datetime.timedelta(days=cutoff_days))
-    replayed = (F.col("ts") <= cutoff) & (
-        F.col("event_id") % straggler_mod == 0
-    )
-    if mode == "holdback":
-        ontime = raw.filter((F.col("ts") <= cutoff) & ~replayed)
-        late = raw.filter((F.col("ts") > cutoff) | replayed)
-    elif mode == "duplicate":
-        ontime = raw.filter(F.col("ts") <= cutoff)
-        late = raw.filter(F.col("ts") > cutoff).unionByName(
-            raw.filter(replayed)
-        )
-    else:
-        raise ValueError(f"unknown phased-replay mode: {mode!r}")
-
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    os.makedirs(stage, exist_ok=True)
-    paths = []
-    for tag, df, mtime in (("00_ontime", ontime, 1000), ("01_late", late, 2000)):
-        dst = os.path.join(stage, f"{tag}.parquet")
-        if not os.path.exists(dst):
-            tmp = os.path.join(stage, f"_tmp_{tag}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (mtime, mtime))
-        paths.append(dst)
-    return paths[0], paths[1]
-
-
-def run_phased_stream(
-    spark: SparkSession,
-    stage: str,
-    transform,
-    out_dir: str,
-    checkpoint: str,
-) -> DataFrame:
-    """Drive ``transform(stream_df)`` over the phased stage dir as TWO
-    sequential availableNow runs sharing one checkpoint + parquet sink:
-    run 1 sees only the on-time file; run 2 picks up the late file with
-    the watermark state restored from the checkpoint — so
-    genuinely-late rows are discarded exactly as they would be on a
-    live stream. Returns the sink read back as a batch DataFrame
-    (append-mode output of both runs)."""
-    import glob
-    import os
-
-    files = sorted(glob.glob(os.path.join(stage, "*.parquet")))
-    # One stable source dir (the checkpoint pins the source path);
-    # each phase symlinks the next file in before re-running.
-    view = os.path.join(stage, "_view")
-    os.makedirs(view, exist_ok=True)
-    for f in files:
-        link = os.path.join(view, os.path.basename(f))
-        if not os.path.exists(link):
-            os.symlink(f, link)
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .load(view)
-        )
-        q = (
-            transform(src)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 def run_stream_to_memory(
@@ -242,164 +34,6 @@ def run_stream_to_memory(
     q.awaitTermination()
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
 
-
-def stream_stream_join(
-    events: DataFrame, max_gap_s: int = 300
-) -> DataFrame:
-    """Stream-stream inner join: each ``purchase`` joined to the
-    ``click`` events of the same user in the preceding ``max_gap_s``
-    seconds (attribution join).
-
-    Both sides carry watermarks and the join condition bounds the
-    event-time skew, so Spark can evict buffered state once the
-    watermark passes — unbounded-state-free, the canonical
-    stream-stream join shape. Output: one row per (click, purchase)
-    pair with the integer-microsecond gap.
-    """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            f"""
-            c_user = p_user AND
-            click_ts <= purchase_ts AND
-            click_ts >= purchase_ts - INTERVAL {max_gap_s} SECONDS
-            """
-        ),
-    )
-    return joined.select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    )
-
-
-def view_conversion_outer(
-    events: DataFrame, window_s: int = 3600, delay: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every ``view`` joined
-    to the ``purchase`` events of the same user in the FOLLOWING
-    ``window_s`` seconds; a view with no purchase in its window emits
-    one NULL-match row — the per-impression conversion ledger (the
-    row shape funnel attribution and negative-sampling both read).
-
-    The outer side is what makes this a distinct streaming surface
-    from ``stream_stream_join``: matched pairs emit as they join, but
-    the NULL row for an unmatched view can only emit once the
-    purchase-side WATERMARK has passed ``view_ts + window_s`` —
-    state-store eviction doubles as the no-conversion verdict.
-    Both sides carry ``delay`` watermarks and the join condition
-    bounds event-time skew, so buffered state is
-    watermark-bounded — never corpus-bounded.
-
-    Output: (view_id, user_id, purchase_id, lag_s, converted) with
-    the NULL match exposed as purchase_id = -1 / lag_s = -1 (exact
-    integers hash-compare across engines; NULLs do not)."""
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", delay)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", delay)
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            f"""
-            v_user = p_user AND
-            purchase_ts >= view_ts AND
-            purchase_ts < view_ts + INTERVAL {window_s} SECONDS
-            """
-        ),
-        "leftOuter",
-    )
-    return joined.select(
-        "view_id",
-        F.col("v_user").alias("user_id"),
-        F.coalesce(F.col("purchase_id"), F.lit(-1)).alias("purchase_id"),
-        F.coalesce(
-            F.expr(
-                "(unix_micros(purchase_ts) - unix_micros(view_ts))"
-                " div 1000000"
-            ),
-            F.lit(-1).cast("bigint"),
-        ).alias("lag_s"),
-        F.col("purchase_id").isNotNull().alias("converted"),
-    )
-
-
-def session_window_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Native session_window aggregate (per-user merging sessions,
-    gap-based): the SAME projection serves the batch query
-    (queries/stream_q.q_session_window_agg) and the streaming twin —
-    in stream mode Spark swaps MergingSessions for the state-store
-    UpdatingSessions, semantics unchanged."""
-    s = events.groupBy("user_id", F.session_window("ts", gap)).agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    return s.select(
-        "user_id",
-        F.unix_timestamp(F.col("session_window.start")).alias("session_start"),
-        F.unix_timestamp(F.col("session_window.end")).alias("session_end"),
-        "n_events",
-        "total_value",
-    )
-
-
-def session_type_dedup(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session-gap dedup: repeated events of the SAME type by the same
-    user within a ``gap`` session collapse to one row — the streaming
-    compaction a clickstream ingest runs so retries / double-fires
-    don't inflate downstream counts. Keyed native session_window on
-    (user_id, event_type): sessions are per-(user, type), so a burst
-    of identical actions is one output row carrying its multiplicity.
-
-    Same projection serves batch and stream (the session_window_counts
-    contract); in stream mode add a watermark upstream. Output:
-    (user_id, event_type, session_start, n_dupes, total_value)."""
-    s = events.groupBy(
-        "user_id", "event_type", F.session_window("ts", gap)
-    ).agg(
-        F.count("*").alias("n_dupes"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    return s.select(
-        "user_id",
-        "event_type",
-        F.unix_timestamp(F.col("session_window.start")).alias("session_start"),
-        "n_dupes",
-        "total_value",
-    )
 
 
 def ann_dedup_gate(
@@ -458,11 +92,16 @@ def ann_dedup_gate(
     )
 
 
+
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source replay of the ARRIVING slice of the embeddings
     fixture (vec_id % 4 == 3 — scale-factor-proportional, so the
     stream is non-empty at every sf) for the stream-static ANN gate
-    tests. Same staging discipline as read_events_stream."""
+    tests. The file stream source requires a *directory*, and the
+    fixture dir mixes all tables — so the slice is staged once per
+    sf_dir into a scratch directory named by a stable digest (not
+    Python's salted hash()), written aside and renamed into place so
+    a crashed or concurrent stager never leaves a half-written copy."""
     import hashlib
     import os
     import shutil
@@ -494,57 +133,3 @@ def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return spark.readStream.schema(schema).format("parquet").load(stage)
 
-
-def trending_finalize(day_counts: DataFrame, k: int = 3) -> DataFrame:
-    """Stateless finalize over the tumbling pre-aggregate: per day,
-    the top-k event types by (n DESC, event_type ASC). Rank windows
-    can't run inside a streaming agg, so this runs as a batch
-    finalize over the stream's windowed output — the drift-monitor
-    precedent. Output: (day_epoch, rank, event_type, n)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("day_epoch").orderBy(
-        F.col("n").desc(), F.col("event_type").asc()
-    )
-    return (
-        day_counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("day_epoch", F.col("rank").cast("int").alias("rank"), "event_type", "n")
-    )
-
-
-def user_tier_dim(events_batch: DataFrame, threshold: int = 60) -> DataFrame:
-    """Static enrichment dimension computed OFFLINE from the batch
-    table: user → activity tier ('heavy' ≥ threshold lifetime events).
-    The canonical stream-static pattern: the dim is fixed for the life
-    of the streaming query and broadcast into every micro-batch."""
-    return events_batch.groupBy("user_id").agg(
-        F.when(F.count("*") >= threshold, F.lit("heavy"))
-        .otherwise(F.lit("light"))
-        .alias("tier")
-    )
-
-
-def stream_static_enrich(
-    events: DataFrame, tier_dim: DataFrame, width: str = "1 day"
-) -> DataFrame:
-    """Stream-static enrichment join + windowed rollup: each arriving
-    event joins the broadcast static tier dim (no state, no watermark
-    needed for the join itself — the static side never changes), then
-    tumbling per-(tier, type) counts.
-
-    Scale shape: stream-static joins in Structured Streaming execute
-    the batch join per micro-batch with the static side broadcast —
-    state stores hold only the windowed aggregation, bounded by
-    (windows in flight) × tiers × types."""
-    return (
-        events.join(F.broadcast(tier_dim), "user_id")
-        .groupBy(F.window("ts", width).alias("w"), "tier", "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("day_epoch"),
-            "tier",
-            "event_type",
-            "n",
-        )
-    )

@@ -1,13 +1,12 @@
 """Round-8 evaluation & data-ops layer: invariants of the evalops_q
-queries — vocabulary overlap, token-budget curriculum, graded nDCG,
-zone-map pruning and compaction planning."""
+queries — vocabulary overlap, token-budget curriculum, graded nDCG
+and compaction planning."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
@@ -72,51 +71,6 @@ class TestNdcg:
         assert all(r["ndcg"] > 0.0 for r in out)
 
 
-class TestZoneMapPruning:
-    def test_clustered_layout_prunes_more(self, spark, sf_dir):
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        rows = {
-            r["layout"]: r
-            for r in evalops_q.q_zone_map_pruning(spark, sf_dir).collect()
-        }
-        assert set(rows) == {"natural", "clustered"}
-        # the predicate is satisfiable -> both layouts match the same rows
-        assert (
-            rows["natural"]["rows_matched"]
-            == rows["clustered"]["rows_matched"]
-            > 0
-        )
-        # shipdate-clustered zone maps must beat insertion order
-        assert rows["clustered"]["skip_ratio"] > rows["natural"]["skip_ratio"]
-        # a ~3.5-month window over ~7 years, clustered -> most files skipped
-        assert rows["clustered"]["skip_ratio"] > 0.8
-        for r in rows.values():
-            assert r["rows_scanned"] >= r["rows_matched"]
-            assert r["read_amp"] >= 1.0
-
-    def test_fully_covering_predicate_hits_everything(self, spark, monkeypatch):
-        """Every shipdate inside the predicate window -> zone maps
-        cannot skip anything in either layout."""
-        from resume_jd_matcher_spark.queries import evalops_q
-
-        li = spark.range(400).select(
-            F.col("id").alias("l_orderkey"),
-            F.lit(1).alias("l_linenumber"),
-            (
-                F.lit("1998-06-05").cast("timestamp")
-                + F.make_interval(days=(F.col("id") % 80).cast("int"))
-            ).alias("l_shipdate"),
-        )
-        monkeypatch.setattr(evalops_q, "load_table", lambda *a: li)
-        for r in evalops_q.q_zone_map_pruning(spark, SF).collect():
-            assert r["files_hit"] == r["n_files"]
-            assert r["skip_ratio"] == pytest.approx(0.0)
-            assert r["rows_scanned"] == 400
-            assert r["rows_matched"] == 400
-            assert r["read_amp"] == pytest.approx(1.0)
-
-
 class TestCompactionPlan:
     def test_exact_packing(self, spark, monkeypatch):
         """10 files of exactly 50k chars -> 5 bins of 2 contiguous
@@ -153,4 +107,3 @@ class TestCompactionPlan:
             assert prev["last_doc"] < cur["first_doc"]
             # every bin except possibly the last crosses the target
             assert prev["total_chars"] + cur["total_chars"] > 100_000
-

@@ -141,8 +141,6 @@ def test_registry_wide_no_cartesian_products(spark):
         "llm_feedback", "llm_explain", "prompt_assembly", "mean_score",
         "score_parse", "sections_map", "section_chunk", "header_canon",
         "embed_documents",
-        # single-row scalar CTEs (max-ts, watermark cutoff) crossed in:
-        "stream_late_data",
         # single-row broadcast corpus stats (N, avgdl, per-term df)
         # crossed into the per-doc scorer; rrf adds a single-row
         # broadcast query vector:
@@ -193,9 +191,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # global_prefix single-row bucket-stats broadcast + single-row
         # byte-budget total crossed into the file-grain plan:
         "compaction_plan",
-        # single-row broadcast global (min,max) bounds crossed into
-        # the event grain for zone assignment:
-        "zone_map_pruning",
         # two 1-row summaries (OLS fit, corpus mass) crossed with the
         # 1-row top-k mass agg:
         "zipf_fit",
@@ -227,14 +222,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row global moments + 1-row step-up k* crossed into the
         # |nations|-bounded test table:
         "benjamini_hochberg",
-        # 1-row cutoff broadcast tagging old/delta partials:
-        "incremental_agg_merge",
-        # |types|-bounded type pairs (<=5x5 crossJoin, both sides
-        # broadcastable) + per-pair theta rows — every side <=k rows:
-        "theta_sketch_setops",
-        # 1-row path total broadcast crossed into the
-        # |types|^3-bounded path grain:
-        "event_paths_top",
         # -- round 10 --
         # 1-row span-derived train/bench cutoff broadcast crossed
         # into the gram stream (replaces the fixed id window that
@@ -313,9 +300,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row global-mean-frequency + 1-row weight-total broadcasts
         # crossed into the |sources|-bounded grain:
         "doremi_reweight",
-        # calendar-bounded day spine broadcast crossed into the
-        # |event_types| dim to build the zero-fill grid:
-        "burstiness_fano",
         # -- round 12 --
         # global_prefix's 1-row (min, max) bucket-stats broadcast
         # crossed into the token-count projection (the
@@ -381,26 +365,6 @@ def test_keyword_tag_routes_by_dictionary_size(spark):
     big = physical_plan(keyword_tag(d, [f"kw{i}" for i in range(400)]))
     assert "BroadcastHashJoin" in big
     assert "CartesianProduct" not in big
-
-
-def test_view_conversion_outer_is_equi_join(spark):
-    """The LEFT OUTER interval join must plan as a SortMergeJoin on
-    the user equi-key (range predicate as join condition), never a
-    BroadcastNestedLoopJoin — the property that keeps it
-    shuffle-bounded at 100 TB."""
-    from resume_jd_matcher_spark.queries.stream_q import (
-        q_stream_view_conversion,
-    )
-
-    plan = physical_plan(q_stream_view_conversion(spark, SF))
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan
-    # equi-key hash-family join; at toy SF the planner broadcasts the
-    # purchase side, at scale both sides shuffle on the user key
-    assert (
-        "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-        or "BroadcastHashJoin" in plan
-    )
 
 
 def test_media_ihdr_is_scan_plus_single_agg(spark):

@@ -143,80 +143,6 @@ def test_cms_overestimates_never_under_and_merges(spark):
     )
 
 
-def test_kmv_estimate_accuracy_and_merge(spark):
-    """KMV(k=64) estimates 1000 distinct values within ~25% (1/sqrt(k)
-    bound is ~12.5%); under-k groups are exact; and pooling two
-    sketches + re-cutting the k minima equals the whole-data sketch
-    (mergeability)."""
-    from pyspark.sql import Window
-
-    from resume_jd_matcher_spark.operators.textstats import (
-        kmv_estimate,
-        kmv_sketch,
-    )
-
-    rows = [("big", f"v{i}") for i in range(1000)] + [
-        ("small", f"s{i}") for i in range(10)
-    ]
-    df = spark.createDataFrame(rows, "g string, v string")
-    est = {
-        r["g"]: r["est_distinct"]
-        for r in kmv_estimate(kmv_sketch(df, "g", "v"), "g").collect()
-    }
-    assert est["small"] == 10.0  # exact below k
-    assert abs(est["big"] - 1000) / 1000 < 0.25
-
-    h1 = df.filter(F.col("v").rlike("[02468]$"))
-    h2 = df.filter(F.col("v").rlike("[13579]$"))
-    pooled = kmv_sketch(h1, "g", "v").unionByName(kmv_sketch(h2, "g", "v"))
-    w = Window.partitionBy("g").orderBy("hv")
-    merged = (
-        pooled.select("g", "hv")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 64)
-    )
-    whole = kmv_sketch(df, "g", "v")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-
-def test_hll_estimate_accuracy_and_merge(spark):
-    """HLL(p=9, m=512) estimates 5000 distinct values within ~15%
-    (1.04/sqrt(m) is ~4.6%, allow slack for one fixed hash draw);
-    small groups land in the linear-counting branch and stay within a
-    few %; and max-merging two sketches equals the whole-data sketch
-    (the HLL merge law)."""
-    from resume_jd_matcher_spark.operators.textstats import (
-        hll_estimate,
-        hll_sketch,
-    )
-
-    rows = [("big", f"v{i}") for i in range(5000)] + [
-        ("small", f"s{i}") for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "g string, v string")
-    est = {
-        r["g"]: r["est_distinct"]
-        for r in hll_estimate(hll_sketch(df, "g", "v"), "g").collect()
-    }
-    assert abs(est["big"] - 5000) / 5000 < 0.15
-    assert abs(est["small"] - 40) / 40 < 0.15  # linear-counting range
-
-    h1 = df.filter(F.col("v").rlike("[02468]$"))
-    h2 = df.filter(F.col("v").rlike("[13579]$"))
-    merged = (
-        hll_sketch(h1, "g", "v")
-        .unionByName(hll_sketch(h2, "g", "v"))
-        .groupBy("g", "reg")
-        .agg(F.max("mx").alias("mx"))
-    )
-    whole = hll_sketch(df, "g", "v")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-
 def test_bloom_no_false_negatives_and_bounded_fps(spark):
     """Every member passes the bloom (no false negatives — the
     guarantee); non-members pass only rarely (4096 bits / 3 hashes /

@@ -244,14 +244,14 @@ def test_scan_cache_repartition_preserves_results(spark):
     session's cores at fill time (a 1-partition cached fixture pinned
     every pre-shuffle pipeline to one core). The round-robin layout
     must be result-invisible — including to queries whose semantics
-    could plausibly depend on physical row order (zone-map block
-    spans)."""
+    could plausibly depend on physical row order (the doc_id prefix
+    scan of compaction bins, zone-map block spans)."""
     from resume_jd_matcher_spark import queries as Q
     from resume_jd_matcher_spark.operators import dedup
     from resume_jd_matcher_spark.sources import io as src_io
 
     sf = "/root/testdata/sf0.001"
-    names = ["zone_map_pruning", "sort_key_advisor"]
+    names = ["compaction_plan", "sort_key_advisor"]
 
     def run(name):
         rows = sorted(map(str, Q._REGISTRY[name].fn(spark, sf).collect()))

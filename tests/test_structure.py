@@ -1,5 +1,5 @@
 """Unit tests for the round-11 structure family
-(queries/structure_q.py): hand-computed fixtures for HITS, LPA,
+(queries/structure_q.py): hand-computed fixtures for LPA,
 rendezvous sharding, B-cubed, and the
 multiplicative-weights reweighting — plus the exact-integer
 discipline checks (every exposed column is integral)."""
@@ -7,9 +7,6 @@ discipline checks (every exposed column is integral)."""
 from __future__ import annotations
 
 import hashlib
-
-import pytest
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,58 +19,6 @@ def _docs(rows):
 
 def _hash32(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-
-class TestHitsScores:
-    def test_symmetric_bipartite_equal_authorities(self, spark, monkeypatch):
-        """Complete 2x2 bipartite graph: both event types must get
-        exactly half the authority mass at every iteration."""
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        ts = dt.datetime(2024, 1, 1)
-        rows = [
-            (i, ts, u, t, 1.0, "{}")
-            for i, (u, t) in enumerate(
-                [(1, "A"), (1, "B"), (2, "A"), (2, "B")]
-            )
-        ]
-        e = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-        monkeypatch.setattr(sq, "load_table", lambda *a: e)
-        out = {r["event_type"]: r for r in sq.q_hits_scores(spark, SF).collect()}
-        assert out["A"]["authority_e9"] == 500_000_000
-        assert out["B"]["authority_e9"] == 500_000_000
-        assert out["A"]["n_users"] == 2
-
-    def test_broader_type_dominates(self, spark, monkeypatch):
-        """Type A touched by both users, B by one: A's authority must
-        exceed B's, and the pair must sum to ~1e9 (L1 normalized)."""
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        ts = dt.datetime(2024, 1, 1)
-        rows = [
-            (i, ts, u, t, 1.0, "{}")
-            for i, (u, t) in enumerate([(1, "A"), (1, "B"), (2, "A")])
-        ]
-        e = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-        monkeypatch.setattr(sq, "load_table", lambda *a: e)
-        out = {r["event_type"]: r for r in sq.q_hits_scores(spark, SF).collect()}
-        assert out["A"]["authority_e9"] > out["B"]["authority_e9"]
-        assert (
-            abs(out["A"]["authority_e9"] + out["B"]["authority_e9"] - 10**9)
-            <= 1
-        )
 
 
 class TestLabelPropagation:
@@ -233,122 +178,3 @@ class TestDoremiReweight:
         rows = sq.q_doremi_reweight(spark, sf_dir).collect()
         total = sum(r["weight_e6"] for r in rows)
         assert abs(total - 10**6) <= len(rows)  # half-up per share
-
-
-class TestShapleyAttribution:
-    def test_hand_computed_two_channels(self, spark, monkeypatch):
-        """u1: A -> purchase; u2: B (no conversion); u3: A,B ->
-        purchase. v(0)=0, v(A)=1, v(B)=0, v(AB)=2 — phi.2! = (3, 1)."""
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        t0 = dt.datetime(2024, 1, 1)
-
-        def ev(i, u, typ, minute):
-            return (i, t0 + dt.timedelta(minutes=minute), u, typ, 1.0, "{}")
-
-        rows = [
-            ev(0, 1, "A", 0), ev(1, 1, "purchase", 1),
-            ev(2, 2, "B", 0),
-            ev(3, 3, "A", 0), ev(4, 3, "B", 1), ev(5, 3, "purchase", 2),
-        ]
-        e = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-        monkeypatch.setattr(sq, "load_table", lambda *a: e)
-        out = {
-            r["channel"]: r
-            for r in sq.q_shapley_attribution(spark, SF).collect()
-        }
-        assert out["A"]["phi_scaled"] == 3
-        assert out["B"]["phi_scaled"] == 1
-        assert out["A"]["share_e6"] == 750_000
-        assert out["B"]["share_e6"] == 250_000
-
-    def test_efficiency_property(self, spark, sf_dir):
-        """Sum of scaled phis equals n!.(v(N) - v(0)) — shares sum
-        to ~1e6."""
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        rows = sq.q_shapley_attribution(spark, sf_dir).collect()
-        total = sum(r["share_e6"] for r in rows)
-        assert abs(total - 10**6) <= len(rows)
-
-    def test_overflow_guard_bounds_bigint(self, spark, monkeypatch):
-        """phi_scaled's BIGINT exposure caps at n! * v(N) by the
-        efficiency axiom; the guard must keep every reachable product
-        inside int64 (r11 ADVICE: the old n<=20 admitted 20!*4 >
-        2^63). The static cap itself must be safe for a plausible
-        conversion count, and the runtime assert must fire on an
-        exact-product breach."""
-        import math
-
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        # static cap sanity: 1e6 conversions at the cap stays in int64
-        assert math.factorial(sq._SHAP_MAX_CH) * 10**6 < 2**63
-
-        # runtime breach: 3 channels, forced v_full past the bound
-        monkeypatch.setattr(sq, "_SHAP_MAX_CH", 3)
-        big = 2**61
-        import datetime as dt
-
-        t0 = dt.datetime(2024, 1, 1)
-        rows = [
-            (0, t0, 1, "A", 0.0, None),
-            (1, t0, 1, "B", 0.0, None),
-            (2, t0, 1, "C", 0.0, None),
-            (3, t0 + dt.timedelta(hours=1), 1, "purchase", 0.0, None),
-        ]
-        e = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-        monkeypatch.setattr(sq, "load_table", lambda *a: e)
-        real_factorial = math.factorial
-        monkeypatch.setattr(
-            math, "factorial", lambda k: real_factorial(k) * big
-        )
-        with pytest.raises(ValueError, match="overflows"):
-            sq.q_shapley_attribution(spark, SF)
-
-
-class TestBurstinessFano:
-    def test_hand_computed_counts(self, spark, monkeypatch):
-        """Daily counts (2, 0, 4) over a 3-day spine: Fano = 2.0,
-        CV^2 = 1.0 — both exact fixed-point."""
-        import datetime as dt
-
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        t0 = dt.datetime(2024, 1, 1, 12)
-        rows = []
-        eid = 0
-        for day, cnt in ((0, 2), (2, 4)):
-            for _ in range(cnt):
-                rows.append(
-                    (eid, t0 + dt.timedelta(days=day), 1, "view", 1.0, "{}")
-                )
-                eid += 1
-        e = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-        monkeypatch.setattr(sq, "load_table", lambda *a: e)
-        [r] = sq.q_burstiness_fano(spark, SF).collect()
-        assert r["n_days"] == 3 and r["n_events"] == 6
-        assert r["fano_e6"] == 2_000_000
-        assert r["cv2_e6"] == 1_000_000
-
-    def test_poisson_ish_near_one(self, spark, sf_dir):
-        """On the fixture, every type's Fano is positive and finite;
-        constant-rate types sit near 1."""
-        from resume_jd_matcher_spark.queries import structure_q as sq
-
-        rows = sq.q_burstiness_fano(spark, sf_dir).collect()
-        assert rows and all(r["fano_e6"] >= 0 for r in rows)

@@ -20,12 +20,7 @@ HEADLINERS = {
     "minhash_lsh": "candidates from (band_id, band_sig) equi-join, no crossJoin",
     "dedup_clusters": "small-graph route: one bounded take, driver union-find",
     "winnow_fingerprint": "two Window nodes, ONE per-doc sort, no Python",
-    "funnel_conversion": "all stages keyed on user_id (exchange reuse)",
     "scoring_e2e": "two Arrow-batched Python stages (chunker, LLM), joins native",
-    "stream_attribution_join": "time-bounded join condition (watermark-evictable)",
-    "stream_view_conversion": "LEFT OUTER interval join on the user equi-key "
-    "(SortMergeJoin, range as join condition — no nested loop); in stream "
-    "mode the NULL-match row is watermark state eviction",
     "media_ihdr_histogram": "fixed-offset big-endian IHDR parse as a narrow "
     "hex projection (no UDF, no join); ONE exchange for the bounded "
     "dimension-histogram rollup",
@@ -95,9 +90,6 @@ HEADLINERS = {
     "rerank_e2e": "recall (BM25+dense RRF) cuts to a 20-row pool "
     "BEFORE the rerank scorer touches text — rerank cost independent "
     "of corpus size",
-    "session_window_agg": "engine-managed MergingSessions node (the "
-    "streaming-safe sessionizer; UpdatingSessions in stream mode) — "
-    "one per-user sort, no lag/running-sum windows",
     "kruskal_wallis": "global tie-averaged ranks WITHOUT a fact-sized "
     "window: distinct-value grain + global_prefix bucket-offset scan; "
     "per-(seg,value) counts equi-join the rank grain",
@@ -122,9 +114,6 @@ HEADLINERS = {
     "containment_neardup": "shared-shingle equi-join candidates "
     "(posting list persisted across both sides); intersection a "
     "map-side-combined count per pair; sizes join back by id",
-    "hll_distinct": "register build is ONE map-side-combined max-agg "
-    "(<= 2^p rows per group cross the wire); estimate an exact "
-    "scaled-integer sum per group",
     "psi_drift": "one explode + one map-side-combined token agg; "
     "only the <=top-N vocabulary and a single broadcast totals row "
     "survive the agg",
@@ -206,13 +195,6 @@ HEADLINERS = {
     "vocab_overlap": "pair intersection is a token-keyed self-EQUI-"
     "join of the DISTINCT (source, token) grain — no doc x doc or "
     "source x source cross join; size dims broadcast",
-    "stream_drift_monitor": "two fact-sized bucket-count hash aggs; "
-    "PSI finalize joins only bounded pre-aggregates with the "
-    "baseline broadcast (streaming run keeps windows x types x 10 "
-    "buckets of state)",
-    "zone_map_pruning": "1-row bounds agg broadcast, two fact "
-    "projections unioned into a 128-cell (layout,file) agg, O(1) "
-    "finalize — no window",
     "compaction_plan": "bucketed prefix-scan shuffle (no "
     "single-partition window) then a bin-grain agg",
     "zipf_fit": "token hash agg, global top-k via TakeOrdered (never "
@@ -250,37 +232,10 @@ HEADLINERS = {
     "moments, exact integers); rank window and step-up max over "
     "|nations| rows only",
     # -- round 9 batch 2: maintenance / graph / sketch ops --
-    "incremental_agg_merge": "two map-side-combined partial aggs "
-    "(old, delta) merged at the |priorities| grain; 1-row cutoff "
-    "broadcast — the stored-summary + delta plan",
-    "changelog_apply": "ONE window partitioned by key over <=3 ops "
-    "per key; filter; |priorities|-row agg — the MERGE-compaction "
-    "plan",
-    "link_prediction_jaccard": "ONE groupBy(part) collect_set basket "
-    "build (doubles as edge dedup); df cap = basket-size filter; "
-    "pairs generated expression-side from sorted <=cap arrays "
-    "(C(25,2) per part, never a self-join shuffle, never "
-    "customers^2); degrees broadcast back; top-k = "
-    "TakeOrderedAndProject",
-    "degree_assortativity": "posting-list plan: ONE shuffle by part "
-    "(collect_set), explode, ONE shuffle by supp folding closed-form "
-    "decimal(38,0) corr moments; zero joins, zero checkpoints, 1-row "
-    "finalize — no pair enumeration",
-    "theta_sketch_setops": "every pairwise step joins <=k-row "
-    "sketches (KMV rank window per type); exact companion one "
-    "distinct + user-keyed self-join",
-    "lsh_param_planner": "literal 5-row frame, pure projection + a "
-    "5-row rank window — touches no data",
-    "event_paths_top": "ONE per-user window produces both leads; "
-    "path grain |types|^3-bounded; rank/top-k on that bounded frame",
     "cross_source_leakage": "the dedup family's banded equi-join "
     "candidates + doc-keyed source joins; |sources|^2-bounded matrix "
     "agg",
     # -- round 11, structure family --
-    "hits_scores": "fact collapses ONCE to the distinct edge grain; "
-    "M = EtE from one user-keyed self-join hash agg; the iteration "
-    "runs on the collected |types|^2-bounded exact integers — no "
-    "per-round job over the user grain",
     "label_propagation": "banded LSH candidates, then the cost-routed "
     "trajectory: bounded take() routes small graphs to the driver "
     "loop; distributed path is one edge-label equi-join + two "
@@ -293,13 +248,6 @@ HEADLINERS = {
     "doremi_reweight": "token stream pre-aggregated to (source, tok) "
     "BEFORE the vocab join (grouped-grain equi-join, never raw "
     "occurrences); |sources|-bounded algebra after",
-    "shapley_attribution": "fact collapses to per-user touchset "
-    "bitmasks (one bit_or agg), then the <=2^n (mask, conversions) "
-    "census; the coalition enumeration runs driver-side on that "
-    "bounded census, guarded at n<=20 channels",
-    "burstiness_fano": "ONE (type, day) hash agg; zero-fill grid is "
-    "|types| x calendar-bounded days; moment agg per type — no "
-    "windows, exact integer moments",
 }
 
 

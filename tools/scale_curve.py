@@ -189,8 +189,7 @@ REGISTERED = [
     "k_core_graph",
     # round-11 structure family documents members (uncapped, linear
     # by construction: HRW is one explode + one agg per doc; the MW
-    # reweight joins grouped grains only). hits_scores is a
-    # relational input (rel curve);
+    # reweight joins grouped grains only);
     # label_propagation / bcubed_eval cap doc_id for oracle
     # boundedness and share the minhash-edge kernel already here.
     "shard_rendezvous",
@@ -207,10 +206,7 @@ REGISTERED = [
     # round-13 multimodal members (documents-only, uncapped): IHDR
     # parse is a fixed-offset hex projection + a bounded histogram
     # agg; ext-vs-magic quarantine is two narrow per-row routes + a
-    # bounded (route x detected) rollup. stream_view_conversion
-    # reads the events table this corpus doesn't synthesize — a
-    # watermark-bounded user+time equi/range join, linear by
-    # construction, measured via bench + the three-sf sims instead.
+    # bounded (route x detected) rollup.
     "media_ihdr_histogram",
     "media_ext_quarantine",
     # the little-endian twin of the IHDR parse — same narrow shape

@@ -220,8 +220,6 @@ def skew_spend(spark, n: int):
 
 
 REGISTERED = [
-    # round-8 batch 2: the zone-map layout advisor.
-    "zone_map_pruning",
     # round-9 curation/governance members with relational inputs:
     # day-grain SPC/complexity/rank-corr kernels, the prefix-scan
     # layout advisor (the one fact-ranking member), the event-grain
@@ -233,15 +231,6 @@ REGISTERED = [
     "obrien_fleming_monitor",
     "neyman_allocation",
     "benjamini_hochberg",
-    # round-9 batch 2: maintenance/graph/sketch kernels (lineitem /
-    # orders / events inputs; lsh_param_planner touches no data and
-    # is excluded)
-    "incremental_agg_merge",
-    "changelog_apply",
-    "link_prediction_jaccard",
-    "degree_assortativity",
-    "theta_sketch_setops",
-    "event_paths_top",
     # round-10 inference family (all relational inputs; the one
     # documents member, local_clustering, shares graph_triangles'
     # minhash-edge kernel already covered by the text curve):
@@ -285,23 +274,6 @@ REGISTERED = [
     # round-10 batch 8 (customer / orders inputs):
     "gaussian_mixture_em",
     "periodogram",
-    # round-11 structure family (relational members; label_propagation
-    # and bcubed_eval are doc_id-capped documents kernels sharing the
-    # text curve's minhash-edge chain; shard_rendezvous and
-    # doremi_reweight are documents kernels on the text curve):
-    "hits_scores",
-    # round-11 batch 2 (events inputs; shapley's 2^n enumeration runs
-    # on the bounded touchset census — its fact cost is the per-user
-    # bitmask agg, measured here):
-    "shapley_attribution",
-    "burstiness_fano",
-    # round-12 streaming batch-twins (events inputs; the third §2.G
-    # debut, stream_ann_dedup_gate, needs an embeddings table this
-    # corpus doesn't synthesize — its bucket equi-join is the
-    # ann_lsh_topk kernel already certified on the vector family,
-    # measured via bench + the three-sf sims):
-    "stream_session_dedup",
-    "stream_topk_trending",
 ]
 
 
