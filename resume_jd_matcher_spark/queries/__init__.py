@@ -209,6 +209,7 @@ _DRIVER_PRIORITY = [
     "silhouette_score",
     # -- r11 structure debuts (confirmed r12) --
     "bcubed_eval",
+    "burstiness_fano",
     "doremi_reweight",
     "label_propagation",
     "shard_rendezvous",
@@ -220,6 +221,7 @@ _DRIVER_PRIORITY = [
     "decontaminate",
     "zipf_fit",
     "llr_keyness",
+    "lsh_param_planner",
     "ngram_contamination",
     "intradoc_repetition",
     "unigram_logprob_quality",

@@ -1,13 +1,15 @@
 """Round-11 family: graph structure, shard assignment, and
-calibration governance over the document corpus.
+calibration governance over the document corpus, plus one profile
+of the event stream.
 
-Four operators a 100-TB training-data platform needs beyond the r10
+Five operators a 100-TB training-data platform needs beyond the r10
 inventory: synchronous label-propagation
 communities (modularity structure, not connectivity — cc sees
 components, LPA sees dense sub-groups), rendezvous (HRW) shard
 routing with a resize-movement audit, B-cubed cluster-quality
-evaluation of the dedup clustering, and a multiplicative-weights domain-reweighting pass (DoReMi-style
-excess-difficulty upweighting with a frequency-rarity proxy).
+evaluation of the dedup clustering, a multiplicative-weights domain-reweighting pass (DoReMi-style
+excess-difficulty upweighting with a frequency-rarity proxy), and a
+Fano-factor burstiness profile of the event stream.
 
 Determinism discipline: every exposed number in this module is an exact integer or a
 fixed-point scaled integer (``*_e6`` / ``*_e9``) computed with
@@ -504,4 +506,94 @@ def q_doremi_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_halfup_div("wraw", "tw", 10**6))
         .cast("bigint")
         .alias("weight_e6"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Burstiness profile: Fano factor + CV^2 of daily event counts
+# ---------------------------------------------------------------------------
+
+@register(
+    "burstiness_fano",
+    """
+WITH d AS (
+  SELECT event_type, ts::DATE AS day, count(*)::BIGINT AS c
+  FROM events GROUP BY 1, 2
+), span AS (
+  SELECT min(ts::DATE) AS lo, max(ts::DATE) AS hi FROM events
+), spine AS (
+  SELECT unnest(generate_series(lo::TIMESTAMP, hi::TIMESTAMP,
+                                INTERVAL 1 DAY))::DATE AS day
+  FROM span
+), grid AS (
+  SELECT t.event_type, s.day
+  FROM (SELECT DISTINCT event_type FROM events) t, spine s
+), g AS (
+  SELECT grid.event_type, coalesce(d.c, 0)::HUGEINT AS c
+  FROM grid LEFT JOIN d USING (event_type, day)
+), st AS (
+  SELECT event_type, count(*)::HUGEINT AS n,
+         sum(c)::HUGEINT AS s1, sum(c * c)::HUGEINT AS s2
+  FROM g GROUP BY 1
+)
+SELECT event_type, n::BIGINT AS n_days, s1::BIGINT AS n_events,
+       (((n * s2 - s1 * s1) * 2000000 + (n - 1) * s1)
+        // nullif(2 * (n - 1) * s1, 0))::BIGINT AS fano_e6,
+       ((n * (n * s2 - s1 * s1) * 2000000 + (n - 1) * s1 * s1)
+        // nullif(2 * (n - 1) * s1 * s1, 0))::BIGINT AS cv2_e6
+FROM st
+""",
+)
+def q_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A4/W4 [EXT]: burstiness profile of the event stream — Fano
+    factor (variance-to-mean ratio of daily counts, 1 under Poisson)
+    and the squared coefficient of variation per event type, on the
+    zero-filled calendar spine so quiet days count. The
+    dispersion-side companion of imr_control_chart (level) and
+    permutation_entropy (order): Fano >> 1 flags bursty arrivals that
+    break per-day capacity planning and Poisson-assuming samplers.
+    Both readouts are pure integer ratios of exact count moments —
+    n·Σc² − (Σc)² over scaled denominators — so the fixed-point e6
+    exposures are bit-stable.
+
+    Scale shape: ONE (type, day) hash agg over the fact, a
+    |types| x |days| calendar-bounded zero-fill grid, one moment agg
+    per type; no windows, no joins wider than the bounded grid."""
+    e = load_table(spark, sf_dir, "events")
+    d = (
+        e.groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+    span = e.agg(
+        F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
+    )
+    spine = span.select(
+        F.explode(F.sequence("lo", "hi")).alias("day")
+    )
+    types = e.select("event_type").distinct()
+    grid = types.crossJoin(F.broadcast(spine))
+    g = grid.join(d, ["event_type", "day"], "left").select(
+        "event_type", F.coalesce("c", F.lit(0)).cast(_DEC).alias("c")
+    )
+    st = g.groupBy("event_type").agg(
+        F.count("*").cast(_DEC).alias("n"),
+        F.sum("c").cast(_DEC).alias("s1"),
+        F.sum(F.col("c") * F.col("c")).cast(_DEC).alias("s2"),
+    )
+    return st.select(
+        "event_type",
+        F.col("n").cast("bigint").alias("n_days"),
+        F.col("s1").cast("bigint").alias("n_events"),
+        F.expr(
+            "((n * s2 - s1 * s1) * 2000000 + (n - 1) * s1)"
+            " div nullif(2 * (n - 1) * s1, cast(0 as decimal(38,0)))"
+        )
+        .cast("bigint")
+        .alias("fano_e6"),
+        F.expr(
+            "(n * (n * s2 - s1 * s1) * 2000000 + (n - 1) * s1 * s1)"
+            " div nullif(2 * (n - 1) * s1 * s1, cast(0 as decimal(38,0)))"
+        )
+        .cast("bigint")
+        .alias("cv2_e6"),
     )

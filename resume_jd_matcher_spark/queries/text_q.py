@@ -252,6 +252,88 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_candidates(d, n_hashes=16, rows_per_band=4)
 
 
+_LSH_PLAN_HASHES = 16
+_LSH_PLAN_TARGET = 0.7
+
+
+@register(
+    "lsh_param_planner",
+    f"""
+WITH cfg AS (
+  SELECT b, {_LSH_PLAN_HASHES} // b AS r
+  FROM (SELECT unnest([1, 2, 4, 8, 16]) AS b)
+), curve AS (
+  SELECT b, r,
+         round(pow(1.0 / b, 1.0 / r) + 1e-9, 4) AS threshold,
+         round(1 - pow(1 - pow(0.5, r), b) + 1e-9, 4) AS p_at_50,
+         round(1 - pow(1 - pow(0.7, r), b) + 1e-9, 4) AS p_at_70,
+         round(1 - pow(1 - pow(0.9, r), b) + 1e-9, 4) AS p_at_90
+  FROM cfg
+), ranked AS (
+  SELECT *, row_number() OVER (
+           ORDER BY abs(threshold - {_LSH_PLAN_TARGET}), b) AS pick
+  FROM curve
+)
+SELECT b::INT AS b, r::INT AS r, threshold, p_at_50, p_at_70, p_at_90,
+       pick = 1 AS recommended
+FROM ranked
+""",
+)
+def q_lsh_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """V8 [EXT]: LSH band-configuration planner — for every (bands b,
+    rows r) split of {_LSH_PLAN_HASHES} MinHash functions, the
+    S-curve threshold (1/b)^(1/r) and catch probabilities
+    1−(1−j^r)^b at Jaccard 0.5/0.7/0.9 (Leskovec-Rajaraman-Ullman,
+    MMDS ch. 3), recommending the config whose threshold lands
+    closest to the {_LSH_PLAN_TARGET} target — the design calculator
+    that justifies minhash_lsh's default split of its 16 hashes into
+    b=4 bands of r=4 rows (threshold (1/4)^(1/4) ≈ 0.707).
+    Deterministic tie-break on b.
+
+    Scale shape: a 5-row literal frame and pure projection — the
+    planner runs before any data is touched; nothing scales with
+    input at all (sf_dir is unused, accepted for the uniform query
+    signature)."""
+    from pyspark.sql import Window
+
+    cfgs = [(b, _LSH_PLAN_HASHES // b) for b in (1, 2, 4, 8, 16)]
+    cfg = spark.createDataFrame(cfgs, "b int, r int")
+
+    def catch(j: float):
+        return F.round(
+            1
+            - F.pow(
+                1 - F.pow(F.lit(j), F.col("r").cast("double")),
+                F.col("b").cast("double"),
+            )
+            + F.lit(1e-9),
+            4,
+        )
+
+    curve = cfg.select(
+        "b",
+        "r",
+        F.round(
+            F.pow(1.0 / F.col("b"), 1.0 / F.col("r")) + F.lit(1e-9), 4
+        ).alias("threshold"),
+        catch(0.5).alias("p_at_50"),
+        catch(0.7).alias("p_at_70"),
+        catch(0.9).alias("p_at_90"),
+    )
+    w = Window.orderBy(
+        F.abs(F.col("threshold") - _LSH_PLAN_TARGET), F.col("b")
+    )
+    return curve.withColumn("pick", F.row_number().over(w)).select(
+        F.col("b").cast("int").alias("b"),
+        F.col("r").cast("int").alias("r"),
+        "threshold",
+        "p_at_50",
+        "p_at_70",
+        "p_at_90",
+        (F.col("pick") == 1).alias("recommended"),
+    )
+
+
 @register(
     "simhash_fingerprint",
     f"""

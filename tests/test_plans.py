@@ -300,6 +300,9 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row global-mean-frequency + 1-row weight-total broadcasts
         # crossed into the |sources|-bounded grain:
         "doremi_reweight",
+        # calendar-bounded day spine broadcast crossed into the
+        # |event_types| dim to build the zero-fill grid:
+        "burstiness_fano",
         # -- round 12 --
         # global_prefix's 1-row (min, max) bucket-stats broadcast
         # crossed into the token-count projection (the

@@ -1,7 +1,7 @@
 """Unit tests for the round-11 structure family
 (queries/structure_q.py): hand-computed fixtures for LPA,
-rendezvous sharding, B-cubed, and the
-multiplicative-weights reweighting — plus the exact-integer
+rendezvous sharding, B-cubed, the
+multiplicative-weights reweighting and the burstiness profile — plus the exact-integer
 discipline checks (every exposed column is integral)."""
 
 from __future__ import annotations
@@ -178,3 +178,40 @@ class TestDoremiReweight:
         rows = sq.q_doremi_reweight(spark, sf_dir).collect()
         total = sum(r["weight_e6"] for r in rows)
         assert abs(total - 10**6) <= len(rows)  # half-up per share
+
+
+class TestBurstinessFano:
+    def test_hand_computed_counts(self, spark, monkeypatch):
+        """Daily counts (2, 0, 4) over a 3-day spine: Fano = 2.0,
+        CV^2 = 1.0 — both exact fixed-point."""
+        import datetime as dt
+
+        from resume_jd_matcher_spark.queries import structure_q as sq
+
+        t0 = dt.datetime(2024, 1, 1, 12)
+        rows = []
+        eid = 0
+        for day, cnt in ((0, 2), (2, 4)):
+            for _ in range(cnt):
+                rows.append(
+                    (eid, t0 + dt.timedelta(days=day), 1, "view", 1.0, "{}")
+                )
+                eid += 1
+        e = spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, event_type string,"
+            " value double, props string",
+        )
+        monkeypatch.setattr(sq, "load_table", lambda *a: e)
+        [r] = sq.q_burstiness_fano(spark, SF).collect()
+        assert r["n_days"] == 3 and r["n_events"] == 6
+        assert r["fano_e6"] == 2_000_000
+        assert r["cv2_e6"] == 1_000_000
+
+    def test_poisson_ish_near_one(self, spark, sf_dir):
+        """On the fixture, every type's Fano is positive and finite;
+        constant-rate types sit near 1."""
+        from resume_jd_matcher_spark.queries import structure_q as sq
+
+        rows = sq.q_burstiness_fano(spark, sf_dir).collect()
+        assert rows and all(r["fano_e6"] >= 0 for r in rows)
