@@ -697,7 +697,7 @@ def kmeans_partition(
     100 TB, fit on a sample, ``transform`` streams the full corpus.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
+    from pyspark.ml.functions import array_to_vector
 
     feat = corpus.withColumn("_features", array_to_vector(F.col(vec_col)))
     km = KMeans(

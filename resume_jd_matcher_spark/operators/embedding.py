@@ -87,6 +87,20 @@ def _make_http_backend(url: str, model_name: str) -> Callable[[pd.Series], pd.Se
     return embed
 
 
+def _make_backend(
+    backend: str, dim: int, backend_url: str, model_name: str
+) -> Callable[[pd.Series], pd.Series]:
+    """The embedding function of a named backend: TEXT series → vector
+    series. Executors build it once per worker, the driver per query."""
+    if backend == "hash":
+        return _make_hash_backend(dim)
+    if backend == "sentence-transformers":
+        return _make_st_backend("sentence-transformers/all-MiniLM-L6-v2")
+    if backend == "http":
+        return _make_http_backend(backend_url, model_name)
+    raise ValueError(f"unknown embedding backend: {backend}")
+
+
 def embedder_udf(
     backend: str = "hash",
     dim: int = DEFAULT_DIM,
@@ -98,14 +112,7 @@ def embedder_udf(
 
     @pandas_udf(T.ArrayType(T.DoubleType()))
     def embed_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        if backend == "hash":
-            fn = _make_hash_backend(dim)
-        elif backend == "sentence-transformers":
-            fn = _make_st_backend("sentence-transformers/all-MiniLM-L6-v2")
-        elif backend == "http":
-            fn = _make_http_backend(backend_url, model_name)
-        else:
-            raise ValueError(f"unknown embedding backend: {backend}")
+        fn = _make_backend(backend, dim, backend_url, model_name)
         for texts in batches:
             yield fn(texts)
 
@@ -140,15 +147,25 @@ def embed_query(
     backend_url: str = "http://localhost:11434",
     model_name: str = "all-minilm",
 ) -> DataFrame:
-    """V2: embed one query string (the JD) as a 1-row DataFrame, ready
-    to broadcast against a corpus (reference rag_model.py:47-56)."""
-    one = spark.createDataFrame([(0, jd_text)], ["query_id", "jd_text"])
-    return one.select(
-        "query_id",
-        embedder_udf(backend, dim, backend_url, model_name)(
-            F.col("jd_text")
-        ).alias("query_embedding"),
+    """V2: embed one query string (the JD) as a 1-row DataFrame
+    (query_id 0, query_embedding), ready to search a corpus with
+    (reference rag_model.py:47-56).
+
+    One string is embedded on the driver with the same backend function
+    the executors run, so the vector is bit-identical to what
+    ``embed_documents`` gives the same text. The row is built from a
+    pandas frame, which Spark keeps as an Arrow local relation: the
+    query costs no Spark job and no Python worker round trip."""
+    fn = _make_backend(backend, dim, backend_url, model_name)
+    vec = fn(pd.Series([jd_text])).iloc[0]
+    pdf = pd.DataFrame({"query_id": [0], "query_embedding": [vec]})
+    schema = T.StructType(
+        [
+            T.StructField("query_id", T.LongType()),
+            T.StructField("query_embedding", T.ArrayType(T.DoubleType())),
+        ]
     )
+    return spark.createDataFrame(pdf, schema)
 
 
 def whiten_embeddings(

@@ -22,13 +22,28 @@ final survivors, and executors stream batches at Arrow speed. At
 100 TB: corpus splits scan in parallel, each task does dense GEMMs,
 the reduce side only sees k rows per (query, partition).
 
-Numerics: matrices are cast to float64 before arithmetic;
-``||a-b||² = ||a||² + ||b||² − 2·a·b`` (clamped at 0) agrees with the
-sequential-fold oracle well within the exposed 1e-4 rounding.
+Top-k against a cached corpus is cost-routed: a corpus within the
+probe ceiling is copied to the driver once, on first use, and every
+later request is answered there with the same kernel — no Spark job,
+no corpus re-shipped into Python, no shuffle. This is the interactive
+``/shortlist`` shape (one JD against a standing index), which the
+reference serves from an in-memory FAISS flat index
+(rag_model_mass.py:17-47). Uncached or larger corpora take the
+distributed path.
+
+Numerics: matrices are cast to float64. Top-k survivors are chosen
+with ``||a-b||² = ||a||² + ||b||² − 2·a·b`` (clamped at 0), keeping
+every candidate within rounding of the k-th; each survivor's ``dist``
+is then recomputed as ``Σ(a−b)²`` folded over the dimensions in
+order, like the SQL oracles, and reported unrounded. Equal vectors
+get equal distances bit for bit and a self-match is exactly 0.0, so
+re-sorting the output by ``(dist, id)`` keeps its order. The
+threshold join rounds its distances to 4 places before comparing.
 """
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator
 
 import numpy as np
@@ -61,11 +76,12 @@ _PROBE_CHUNK = 1024
 MAX_PROBE_DRIVER_ROWS = 200_000
 
 
-def _broadcast_probe(df: DataFrame, id_col: str, vec_col: str):
-    """Materialize the bounded probe side once and ship it via
-    ``sc.broadcast`` (torrent, once per executor) instead of closing
-    over it (re-serialized into every task)."""
-    pdf = df.select(id_col, vec_col).toPandas()
+def _probe_matrix(df: DataFrame, id_col: str, vec_col: str, collect: bool = False):
+    """Materialize the bounded probe side on the driver as (ids, Q×d
+    matrix). ``collect`` pulls rows instead of Arrow batches: on a
+    local relation, such as embed_query's row, that runs no Spark job."""
+    sel = df.select(id_col, vec_col)
+    pdf = pd.DataFrame(sel.collect(), columns=sel.columns) if collect else sel.toPandas()
     if len(pdf) > MAX_PROBE_DRIVER_ROWS:
         raise ValueError(
             f"probe side has {len(pdf)} rows > {MAX_PROBE_DRIVER_ROWS}; "
@@ -73,18 +89,82 @@ def _broadcast_probe(df: DataFrame, id_col: str, vec_col: str):
             "similarity_join_auto, which routes large joins to the LSH "
             "candidates path, or the IVF paths in operators/ann.py"
         )
-    return df.sparkSession.sparkContext.broadcast(
-        _query_matrix(pdf, id_col, vec_col)
-    )
+    return _query_matrix(pdf, id_col, vec_col)
 
 
-def _sq_l2(batch: np.ndarray, qmat: np.ndarray) -> np.ndarray:
+def _broadcast_probe(df: DataFrame, id_col: str, vec_col: str):
+    """Ship the probe matrix via ``sc.broadcast`` (torrent, once per
+    executor) instead of closing over it (re-serialized into every
+    task)."""
+    return df.sparkSession.sparkContext.broadcast(_probe_matrix(df, id_col, vec_col))
+
+
+def _sq_l2(batch: np.ndarray, qmat: np.ndarray, batch_norms=None) -> np.ndarray:
+    if batch_norms is None:
+        batch_norms = (batch * batch).sum(axis=1)
     d2 = (
-        (batch * batch).sum(axis=1)[:, None]
+        batch_norms[:, None]
         + (qmat * qmat).sum(axis=1)[None, :]
         - 2.0 * (batch @ qmat.T)
     )
     return np.maximum(d2, 0.0)
+
+
+def _exact_sq_l2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise ``Σ(a−b)²``, folded over the dimensions left to right."""
+    diff = a - b
+    acc = np.zeros(len(diff))
+    for j in range(diff.shape[1]):
+        acc += diff[:, j] * diff[:, j]
+    return acc
+
+
+def _topk_candidates(
+    rows: np.ndarray, qmat: np.ndarray, k: int, row_norms=None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(row index, probe index, exact dist) of each probe's top-k
+    candidates among ``rows``, ``_PROBE_CHUNK`` probes at a time so the
+    B×chunk distance matrix stays bounded. KEEPS boundary ties: every
+    row within rounding of the k-th smallest expanded distance
+    survives, so equidistant candidates (and neighbours the GEMM
+    expansion may misorder by an ulp) reach the (dist, id) tie-break.
+    (argpartition alone would drop an arbitrary one of the tied rows.)"""
+    ris, qis, dists = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    for s in range(0, len(qmat), _PROBE_CHUNK):
+        chunk = qmat[s : s + _PROBE_CHUNK]
+        d2 = _sq_l2(rows, chunk, row_norms)  # B×chunk
+        kk = min(k, d2.shape[0])
+        kth = np.partition(d2, kk - 1, axis=0)[kk - 1, :]
+        ri, qi = np.nonzero(d2 <= kth + 1e-9 * np.maximum(kth, 1.0))
+        ris.append(ri)
+        qis.append(qi + s)
+        dists.append(_exact_sq_l2(rows[ri], chunk[qi]))
+    return np.concatenate(ris), np.concatenate(qis), np.concatenate(dists)
+
+
+# Driver copies of cached corpora, per DataFrame object (an entry goes
+# with its frame) and (id_col, vec_col): (ids, float64 matrix, squared
+# row norms), or None for an empty corpus or one over
+# MAX_PROBE_DRIVER_ROWS, which the distributed path serves.
+_RESIDENT: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _resident(corpus: DataFrame, id_col: str, vec_col: str):
+    """The driver copy of ``corpus`` if it is cached, non-empty and
+    within the ceiling, else None. Pulled with one collect on first
+    use."""
+    if not corpus.is_cached:
+        _RESIDENT.pop(corpus, None)
+        return None
+    per_cols = _RESIDENT.setdefault(corpus, {})
+    if (id_col, vec_col) not in per_cols:
+        pdf = corpus.select(id_col, vec_col).limit(MAX_PROBE_DRIVER_ROWS + 1).toPandas()
+        if not 0 < len(pdf) <= MAX_PROBE_DRIVER_ROWS:
+            per_cols[(id_col, vec_col)] = None
+        else:
+            ids, mat = _query_matrix(pdf, id_col, vec_col)
+            per_cols[(id_col, vec_col)] = (ids, mat, (mat * mat).sum(axis=1))
+    return per_cols[(id_col, vec_col)]
 
 
 def similarity_join_blas(
@@ -153,14 +233,18 @@ def topk_similarity_blas(
     vec_col: str = "embedding",
     query_vec_col: str = "query_embedding",
 ) -> DataFrame:
-    """V5 fast path: per-partition partial top-k (BLAS distances) →
-    global top-k per query. The shuffle carries ~k rows per (query,
-    partition) instead of the full N×Q pair set. Probe matrix ships by
-    explicit broadcast and is processed in bounded chunks (see
-    similarity_join_blas).
-    """
-    bc = _broadcast_probe(queries, query_id_col, query_vec_col)
+    """V5 fast path: (query, id, dist, score) for each query's k
+    nearest corpus rows by squared L2, ties broken by smallest id.
 
+    A cached corpus within ``MAX_PROBE_DRIVER_ROWS`` is answered on the
+    driver from its resident copy (see ``_resident``); the result is a
+    local relation. Otherwise: per-partition partial top-k (BLAS
+    distances) → global top-k per query. The shuffle carries ~k rows
+    per (query, partition) instead of the full N×Q pair set. Probe
+    matrix ships by explicit broadcast and is processed in bounded
+    chunks (see similarity_join_blas). Both paths pick the same rows
+    and report the same unrounded ``dist``.
+    """
     out_schema = T.StructType(
         [
             T.StructField(query_id_col, T.LongType()),
@@ -169,43 +253,40 @@ def topk_similarity_blas(
         ]
     )
 
+    def scored(df: DataFrame) -> DataFrame:
+        return df.select(
+            query_id_col, id_col, "dist", faiss_score(F.col("dist")).alias("score")
+        )
+
+    resident = _resident(corpus, id_col, vec_col)
+    if resident is not None:
+        ids, mat, norms = resident
+        qids, qmat = _probe_matrix(queries, query_id_col, query_vec_col, collect=True)
+        ri, qi, dist = _topk_candidates(mat, qmat, k, norms)
+        top = (
+            pd.DataFrame({query_id_col: qids[qi], id_col: ids[ri], "dist": dist})
+            .sort_values([query_id_col, "dist", id_col], kind="stable")
+            .groupby(query_id_col, sort=False)
+            .head(k)
+        )
+        return scored(queries.sparkSession.createDataFrame(top, out_schema))
+
+    bc = _broadcast_probe(queries, query_id_col, query_vec_col)
+
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids, qmat = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             rmat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            rids = pdf[id_col].to_numpy()
-            for s in range(0, len(qids), _PROBE_CHUNK):
-                qid_c = qids[s : s + _PROBE_CHUNK]
-                d2 = _sq_l2(rmat, qmat[s : s + _PROBE_CHUNK])  # B×chunk
-                kk = min(k, d2.shape[0])
-                # Partial top-k per query within this batch, KEEPING
-                # boundary ties: emit every row with dist <= the
-                # kth-smallest distance so equidistant candidates survive
-                # to the global (dist, id) tie-break window. (argpartition
-                # alone would drop an arbitrary one of the tied rows.)
-                kth = np.partition(d2, kk - 1, axis=0)[kk - 1, :]
-                ri, qi = np.nonzero(d2 <= kth[None, :])
-                yield pd.DataFrame(
-                    {
-                        query_id_col: qid_c[qi],
-                        id_col: rids[ri],
-                        "dist": d2[ri, qi],
-                    }
-                )
+            ri, qi, dist = _topk_candidates(rmat, qmat, k)
+            yield pd.DataFrame(
+                {query_id_col: qids[qi], id_col: pdf[id_col].to_numpy()[ri], "dist": dist}
+            )
 
     partial = ensure_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
         gen, out_schema
     )
     w = Window.partitionBy(query_id_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.round("dist", 4).alias("dist"),
-            faiss_score(F.col("dist")).alias("score"),
-        )
-    )
+    return scored(partial.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k))
+

@@ -57,7 +57,7 @@ def q_shortlist_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = embed_query(spark, JD_TEXT, backend="hash", dim=8)
     return topk_similarity_blas(
         corpus, q, k=10, id_col="doc_id", query_id_col="query_id"
-    )
+    ).withColumn("dist", F.round("dist", 4))
 
 
 @register(
@@ -297,7 +297,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = embed_query(spark, JD_TEXT, backend="hash", dim=8)
     return topk_similarity_blas(
         corpus, q, k=10, id_col="doc_id", query_id_col="query_id"
-    )
+    ).withColumn("dist", F.round("dist", 4))
 
 
 @register(

@@ -64,7 +64,7 @@ def q_topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return topk_similarity_blas(
         emb.select("vec_id", "embedding"), _emb_queries(spark, sf_dir), k=5
-    )
+    ).withColumn("dist", F.round("dist", 4))
 
 
 @register(

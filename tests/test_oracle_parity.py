@@ -69,7 +69,10 @@ def test_oracle_parity(name, spark, duck, sf_dir):
 
 
 def test_all_queries_run(spark, sf_dir):
-    """Every registered query (oracled or not) must at least execute."""
-    for name, qd in Q._REGISTRY.items():
-        df = qd.fn(spark, sf_dir)
-        df.limit(5).collect()
+    """Every registered query must at least execute. The oracled ones
+    run in full in their parity cases above, so only the rest run
+    here; together the two cover the whole registry."""
+    unoracled = sorted(set(Q._REGISTRY) - set(_ORACLED))
+    assert sorted(unoracled + _ORACLED) == sorted(Q._REGISTRY)
+    for name in unoracled:
+        Q._REGISTRY[name].fn(spark, sf_dir).limit(5).collect()
