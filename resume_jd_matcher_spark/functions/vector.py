@@ -19,6 +19,9 @@ parity (SURVEY.md §7 hard-part (c)).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -61,6 +64,19 @@ def faiss_score(dist: Column) -> Column:
     """Distance → 0-10 score: ``round(10 * 1/(1+d), 2)``
     (reference ``normalize_score``, rag_model_mass.py:13-15)."""
     return F.round(F.lit(10.0) / (F.lit(1.0) + dist), 2)
+
+
+_CENT = Decimal("0.01")
+
+
+def faiss_score_values(dist: np.ndarray) -> np.ndarray:
+    """``faiss_score`` on the driver, value for value: Spark rounds a
+    double HALF_UP on its shortest decimal form, which ``repr`` gives.
+    For short arrays (a top-k); a frame goes through ``faiss_score``."""
+    raw = (10.0 / (1.0 + np.asarray(dist, dtype=np.float64))).tolist()
+    return np.array(
+        [float(Decimal(repr(x)).quantize(_CENT, ROUND_HALF_UP)) for x in raw], dtype=np.float64
+    )
 
 
 def distance(a: Column | str, b: Column | str, metric: str = "sql2") -> Column:

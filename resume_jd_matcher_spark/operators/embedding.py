@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from resume_jd_matcher_spark.sources.io import driver_frame
+
 DEFAULT_DIM = 8
 
 
@@ -155,7 +157,9 @@ def embed_query(
     the executors run, so the vector is bit-identical to what
     ``embed_documents`` gives the same text. The row is built from a
     pandas frame, which Spark keeps as an Arrow local relation: the
-    query costs no Spark job and no Python worker round trip."""
+    query costs no Spark job and no Python worker round trip, and a
+    consumer on the driver reads the vector back without collecting it
+    (``sources.io.driver_rows``)."""
     fn = _make_backend(backend, dim, backend_url, model_name)
     vec = fn(pd.Series([jd_text])).iloc[0]
     pdf = pd.DataFrame({"query_id": [0], "query_embedding": [vec]})
@@ -165,7 +169,7 @@ def embed_query(
             T.StructField("query_embedding", T.ArrayType(T.DoubleType())),
         ]
     )
-    return spark.createDataFrame(pdf, schema)
+    return driver_frame(spark, pdf, schema)
 
 
 def whiten_embeddings(

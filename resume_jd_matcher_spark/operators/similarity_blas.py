@@ -24,8 +24,11 @@ the reduce side only sees k rows per (query, partition).
 
 Top-k against a cached corpus is cost-routed: a corpus within the
 probe ceiling is copied to the driver once, on first use, and every
-later request is answered there with the same kernel — no Spark job,
-no corpus re-shipped into Python, no shuffle. This is the interactive
+later request is answered and scored there with the same kernel — no
+Spark job, no corpus re-shipped into Python, no shuffle. The JVM
+sees two local relations per request, embed_query's row (which the
+operator reads back on the driver, see ``sources.io.driver_rows``)
+and the answer; nothing is collected or projected in between. This is the interactive
 ``/shortlist`` shape (one JD against a standing index), which the
 reference serves from an in-memory FAISS flat index
 (rag_model_mass.py:17-47). Uncached or larger corpora take the
@@ -52,8 +55,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from resume_jd_matcher_spark.functions.vector import faiss_score
+from resume_jd_matcher_spark.functions.vector import faiss_score, faiss_score_values
 from resume_jd_matcher_spark.plans.optimize import ensure_parallelism
+from resume_jd_matcher_spark.sources.io import driver_rows
 
 
 def _query_matrix(queries_pdf: pd.DataFrame, id_col: str, vec_col: str):
@@ -76,12 +80,13 @@ _PROBE_CHUNK = 1024
 MAX_PROBE_DRIVER_ROWS = 200_000
 
 
-def _probe_matrix(df: DataFrame, id_col: str, vec_col: str, collect: bool = False):
+def _probe_matrix(df: DataFrame, id_col: str, vec_col: str):
     """Materialize the bounded probe side on the driver as (ids, Q×d
-    matrix). ``collect`` pulls rows instead of Arrow batches: on a
-    local relation, such as embed_query's row, that runs no Spark job."""
-    sel = df.select(id_col, vec_col)
-    pdf = pd.DataFrame(sel.collect(), columns=sel.columns) if collect else sel.toPandas()
+    matrix). A frame built on the driver (``driver_frame``, such as
+    embed_query's row) is read back without a Spark call."""
+    pdf = driver_rows(df)
+    if pdf is None:
+        pdf = df.select(id_col, vec_col).toPandas()
     if len(pdf) > MAX_PROBE_DRIVER_ROWS:
         raise ValueError(
             f"probe side has {len(pdf)} rows > {MAX_PROBE_DRIVER_ROWS}; "
@@ -237,8 +242,9 @@ def topk_similarity_blas(
     nearest corpus rows by squared L2, ties broken by smallest id.
 
     A cached corpus within ``MAX_PROBE_DRIVER_ROWS`` is answered on the
-    driver from its resident copy (see ``_resident``); the result is a
-    local relation. Otherwise: per-partition partial top-k (BLAS
+    driver from its resident copy (see ``_resident``) and scored there
+    with ``faiss_score_values``; the result is a local relation.
+    Otherwise: per-partition partial top-k (BLAS
     distances) → global top-k per query. The shuffle carries ~k rows
     per (query, partition) instead of the full N×Q pair set. Probe
     matrix ships by explicit broadcast and is processed in bounded
@@ -261,15 +267,20 @@ def topk_similarity_blas(
     resident = _resident(corpus, id_col, vec_col)
     if resident is not None:
         ids, mat, norms = resident
-        qids, qmat = _probe_matrix(queries, query_id_col, query_vec_col, collect=True)
+        qids, qmat = _probe_matrix(queries, query_id_col, query_vec_col)
         ri, qi, dist = _topk_candidates(mat, qmat, k, norms)
-        top = (
-            pd.DataFrame({query_id_col: qids[qi], id_col: ids[ri], "dist": dist})
-            .sort_values([query_id_col, "dist", id_col], kind="stable")
-            .groupby(query_id_col, sort=False)
-            .head(k)
+        qid, rid = qids[qi].astype(np.int64), ids[ri].astype(np.int64)
+        order = np.lexsort((rid, dist, qid))
+        qid, rid, dist = qid[order], rid[order], dist[order]
+        # rank within each query's run of the (query, dist, id) order
+        keep = np.arange(len(qid)) - np.searchsorted(qid, qid) < k
+        top = pd.DataFrame(
+            {query_id_col: qid[keep], id_col: rid[keep], "dist": dist[keep]}
         )
-        return scored(queries.sparkSession.createDataFrame(top, out_schema))
+        top["score"] = faiss_score_values(top["dist"].to_numpy())
+        return queries.sparkSession.createDataFrame(
+            top, T.StructType(out_schema.fields + [T.StructField("score", T.DoubleType())])
+        )
 
     bc = _broadcast_probe(queries, query_id_col, query_vec_col)
 

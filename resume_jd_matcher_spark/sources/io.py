@@ -10,8 +10,12 @@ exceptions), and page re-assembly as an order-preserving aggregate.
 
 from __future__ import annotations
 
+import weakref
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -29,6 +33,27 @@ TABLES = (
 # Formats the reference accepts (utils.py:12-17); everything else was a
 # ValueError — here it routes to a quarantine bucket instead.
 SUPPORTED_FORMATS = ("pdf", "docx", "txt")
+
+
+# Driver-built local relations, per DataFrame object: the pandas frame
+# each was made from. An entry goes with its frame.
+_DRIVER_ROWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def driver_frame(spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
+    """``spark.createDataFrame(pdf, schema)``, an Arrow local relation,
+    remembering ``pdf`` so that a consumer on the driver reads the rows
+    back with ``driver_rows`` instead of collecting them. ``pdf`` must
+    not change afterwards."""
+    df = spark.createDataFrame(pdf, schema)
+    _DRIVER_ROWS[df] = pdf
+    return df
+
+
+def driver_rows(df: DataFrame) -> pd.DataFrame | None:
+    """The pandas frame ``df`` was built from by ``driver_frame``, or
+    None for any other frame (a frame derived from it included)."""
+    return _DRIVER_ROWS.get(df)
 
 
 # Opt-in shared-scan cache: one persisted DataFrame per (sf_dir,

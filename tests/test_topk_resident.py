@@ -5,12 +5,17 @@ distances precise enough to keep their (dist, id) order."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from resume_jd_matcher_spark.functions.vector import faiss_score, faiss_score_values
 from resume_jd_matcher_spark.operators import similarity_blas as sb
 from resume_jd_matcher_spark.operators.embedding import embed_documents, embed_query
+from resume_jd_matcher_spark.sources.io import driver_rows
 
 
 def _on_driver(df) -> bool:
@@ -119,3 +124,35 @@ def test_shortlist_request_runs_at_most_one_job(spark):
         assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
     finally:
         index.unpersist()
+
+
+def test_driver_score_matches_faiss_score(spark):
+    """The driver-side score equals Spark's ``faiss_score`` on distances
+    whose raw score lies on or next to every half-cent boundary in
+    (0, 10], where HALF_UP and half-even rounding part."""
+    halves = np.array([float(Decimal(10 * i + 5) / 1000) for i in range(1000)])
+    d = 10.0 / halves - 1.0
+    d = np.concatenate([d, np.nextafter(d, 0.0), np.nextafter(d, np.inf), [0.0, 1e-12, 3.0, 1e6]])
+    d = d[d >= 0.0]
+    got = (
+        spark.createDataFrame(pd.DataFrame({"i": np.arange(len(d)), "dist": d}))
+        .select("i", faiss_score(F.col("dist")).alias("score"))
+        .toPandas()
+        .sort_values("i")["score"]
+        .to_numpy()
+    )
+    assert np.array_equal(faiss_score_values(d), got)
+
+
+def test_query_row_is_read_back_on_the_driver(spark, monkeypatch):
+    """embed_query's row reaches the top-k probe side without a Spark
+    call; a frame derived from it is collected as usual."""
+    q = embed_query(spark, "a data engineer JD", dim=8)
+    pdf = driver_rows(q)
+    assert pdf is not None and list(pdf.columns) == ["query_id", "query_embedding"]
+    assert driver_rows(q.select("query_id", "query_embedding")) is None
+    want = [list(r.query_embedding) for r in q.collect()]
+    with monkeypatch.context() as m:
+        m.setattr(type(q), "select", lambda *a, **k: pytest.fail("probe side went through Spark"))
+        qids, qmat = sb._probe_matrix(q, "query_id", "query_embedding")
+    assert qids.tolist() == [0] and qmat.tolist() == want
