@@ -1,15 +1,19 @@
 """Text primitives shared by the text-analysis and dedup operators
 (SURVEY.md §2.B T6/T8, §2.H U5; north-star text-analysis/dedup ops).
 
-Everything here is a native Column expression (JVM-side); the one
-portability constraint is ``hash32`` — MinHash/SimHash need a hash
-that the DuckDB oracle can reproduce bit-for-bit, so instead of
-Spark's xxhash64 (not available in DuckDB) we take the first 8 hex
-chars of md5, which both engines expose identically.
+Everything here is a native Column expression (JVM-side) except the
+driver twins of ``hash32``; the one portability constraint is
+``hash32`` — MinHash/SimHash need a hash that the DuckDB oracle can
+reproduce bit-for-bit, so instead of Spark's xxhash64 (not available
+in DuckDB) we take the first 8 hex chars of md5, which both engines
+(and ``hashlib``) expose identically.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -61,6 +65,22 @@ def seeded_hash32(col: Column, seed: Column | int) -> Column:
     family used by MinHash signatures."""
     s = F.lit(seed) if isinstance(seed, int) else seed
     return hash32(F.concat(col, F.lit("#"), s.cast("string")))
+
+
+def hash32_values(strs) -> np.ndarray:
+    """``hash32`` on the driver, value for value, over a list of
+    strings (md5 of the UTF-8 bytes, as Spark's ``md5`` of a string):
+    an int64 array."""
+    md5 = hashlib.md5
+    digests = b"".join([md5(s.encode("utf-8")).digest() for s in strs])
+    return np.frombuffer(digests, dtype=">u4")[::4].astype(np.int64)
+
+
+def seeded_hash32_values(toks, n_seeds: int) -> np.ndarray:
+    """``seeded_hash32(tok, seed)`` on the driver for every token and
+    every seed below ``n_seeds``: an (len(toks), n_seeds) int64 matrix."""
+    strs = [f"{t}#{s}" for t in toks for s in range(n_seeds)]
+    return hash32_values(strs).reshape(len(toks), n_seeds)
 
 
 def fingerprint_md5(col: Column | str) -> Column:

@@ -66,17 +66,19 @@ def faiss_score(dist: Column) -> Column:
     return F.round(F.lit(10.0) / (F.lit(1.0) + dist), 2)
 
 
-_CENT = Decimal("0.01")
+def round_values(x: np.ndarray, places: int) -> np.ndarray:
+    """Spark's ``round(double, places)`` on the driver, value for value:
+    Spark rounds a double HALF_UP on its shortest decimal form, which
+    ``repr`` gives. For short arrays; a frame goes through ``F.round``."""
+    q = Decimal(1).scaleb(-places)
+    raw = np.asarray(x, dtype=np.float64).tolist()
+    return np.array([float(Decimal(repr(v)).quantize(q, ROUND_HALF_UP)) for v in raw], dtype=np.float64)
 
 
 def faiss_score_values(dist: np.ndarray) -> np.ndarray:
-    """``faiss_score`` on the driver, value for value: Spark rounds a
-    double HALF_UP on its shortest decimal form, which ``repr`` gives.
-    For short arrays (a top-k); a frame goes through ``faiss_score``."""
-    raw = (10.0 / (1.0 + np.asarray(dist, dtype=np.float64))).tolist()
-    return np.array(
-        [float(Decimal(repr(x)).quantize(_CENT, ROUND_HALF_UP)) for x in raw], dtype=np.float64
-    )
+    """``faiss_score`` on the driver, value for value (a top-k's
+    distances; a frame goes through ``faiss_score``)."""
+    return round_values(10.0 / (1.0 + np.asarray(dist, dtype=np.float64)), 2)
 
 
 def distance(a: Column | str, b: Column | str, metric: str = "sql2") -> Column:

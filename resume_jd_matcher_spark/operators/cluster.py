@@ -13,8 +13,12 @@ scale-path completion of V8 in SURVEY.md §2.C.
 
 Implementation: cost-routed. Small candidate graphs (the common case —
 LSH pairs are a sliver of the corpus) collapse to a driver-side
-union-find in one bounded ``take()``; large graphs run iterative
-hash-min label propagation on DataFrames —
+union-find in one bounded ``take()`` and come back as a local relation
+(``sources.io.driver_frame``), whose consumers run no Spark job. Over
+candidates that are a local relation themselves (what
+``dedup.minhash_lsh_candidates`` returns for a small batch) the
+``take()`` runs no job either. Large graphs run iterative hash-min
+label propagation on DataFrames —
 ``label(v) ← min(label(v), min over neighbours u of label(u))`` until a
 fixpoint. Each round is one shuffle join + one hash aggregate, both on
 the node id, and converges in O(graph diameter) rounds. Near-dup
@@ -38,9 +42,14 @@ Scale notes:
 from __future__ import annotations
 
 import warnings
+from collections import Counter
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from resume_jd_matcher_spark.sources.io import driver_frame
 
 
 def connected_components(
@@ -81,10 +90,17 @@ def connected_components(
     return _cc_distributed(edges, src, dst, max_iter)
 
 
+def _local_df(spark, rows, names: list[str]) -> DataFrame:
+    """Driver-resolved rows of bigint columns as a local relation: its
+    consumers run no Spark job."""
+    schema = T.StructType([T.StructField(n, T.LongType()) for n in names])
+    return driver_frame(spark, pd.DataFrame(rows, columns=names), schema)
+
+
 def _cc_local_df(spark, pairs) -> DataFrame:
     parent = _union_find(pairs)
     rows = [(n, _uf_find(parent, n)) for n in parent]
-    return spark.createDataFrame(rows, "node: bigint, cluster_rep: bigint")
+    return _local_df(spark, rows, ["node", "cluster_rep"])
 
 
 def _uf_find(parent: dict, x):
@@ -205,14 +221,13 @@ def dedup_clusters(
         # Small-graph fast path end to end: ONE materialization of the
         # candidate pairs; labels AND sizes resolve driver-side, zero
         # extra shuffles.
-        from collections import Counter
-
         parent = _union_find([(r[0], r[1]) for r in probe])
         labels = {n: _uf_find(parent, n) for n in parent}
         sizes = Counter(labels.values())
-        return candidates.sparkSession.createDataFrame(
+        return _local_df(
+            candidates.sparkSession,
             [(n, rep, sizes[rep]) for n, rep in labels.items()],
-            "doc_id: bigint, cluster_rep: bigint, cluster_size: bigint",
+            ["doc_id", "cluster_rep", "cluster_size"],
         )
     comp = _cc_distributed(candidates, src, dst, max_iter)
     sizes = comp.groupBy("cluster_rep").agg(F.count("*").alias("cluster_size"))
@@ -645,8 +660,6 @@ def k_core(
 def _k_core_local_df(spark, edges, k: int, n_rounds: int) -> DataFrame:
     """Driver-side twin of the distributed peel: identical fixed-round
     trajectory over a (bounded) deduped edge list."""
-    from collections import Counter
-
     es = list(edges)
     for _ in range(n_rounds):
         deg = Counter()
@@ -660,7 +673,7 @@ def _k_core_local_df(spark, edges, k: int, n_rounds: int) -> DataFrame:
         final[a] += 1
         final[b] += 1
     rows = [(n, d) for n, d in final.items() if d >= k]
-    return spark.createDataFrame(rows, "node: bigint, core_deg: bigint")
+    return _local_df(spark, rows, ["node", "core_deg"])
 
 
 def label_propagation_sync(
@@ -710,9 +723,7 @@ def _lpa_local_df(spark, pairs, n_iter: int) -> DataFrame:
             # max count, then min label
             new[v] = min(votes, key=lambda k: (-votes[k], k))
         lbl = new
-    return spark.createDataFrame(
-        sorted(lbl.items()), "node: bigint, community: bigint"
-    )
+    return _local_df(spark, sorted(lbl.items()), ["node", "community"])
 
 
 def _lpa_distributed(

@@ -8,11 +8,16 @@ reproducible in the DuckDB oracle — no RNG, no JVM-specific hashes.
 Scale notes:
 - exact dedup: one hash-aggregate on the fingerprint — the cheapest
   possible shuffle key (32 hex chars), map-side combined.
-- MinHash/LSH: signatures are a groupBy over (doc, seed) partials;
-  candidate generation is an equi-join on (band_id, band_sig) —
-  Catalyst hash-partitions it, so candidate volume (not corpus²)
-  drives cost. This is the textbook replacement for the O(N²)
-  Jaccard join.
+- MinHash/LSH: an input of at most ``LOCAL_MINHASH_DOCS`` documents
+  (an upload batch) resolves on the driver after one bounded fetch of
+  its Spark-tokenized distinct tokens: the same hash family, bands and
+  estimate in NumPy, returned as a local relation — the pattern of
+  ``cluster.dedup_clusters``' union-find. Above the limit, signatures
+  are a groupBy over (doc, seed) partials; candidate generation is an
+  equi-join on (band_id, band_sig) — Catalyst hash-partitions it, so
+  candidate volume (not corpus²) drives cost. This is the textbook
+  replacement for the O(N²) Jaccard join. Both routes give identical
+  rows.
 - SimHash: one groupBy per (doc, bit) then a bit-packed aggregate;
   near-dup = self-join with popcount(xor) ≤ r, bounded via banding
   on the high bits if needed.
@@ -20,21 +25,40 @@ Scale notes:
 
 from __future__ import annotations
 
+import itertools
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from resume_jd_matcher_spark.functions.text import (
     fingerprint_md5,
     seeded_hash32,
+    seeded_hash32_values,
     tokens,
 )
+from resume_jd_matcher_spark.functions.vector import round_values
 from resume_jd_matcher_spark.plans.optimize import ensure_parallelism
+from resume_jd_matcher_spark.sources.io import driver_frame
 
 # DataFrames persisted by operators in this module (MinHash signatures
 # feed three consumers, so they cache). Long-lived sessions — bench
 # loops, services — call release_persisted() after materializing a
 # result so storage memory doesn't accumulate across queries.
 _PERSISTED: list[DataFrame] = []
+
+# minhash_lsh_candidates resolves inputs of at most this many documents
+# (with an id and a text) on the driver. Sized to the driver's cost at
+# the limit: the fetch holds every document's distinct tokens (a few
+# hundred per resume: ~3M strings, some tens of MB of Arrow), the md5
+# family runs n_hashes times per distinct token (a few 10^4 tokens,
+# ~1 s), and the signatures are a 10^4 × n_hashes int64 matrix. The
+# limit counts documents, not bytes: it assumes resume-length texts.
+LOCAL_MINHASH_DOCS = 10_000
 
 
 def release_persisted() -> None:
@@ -134,12 +158,34 @@ def minhash_lsh_candidates(
     same-band pairs (id1 < id2), est_jaccard = fraction of equal
     signature components. Output: (left_id, right_id, est_jaccard).
 
-    persist=False skips the signature cache entirely: the
+    Cost-routed like ``cluster.dedup_clusters``: one bounded fetch of
+    each document's distinct tokens (Spark tokenizes, so both routes
+    hash the same tokens) doubles as the size probe. At or below
+    ``LOCAL_MINHASH_DOCS`` documents with an id and a text, the
+    signatures, bands and estimates are computed on the driver with the
+    same hash family and returned as a local relation, whose consumers
+    run no Spark job. Above it, the Spark route runs. Rows with a null
+    id or text never pair on either route, and a repeated id pools its
+    rows' tokens on both.
+
+    persist=False skips the Spark route's signature cache entirely: the
     explode→groupBy subplan is recomputed per consumer (3×), which is
     the right trade for callers on a bounded slice (e.g. a doc_id cap)
     — nothing enters the CacheManager, so there is nothing to leak or
-    to release after the query's action.
+    to release after the query's action. The driver route caches
+    nothing either way.
     """
+    # a non-null text splits into at least one token (maybe "")
+    fetched = (
+        df.where(F.col(id_col).isNotNull() & F.col(text_col).isNotNull())
+        .select(F.col(id_col), F.array_distinct(tokens(text_col)).alias("toks"))
+        .limit(LOCAL_MINHASH_DOCS + 1)
+        .toArrow()
+    )
+    if fetched.num_rows <= LOCAL_MINHASH_DOCS:
+        return _minhash_lsh_local(
+            df.sparkSession, fetched, df.schema[id_col].dataType, n_hashes, rows_per_band
+        )
     # Signatures feed three consumers (banding + both sides of the
     # estimate join); persist so the explode→groupBy runs once, not 3×.
     # Tracked in _PERSISTED for explicit release by long-lived callers.
@@ -148,6 +194,52 @@ def minhash_lsh_candidates(
         sigs = sigs.persist()
         _PERSISTED.append(sigs)
     return _minhash_lsh_from_sigs(sigs, rows_per_band, id_col)
+
+
+def _minhash_lsh_local(
+    spark, fetched: pa.Table, id_type: T.DataType, n_hashes: int, rows_per_band: int
+) -> DataFrame:
+    """The Spark route on the driver over fetched (id, distinct tokens)
+    rows: each distinct batch token is hashed once per seed, a
+    signature is the min over its document's token rows, band keys are
+    a dict over each band's values, and est_jaccard rounds equal/n
+    HALF_UP to 4 places as Spark's ``round`` does."""
+    ids, doc_of_row = np.unique(
+        fetched.column(0).to_numpy(zero_copy_only=False), return_inverse=True
+    )
+    toks = fetched.column(1).combine_chunks()
+    enc = pc.dictionary_encode(toks.flatten())
+    hv = seeded_hash32_values(enc.dictionary.to_pylist(), n_hashes)
+    lens = pc.list_value_length(toks).to_numpy()
+    row_sig = np.minimum.reduceat(
+        hv[enc.indices.to_numpy()], np.cumsum(lens) - lens, axis=0
+    )
+    # a repeated id pools its rows' tokens, as the Spark route's groupBy
+    sig = np.full((len(ids), n_hashes), np.iinfo(np.int64).max)
+    np.minimum.at(sig, doc_of_row.reshape(-1), row_sig)
+
+    # ids are sorted, so index order is id order: i < j ⇔ id_i < id_j
+    pairs: set = set()
+    for lo in range(0, n_hashes, rows_per_band):
+        buckets: dict = {}
+        for i, key in enumerate(map(tuple, sig[:, lo : lo + rows_per_band].tolist())):
+            buckets.setdefault(key, []).append(i)
+        for members in buckets.values():
+            pairs.update(itertools.combinations(members, 2))
+    p = np.array(sorted(pairs), dtype=np.int64).reshape(-1, 2)
+    n_equal = (sig[p[:, 0]] == sig[p[:, 1]]).sum(axis=1)
+    est_of = round_values(np.arange(n_hashes + 1) / n_hashes, 4)
+    pdf = pd.DataFrame(
+        {"left_id": ids[p[:, 0]], "right_id": ids[p[:, 1]], "est_jaccard": est_of[n_equal]}
+    )
+    schema = T.StructType(
+        [
+            T.StructField("left_id", id_type),
+            T.StructField("right_id", id_type),
+            T.StructField("est_jaccard", T.DoubleType()),
+        ]
+    )
+    return driver_frame(spark, pdf, schema)
 
 
 def minhash_lsh_candidates_from_tokens(

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TABLES = (
     "region",
@@ -44,8 +45,15 @@ def driver_frame(spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType) -
     """``spark.createDataFrame(pdf, schema)``, an Arrow local relation,
     remembering ``pdf`` so that a consumer on the driver reads the rows
     back with ``driver_rows`` instead of collecting them. ``pdf`` must
-    not change afterwards."""
-    df = spark.createDataFrame(pdf, schema)
+    not change afterwards.
+
+    An empty ``pdf`` is built from an empty Arrow table: PySpark sends
+    an empty pandas frame down its non-Arrow path, an RDD whose
+    ``collect`` runs a Spark job."""
+    if pdf.empty:
+        df = spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+    else:
+        df = spark.createDataFrame(pdf, schema)
     _DRIVER_ROWS[df] = pdf
     return df
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -20,6 +21,27 @@ def spark():
 
     spark = get_spark("tests")
     yield spark
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns ``(result, number of
+    Spark jobs it ran)``."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(fn):
+        group = f"count-jobs-{next(groups)}"
+        sc.setJobGroup(group, "counted call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

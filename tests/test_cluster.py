@@ -63,9 +63,12 @@ def test_cc_direction_invariant(spark):
     }
 
 
-def test_dedup_clusters_sizes(spark):
+def test_dedup_clusters_sizes(spark, count_jobs):
     e = _edges(spark, [(1, 2), (2, 3), (10, 11)])
-    rows = dedup_clusters(e).collect()
+    # the small path answers with a local relation: collecting it runs
+    # no Spark job
+    rows, jobs = count_jobs(dedup_clusters(e).collect)
+    assert jobs == 0
     by_doc = {r["doc_id"]: (r["cluster_rep"], r["cluster_size"]) for r in rows}
     assert by_doc == {
         1: (1, 3), 2: (1, 3), 3: (1, 3),

@@ -7,17 +7,19 @@ import pytest
 from resume_jd_matcher_spark.operators import dedup
 
 
+_BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
+_NEAR = _BASE.replace("today", "tomorrow")
+_FAR = "completely different content about spark sql engines and parquet files"
+
+
 @pytest.fixture(scope="module")
 def crafted(spark):
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    near = base.replace("today", "tomorrow")
-    far = "completely different content about spark sql engines and parquet files"
     rows = [
-        (1, base),
-        (2, base),                      # exact dup of 1
+        (1, _BASE),
+        (2, _BASE),                     # exact dup of 1
         (3, "  THE  quick brown fox jumps over the lazy dog near the river bank today "),  # normalized dup
-        (4, near),                      # near-dup of 1
-        (5, far),
+        (4, _NEAR),                     # near-dup of 1
+        (5, _FAR),
     ]
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
@@ -38,6 +40,109 @@ def test_minhash_estimates_near_dup_high(crafted):
     # near-dup pair should be surfaced as a candidate with high estimate
     assert (1, 4) in got and got[(1, 4)] >= 0.5
     assert (1, 5) not in got
+
+
+# Crafted inputs for the two MinHash-LSH routes: (doc_id, text) rows.
+ROUTE_CASES = {
+    "null_text": [(1, _BASE), (2, None), (3, _BASE), (4, _NEAR)],
+    "empty_and_whitespace": [(1, ""), (2, "   "), (3, "\t\n"), (4, _BASE), (5, _NEAR)],
+    # the Spark route pools a repeated id's tokens in its groupBy
+    "repeated_doc_id": [(1, _BASE), (1, _FAR), (2, _BASE), (3, _FAR), (4, _BASE + " " + _FAR)],
+    "null_doc_id": [(None, _BASE), (1, _BASE), (2, _NEAR), (None, _FAR)],
+    "one_document": [(1, _BASE)],
+    "no_candidate_pairs": [(1, _BASE), (2, _FAR), (3, "entirely unrelated words live here")],
+    "non_ascii": [
+        (1, "Größe straße café naïve 日本語 テキスト ü ß"),
+        (2, "GRÖSSE Straße CAFÉ naïve 日本語 テキスト ü ß"),
+        (3, "Größe straße café naïve 日本語 テキスト"),
+        (4, _BASE),
+    ],
+}
+
+
+@pytest.mark.parametrize("case", sorted(ROUTE_CASES))
+@pytest.mark.parametrize("n_hashes,rows_per_band", [(16, 4), (7, 3)])
+def test_minhash_driver_route_equals_spark_route(spark, monkeypatch, case, n_hashes, rows_per_band):
+    """Both routes give identical rows, est_jaccard included, and the
+    same schema: below the size limit the driver route runs and answers
+    with a local relation; a limit of 0 forces the Spark route."""
+    df = spark.createDataFrame(ROUTE_CASES[case], "doc_id bigint, text string")
+    kw = dict(n_hashes=n_hashes, rows_per_band=rows_per_band)
+    local = dedup.minhash_lsh_candidates(df, **kw)
+    assert local._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+    monkeypatch.setattr(dedup, "LOCAL_MINHASH_DOCS", 0)
+    distributed = dedup.minhash_lsh_candidates(df, **kw)
+    try:
+        driver = sorted(tuple(r) for r in local.collect())
+        assert driver == sorted(tuple(r) for r in distributed.collect())
+        assert local.schema == distributed.schema
+    finally:
+        dedup.release_persisted()
+    if case in ("one_document", "no_candidate_pairs"):
+        assert driver == []
+    if case == "repeated_doc_id":
+        assert (1, 4, 1.0) in driver  # id 1 pools both its texts: doc 4
+
+
+def test_hash32_driver_twin_equals_spark(spark):
+    """The driver's hash32 and seeded hash family equal Spark's on
+    every distinct token of the route cases, non-ASCII ones included."""
+    from pyspark.sql import functions as F
+
+    from resume_jd_matcher_spark.functions.text import (
+        hash32,
+        hash32_values,
+        seeded_hash32,
+        seeded_hash32_values,
+        tokens,
+    )
+
+    rows = [r for case in ROUTE_CASES.values() for r in case]
+    toks = (
+        spark.createDataFrame(rows, "doc_id bigint, text string")
+        .select(F.explode(tokens("text")).alias("tok"))
+        .distinct()
+        .select(
+            "tok",
+            hash32(F.col("tok")).alias("h"),
+            F.array(*[seeded_hash32(F.col("tok"), s) for s in range(16)]).alias("hs"),
+        )
+        .collect()
+    )
+    assert any(not r.tok.isascii() for r in toks) and any(r.tok == "" for r in toks)
+    words = [r.tok for r in toks]
+    assert hash32_values(words).tolist() == [r.h for r in toks]
+    assert seeded_hash32_values(words, 16).tolist() == [list(r.hs) for r in toks]
+
+
+def test_minhash_then_clusters_run_at_most_one_job(spark, count_jobs):
+    """Over a persisted, materialized batch, MinHash-LSH candidates
+    plus their clusters run at most one Spark job: the token fetch."""
+    from pyspark.sql import functions as F
+
+    from resume_jd_matcher_spark.operators.cluster import dedup_clusters
+
+    def text(i):  # documents share no word but "resume"
+        return "resume " + " ".join(f"w{i * 31 + j}" for j in range(20))
+
+    docs = [(i, text(i)) for i in range(300)]
+    docs += [(1000 + i, text(i) + " edited") for i in range(0, 300, 10)]
+    batch = spark.createDataFrame(docs, "doc_id bigint, text string").persist()
+    batch.count()
+    try:
+
+        def resolve():
+            kept = dedup.minhash_lsh_candidates(batch).filter(F.col("est_jaccard") >= 0.5)
+            return dedup_clusters(kept).collect()
+
+        resolve()  # warm
+        rows, jobs = count_jobs(resolve)
+        assert jobs <= 1
+        assert sorted((r.doc_id, r.cluster_rep, r.cluster_size) for r in rows) == sorted(
+            (d, i, 2) for i in range(0, 300, 10) for d in (i, 1000 + i)
+        )
+    finally:
+        batch.unpersist()
 
 
 def test_simhash_identical_docs_equal(crafted):

@@ -4,8 +4,13 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
+import pytest
+from pyspark.sql import types as T
+
 from resume_jd_matcher_spark.sources.io import (
     concat_pages,
+    driver_frame,
     format_dispatch,
     scan_binary_files,
     scan_text_files,
@@ -279,3 +284,19 @@ def test_scan_cache_repartition_preserves_results(spark):
     finally:
         src_io.enable_scan_cache(False)  # clears the cache
     assert warm == cold
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_driver_frame_collect_runs_no_job(spark, count_jobs, n):
+    """A driver-built frame is a local relation whatever its size: its
+    collect runs no Spark job, the empty frame included (PySpark builds
+    an empty pandas frame as an RDD)."""
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    pdf = pd.DataFrame({"doc_id": list(range(n)), "text": ["resume"] * n})
+    df = driver_frame(spark, pdf, schema)
+    rows, jobs = count_jobs(df.collect)
+    assert df.schema == schema
+    assert [tuple(r) for r in rows] == [(i, "resume") for i in range(n)]
+    assert jobs == 0

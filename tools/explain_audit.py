@@ -17,8 +17,11 @@ SF = "/root/testdata/sf0.001"
 # query -> what the plan must show (the audit claim)
 HEADLINERS = {
     "topk_similarity": "broadcast query side; corpus streams; no pair sort",
-    "minhash_lsh": "candidates from (band_id, band_sig) equi-join, no crossJoin",
-    "dedup_clusters": "small-graph route: one bounded take, driver union-find",
+    "minhash_lsh": "at or below LOCAL_MINHASH_DOCS documents the driver "
+    "route: one bounded token fetch, the result a LocalTableScan; above "
+    "it, candidates from the (band_id, band_sig) equi-join, no crossJoin",
+    "dedup_clusters": "small-graph route: one bounded take (no job over "
+    "local candidates), driver union-find, a local relation out",
     "winnow_fingerprint": "two Window nodes, ONE per-doc sort, no Python",
     "scoring_e2e": "two Arrow-batched Python stages (chunker, LLM), joins native",
     "media_ihdr_histogram": "fixed-offset big-endian IHDR parse as a narrow "
@@ -232,9 +235,9 @@ HEADLINERS = {
     "moments, exact integers); rank window and step-up max over "
     "|nations| rows only",
     # -- round 9 batch 2: maintenance / graph / sketch ops --
-    "cross_source_leakage": "the dedup family's banded equi-join "
-    "candidates + doc-keyed source joins; |sources|^2-bounded matrix "
-    "agg",
+    "cross_source_leakage": "the dedup family's banded candidates (a "
+    "LocalTableScan on the driver route) + doc-keyed source joins; "
+    "|sources|^2-bounded matrix agg",
     # -- round 11, structure family --
     "label_propagation": "banded LSH candidates, then the cost-routed "
     "trajectory: bounded take() routes small graphs to the driver "
