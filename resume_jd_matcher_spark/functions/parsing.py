@@ -169,32 +169,41 @@ def parse_scores(
     Duplicate section lines keep the LAST occurrence (dict-comprehension
     semantics in the reference).
 
+    Each response is parsed inside its own row with array functions and
+    only then exploded: the input is read once, with no aggregate or
+    join, so an upstream LLM call runs once per document and a
+    document's validity and scores come from the same response.
+
     Output: (id, section, score INT) for valid documents only.
     """
     body = F.regexp_extract(F.col(resp_col), r"(?s)SCORES:\s*(.*)", 1)
-    lines = responses.select(
+    lines = F.filter(
+        F.split(_strip(body), _LINE_BREAKS), lambda line: line.contains(":")
+    )
+    parsed = responses.select(
         F.col(id_col),
-        F.posexplode(F.split(_strip(body), _LINE_BREAKS)).alias("pos", "line"),
-    ).filter(F.col("line").contains(":"))
-    parsed = lines.select(
-        id_col,
-        "pos",
-        _strip(F.element_at(F.split(F.col("line"), ":", 2), 1)).alias("section"),
-        _strip(F.element_at(F.split(F.col("line"), ":", 2), 2))
-        .try_cast("int")
-        .alias("score"),
+        F.transform(
+            lines,
+            lambda line: F.struct(
+                _strip(F.element_at(F.split(line, ":", 2), 1)).alias("section"),
+                _strip(F.element_at(F.split(line, ":", 2), 2))
+                .try_cast("int")
+                .alias("score"),
+            ),
+        ).alias("parsed"),
     )
-    validity = parsed.groupBy(id_col).agg(
-        (F.count(F.when(F.col("score").isNull(), 1)) == 0).alias("all_ok")
-    )
-    # keep-last per (doc, section) = max line position wins
-    last = parsed.groupBy(id_col, "section").agg(
-        F.max(F.struct("pos", "score")).alias("best")
+    # keep-last per section = no later entry names the same section
+    kept = F.filter(
+        "parsed",
+        lambda e, i: ~F.exists(
+            F.slice("parsed", i + 2, F.size("parsed")),
+            lambda later: later["section"] == e["section"],
+        ),
     )
     return (
-        last.join(validity, id_col)
-        .filter(F.col("all_ok"))
-        .select(id_col, "section", F.col("best.score").alias("score"))
+        parsed.filter(F.forall("parsed", lambda e: e["score"].isNotNull()))
+        .select(F.col(id_col), F.explode(kept).alias("e"))
+        .select(id_col, "e.section", "e.score")
     )
 
 

@@ -11,32 +11,28 @@ The reference deduplicates nothing (every upload re-embeds everything,
 ``/root/reference/app.py:145-157``); this operator is the [EXT]
 scale-path completion of V8 in SURVEY.md §2.C.
 
-Implementation: cost-routed. Small candidate graphs (the common case —
-LSH pairs are a sliver of the corpus) collapse to a driver-side
-union-find in one bounded ``take()`` and come back as a local relation
-(``sources.io.driver_frame``), whose consumers run no Spark job. Over
-candidates that are a local relation themselves (what
-``dedup.minhash_lsh_candidates`` returns for a small batch) the
-``take()`` runs no job either. Large graphs run iterative hash-min
-label propagation on DataFrames —
-``label(v) ← min(label(v), min over neighbours u of label(u))`` until a
-fixpoint. Each round is one shuffle join + one hash aggregate, both on
-the node id, and converges in O(graph diameter) rounds. Near-dup
-graphs are dense blobs with tiny diameters (duplicates of the same
-underlying document), so 3-5 rounds is typical; ``max_iter`` bounds
-pathological chains. For adversarial long-chain graphs at extreme
-scale, the two-phase large-star/small-star variant (Kiveris et al.,
-"Connected Components in MapReduce and Beyond") halves the round count;
-the per-round dataflow below is identical, so it is a drop-in upgrade.
+Implementation: cost-routed. A graph of at most ``LOCAL_GRAPH_EDGES``
+edges (the common case — LSH pairs are a sliver of the corpus)
+collapses to a driver-side union-find in one bounded ``take()`` and
+comes back as a local relation (``sources.io.driver_frame``), whose
+consumers run no Spark job. Over candidates that are a local relation
+themselves (what ``dedup.minhash_lsh_candidates`` returns for a small
+batch) the ``take()`` runs no job either. Larger graphs run the
+large-star/small-star alternation (Kiveris et al., "Connected
+Components in MapReduce and Beyond"): O(log² n) rounds regardless of
+graph diameter, so long chains of borderline matches converge as fast
+as dense near-dup blobs. ``max_iter`` bounds the rounds; a run that
+hits it warns instead of returning silently-wrong labels.
 
 Scale notes:
 - ``localCheckpoint(eager=True)`` after every round truncates lineage —
   without it the plan doubles per iteration and Catalyst analysis time
   explodes long before data size matters.
-- The edge list is persisted once and reused every round (it is the
-  join probe side each time).
-- The convergence check is a single ``limit(1).count()`` over the
-  changed-label rows — it short-circuits, no full materialization.
+- Each round is pure agg+join dataflow: no neighbourhood
+  ``collect_list``, so a hub node never materializes its adjacency in
+  one task.
+- The convergence check is one scalar aggregate per round: the edge
+  count and an order-independent hash of the edge set.
 """
 
 from __future__ import annotations
@@ -51,13 +47,31 @@ from pyspark.sql import types as T
 
 from resume_jd_matcher_spark.sources.io import driver_frame
 
+# Graphs of at most this many edges resolve on the driver, for every
+# operator here that routes by size. The bound is sized to the real
+# driver cost: take() yields Python Row objects (~100+ bytes each, not
+# 16 raw bytes of two longs) and the driver builds dicts over both
+# endpoints — ~100 MB of driver heap at the limit. Raise it only with
+# driver memory to spare.
+LOCAL_GRAPH_EDGES = 100_000
+
+
+def _small_edge_list(edges: DataFrame) -> list[tuple] | None:
+    """The first two columns of ``edges`` as driver tuples when it has
+    at most ``LOCAL_GRAPH_EDGES`` rows, else None. The bounded take()
+    both sizes and fetches: at most one row over the limit transits the
+    driver, and a small graph is materialized exactly once."""
+    probe = edges.take(LOCAL_GRAPH_EDGES + 1)
+    if len(probe) > LOCAL_GRAPH_EDGES:
+        return None
+    return [(r[0], r[1]) for r in probe]
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "left_id",
     dst: str = "right_id",
-    max_iter: int = 20,
-    local_threshold: int = 100_000,
+    max_iter: int = 30,
 ) -> DataFrame:
     """Resolve an undirected edge list into components.
 
@@ -66,28 +80,15 @@ def connected_components(
     the deterministic canonical representative.
 
     Cost-based routing (same philosophy as
-    ``plans/optimize.choose_similarity_strategy``): the edge list after
-    LSH candidate generation is usually a small fraction of the corpus
-    — when it fits comfortably on the driver (≤ ``local_threshold``
-    edges), a driver-side union-find resolves it in one pass instead
-    of O(diameter) distributed rounds, each of which costs a shuffle
-    join + checkpoint. Above the threshold the distributed hash-min
-    loop runs; both paths produce identical labels. Routing uses a
-    bounded ``take()`` that doubles as the fetch, so the small path
-    materializes the edge list exactly once.
-
-    The 100k default is sized to the real driver cost: take() yields
-    Python Row objects (~100+ bytes each, not 16 raw bytes of two
-    longs) and union-find builds dicts over both endpoints — ~100 MB
-    of driver heap at the threshold. Raise it only with driver memory
-    to spare.
+    ``plans/optimize.choose_similarity_strategy``): a graph of at most
+    ``LOCAL_GRAPH_EDGES`` edges resolves with a driver-side union-find
+    in one pass; a larger one runs the large-star/small-star loop for
+    at most ``max_iter`` rounds. Both routes produce identical labels.
     """
-    # take() both sizes AND fetches in one materialization: at most
-    # threshold+1 Row objects transit the driver.
-    probe = edges.select(src, dst).take(local_threshold + 1)
-    if len(probe) <= local_threshold:
-        return _cc_local_df(edges.sparkSession, [(r[0], r[1]) for r in probe])
-    return _cc_distributed(edges, src, dst, max_iter)
+    pairs = _small_edge_list(edges.select(src, dst))
+    if pairs is not None:
+        return _cc_local_df(edges.sparkSession, pairs)
+    return _cc_star(edges, src, dst, max_iter)
 
 
 def _local_df(spark, rows, names: list[str]) -> DataFrame:
@@ -114,7 +115,7 @@ def _uf_find(parent: dict, x):
 
 def _union_find(pairs) -> dict:
     """Driver-side union-find over an edge list (small-graph fast
-    path; bounded by ``local_threshold`` rows of two longs)."""
+    path; bounded by ``LOCAL_GRAPH_EDGES`` rows of two longs)."""
     parent: dict = {}
 
     for a, b in pairs:
@@ -129,12 +130,25 @@ def _union_find(pairs) -> dict:
     return parent
 
 
-def _cc_distributed(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
+def _cc_star(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
+    """Large-star/small-star connected components (Kiveris et al. 2014):
+    alternating rounds contract the graph toward per-component stars in
+    O(log² n) rounds regardless of diameter.
+
+    - large-star: m(u) = min(Γ(u) ∪ {u}) via a map-side-combined min
+      agg; every neighbor v > u re-links to m(u) (join back on u).
+    - small-star: edges canonicalized (hi, lo); m(hi) = min over its
+      smaller neighbors; hi and every other small neighbor re-link
+      to m(hi).
+
+    Convergence = the edge set's count and order-independent hash are
+    stable across a round; the final star edges give each node its
+    component minimum directly. Output: (node, cluster_rep).
+    """
     # symmetrize via ONE explode, not union(edges, swap(edges)) — the
-    # union evaluates the (possibly expensive) upstream candidate-pair
-    # subplan twice (same fix as connected_components_star, r12)
+    # union spelling evaluates the (possibly expensive) upstream edge
+    # subplan twice; a candidate-pair producer like minhash LSH was
+    # the whole front half of the distributed clustering runtime (r12)
     sym = (
         edges.select(
             F.explode(
@@ -146,82 +160,120 @@ def _cc_distributed(
         )
         .select(F.col("_e.a").alias("a"), F.col("_e.b").alias("b"))
         .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
+    # every endpoint, self-loops included (a node whose only edge is to
+    # itself is its own component, as on the union-find route); consumed
+    # once, at the very end, off the sym checkpoint
+    all_nodes = sym.select(F.col("a").alias("node")).distinct()
+
+    def edge_checksum(e: DataFrame) -> tuple[int, int]:
+        row = e.agg(
+            F.count("*").alias("n"),
+            # bit_xor: order-independent and overflow-free under ANSI
+            F.coalesce(F.expr("bit_xor(xxhash64(lo, hi))"), F.lit(0)).alias("h"),
+        ).collect()[0]
+        return (row["n"], row["h"])
+
+    # canonical undirected edges (lo < hi): sym is symmetric and
+    # distinct, so one orientation of it is exactly that set
+    cur = sym.filter(F.col("a") < F.col("b")).select(
+        F.col("a").alias("lo"), F.col("b").alias("hi")
+    )
+    prev_sum = edge_checksum(cur)
     converged = False
-    try:
-        for _ in range(max_iter):
-            nbr_min = (
-                sym.join(
-                    labels.select(
-                        F.col("node").alias("b"), F.col("label").alias("nbr_label")
-                    ),
-                    "b",
-                )
-                .groupBy("a")
-                .agg(F.min("nbr_label").alias("nbr_label"))
-            )
-            nxt = (
-                labels.join(nbr_min, labels["node"] == nbr_min["a"], "left")
-                .select(
-                    "node",
-                    F.col("label").alias("old_label"),
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                    ).alias("label"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                nxt.filter(F.col("label") != F.col("old_label")).limit(1).count()
-            )
-            labels = nxt.select("node", "label")
-            if changed == 0:
-                converged = True
-                break
-    finally:
-        sym.unpersist()
-    if not converged:
-        # A graph with diameter > max_iter exits here with labels that
-        # are NOT transitive (two nodes of one component can still
-        # carry different reps). Near-dup blobs converge in a handful
-        # of rounds, so this signals a pathological chain — surface it
-        # instead of returning silently-wrong clusters.
-        warnings.warn(
-            f"connected_components: hash-min did not converge within "
-            f"max_iter={max_iter} rounds; labels may be non-transitive. "
-            "Raise max_iter or switch to the large-star/small-star variant.",
-            RuntimeWarning,
-            stacklevel=2,
+    # Measured dead end (r11, following the r10 verdict's suggestion):
+    # coalescing each round's checkpointed edge frame to its measured
+    # edge count (coalesce(1) at these graph sizes) SLOWED the kernel
+    # 3.6 -> 5.2 s at sf0.1 — the narrow coalesce folds the round's
+    # distinct/join reduce work into one task, which costs more than
+    # the 32-task stage latency it saves. The 32-partition layout
+    # stays.
+    for _ in range(max_iter):
+        both = cur.select(F.col("lo").alias("a"), F.col("hi").alias("b")).union(
+            cur.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
         )
-    return labels.select("node", F.col("label").alias("cluster_rep"))
+        # -- large-star --
+        mins = (
+            both.groupBy("a")
+            .agg(F.min("b").alias("_mb"))
+            .select("a", F.least("_mb", F.col("a")).alias("m"))
+        )
+        # no distinct here (r12): duplicate large-star edges are
+        # absorbed by the min agg below and by ss's final distinct —
+        # dropping it saves one shuffle per round (the duplicate
+        # multiplicity is bounded by node degree, and the join fans
+        # the SAME (lo, hi) pairs, never new ones)
+        ls = (
+            both.join(mins, "a")
+            .filter(F.col("b") > F.col("a"))
+            .select(
+                F.least("b", "m").alias("lo"), F.greatest("b", "m").alias("hi")
+            )
+            .filter(F.col("lo") != F.col("hi"))
+        )
+        # -- small-star over the large-star output --
+        smins = ls.groupBy("hi").agg(F.min("lo").alias("m"))
+        ss = (
+            ls.join(smins, "hi")
+            .select(F.col("lo").alias("v"), F.col("m"))
+            .union(smins.select(F.col("hi").alias("v"), F.col("m")))
+            .filter(F.col("v") != F.col("m"))
+            .select(
+                F.least("v", "m").alias("lo"), F.greatest("v", "m").alias("hi")
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        cur = ss
+        cur_sum = edge_checksum(cur)
+        if cur_sum == prev_sum:
+            converged = True
+            break
+        prev_sum = cur_sum
+    if not converged:
+        # The hi->lo member mapping below is only a valid labeling at
+        # the star fixpoint — exiting via the range bound means the
+        # labels may be WRONG, not just approximate.
+        warnings.warn(
+            f"connected components: large-star/small-star did not reach "
+            f"the star fixpoint in max_iter={max_iter} rounds; labels may "
+            f"be incorrect — raise max_iter",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    # final stars: every edge is (rep, node); nodes absent from any
+    # edge (reps themselves / isolated after contraction) label self.
+    member = cur.select(F.col("hi").alias("node"), F.col("lo").alias("rep"))
+    return (
+        all_nodes.join(member, "node", "left")
+        .select(
+            "node",
+            F.coalesce("rep", F.col("node")).alias("cluster_rep"),
+        )
+    )
 
 
 def dedup_clusters(
     candidates: DataFrame,
     src: str = "left_id",
     dst: str = "right_id",
-    max_iter: int = 20,
+    max_iter: int = 30,
 ) -> DataFrame:
     """Candidate pairs → per-document cluster assignment with sizes.
 
     Output: ``(doc_id, cluster_rep, cluster_size)`` for every document
     that appears in at least one candidate pair. Downstream keep/drop
     policy is then a trivial filter (``doc_id = cluster_rep`` keeps one
-    representative per near-dup cluster).
+    representative per near-dup cluster). Routed like
+    ``connected_components``.
     """
-    probe = candidates.select(src, dst).take(100_001)
-    if len(probe) <= 100_000:
+    pairs = _small_edge_list(candidates.select(src, dst))
+    if pairs is not None:
         # Small-graph fast path end to end: ONE materialization of the
         # candidate pairs; labels AND sizes resolve driver-side, zero
         # extra shuffles.
-        parent = _union_find([(r[0], r[1]) for r in probe])
+        parent = _union_find(pairs)
         labels = {n: _uf_find(parent, n) for n in parent}
         sizes = Counter(labels.values())
         return _local_df(
@@ -229,7 +281,7 @@ def dedup_clusters(
             [(n, rep, sizes[rep]) for n, rep in labels.items()],
             ["doc_id", "cluster_rep", "cluster_size"],
         )
-    comp = _cc_distributed(candidates, src, dst, max_iter)
+    comp = _cc_star(candidates, src, dst, max_iter)
     sizes = comp.groupBy("cluster_rep").agg(F.count("*").alias("cluster_size"))
     return (
         comp.join(sizes, "cluster_rep")
@@ -273,7 +325,7 @@ def pagerank(
     # Materialize the edge list ONCE: it feeds deg + every iteration
     # (n_iter+1 consumers), and upstream edge derivations (e.g. the
     # full MinHash pipeline) must not re-run per round — same
-    # checkpoint discipline as the label-propagation loop above.
+    # checkpoint discipline as the connected-components loop above.
     edges = edges.localCheckpoint()
     n = nodes.count()  # bounded scalar: the node count
     base = (1.0 - damping) / n
@@ -380,147 +432,6 @@ def triangle_stats(
     return out
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "left_id",
-    dst: str = "right_id",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond") — the
-    diameter-robust alternative the hash-min loop's non-convergence
-    warning points at: alternating rounds contract the graph toward
-    per-component stars in O(log² n) rounds REGARDLESS of diameter,
-    where hash-min needs O(diameter) rounds and dies on long chains.
-
-    Both phases are pure agg+join dataflow (no neighborhood
-    collect_list, so a hub node never materializes its adjacency in
-    one task):
-
-    - large-star: m(u) = min(Γ(u) ∪ {u}) via a map-side-combined min
-      agg; every neighbor v > u re-links to m(u) (join back on u).
-    - small-star: edges canonicalized (hi, lo); m(hi) = min over its
-      smaller neighbors; hi and every other small neighbor re-link
-      to m(hi).
-
-    Convergence = the edge multiset's order-independent hash sum is
-    stable across a round (one scalar agg per round); the final star
-    edges give each node its component minimum directly. Output:
-    (node, cluster_rep), identical labels to ``connected_components``.
-    """
-    # symmetrize via ONE explode, not union(edges, swap(edges)) — the
-    # union spelling evaluates the (possibly expensive) upstream edge
-    # subplan twice; a candidate-pair producer like minhash LSH was
-    # the whole front half of dedup_clusters_star's runtime (r12)
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select(F.col("_e.a").alias("a"), F.col("_e.b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # consumed once, at the very end, off the sym checkpoint — no
-    # eager materialization job of its own
-    all_nodes = sym.select(F.col("a").alias("node")).distinct()
-
-    def edge_checksum(e: DataFrame) -> int:
-        row = e.agg(
-            F.count("*").alias("n"),
-            # bit_xor: order-independent and overflow-free under ANSI
-            F.coalesce(F.expr("bit_xor(xxhash64(lo, hi))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    # work on canonical undirected edges (lo < hi)
-    cur = (
-        sym.select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = edge_checksum(cur)
-    converged = False
-    # Measured dead end (r11, following the r10 verdict's suggestion):
-    # coalescing each round's checkpointed edge frame to its measured
-    # edge count (coalesce(1) at these graph sizes) SLOWED the kernel
-    # 3.6 -> 5.2 s at sf0.1 — the narrow coalesce folds the round's
-    # distinct/join reduce work into one task, which costs more than
-    # the 32-task stage latency it saves. The 32-partition layout
-    # stays.
-    for _ in range(max_iter):
-        both = cur.select(F.col("lo").alias("a"), F.col("hi").alias("b")).union(
-            cur.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-        )
-        # -- large-star --
-        mins = (
-            both.groupBy("a")
-            .agg(F.min("b").alias("_mb"))
-            .select("a", F.least("_mb", F.col("a")).alias("m"))
-        )
-        # no distinct here (r12): duplicate large-star edges are
-        # absorbed by the min agg below and by ss's final distinct —
-        # dropping it saves one shuffle per round (the duplicate
-        # multiplicity is bounded by node degree, and the join fans
-        # the SAME (lo, hi) pairs, never new ones)
-        ls = (
-            both.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(
-                F.least("b", "m").alias("lo"), F.greatest("b", "m").alias("hi")
-            )
-            .filter(F.col("lo") != F.col("hi"))
-        )
-        # -- small-star over the large-star output --
-        smins = ls.groupBy("hi").agg(F.min("lo").alias("m"))
-        ss = (
-            ls.join(smins, "hi")
-            .select(F.col("lo").alias("v"), F.col("m"))
-            .union(smins.select(F.col("hi").alias("v"), F.col("m")))
-            .filter(F.col("v") != F.col("m"))
-            .select(
-                F.least("v", "m").alias("lo"), F.greatest("v", "m").alias("hi")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = ss
-        cur_sum = edge_checksum(cur)
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # The hi->lo member mapping below is only a valid labeling at
-        # the star fixpoint — exiting via the range bound means the
-        # labels may be WRONG, not just approximate. Mirror the
-        # hash-min sibling's non-convergence warning.
-        warnings.warn(
-            f"connected_components_star did not reach the star fixpoint "
-            f"in max_iter={max_iter} rounds; labels may be incorrect — "
-            f"raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # final stars: every edge is (rep, node); nodes absent from any
-    # edge (reps themselves / isolated after contraction) label self.
-    member = cur.select(F.col("hi").alias("node"), F.col("lo").alias("rep"))
-    return (
-        all_nodes.join(member, "node", "left")
-        .select(
-            "node",
-            F.coalesce("rep", F.col("node")).alias("cluster_rep"),
-        )
-    )
-
-
 def local_clustering(
     pairs: DataFrame, left: str = "left_id", right: str = "right_id"
 ) -> DataFrame:
@@ -593,7 +504,6 @@ def k_core(
     n_rounds: int = 6,
     left: str = "left_id",
     right: str = "right_id",
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Fixed-round k-core peel of an undirected (left < right) edge
     graph: repeatedly drop nodes with degree < k and the edges
@@ -618,11 +528,10 @@ def k_core(
     a small fraction of the corpus, and each distributed peel round
     costs a checkpointed shuffle + two semi-joins of pure latency.
     When the deduped edge list fits on the driver (bounded take, ≤
-    ``local_threshold`` edges — same sizing rationale as
-    ``connected_components``) the identical fixed-round peel runs in
+    ``LOCAL_GRAPH_EDGES`` edges) the identical fixed-round peel runs in
     one Python pass — exact integer degree counts, same edge-drop
     rule, same final filter, so the trajectory and output are
-    bit-identical to the distributed loop. Above the threshold the
+    bit-identical to the distributed loop. Above the bound the
     per-round loop runs unchanged.
     """
     dedup_e = (
@@ -630,11 +539,9 @@ def k_core(
         .filter(F.col("a") < F.col("b"))
         .distinct()
     )
-    probe = dedup_e.take(local_threshold + 1)
-    if len(probe) <= local_threshold:
-        return _k_core_local_df(
-            pairs.sparkSession, [(r[0], r[1]) for r in probe], k, n_rounds
-        )
+    small = _small_edge_list(dedup_e)
+    if small is not None:
+        return _k_core_local_df(pairs.sparkSession, small, k, n_rounds)
     e = dedup_e.localCheckpoint()
     for _ in range(n_rounds):
         deg = (
@@ -681,7 +588,6 @@ def label_propagation_sync(
     n_iter: int = 4,
     src: str = "a",
     dst: str = "b",
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan et al.
     2007) over a SYMMETRIZED edge list: every node starts as its own
@@ -694,17 +600,15 @@ def label_propagation_sync(
 
     Cost-based routing, same philosophy as ``connected_components``:
     a bounded ``take()`` doubles as the fetch — at or below
-    ``local_threshold`` edges the trajectory runs driver-side in one
+    ``LOCAL_GRAPH_EDGES`` edges the trajectory runs driver-side in one
     pass (each distributed round costs two shuffles, which at small
     edge counts is pure stage latency); above it, the DataFrame loop
     runs with the identical vote/tie semantics. Output: one row per
     node ``(node, community)``.
     """
-    probe = edges.select(src, dst).take(local_threshold + 1)
-    if len(probe) <= local_threshold:
-        return _lpa_local_df(
-            edges.sparkSession, [(r[0], r[1]) for r in probe], n_iter
-        )
+    pairs = _small_edge_list(edges.select(src, dst))
+    if pairs is not None:
+        return _lpa_local_df(edges.sparkSession, pairs, n_iter)
     return _lpa_distributed(edges, n_iter, src, dst)
 
 

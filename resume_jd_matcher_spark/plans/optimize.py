@@ -95,6 +95,6 @@ def choose_similarity_strategy(
 # session-end LRU. An earlier draft eagerly localCheckpoint'ed the
 # result and unpersisted inline ("materialize_and_release"), but the
 # construction-time checkpoint hid the whole subplan from the plan
-# audits (explain_audit, the registry-wide cartesian sweep) behind a
+# audits (the registry-wide cartesian sweep) behind a
 # Scan ExistingRDD node and ran the job whenever the plan was merely
 # built — the lazy ledger keeps both properties without either cost.

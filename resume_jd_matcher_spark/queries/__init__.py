@@ -17,7 +17,7 @@ Contract shared by every pair (FIXTURES.md oracle-harness notes):
   left-to-right (bit-compatible accumulation).
 
 Half-up rounding nudge (``round(x + 1e-9, k)``) — tie-distance audit
-(r12, census in tools/nudge_audit.py). The nudge itself is never the
+(r12). The nudge itself is never the
 risk; the question is whether the value reaching ``round`` can DIFFER
 between engines. Three classes:
 

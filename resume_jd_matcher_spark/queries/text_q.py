@@ -445,10 +445,10 @@ JOIN (SELECT cluster_rep, count(*) AS cluster_size
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V8 completion: MinHash-LSH candidate pairs → transitive
-    near-dup CLUSTERS via iterative hash-min connected components
+    near-dup CLUSTERS via cost-routed connected components
     (operators/cluster.py). The oracle is a DuckDB recursive CTE
-    computing min-reachable-id per node — the same fixpoint the
-    Spark loop converges to. Keep/drop policy downstream is
+    computing min-reachable-id per node — the same labels both routes
+    produce. Keep/drop policy downstream is
     ``doc_id = cluster_rep``."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     edges = dedup.minhash_lsh_candidates(d, n_hashes=16, rows_per_band=4).filter(
@@ -1569,48 +1569,6 @@ def q_minhash_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             hit.cast("double") / F.nullif(F.sum("is_true"), F.lit(0)), 4
         ).alias("recall"),
-    )
-
-
-@register(
-    "dedup_clusters_star",
-    f"""
-WITH RECURSIVE {_MINHASH_EST_CTE},
-edges AS (
-  SELECT left_id AS a, right_id AS b FROM est WHERE est_jaccard >= 0.95
-  UNION ALL
-  SELECT right_id AS a, left_id AS b FROM est WHERE est_jaccard >= 0.95
-), reach AS (
-  SELECT DISTINCT a AS node, a AS r FROM edges
-  UNION
-  SELECT e.b AS node, reach.r FROM reach JOIN edges e ON e.a = reach.node
-), labels AS (
-  SELECT node, min(r) AS cluster_rep FROM reach GROUP BY node
-)
-SELECT l.node AS doc_id, l.cluster_rep, c.cluster_size
-FROM labels l
-JOIN (SELECT cluster_rep, count(*) AS cluster_size
-      FROM labels GROUP BY cluster_rep) c USING (cluster_rep)
-""",
-)
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V8 scale alternative: the SAME near-dup clusters as
-    dedup_clusters, resolved by large-star/small-star alternation
-    (Kiveris et al. 2014) instead of hash-min — O(log² n) rounds
-    regardless of graph diameter, the variant the hash-min
-    non-convergence warning recommends for adversarial chains. Same
-    recursive-CTE oracle; identical labels prove the two algorithms
-    agree (operators/cluster.py:connected_components_star)."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    edges = dedup.minhash_lsh_candidates(d, n_hashes=16, rows_per_band=4).filter(
-        F.col("est_jaccard") >= 0.95
-    )
-    labels = clusterop.connected_components_star(edges)
-    sizes = labels.groupBy("cluster_rep").agg(
-        F.count("*").alias("cluster_size")
-    )
-    return labels.join(sizes, "cluster_rep").select(
-        F.col("node").alias("doc_id"), "cluster_rep", "cluster_size"
     )
 
 

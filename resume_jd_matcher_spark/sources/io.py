@@ -340,120 +340,3 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-    order_col: str | None = None,
-) -> int:
-    """Small-file compaction (the 100 TB hygiene job): rewrite a
-    parquet directory into ceil(rows/target) files, optionally
-    range-sorted on ``order_col`` so rewritten files carry disjoint
-    key ranges (row-group pruning survives compaction).
-
-    Streaming sinks and incremental appends accumulate thousands of
-    tiny files; scans then pay per-file open cost and lose pushdown
-    efficiency. Compaction is a read → repartition → same-filesystem
-    rename swap; returns the new file count.
-
-    LOCAL-FILESYSTEM ONLY: the swap relies on same-device os.rename
-    (atomic on POSIX) between sibling directories, which has no analog
-    on object stores — on S3/HDFS run compaction through a table
-    format (Delta/Iceberg rewrite + catalog swap) instead. Crash
-    safety: the staged rewrite is verified readable (row count equals
-    the source) before any rename; the original directory is renamed
-    aside — never deleted — until the promoted copy is verified, so
-    every failure point leaves a complete copy of the data on disk
-    under either ``path``, ``path.compact_old``, or both.
-    """
-    import math
-    import os
-    import shutil
-
-    if "://" in path and not path.startswith("file://"):
-        raise ValueError(
-            "compact_small_files swaps directories with os.rename and is "
-            f"local-filesystem-only; got {path!r}. On object stores use a "
-            "table-format rewrite (Delta/Iceberg) with a catalog swap."
-        )
-    local = path[len("file://"):] if path.startswith("file://") else path
-    local = local.rstrip("/")
-    staged = f"{local}.compact_staged"  # sibling → same filesystem
-    old = f"{local}.compact_old"
-    for leftover in (staged, old):
-        if os.path.exists(leftover):
-            raise ValueError(
-                f"{leftover} exists — a previous compaction crashed mid-swap; "
-                "recover (promote or remove) it before compacting again"
-            )
-
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    n_files = max(1, math.ceil(n_rows / target_rows_per_file))
-    if order_col is not None:
-        out = df.repartitionByRange(n_files, order_col).sortWithinPartitions(
-            order_col
-        )
-    else:
-        out = df.repartition(n_files)
-    out.write.mode("overwrite").parquet(staged)
-    if spark.read.parquet(staged).count() != n_rows:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise RuntimeError("staged compaction row count mismatch; source kept")
-    os.rename(local, old)
-    os.rename(staged, local)
-    n_out = len(
-        [f for f in spark.read.parquet(path).inputFiles() if f.endswith(".parquet")]
-    )
-    shutil.rmtree(old)  # promoted copy verified readable — drop the original
-    return n_out
-
-
-def write_jsonl_shards(
-    df: DataFrame,
-    path: str,
-    max_records_per_file: int = 100_000,
-    shuffle_col: str | None = None,
-) -> None:
-    """Training-export sink: newline-delimited JSON shards with a hard
-    per-file record cap — the format most LLM training loaders consume
-    (one JSON object per line, many similarly-sized shard files).
-
-    Each row becomes ``to_json(struct(*))`` (JVM-side JSON encoding —
-    no Python serialization in the hot path) and Spark's
-    ``maxRecordsPerFile`` enforces the shard cap inside each task, so
-    the cap holds regardless of partition sizes. With ``shuffle_col``
-    the rows are first redistributed by hash of that column, giving a
-    deterministic corpus-order-free shard assignment (the "global
-    shuffle before packing" step training pipelines want) without a
-    full sort.
-
-    NULL handling: to_json drops null fields by default, which makes
-    round-trips schema-lossy; ignoreNullFields=false keeps every
-    column on every line.
-    """
-    out = df
-    if shuffle_col is not None:
-        out = out.repartition(F.col(shuffle_col))
-    lines = out.select(
-        F.to_json(
-            F.struct(*[F.col(c) for c in df.columns]),
-            {"ignoreNullFields": "false"},
-        ).alias("value")
-    )
-    (
-        lines.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .text(path)
-    )
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    """Read back JSONL shards. Pass an explicit DDL schema in
-    production — schema inference is a full extra pass over the data
-    at 100 TB; it is allowed here for tests only."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

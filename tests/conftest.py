@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import random
 
 import pytest
 
@@ -42,6 +43,36 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+_SYNTH_VOCAB = [f"tok{i:03d}" for i in range(400)]
+
+
+def _gen_row(seed: int, doc_id: int) -> tuple[int, str]:
+    """One ``(doc_id, text)`` row, a pure function of (seed, doc_id)."""
+    # near-dup structure: ids with doc_id % 10 == 9 re-generate the
+    # previous id's token stream and drop ~10% of tokens
+    base_id = doc_id - 1 if doc_id % 10 == 9 and doc_id > 0 else doc_id
+    rng = random.Random(seed * 1_000_003 + base_id)
+    toks = rng.choices(_SYNTH_VOCAB, k=rng.randint(30, 160))
+    if base_id != doc_id:
+        drop = random.Random(seed * 7_000_003 + doc_id)
+        toks = [t for t in toks if drop.random() > 0.1]
+    return doc_id, " ".join(toks)
+
+
+@pytest.fixture(scope="session")
+def synth_docs(spark):
+    """``synth_docs(n, seed)``: a deterministic generated corpus of n
+    documents in 32 partitions, built on the driver. About 1 in 10
+    documents is a near-duplicate of the one before it (token dropout
+    over the same token stream), so dedup operators have real work."""
+
+    def build(n: int, seed: int):
+        rows = [_gen_row(seed, i) for i in range(n)]
+        return spark.createDataFrame(rows, "doc_id bigint, text string").repartition(32)
+
+    return build
 
 
 @pytest.fixture(scope="session")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from resume_jd_matcher_spark.operators import cluster
 from resume_jd_matcher_spark.operators.cluster import (
     connected_components,
     dedup_clusters,
@@ -35,7 +36,7 @@ def test_cc_triangle_chain_and_pair(spark):
 
 
 def test_cc_long_chain_converges(spark):
-    # worst case for hash-min: a path graph; diameter = n-1
+    # worst case for label propagation: a path graph; diameter = n-1
     n = 12
     e = _edges(spark, [(i, i + 1) for i in range(n)])
     rows = connected_components(e, max_iter=n + 2).collect()
@@ -43,15 +44,21 @@ def test_cc_long_chain_converges(spark):
     assert len(rows) == n + 1
 
 
-def test_cc_local_equals_distributed(spark):
-    # both routes must produce identical labels
-    pairs = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 13), (20, 21), (3, 30)]
+def test_cc_local_equals_distributed(spark, monkeypatch):
+    # both routes must produce identical labels and cluster sizes,
+    # a node whose only edge is a self-loop included
+    pairs = [
+        (1, 2), (2, 3), (10, 11), (11, 12), (12, 13), (20, 21), (3, 30),
+        (40, 40),
+    ]
     e = _edges(spark, pairs)
-    local = connected_components(e)  # small graph -> union-find path
-    dist = connected_components(e, local_threshold=0)  # force hash-min loop
-    assert {(r["node"], r["cluster_rep"]) for r in local.collect()} == {
-        (r["node"], r["cluster_rep"]) for r in dist.collect()
-    }
+    # small graph -> driver union-find
+    local_cc = {tuple(r) for r in connected_components(e).collect()}
+    local_dc = {tuple(r) for r in dedup_clusters(e).collect()}
+    monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)  # force the star loop
+    assert local_cc == {tuple(r) for r in connected_components(e).collect()}
+    assert local_dc == {tuple(r) for r in dedup_clusters(e).collect()}
+    assert (40, 40) in local_cc and (40, 40, 1) in local_dc
 
 
 def test_cc_direction_invariant(spark):
@@ -218,27 +225,20 @@ def test_text_ops_survive_degenerate_docs(spark):
 
 
 @pytest.mark.slow
-def test_dedup_pipeline_at_scale_smoke(spark):
+def test_dedup_pipeline_at_scale_smoke(spark, synth_docs, monkeypatch):
     """Scale smoke: 20k generated docs (40x the sf0.01 fixture)
     through MinHash-LSH candidates -> DISTRIBUTED connected
     components (local route disabled). Verifies the planted near-dup
     pairs are recovered and clusters stay transitive at a size where
     driver-side shortcuts are off."""
     from resume_jd_matcher_spark.operators import dedup
-    from resume_jd_matcher_spark.sources.synthdocs import register
 
-    register(spark)
-    docs = (
-        spark.read.format("synthdocs")
-        .option("n", 20000)
-        .option("partitions", 32)
-        .option("seed", 11)
-        .load()
-    )
+    monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+    docs = synth_docs(20000, seed=11)
     edges = dedup.minhash_lsh_candidates(docs, n_hashes=16, rows_per_band=4).filter(
         F.col("est_jaccard") >= 0.9
     )
-    comp = connected_components(edges, local_threshold=0, max_iter=20)
+    comp = connected_components(edges, max_iter=20)
     labels = {r["node"]: r["cluster_rep"] for r in comp.collect()}
     dedup.release_persisted()
     # planted structure: (id-1, id) for id % 10 == 9 must co-cluster
@@ -279,20 +279,11 @@ def test_chunk_sliding_total_coverage(spark):
 
 
 @pytest.mark.slow
-def test_winnow_neardup_at_scale_smoke(spark):
+def test_winnow_neardup_at_scale_smoke(spark, synth_docs):
     """Winnowing at 40x fixture scale: 20k generated docs through
     fingerprinting + the posting-list self-join; the planted near-dup
     pairs (id, id+1 with id % 10 == 9) must surface as candidates."""
-    from resume_jd_matcher_spark.sources.synthdocs import register
-
-    register(spark)
-    docs = (
-        spark.read.format("synthdocs")
-        .option("n", 20000)
-        .option("partitions", 32)
-        .option("seed", 23)
-        .load()
-    )
+    docs = synth_docs(20000, seed=23)
     fps = winnow_fingerprints(docs, k=4, w=5)
     a = fps.select(F.col("doc_id").alias("left_id"), "fp")
     b = fps.select(F.col("doc_id").alias("right_id"), "fp")
@@ -308,47 +299,25 @@ def test_winnow_neardup_at_scale_smoke(spark):
     assert planted_hits > 1200  # ~2000 planted; drop-out noise loses some
 
 
-def test_connected_components_warns_without_convergence(spark):
-    """A chain longer than max_iter must not silently return
-    non-transitive labels — the hash-min loop warns when it exits on
-    the iteration cap."""
+def test_connected_components_star_warns_on_iteration_cap(spark, monkeypatch):
+    """The large-star/small-star loop's final hi->lo labeling is only
+    valid at the star fixpoint — exiting via max_iter must warn
+    instead of returning silently non-transitive labels."""
     import warnings
 
-    from resume_jd_matcher_spark.operators.cluster import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], ["left_id", "right_id"]
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        connected_components(
-            chain, max_iter=2, local_threshold=0
-        ).collect()
-    assert any("did not converge" in str(x.message) for x in w)
-
-
-def test_connected_components_star_warns_on_iteration_cap(spark):
-    """The large-star/small-star variant's final hi->lo labeling is
-    only valid at the star fixpoint — exiting via max_iter must warn,
-    mirroring the hash-min sibling."""
-    import warnings
-
-    from resume_jd_matcher_spark.operators.cluster import (
-        connected_components_star,
-    )
-
+    monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["left_id", "right_id"]
     )
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components_star(chain, max_iter=1).collect()
+        connected_components(chain, max_iter=1).collect()
     assert any("star fixpoint" in str(x.message) for x in w)
 
     # and with enough rounds the same graph converges warning-free
     with warnings.catch_warnings(record=True) as w2:
         warnings.simplefilter("always")
-        labels = connected_components_star(chain, max_iter=30).collect()
+        labels = connected_components(chain, max_iter=30).collect()
     assert not any("star fixpoint" in str(x.message) for x in w2)
     assert {r["cluster_rep"] for r in labels} == {0}
 
@@ -418,30 +387,23 @@ class TestStarCC:
     def _labels(self, df):
         return {r["node"]: r["cluster_rep"] for r in df.collect()}
 
-    def test_long_chain_converges_fast(self, spark):
-        """A 200-node path graph (diameter 199 — the case the hash-min
-        warning points at): large-star/small-star must resolve it to
-        one component labeled by the minimum within its 30-round cap."""
-        from resume_jd_matcher_spark.operators.cluster import (
-            connected_components_star,
-        )
-
+    def test_long_chain_converges_fast(self, spark, monkeypatch):
+        """A 200-node path graph (diameter 199, which a per-round
+        label-propagation loop needs 199 rounds for): large-star/
+        small-star must resolve it to one component labeled by the
+        minimum within its 30-round cap."""
+        monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(200)], "left_id long, right_id long"
         )
-        got = self._labels(connected_components_star(edges))
+        got = self._labels(connected_components(edges))
         assert set(got.values()) == {0}
         assert len(got) == 201
 
-    def test_matches_union_find_on_random_graph(self, spark):
+    def test_matches_union_find_on_random_graph(self, spark, monkeypatch):
         """Star labels == driver union-find labels on a multi-component
         random graph (both use min-id representatives)."""
         import random
-
-        from resume_jd_matcher_spark.operators.cluster import (
-            connected_components,
-            connected_components_star,
-        )
 
         rng = random.Random(13)
         edges = []
@@ -451,6 +413,7 @@ class TestStarCC:
                 edges.append((rng.choice(nodes), rng.choice(nodes)))
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, "left_id long, right_id long")
-        star = self._labels(connected_components_star(df))
         uf = self._labels(connected_components(df))
+        monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+        star = self._labels(connected_components(df))
         assert star == uf

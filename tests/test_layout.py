@@ -198,55 +198,3 @@ def test_incremental_daily_processing_equals_full_batch(
     )
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
-
-def test_compact_small_files(spark, tmp_path):
-    """Many tiny files -> few right-sized files, same rows, and the
-    range-sorted rewrite keeps per-file key ranges disjoint."""
-    from resume_jd_matcher_spark.sources.io import compact_small_files
-
-    out = str(tmp_path / "fragmented")
-    ev = load_table(spark, SF, "events")
-    ev.repartition(64).write.parquet(out)  # simulate streaming fragmentation
-    n_before = len(spark.read.parquet(out).inputFiles())
-    assert n_before >= 32
-
-    n_after = compact_small_files(
-        spark, out, target_rows_per_file=5000, order_col="user_id"
-    )
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-    assert n_after < n_before / 4
-
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for f in back.inputFiles():
-        vals = pq.read_table(f.replace("file:", ""), columns=["user_id"]).column(
-            "user_id"
-        ).to_pylist()
-        if vals:
-            ranges.append((min(vals), max(vals)))
-    ranges.sort()
-    for (_, hi1), (lo2, _) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2
-
-
-def test_compact_small_files_guards(spark, tmp_path):
-    """Object-store URIs are rejected (the rename swap is local-FS
-    only), and a leftover half-swap directory blocks a new compaction
-    instead of being silently clobbered."""
-    import pytest as _pytest
-
-    from resume_jd_matcher_spark.sources.io import compact_small_files
-
-    with _pytest.raises(ValueError, match="local-filesystem-only"):
-        compact_small_files(spark, "s3://bucket/table")
-
-    out = str(tmp_path / "data")
-    load_table(spark, SF, "events").limit(10).write.parquet(out)
-    leftover = f"{out}.compact_old"
-    import os
-
-    os.mkdir(leftover)
-    with _pytest.raises(ValueError, match="crashed mid-swap"):
-        compact_small_files(spark, out)

@@ -18,6 +18,10 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+# One entry per /api/generate request the fake has served (list.append
+# is atomic, so concurrent executor workers may post at once).
+_GENERATE_CALLS: list[str] = []
+
 
 class _FakeOllama(BaseHTTPRequestHandler):
     """Deterministic Ollama-protocol fake: generation echoes a SCORES:
@@ -28,6 +32,7 @@ class _FakeOllama(BaseHTTPRequestHandler):
         n = int(self.headers.get("Content-Length", 0))
         req = json.loads(self.rfile.read(n).decode("utf-8"))
         if self.path == "/api/generate":
+            _GENERATE_CALLS.append(req["prompt"])
             # visible marker + prompt-dependent payload
             out = {"model": req["model"], "response": f"SCORES:\nechoed: {len(req['prompt']) % 10}"}
         elif self.path == "/api/embeddings":
@@ -84,6 +89,36 @@ def test_llm_transform_http_score_prompt_round_trip(spark, fake_ollama):
     # len("PROMPT BODY") % 10 == 1 — response is prompt-dependent,
     # proving the prompt column reached the server
     assert got[0].response == "SCORES:\nechoed: 1"
+
+
+def test_scoring_chain_calls_the_llm_once_per_document(spark, fake_ollama):
+    """The batch scoring chain posts each document's prompt exactly
+    once: parse_scores reads the LLM output once, so no second Python
+    node re-runs the model for another branch of the plan, and a
+    document's validity and scores come from one response."""
+    from resume_jd_matcher_spark.functions.parsing import (
+        assemble_prompt,
+        mean_score,
+        parse_scores,
+    )
+    from resume_jd_matcher_spark.operators.scoring import llm_transform
+    from resume_jd_matcher_spark.operators.sectioner import chunk_by_section
+
+    n = 20
+    df = spark.createDataFrame(
+        [(i, f"Skills:\npython spark {i}\nExperience:\n{i} years") for i in range(n)],
+        ["doc_id", "text"],
+    )
+    prompts = assemble_prompt(chunk_by_section(df), "needs spark")
+    chain = mean_score(
+        parse_scores(
+            llm_transform(prompts, "score_prompt", backend="http", backend_url=fake_ollama)
+        )
+    )
+    _GENERATE_CALLS.clear()
+    rows = chain.collect()
+    assert len(rows) == n
+    assert len(_GENERATE_CALLS) == n
 
 
 def test_llm_transform_unknown_backend_still_rejected(spark):

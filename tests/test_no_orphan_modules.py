@@ -1,14 +1,14 @@
 """Every library module is reachable from the program: each module under
 the operator, streaming, function, plan and source packages must be
 imported by some other non-test module of the package, by ``perfbench/``,
-by a ``tools/`` script or by ``__spark_entry__.py``. A module only its
-own tests import is dead code that every tier-1 run still pays for.
-(``sources/synthdocs.py`` is the one library module only a tool uses:
-it generates the scale-curve corpus for ``tools/scale_curve.py``.)
-The same holds one level down: every public top-level function or class
-of those modules must be imported by name, read as an attribute of its
-module, or used by another definition in its own module, apart from a
-pinned list of test-only definitions that may only shrink.
+by ``bench.py``, by a ``tools/`` script or by ``__spark_entry__.py``. A
+module only its own tests import is dead code that every tier-1 run
+still pays for. The same holds one level down: every public top-level
+function or class of those modules must be imported by name, read as an
+attribute of its module, or used by another definition in its own
+module, apart from a pinned list of test-only definitions that may only
+shrink. And every ``tools/`` script is itself imported by a test or run
+by the verify skill (``.claude/skills/verify/SKILL.md``).
 
 Pure import-graph check: parses source with ``ast``, imports nothing
 and starts no SparkSession.
@@ -50,7 +50,7 @@ def _importers() -> list[str]:
         glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
         + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
         + glob.glob(os.path.join(REPO, "tools", "*.py"))
-        + [os.path.join(REPO, "__spark_entry__.py")]
+        + [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
     )
 
 
@@ -85,12 +85,7 @@ TEST_ONLY_DEFINITIONS = {
     "operators.similarity": {"topk_similarity"},
     "streaming.events": {"run_stream_to_memory", "read_embeddings_stream"},
     "plans.optimize": {"assert_pushed_filter"},
-    "sources.io": {
-        "decode_documents",
-        "compact_small_files",
-        "write_jsonl_shards",
-        "read_jsonl",
-    },
+    "sources.io": {"decode_documents"},
 }
 
 
@@ -177,4 +172,24 @@ def test_every_public_library_definition_has_a_program_caller():
     assert not stale, (
         f"pinned test-only definitions that were deleted or gained a "
         f"program caller (drop them from TEST_ONLY_DEFINITIONS): {stale}"
+    )
+
+
+def test_every_tool_is_imported_by_a_test_or_run_by_the_verify_skill():
+    with open(os.path.join(REPO, ".claude", "skills", "verify", "SKILL.md")) as f:
+        skill = f.read()
+    test_imports: set[str] = set()
+    for path in glob.glob(os.path.join(REPO, "tests", "*.py")):
+        test_imports |= _imported_modules(path)
+    tools = [
+        os.path.basename(p)[: -len(".py")]
+        for p in glob.glob(os.path.join(REPO, "tools", "*.py"))
+    ]
+    assert tools, "no tools found"
+    unused = sorted(
+        t for t in tools if t not in test_imports and f"tools/{t}.py" not in skill
+    )
+    assert not unused, (
+        f"tools/ scripts no test imports and the verify skill does not run "
+        f"(delete them, or give them a caller): {unused}"
     )

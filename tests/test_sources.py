@@ -187,63 +187,6 @@ def test_sql_api_views_share_plan_space(spark, sf_dir):
     )[1].split("]")[0]
 
 
-def test_synthdocs_source_deterministic_and_parallel(spark):
-    """Spark 4 Python DataSource: the synthetic corpus source yields
-    identical rows regardless of partition count (rows are functions
-    of (seed, doc_id)), generates in parallel, and feeds the dedup
-    operators real near-dup structure."""
-    from pyspark.sql import functions as F
-
-    from resume_jd_matcher_spark.operators import dedup
-    from resume_jd_matcher_spark.sources.synthdocs import register
-
-    register(spark)
-
-    def load(parts):
-        return (
-            spark.read.format("synthdocs")
-            .option("n", 500)
-            .option("partitions", parts)
-            .option("seed", 7)
-            .load()
-        )
-
-    a, b = load(4), load(9)
-    assert a.rdd.getNumPartitions() == 4
-    assert a.count() == 500
-    ha = a.agg(F.sum(F.crc32("text")).alias("h")).collect()[0]["h"]
-    hb = b.agg(F.sum(F.crc32("text")).alias("h")).collect()[0]["h"]
-    assert ha == hb  # partition-count invariant
-
-    # near-dup structure is real: MinHash finds the planted pairs
-    cand = dedup.minhash_lsh_candidates(a).filter(F.col("est_jaccard") >= 0.5)
-    planted = {(r["left_id"], r["right_id"]) for r in cand.collect()}
-    assert any(r - l == 1 and r % 10 == 9 for l, r in planted)
-
-
-def test_jsonl_shards_cap_and_roundtrip(spark, tmp_path_factory):
-    """Shard files respect maxRecordsPerFile; nulls survive the
-    round-trip (ignoreNullFields=false); every row comes back."""
-    from resume_jd_matcher_spark.sources.io import read_jsonl, write_jsonl_shards
-
-    d = str(tmp_path_factory.mktemp("jsonl") / "out")
-    rows = [(i, f"doc {i}", None if i % 3 == 0 else float(i)) for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, score double")
-    write_jsonl_shards(df.coalesce(1), d, max_records_per_file=30)
-
-    shards = [f for f in os.listdir(d) if f.startswith("part-")]
-    assert len(shards) >= 4  # 100 rows / cap 30
-    for f in shards:
-        with open(os.path.join(d, f)) as fh:
-            n = sum(1 for _ in fh)
-        assert n <= 30
-
-    back = read_jsonl(spark, d, "doc_id long, text string, score double")
-    assert back.count() == 100
-    nulls = back.filter("score is null").count()
-    assert nulls == 34  # 0,3,...,99 — null column survived on every line
-
-
 def test_scan_cache_repartition_preserves_results(spark):
     """r13: the bench's scan cache spreads non-tiny tables across the
     session's cores at fill time (a 1-partition cached fixture pinned

@@ -51,9 +51,10 @@ class TestLabelPropagation:
         assert out[1] == out[2] == out[3] == 1
         assert out[10] == out[11] == out[12] == 10
 
-    def test_distributed_path_matches_local(self, spark):
-        """Force the DataFrame loop (threshold 0) and compare labels
-        with the driver path on the same graph."""
+    def test_distributed_path_matches_local(self, spark, monkeypatch):
+        """Force the DataFrame loop (a zero LOCAL_GRAPH_EDGES) and
+        compare labels with the driver path on the same graph."""
+        from resume_jd_matcher_spark.operators import cluster
         from resume_jd_matcher_spark.operators.cluster import (
             label_propagation_sync,
         )
@@ -67,11 +68,10 @@ class TestLabelPropagation:
             r["node"]: r["community"]
             for r in label_propagation_sync(sym, n_iter=4).collect()
         }
+        monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
         dist = {
             r["node"]: r["community"]
-            for r in label_propagation_sync(
-                sym, n_iter=4, local_threshold=0
-            ).collect()
+            for r in label_propagation_sync(sym, n_iter=4).collect()
         }
         assert local == dist
 
