@@ -79,11 +79,10 @@ def connected_components(
     ``cluster_rep`` is the minimum node id reachable from ``node`` —
     the deterministic canonical representative.
 
-    Cost-based routing (same philosophy as
-    ``plans/optimize.choose_similarity_strategy``): a graph of at most
-    ``LOCAL_GRAPH_EDGES`` edges resolves with a driver-side union-find
-    in one pass; a larger one runs the large-star/small-star loop for
-    at most ``max_iter`` rounds. Both routes produce identical labels.
+    Cost-based routing: a graph of at most ``LOCAL_GRAPH_EDGES`` edges
+    resolves with a driver-side union-find in one pass; a larger one
+    runs the large-star/small-star loop for at most ``max_iter``
+    rounds. Both routes produce identical labels.
     """
     pairs = _small_edge_list(edges.select(src, dst))
     if pairs is not None:

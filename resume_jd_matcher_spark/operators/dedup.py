@@ -577,88 +577,6 @@ def ngram_jaccard_join(
     )
 
 
-def semdedup(
-    emb: DataFrame,
-    n_clusters: int = 8,
-    n_iter: int = 2,
-    tau: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup semantic deduplication (V8 [EXT]; Abbas et al. 2023,
-    arXiv:2303.09540): cluster the embedding space with the
-    deterministic Lloyd coarse quantizer (operators/ann.py), then look
-    for near-duplicate pairs ONLY within clusters — pairwise cosine is
-    O(Σ cluster_size²), never corpus², because semantic duplicates land
-    in the same cluster by construction. Keep-rule (deterministic twin
-    of the paper's keep-one-per-group): a vector is dropped iff a
-    LOWER-id cluster-mate has cosine ≥ ``tau`` with it.
-
-    Scale shape: the Lloyd fit is broadcast-argmin + map-side-combined
-    per-dim means (sample-boundable); the within-cluster pair scan is a
-    hash-partitioned self-equi-join on cid. At 100 TB, n_clusters grows
-    with the corpus so cluster size — and the quadratic term — stays
-    bounded; the keep decision is a left-anti-shaped join, one shuffle.
-
-    Output: one row per input vector — (id_col, cid, is_kept), a stable
-    corpus-sized frame (the pipeline's downstream filter is
-    ``is_kept = 1``). Cosine is rounded to 4 dp BEFORE the threshold
-    compare so the oracle twin makes identical boundary calls.
-    """
-    from resume_jd_matcher_spark.functions.vector import dot, l2_norm
-    from resume_jd_matcher_spark.operators.ann import lloyd_kmeans_partition
-
-    parted, _ = lloyd_kmeans_partition(
-        emb.select(id_col, vec_col),
-        n_clusters=n_clusters,
-        n_iter=n_iter,
-        id_col=id_col,
-        vec_col=vec_col,
-        out_col="cid",
-    )
-    # The assigned frame feeds BOTH self-join sides and the final keep
-    # join — persist it so the Lloyd fit + assign runs once, not three
-    # times (same discipline as winnow_neardup). Norms are projected
-    # once per vector here, not recomputed per pair: cosine =
-    # dot / (norm_a · norm_b), the identical operation tree to
-    # functions.vector.cosine, so the rounded boundary calls match.
-    # Repartition first: the r12 literal-argmin assignment is a NARROW
-    # projection, so parted would inherit the scan's handful of splits
-    # and pin the O(sum cluster^2) pair verify to as many cores
-    # (measured 2.6 -> 3.8 s at sf0.1 without this; at real scale the
-    # scan has hundreds of splits and this is a cheap rebalance).
-    from resume_jd_matcher_spark.plans.optimize import ensure_parallelism
-
-    parted = ensure_parallelism(parted).persist()
-    _PERSISTED.append(parted)
-    a = parted.select(
-        "cid",
-        F.col(id_col).alias("left_id"),
-        F.col(vec_col).alias("_le"),
-        l2_norm(F.col(vec_col)).alias("_na"),
-    )
-    b = parted.select(
-        "cid",
-        F.col(id_col).alias("right_id"),
-        F.col(vec_col).alias("_re"),
-        l2_norm(F.col(vec_col)).alias("_nb"),
-    )
-    cos = dot(F.col("_le"), F.col("_re")) / (F.col("_na") * F.col("_nb"))
-    dropped = (
-        a.join(b, "cid")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .filter(F.round(cos, 4) >= F.lit(tau))
-        .select(F.col("right_id").alias(id_col))
-        .distinct()
-        .withColumn("_drop", F.lit(1))
-    )
-    return parted.join(dropped, id_col, "left").select(
-        F.col(id_col),
-        F.col("cid").cast("int").alias("cid"),
-        F.when(F.col("_drop").isNull(), 1).otherwise(0).alias("is_kept"),
-    )
-
-
 def line_dedup(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -265,8 +265,7 @@ def mmr_topk(
     (each pick depends on all previous picks), so it runs over the
     BOUNDED pool (≤ pool candidates, ≤ pool² pairwise sims, both
     Spark-computed so the doubles are fold-identical to the oracle's)
-    as an explicitly bounded driver step — the same pattern as the
-    Lloyd centroid pulls in operators/ann.py. Output: (rank, id,
+    as an explicitly bounded driver step. Output: (rank, id,
     relevance, mmr_score), rank 1..k; rank 1 is the pure-relevance
     argmax and keeps mmr_score = relevance.
     """
@@ -526,9 +525,7 @@ def margin_bitext_mine(
     Scale shape: the source side is bounded (``max_src_id``,
     broadcast) so scoring is a broadcast join streamed over the target
     group; both neighborhood means are rank-window + hash-agg keyed on
-    their own id (partitioned windows, never global). At corpus scale
-    the candidate generation swaps to the ANN path (operators/ann.py)
-    exactly like exact top-k does — the margin algebra is unchanged.
+    their own id (partitioned windows, never global).
 
     Output: (src_id, tgt_id, cos, margin), one row per mined source.
     """

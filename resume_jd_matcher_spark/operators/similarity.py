@@ -37,8 +37,8 @@ def topk_similarity(
     usually a handful of JDs) → codegen'd distance projection → per-query
     rank. The rank is a shuffle keyed on query_id; with Q queries and N
     corpus rows it moves only the survivors if AQE's local top-k kicks
-    in, else Q×N — for large Q prefer `similarity_join_auto` with a
-    distance threshold prefilter.
+    in, else Q×N — ``similarity_blas.topk_similarity_blas`` keeps a
+    per-partition top-k before the shuffle instead.
 
     Output: (query_id, id, dist, score), dist = metric distance
     (default squared L2, FAISS IndexFlatL2 parity), score =
@@ -99,45 +99,4 @@ def argmin_per_group(
         F.col("best.id").alias(id_col),
         F.round("best.dist", 4).alias("dist"),
         faiss_score(F.col("best.dist")).alias("score"),
-    )
-
-
-def similarity_join_auto(
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float,
-    left_id: str = "left_id",
-    right_id: str = "right_id",
-    left_vec: str = "left_embedding",
-    right_vec: str = "right_embedding",
-    dedup_pairs: bool = False,
-    max_exact_pairs: int = 50_000_000,
-) -> DataFrame:
-    """V6 with cost-based routing (SURVEY.md §4): pick the physical
-    strategy from Catalyst's row-count estimates — no job runs to
-    decide. Tractable estimated pair count → exact BLAS brute force
-    (``similarity_join_blas``); beyond ``max_exact_pairs`` → the
-    LSH-bucketed candidates path (``ann.lsh_similarity_join``), whose
-    equi-join works big×big without materializing either side.
-
-    Both routes emit the same (left_id, right_id, dist) schema."""
-    from resume_jd_matcher_spark.operators.ann import lsh_similarity_join
-    from resume_jd_matcher_spark.operators.similarity_blas import (
-        similarity_join_blas,
-    )
-    from resume_jd_matcher_spark.plans.optimize import (
-        choose_similarity_strategy,
-    )
-
-    route = choose_similarity_strategy(left, right, max_exact_pairs)
-    if route == "exact":
-        return similarity_join_blas(
-            left, right, threshold, left_id, right_id, left_vec, right_vec,
-            dedup_pairs,
-        )
-    return lsh_similarity_join(
-        left, right, threshold,
-        left_id=left_id, right_id=right_id,
-        left_vec=left_vec, right_vec=right_vec,
-        dedup_pairs=dedup_pairs,
     )

@@ -74,9 +74,7 @@ def _query_matrix(queries_pdf: pd.DataFrame, id_col: str, vec_col: str):
 _PROBE_CHUNK = 1024
 
 # Hard ceiling on probe rows materialized to the driver. At 64-dim
-# float64 this is ~100 MB of matrix — beyond it, brute force over the
-# probe side is the wrong plan anyway: route to the LSH/IVF candidates
-# paths (operators/ann.py, plans/optimize.choose_similarity_strategy).
+# float64 this is ~100 MB of matrix.
 MAX_PROBE_DRIVER_ROWS = 200_000
 
 
@@ -89,10 +87,8 @@ def _probe_matrix(df: DataFrame, id_col: str, vec_col: str):
         pdf = df.select(id_col, vec_col).toPandas()
     if len(pdf) > MAX_PROBE_DRIVER_ROWS:
         raise ValueError(
-            f"probe side has {len(pdf)} rows > {MAX_PROBE_DRIVER_ROWS}; "
-            "brute-force BLAS is the wrong plan at this size — use "
-            "similarity_join_auto, which routes large joins to the LSH "
-            "candidates path, or the IVF paths in operators/ann.py"
+            f"probe side has {len(pdf)} rows > {MAX_PROBE_DRIVER_ROWS}, "
+            "the most the driver materializes"
         )
     return _query_matrix(pdf, id_col, vec_col)
 

@@ -1,12 +1,10 @@
 """Physical-plan helpers (SURVEY.md §4).
 
 Catalyst already provides pushdown, pruning, broadcast selection, AQE
-— these helpers cover the few places the engine must shape the plan
-itself: making sure a cross-join's streamed side has enough partitions
-to use every core (a small parquet file arrives as ONE partition, and
-BroadcastNestedLoopJoin inherits the streamed side's parallelism), and
-plan-inspection utilities used by tests/bench to assert the plan shape
-(filter pushed down) rather than guess.
+— this covers the one place the engine must shape the plan itself:
+making sure a cross-join's streamed side has enough partitions to use
+every core (a small parquet file arrives as ONE partition, and
+BroadcastNestedLoopJoin inherits the streamed side's parallelism).
 """
 
 from __future__ import annotations
@@ -38,52 +36,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def physical_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
-
-
-def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
-    plan = physical_plan(df)
-    assert "PushedFilters" in plan and fragment in plan, (
-        f"expected pushed filter containing {fragment!r} in plan:\n{plan}"
-    )
-
-
-def estimated_rows(df: DataFrame) -> int | None:
-    """Catalyst's row-count estimate for a plan (None if unknown).
-    Cheap — reads optimizer statistics, runs nothing."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        opt = stats.rowCount()
-        if opt.isDefined():
-            return int(str(opt.get()))
-        size = int(str(stats.sizeInBytes()))
-        # fall back to size / rough-row-width
-        return max(size // 256, 1)
-    except Exception:  # noqa: BLE001 — stats are advisory
-        return None
-
-
-def choose_similarity_strategy(
-    left: DataFrame,
-    right: DataFrame,
-    max_exact_pairs: int = 50_000_000,
-) -> str:
-    """Cost-based routing for similarity joins: 'exact' (BLAS
-    brute-force) while the estimated pair count is tractable, else
-    'lsh' (bucketed candidates, operators/ann.py). The estimate comes
-    from Catalyst plan statistics — no job runs to decide.
-
-    This is the engine-level stand-in for the optional custom Catalyst
-    rewrite rule (SURVEY.md §4): same decision, made at operator-
-    construction time where it's observable and testable.
-    """
-    nl, nr = estimated_rows(left), estimated_rows(right)
-    if nl is None or nr is None:
-        return "exact"
-    return "exact" if nl * nr <= max_exact_pairs else "lsh"
 
 
 # Cache-release discipline (r8 advisor note -> r10 resolution):

@@ -118,9 +118,9 @@ from resume_jd_matcher_spark.queries import structure_q  # noqa: E402,F401
 # 2) the once-confirmed backlog oldest-first: the r1 cohort (no
 #    driver row since round 1), then r3, then the r4 head -- the
 #    "never reconfirmed since debut" cohort the verdict names.
-#    Rows-only names (llm_feedback/llm_explain/mllib_lsh_join) are
-#    held out of the window so all 50 rows stay hash-checkable; they
-#    queue directly below the boundary.
+#    Rows-only names (llm_feedback/llm_explain) are held out of the
+#    window so all 50 rows stay hash-checkable; they queue directly
+#    below the boundary.
 # Remaining once-confirmed r4/r5/r7/r8 names queue next for r14,
 # then the r11 structure debuts (confirmed r12), then the
 # multiply-confirmed anchors in their prior order. Deleting the
@@ -132,9 +132,12 @@ from resume_jd_matcher_spark.queries import structure_q  # noqa: E402,F401
 # more, refilled from the head of the queue below the trio. Deleting
 # the event-stream queries (sessionize, funnel_conversion,
 # stream_late_data...) emptied seven more, refilled the same way.
+# Deleting the approximate vector-search queries
+# (stream_ann_dedup_gate, ann_recall_eval, ivf_pq_topk) emptied three
+# more, refilled from the hash-checkable head of the queue below the
+# rows-only pair.
 _DRIVER_PRIORITY = [
     # -- r12 debuts: first driver rows --
-    "stream_ann_dedup_gate",
     "media_magic_dispatch",
     "media_payload_entropy",
     "sequence_packing",
@@ -178,26 +181,22 @@ _DRIVER_PRIORITY = [
     "tfidf_topterms",
     "train_test_split",
     "winnow_neardup",
-    "ann_recall_eval",
     "bloom_contamination",
     "cms_heavy_hitters",
     "corpus_shuffle",
     "curriculum_order",
     "embedding_outliers",
     "graph_triangles",
-    "ivf_pq_topk",
     "length_buckets",
     "mixture_sample",
     "mixture_token_budget",
-    # ---- window boundary (50) ----
-    # -- rows-only trio (held out of the hash window by design) --
-    "llm_feedback",
-    "llm_explain",
-    "mllib_lsh_join",
     "ngram_lm_score",
     "pagerank_neardup",
-    "pq_topk",
     "repetition_filter",
+    # ---- window boundary (50) ----
+    # -- rows-only pair (held out of the hash window by design) --
+    "llm_feedback",
+    "llm_explain",
     "rerank_e2e",
     "substring_remove",
     "token_entropy",
@@ -209,7 +208,6 @@ _DRIVER_PRIORITY = [
     "silhouette_score",
     # -- r11 structure debuts (confirmed r12) --
     "bcubed_eval",
-    "burstiness_fano",
     "doremi_reweight",
     "label_propagation",
     "shard_rendezvous",
@@ -266,10 +264,8 @@ _DRIVER_PRIORITY = [
     "heaps_law",
     "token_budget_curriculum",
     "compaction_plan",
-    "ndcg_eval",
     "vocab_overlap",
     "ensemble_neardup",
-    "mllib_lsh_agreement",
     "keyword_tag",
     "skill_coverage",
     "wilson_ranking",
@@ -279,7 +275,6 @@ _DRIVER_PRIORITY = [
     "inverted_index",
     "align_uniformity",
     "quantile_normalize",
-    "ann_multiprobe_topk",
     "corpus_health_scorecard",
     "mine_triplets",
     "quality_aware_dedup",

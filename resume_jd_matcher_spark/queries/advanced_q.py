@@ -1,6 +1,5 @@
 """Advanced / composite operators: the full shortlist lifecycle, map
-assembly, array scalar suite, MLlib LSH (SURVEY.md
-§2.D A3, §2.H, §3.2).
+assembly and the array scalar suite (SURVEY.md §2.D A3, §2.H, §3.2).
 """
 
 from __future__ import annotations
@@ -137,107 +136,6 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("l1_norm"),
         F.size(F.filter(v, lambda x: x > 0)).cast("int").alias("n_pos"),
         F.exists(v, lambda x: x > 0.5).cast("int").alias("has_big"),
-    )
-
-
-@register("mllib_lsh_join", None)
-def q_mllib_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V8/V6 via MLlib (rows-only: hash functions are MLlib-internal):
-    BucketedRandomProjectionLSH approxSimilarityJoin on the embedding
-    column — the library counterpart of operators/ann.py. Fixed seed
-    for reproducibility; recall vs exact checked in pytest."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", array_to_vector(F.col("embedding")).alias("features")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes", bucketLength=0.5, numHashTables=4, seed=42
-    )
-    model = lsh.fit(emb)
-    left = emb.filter(F.col("vec_id") < 50)
-    joined = model.approxSimilarityJoin(left, emb, 1.25, distCol="l2_dist")
-    return (
-        joined.select(
-            F.col("datasetA.vec_id").alias("left_id"),
-            F.col("datasetB.vec_id").alias("right_id"),
-            F.round(F.col("l2_dist") * F.col("l2_dist"), 4).alias("dist"),
-        )
-        .filter(F.col("left_id") < F.col("right_id"))
-    )
-
-
-@register(
-    "mllib_lsh_agreement",
-    """
-WITH a AS (
-  SELECT vec_id AS left_id, embedding::DOUBLE[] AS le
-  FROM embeddings WHERE vec_id < 50
-), b AS (
-  SELECT vec_id AS right_id, embedding::DOUBLE[] AS re FROM embeddings
-)
-SELECT left_id, right_id,
-       round(list_sum(list_transform(generate_series(1, len(le)),
-             i -> (le[i]-re[i])*(le[i]-re[i]))), 4) AS dist
-FROM a JOIN b ON left_id < right_id
-WHERE list_sum(list_transform(generate_series(1, len(le)),
-      i -> (le[i]-re[i])*(le[i]-re[i]))) < 1.5625
-""",
-)
-def q_mllib_lsh_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V8/V6: the MLlib BucketedRandomProjectionLSH path under a HARD
-    oracle — the full-recall agreement gate the rows-only
-    ``mllib_lsh_join`` can't give. At (bucketLength=2.0,
-    numHashTables=15, seed=42, threshold 1.25) the OR-amplified
-    candidate join achieves recall 1.0 vs exact on the fixture, so the
-    MLlib pair set EQUALS the exact SQL pair set: the oracle is the
-    brute-force SQL join, and any recall regression in the MLlib path
-    (seed drift, hashing change, candidate pruning bug) shows up as a
-    row-count/hash mismatch. Distances are recomputed from the pair
-    ids with the engine's deterministic squared-L2 fold (not MLlib's
-    distCol) so the doubles are bit-identical to the oracle's.
-
-    Scale shape: approxSimilarityJoin is a bucket equi-join (explode
-    hash tables → join on (table, bucket) → distinct candidates →
-    true-distance filter) — same candidate-generation shape as
-    operators/ann.py, never corpus².
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    from resume_jd_matcher_spark.functions.vector import squared_l2
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", array_to_vector(F.col("embedding")).alias("features")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=2.0,
-        numHashTables=15,
-        seed=42,
-    )
-    model = lsh.fit(emb)
-    left = emb.filter(F.col("vec_id") < 50)
-    pair_ids = (
-        model.approxSimilarityJoin(left, emb, 1.25, distCol="l2_dist")
-        .select(
-            F.col("datasetA.vec_id").alias("left_id"),
-            F.col("datasetB.vec_id").alias("right_id"),
-        )
-        .filter(F.col("left_id") < F.col("right_id"))
-    )
-    ea = emb.select(F.col("vec_id").alias("left_id"), F.col("embedding").alias("_ea"))
-    eb = emb.select(F.col("vec_id").alias("right_id"), F.col("embedding").alias("_eb"))
-    return (
-        pair_ids.join(F.broadcast(ea), "left_id")
-        .join(eb, "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            F.round(squared_l2(F.col("_ea"), F.col("_eb")), 4).alias("dist"),
-        )
     )
 
 

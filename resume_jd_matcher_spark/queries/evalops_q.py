@@ -1,13 +1,11 @@
-"""Evaluation & data-ops queries over the corpus and its embeddings
+"""Evaluation & data-ops queries over the corpus
 (round 8, SURVEY.md §2.D/§2.F [EXT]): cross-source vocabulary overlap,
-curriculum ordering by cumulative token budget, graded nDCG evaluation
-of the ANN index against exact ground truth, and small-file compaction
-planning.
+curriculum ordering by cumulative token budget, and small-file
+compaction planning.
 
 Reuses `operators/prefix.global_prefix` (the distributed prefix scan,
 here with the r8 ``bounds="height"`` sampled equal-height buckets) for
-the two global-order queries, and the deterministic LSH building
-blocks from `operators/ann` for the retrieval-eval query.
+the two global-order queries.
 
 Portability contracts shared with the oracles (FIXTURES.md):
 - every exposed float rounded in-query on both sides (+1e-9 dodge);
@@ -16,22 +14,11 @@ Portability contracts shared with the oracles (FIXTURES.md):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.queries import register
 from resume_jd_matcher_spark.sources.io import load_table
-
-# Oracle-side macros IMPORTED from vector_q (squared-L2 / LSH
-# signature) so every oracle shares ONE spelling that stays in
-# lockstep with functions/vector.squared_l2 and
-# operators/ann.lsh_signature.
-from resume_jd_matcher_spark.queries.vector_q import (
-    SQL_SQL2 as _SQL_SQL2,
-)
-from resume_jd_matcher_spark.queries.vector_q import (
-    _SQL_LSH_SIG,  # noqa: F401  (same package; shared oracle macro)
-)
 
 
 # ---------------------------------------------------------------------------
@@ -188,150 +175,6 @@ def q_token_budget_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(share <= 0.70, F.lit("core"))
         .otherwise(F.lit("polish"))
         .alias("phase"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Graded nDCG evaluation of the ANN index
-# ---------------------------------------------------------------------------
-
-_NDCG_K = 10
-_NDCG_PLANES = 8
-
-
-@register(
-    "ndcg_eval",
-    f"""
-WITH e0 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), c AS (
-  SELECT vec_id, e AS ce,
-         {_SQL_LSH_SIG.format(a='e', planes=_NDCG_PLANES)} AS bucket
-  FROM e0
-), q AS (
-  SELECT vec_id AS query_id, e AS qe,
-         {_SQL_LSH_SIG.format(a='e', planes=_NDCG_PLANES)} AS qbucket
-  FROM e0 WHERE vec_id < 3
-), d AS (
-  SELECT q.query_id, c.vec_id,
-         {_SQL_SQL2.format(a='qe', b='ce')} AS dist
-  FROM c JOIN q ON c.bucket = q.qbucket
-), lsh AS (
-  SELECT query_id, vec_id, rn AS lrank FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY dist, vec_id) AS rn
-    FROM d) WHERE rn <= {_NDCG_K}
-), xd AS (
-  SELECT q.query_id, c0.vec_id,
-         {_SQL_SQL2.format(a='qe', b='ce')} AS dist
-  FROM (SELECT vec_id, e AS ce FROM e0) c0, q
-), ex AS (
-  SELECT query_id, vec_id, rn AS xrank FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY dist, vec_id) AS rn
-    FROM xd) WHERE rn <= {_NDCG_K}
-), dcg AS (
-  SELECT l.query_id,
-         sum(coalesce({_NDCG_K + 1} - ex.xrank, 0)
-             / log2(l.lrank + 1.0)) AS dcg
-  FROM lsh l LEFT JOIN ex
-    ON l.query_id = ex.query_id AND l.vec_id = ex.vec_id
-  GROUP BY l.query_id
-), idcg AS (
-  SELECT query_id,
-         sum(({_NDCG_K + 1} - xrank) / log2(xrank + 1.0)) AS idcg
-  FROM ex GROUP BY query_id
-)
-SELECT i.query_id,
-       round(coalesce(d.dcg, 0) + 1e-9, 6) AS dcg,
-       round(i.idcg + 1e-9, 6) AS idcg,
-       round(coalesce(d.dcg, 0) / i.idcg + 1e-9, 6) AS ndcg
-FROM idcg i LEFT JOIN dcg d ON i.query_id = d.query_id
-""",
-)
-def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V3/V5 [EXT]: graded nDCG@10 of the deterministic-LSH index
-    against exact brute-force ground truth, per query — the ranked
-    companion to `ann_recall_eval` (recall says WHETHER the truth
-    showed up; nDCG says WHERE it landed). Relevance is graded by
-    exact rank (best neighbor = 10 … 10th = 1, absent = 0); IDCG is
-    the exact list's own DCG, so ndcg = 1.0 means the index ordered
-    the true top-10 perfectly.
-
-    Scale shape: the LSH list comes from a bucket EQUI-join (corpus
-    hash-partitioned on bucket id, broadcast query side); the exact
-    list is a broadcast-bounded crossJoin (|queries| rows). Both
-    rankings use UNROUNDED distances with the (dist, vec_id)
-    tie-break, and both engines fold the distance sums
-    left-to-right, so ranks are bit-reproducible. The DCG/IDCG
-    reduction is a per-query agg over ≤10 rows."""
-    from resume_jd_matcher_spark.operators.ann import lsh_signature
-    from resume_jd_matcher_spark.functions.vector import squared_l2
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select(
-        "vec_id",
-        F.col("embedding").alias("ce"),
-        lsh_signature(F.col("embedding"), _NDCG_PLANES).alias("bucket"),
-    )
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        lsh_signature(F.col("embedding"), _NDCG_PLANES).alias("qbucket"),
-    )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    lsh = (
-        c.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
-        .select(
-            "query_id",
-            "vec_id",
-            squared_l2(F.col("ce"), F.col("qe")).alias("dist"),
-        )
-        .withColumn("lrank", F.row_number().over(w))
-        .filter(F.col("lrank") <= _NDCG_K)
-        .select("query_id", "vec_id", "lrank")
-    )
-    ex = (
-        c.select("vec_id", "ce")
-        .crossJoin(F.broadcast(q.select("query_id", "qe")))
-        .select(
-            "query_id",
-            "vec_id",
-            squared_l2(F.col("ce"), F.col("qe")).alias("dist"),
-        )
-        .withColumn("xrank", F.row_number().over(w))
-        .filter(F.col("xrank") <= _NDCG_K)
-        .select("query_id", "vec_id", "xrank")
-    )
-    dcg = (
-        lsh.join(ex, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(
-                F.coalesce(F.lit(_NDCG_K + 1) - F.col("xrank"), F.lit(0))
-                / F.log2(F.col("lrank") + F.lit(1.0))
-            ).alias("dcg")
-        )
-    )
-    idcg = ex.groupBy("query_id").agg(
-        F.sum(
-            (F.lit(_NDCG_K + 1) - F.col("xrank"))
-            / F.log2(F.col("xrank") + F.lit(1.0))
-        ).alias("idcg")
-    )
-    return idcg.join(dcg, "query_id", "left").select(
-        "query_id",
-        F.round(F.coalesce(F.col("dcg"), F.lit(0.0)) + F.lit(1e-9), 6).alias(
-            "dcg"
-        ),
-        F.round(F.col("idcg") + F.lit(1e-9), 6).alias("idcg"),
-        F.round(
-            F.coalesce(F.col("dcg"), F.lit(0.0)) / F.col("idcg")
-            + F.lit(1e-9),
-            6,
-        ).alias("ndcg"),
     )
 
 

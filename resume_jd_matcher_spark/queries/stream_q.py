@@ -1,11 +1,5 @@
-"""Stream dedup gate + multimodal queries (SURVEY.md §2.G, §2.H U6).
-
-DuckDB can't run a stream, so the streaming ANN dedup gate registers
-its BATCH TWIN here (same transformation logic over the same
-embeddings table); tests/test_streaming.py asserts
-stream-result == batch-twin-result, closing the loop: oracle checks
-the twin, equivalence checks the stream. The media queries decode,
-fingerprint and dispatch the binary payload attached to each document.
+"""Multimodal queries (SURVEY.md §2.H U6): decode, fingerprint and
+dispatch the binary payload attached to each document.
 """
 
 from __future__ import annotations
@@ -107,65 +101,6 @@ def q_media_binary_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = attach_media(d)
     return media_simhash_neardup(media)
-
-
-from resume_jd_matcher_spark.queries.vector_q import (  # noqa: E402
-    _LSH_PLANES,
-    _SQL_LSH_SIG,
-    SQL_SQL2,
-)
-
-
-@register(
-    "stream_ann_dedup_gate",
-    f"""
-WITH e0 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), c AS (
-  SELECT vec_id, e AS ce,
-         {_SQL_LSH_SIG.format(a='e', planes=_LSH_PLANES)} AS bucket
-  FROM e0 WHERE vec_id % 4 <> 3
-), q AS (
-  SELECT vec_id AS query_id, e AS qe,
-         {_SQL_LSH_SIG.format(a='e', planes=_LSH_PLANES)} AS qbucket
-  FROM e0 WHERE vec_id % 4 = 3
-), d AS (
-  SELECT q.query_id, c.vec_id AS nn_id, c.bucket,
-         {SQL_SQL2.format(a='qe', b='ce')} AS dist
-  FROM c JOIN q ON c.bucket = q.qbucket
-), r AS (
-  SELECT query_id, nn_id, bucket, dist,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY dist, nn_id) AS rn
-  FROM d
-)
-SELECT query_id, nn_id, bucket, round(dist, 4) AS dist,
-       (round(dist, 4) <= 1.5) AS is_dup
-FROM r WHERE rn = 1
-""",
-)
-def q_stream_ann_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.G/V8 [EXT] batch twin of the STREAM-STATIC ANN GATE: each
-    arriving vector (the vec_id % 4 == 3 slice — sf-proportional, so
-    the stream is non-empty at every scale) is checked against the
-    static LSH-indexed corpus for an existing near-duplicate before
-    admission — the online dedup gate of a training-data ingest. Top-1
-    same-bucket neighbor + is_dup verdict at squared-L2 1.5.
-
-    The formulation is streaming-safe end to end: bucket signature is
-    a narrow projection on the arriving side, the index is a broadcast
-    static join, and top-1 is a struct-min aggregate (not a rank
-    window). tests/test_streaming.py asserts the streamed run equals
-    this twin (streaming/events.py:ann_dedup_gate)."""
-    from resume_jd_matcher_spark.streaming.events import ann_dedup_gate
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ann_dedup_gate(
-        emb.filter(F.col("vec_id") % 4 == 3),
-        emb.filter(F.col("vec_id") % 4 != 3),
-        threshold=1.5,
-        n_planes=_LSH_PLANES,
-    )
 
 
 _MAGIC_CASE = """CASE WHEN doc_id % 7 = 0 THEN ''

@@ -1544,8 +1544,7 @@ def q_minhash_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V8 eval [EXT]: precision/recall of the MinHash-LSH near-dup
     screen (est_jaccard ≥ 0.5) against the EXACT token-set Jaccard
     ground truth at the same threshold — the promotion gate a pipeline
-    runs before trusting the sketch path, ann_recall_eval's dedup
-    sibling. Both rankings build in one plan; the comparison is a
+    runs before trusting the sketch path. Both rankings build in one plan; the comparison is a
     full-outer pair join + one agg — no collect."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     pred = dedup.minhash_lsh_candidates(d, n_hashes=16, rows_per_band=4).filter(

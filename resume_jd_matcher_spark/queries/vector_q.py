@@ -1,8 +1,9 @@
 """Vector / similarity queries (SURVEY.md §2.C V4-V8, §2.E W1).
 
-Engine paths live in operators/similarity.py and operators/ann.py;
-oracle SQL re-expresses the same math over DOUBLE[] with identical
-left-to-right folds and ``ORDER BY dist, vec_id`` tie-breaks.
+Engine paths live in operators/similarity.py and
+operators/similarity_blas.py; oracle SQL re-expresses the same math
+over DOUBLE[] with identical left-to-right folds and
+``ORDER BY dist, vec_id`` tie-breaks.
 """
 
 from __future__ import annotations
@@ -12,9 +13,9 @@ from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.operators import similarity
 from resume_jd_matcher_spark.operators.similarity_blas import (
+    similarity_join_blas,
     topk_similarity_blas,
 )
-from resume_jd_matcher_spark.operators.ann import lsh_bucket_topk
 from resume_jd_matcher_spark.queries import register
 from resume_jd_matcher_spark.sources.io import load_table
 
@@ -117,10 +118,8 @@ WHERE round({SQL_SQL2.format(a='le', b='re')}, 4) < 1.5 AND left_id < right_id
 )
 def q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V6: all pairs within squared-L2 distance 1.5 (left side bounded
-    to 50 query rows) — the batch generalization of top-k search.
-    Routed by ``choose_similarity_strategy`` (Catalyst stats): at this
-    pair count it takes the exact BLAS path; past ``max_exact_pairs``
-    the same call degrades gracefully to LSH-bucketed candidates."""
+    to 50 query rows) — the batch generalization of top-k search,
+    on the exact BLAS path."""
     emb = load_table(spark, sf_dir, "embeddings")
     left = emb.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("left_id"), F.col("embedding").alias("left_embedding")
@@ -128,9 +127,7 @@ def q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = emb.select(
         F.col("vec_id").alias("right_id"), F.col("embedding").alias("right_embedding")
     )
-    return similarity.similarity_join_auto(
-        left, right, threshold=1.5, dedup_pairs=True
-    )
+    return similarity_join_blas(left, right, threshold=1.5, dedup_pairs=True)
 
 
 @register(
@@ -205,110 +202,7 @@ def q_neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = emb.select(
         F.col("vec_id").alias("right_id"), F.col("embedding").alias("right_embedding")
     )
-    return similarity.similarity_join_auto(
-        left, right, threshold=1.2, dedup_pairs=True
-    )
-
-
-_LSH_PLANES = 8
-
-_SQL_LSH_SIG = (
-    "list_sum(list_transform(generate_series(0, {planes} - 1), j -> "
-    "CASE WHEN list_sum(list_transform(generate_series(1, len({a})), "
-    "i -> {a}[i] * sin(0.7 * j * len({a}) + 0.3 * i))) > 0.0 "
-    "THEN (1::BIGINT << j) ELSE 0 END))::BIGINT"
-)
-
-
-@register(
-    "ann_lsh_topk",
-    f"""
-WITH e0 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), c AS (
-  SELECT vec_id, e AS ce,
-         {_SQL_LSH_SIG.format(a='e', planes=_LSH_PLANES)} AS bucket
-  FROM e0
-), q AS (
-  SELECT vec_id AS query_id, e AS qe,
-         {_SQL_LSH_SIG.format(a='e', planes=_LSH_PLANES)} AS qbucket
-  FROM e0 WHERE vec_id < 3
-), d AS (
-  SELECT q.query_id, c.vec_id, c.bucket,
-         {SQL_SQL2.format(a='qe', b='ce')} AS dist
-  FROM c JOIN q ON c.bucket = q.qbucket
-), r AS (
-  SELECT query_id, vec_id, bucket, dist,
-         row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-  FROM d
-)
-SELECT query_id, vec_id, bucket, round(dist, 4) AS dist
-FROM r WHERE rn <= 5
-""",
-)
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path: random-hyperplane LSH bucketing (deterministic
-    sin-derived hyperplanes) → equi-join on bucket → exact re-rank
-    within bucket. Candidate set shrinks ~2^planes-fold vs brute force;
-    the bucket join is an equi-join Catalyst can hash-partition, so no
-    crossJoin of the full corpus at scale."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", "embedding")
-    queries_df = _emb_queries(spark, sf_dir)
-    return lsh_bucket_topk(corpus, queries_df, k=5, n_planes=_LSH_PLANES)
-
-
-@register(
-    "ann_ivf_topk",
-    f"""
-WITH e0 AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
-), cent AS (
-  SELECT label,
-         list(cv ORDER BY dim) AS centroid
-  FROM (
-    SELECT label, dim, avg(e[dim]) AS cv
-    FROM e0, (SELECT unnest(generate_series(1, 64)) AS dim) dims
-    GROUP BY label, dim
-  ) GROUP BY label
-), q AS (
-  SELECT vec_id AS query_id, e AS qe FROM e0 WHERE vec_id < 3
-), routed AS (
-  SELECT query_id, qe, label FROM (
-    SELECT q.query_id, q.qe, cent.label,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY {SQL_SQL2.format(a='qe', b='centroid')}, cent.label
-           ) AS crn
-    FROM q, cent
-  ) WHERE crn <= 2
-), d AS (
-  SELECT r.query_id, c.vec_id, c.label,
-         {SQL_SQL2.format(a='r.qe', b='c.e')} AS dist
-  FROM routed r JOIN e0 c ON c.label = r.label
-), ranked AS (
-  SELECT query_id, vec_id, label, dist,
-         row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-  FROM d
-)
-SELECT query_id, vec_id, label, round(dist, 4) AS dist
-FROM ranked WHERE rn <= 5
-""",
-)
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path #2 — IVF: per-label centroids (coarse quantizer)
-    route each query to its 2 nearest partitions; exact ranking touches
-    only ~2/10 of the corpus. Complements the LSH path: IVF prunes by
-    data geometry, LSH by random projection."""
-    from resume_jd_matcher_spark.operators.ann import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb.select("vec_id", "label", "embedding"),
-        _emb_queries(spark, sf_dir),
-        k=5,
-        n_probe=2,
-    )
+    return similarity_join_blas(left, right, threshold=1.2, dedup_pairs=True)
 
 
 @register(
@@ -423,8 +317,7 @@ GROUP BY label, n
 """,
 )
 def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V3/IVF support op: per-label embedding centroid (element-wise
-    mean) — the partition-centroid computation IVF routing relies on,
+    """V3: per-label embedding centroid (element-wise mean),
     expressed as one long-form explode → (label, dim) hash agg
     (map-side combined; shuffle = labels × dims compact rows, never
     vectors). Exposed as per-label centroid summary stats so the
@@ -486,141 +379,6 @@ def q_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_new", F.lit(1)
     )
     return incremental_append(existing, incoming, "vec_id")
-
-
-def _lloyd_sql(n_clusters: int = 8, n_iter: int = 2, dp: int = 6) -> str:
-    """Unrolled Lloyd-iteration CTE chain mirroring
-    operators/ann.py lloyd_kmeans_partition: seeds = lowest-id vectors
-    rounded to dp, then n_iter × (argmin assignment → per-dim mean
-    rounded to dp). Rounding each iteration's centroids on BOTH engines
-    quantizes away float-summation-order noise, so the trajectories are
-    identical."""
-    assign = """a{k} AS (
-  SELECT vec_id, e, cid FROM (
-    SELECT e0.vec_id, e0.e, s.cid,
-           row_number() OVER (PARTITION BY e0.vec_id
-                              ORDER BY {dist}, s.cid) AS rn
-    FROM e0, {cents} s
-  ) WHERE rn = 1
-)"""
-    update = """c{k} AS (
-  SELECT cid, list(round(cv, {dp}) ORDER BY dim) AS c
-  FROM (
-    SELECT a.cid, d.dim, avg(a.e[d.dim]) AS cv
-    FROM a{k} a, (SELECT unnest(generate_series(1, 64)) AS dim) d(dim)
-    GROUP BY a.cid, d.dim
-  ) GROUP BY cid
-)"""
-    ctes = [
-        f"""e0 AS (
-  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-  FROM embeddings
-)""",
-        f"""c0 AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-         list_transform(e, x -> round(x, {dp})) AS c
-  FROM (SELECT * FROM e0 ORDER BY vec_id LIMIT {n_clusters})
-)""",
-    ]
-    for i in range(1, n_iter + 1):
-        ctes.append(
-            assign.format(
-                k=i, cents=f"c{i-1}", dist=SQL_SQL2.format(a="e0.e", b="s.c")
-            )
-        )
-        ctes.append(update.format(k=i, dp=dp))
-    # final assignment against the last centroids
-    ctes.append(
-        assign.format(
-            k="f", cents=f"c{n_iter}", dist=SQL_SQL2.format(a="e0.e", b="s.c")
-        )
-    )
-    return "WITH " + ",\n".join(ctes)
-
-
-@register(
-    "kmeans_ivf_topk",
-    f"""
-{_lloyd_sql(n_clusters=8, n_iter=2)},
-q AS (
-  SELECT vec_id AS query_id, e AS qe FROM e0 WHERE vec_id < 3
-), routed AS (
-  SELECT query_id, qe, cid FROM (
-    SELECT q.query_id, q.qe, s.cid,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {SQL_SQL2.format(a='q.qe', b='s.c')}, s.cid) AS crn
-    FROM q, c2 s
-  ) WHERE crn <= 2
-), d AS (
-  SELECT r.query_id, a.vec_id, a.cid,
-         {SQL_SQL2.format(a='r.qe', b='a.e')} AS dist
-  FROM routed r JOIN af a ON a.cid = r.cid
-), ranked AS (
-  SELECT query_id, vec_id, cid, dist,
-         row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-  FROM d
-)
-SELECT query_id, vec_id, cid::INT AS cid, round(dist, 4) AS dist
-FROM ranked WHERE rn <= 5
-""",
-)
-def q_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V3/ANN with a LEARNED coarse quantizer: fixed-iteration
-    deterministically-seeded Lloyd k-means clusters the corpus, then
-    IVF-routes queries to the 2 nearest learned centroids and
-    exact-ranks only inside those clusters. Per-iteration centroid
-    rounding makes the learned quantizer itself oracle-checkable — the
-    DuckDB twin replays the identical Lloyd trajectory as unrolled
-    CTEs (flipped from rows-only in r03). The MLlib KMeans|| variant
-    of the same shape keeps its recall-floor pytest
-    (tests/test_vector.py)."""
-    from resume_jd_matcher_spark.operators.ann import (
-        ivf_topk,
-        lloyd_kmeans_partition,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    parted, cents = lloyd_kmeans_partition(
-        emb.select("vec_id", "embedding"), n_clusters=8, n_iter=2, out_col="cid"
-    )
-    return ivf_topk(
-        parted,
-        _emb_queries(spark, sf_dir),
-        k=5,
-        partition_col="cid",
-        n_probe=2,
-        centroids=cents,
-    )
-
-
-@register(
-    "semdedup",
-    f"""
-{_lloyd_sql(n_clusters=8, n_iter=2)},
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE round({SQL_DOT.format(a='a.e', b='b.e')} /
-              ({SQL_NORM.format(a='a.e')} * {SQL_NORM.format(a='b.e')}), 4) >= 0.35
-)
-SELECT f.vec_id, f.cid::INT AS cid,
-       (d.vec_id IS NULL)::INT AS is_kept
-FROM af f LEFT JOIN dropped d ON f.vec_id = d.vec_id
-""",
-)
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V8 [EXT]: SemDeDup (Abbas et al. 2023) semantic dedup — Lloyd
-    coarse-quantize the embedding space, prune cosine-≥τ pairs ONLY
-    within clusters (O(Σ cluster²), never corpus²), drop each vector
-    with a lower-id near-duplicate cluster-mate. The DuckDB twin
-    replays the identical deterministic Lloyd trajectory (unrolled
-    CTEs) and the same rounded-cosine boundary calls."""
-    from resume_jd_matcher_spark.operators.dedup import semdedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return semdedup(
-        emb.select("vec_id", "embedding"), n_clusters=8, n_iter=2, tau=0.35
-    )
 
 
 @register(
@@ -783,80 +541,6 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "ann_recall_eval",
-    f"""
-WITH e0 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), c AS (
-  SELECT vec_id, e AS ce,
-         {{sig_c}} AS bucket
-  FROM e0
-), q AS (
-  SELECT vec_id AS query_id, e AS qe,
-         {{sig_q}} AS qbucket
-  FROM e0 WHERE vec_id < 3
-), d AS (
-  SELECT q.query_id, c.vec_id,
-         {SQL_SQL2.format(a='qe', b='ce')} AS dist
-  FROM c JOIN q ON c.bucket = q.qbucket
-), lsh AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-    FROM d) WHERE rn <= 5
-), xd AS (
-  SELECT q.query_id, c0.vec_id,
-         {SQL_SQL2.format(a='qe', b='ce')} AS dist
-  FROM (SELECT vec_id, e AS ce FROM e0) c0, q
-), ex AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-    FROM xd) WHERE rn <= 5
-), hits AS (
-  SELECT lsh.query_id, count(*)::BIGINT AS n_hits
-  FROM lsh JOIN ex ON lsh.query_id = ex.query_id AND lsh.vec_id = ex.vec_id
-  GROUP BY lsh.query_id
-)
-SELECT qq.query_id, coalesce(n_hits, 0)::INT AS n_hits,
-       round(coalesce(n_hits, 0) / 5.0 + 1e-12, 2) AS recall_at_5
-FROM (SELECT DISTINCT query_id FROM ex) qq
-LEFT JOIN hits ON qq.query_id = hits.query_id
-""".format(
-        sig_c=_SQL_LSH_SIG.format(a="e", planes=_LSH_PLANES),
-        sig_q=_SQL_LSH_SIG.format(a="e", planes=_LSH_PLANES),
-    ),
-)
-def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] ANN quality evaluation IN-ENGINE: recall@5 of the
-    hyperplane-LSH index against exact brute-force ground truth, per
-    query — the accept/reject gate an index build runs before
-    promotion (the recall SLO check). Both rankings execute in one
-    plan; the comparison is an equi-join on (query, vec), never a
-    collect."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", "embedding")
-    queries_df = _emb_queries(spark, sf_dir)
-    lsh = lsh_bucket_topk(corpus, queries_df, k=5, n_planes=_LSH_PLANES).select(
-        "query_id", "vec_id"
-    )
-    exact = topk_similarity_blas(corpus, queries_df, k=5).select(
-        "query_id", "vec_id"
-    )
-    hits = lsh.join(exact, ["query_id", "vec_id"]).groupBy("query_id").agg(
-        F.count("*").alias("n_hits")
-    )
-    qq = exact.select("query_id").distinct()
-    return qq.join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n_hits"), F.lit(0)).cast("int").alias("n_hits"),
-        F.round(
-            F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(5.0) + F.lit(1e-12), 2
-        ).alias("recall_at_5"),
-    )
-
-
-@register(
     "embedding_whiten",
     """
 WITH ex AS (
@@ -1015,56 +699,6 @@ def q_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MP_FLIPS = ", ".join(f"xor(qbucket, {1 << j})" for j in range(8))
-
-
-@register(
-    "ann_multiprobe_topk",
-    f"""
-WITH e0 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-), c AS (
-  SELECT vec_id, e AS ce,
-         {_SQL_LSH_SIG.format(a='e', planes=_LSH_PLANES)} AS bucket
-  FROM e0
-), q AS (
-  SELECT vec_id AS query_id, e AS qe,
-         {_SQL_LSH_SIG.format(a='e', planes=_LSH_PLANES)} AS qbucket
-  FROM e0 WHERE vec_id < 3
-), probes AS (
-  SELECT query_id, qe, unnest([qbucket::BIGINT, {_MP_FLIPS}]) AS probe
-  FROM q
-), d AS (
-  SELECT p.query_id, c.vec_id, c.bucket,
-         {SQL_SQL2.format(a='qe', b='ce')} AS dist
-  FROM c JOIN probes p ON c.bucket = p.probe
-), r AS (
-  SELECT query_id, vec_id, bucket, dist,
-         row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) AS rn
-  FROM d
-)
-SELECT query_id, vec_id, bucket, round(dist, 4) AS dist
-FROM r WHERE rn <= 5
-""",
-)
-def q_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN recall lever: multi-probe LSH (Lv et al. VLDB'07) — each
-    query probes its bucket plus all 1-bit-flip neighbors, recovering
-    the likeliest single-probe misses (vectors just across ONE
-    hyperplane) without doubling hash tables. Probe keys fan out on
-    the broadcast query side only; the corpus join stays a plain
-    equi-join (operators/ann.py:lsh_multiprobe_topk)."""
-    from resume_jd_matcher_spark.operators.ann import lsh_multiprobe_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_multiprobe_topk(
-        emb.select("vec_id", "embedding"),
-        _emb_queries(spark, sf_dir),
-        k=5,
-        n_planes=_LSH_PLANES,
-    )
-
-
 @register(
     "align_uniformity",
     f"""
@@ -1180,12 +814,11 @@ def q_silhouette_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     simplification of Hruschka et al. 2004 replaces the O(n²)
     mean-pairwise distances with O(n·k) centroid distances — the only
     formulation that scales). The per-label average is the standing
-    health gate for any labeled / clustered embedding corpus (e.g.
-    after IVF k-means or SemDeDup clustering).
+    health gate for any labeled / clustered embedding corpus.
 
     Scale shape: centroids are one long-form (label, dim) hash agg
-    (bounded k·d rows, broadcast back); assignment distances are the
-    IVF-assignment shape — the (point, dim) stream joins the broadcast
+    (bounded k·d rows, broadcast back); for assignment distances the
+    (point, dim) stream joins the broadcast
     centroid table and map-side-combines to n·k partial sums before
     the shuffle; no vector ever crosses the wire whole, no pairwise
     point-point join anywhere."""

@@ -176,10 +176,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
     The fixture generator has written ts as TIMESTAMP(NANOS) in some
     rounds and TIMESTAMP(MICROS) in others — branch on the SCANNED
-    type, not the round, so both the batch and streaming paths survive
-    any physical representation (assumes nanosAsLong is set on the
-    session for the NANOS case). Shared by ``load_table`` and every
-    streaming stager so a drift can never split the two paths again.
+    type, not the round, so the scan survives any physical
+    representation (assumes nanosAsLong is set on the session for the
+    NANOS case).
 
     Any other scanned type (e.g. millis-as-long from a future fixture)
     fails LOUDLY here rather than flowing a mis-scaled timestamp into

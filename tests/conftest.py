@@ -16,6 +16,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
 SF_SMALL = "/root/testdata/sf0.001"
 
 
+def physical_plan(df) -> str:
+    """The executed physical plan of ``df`` as text, for plan-shape
+    assertions."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from resume_jd_matcher_spark.session import get_spark

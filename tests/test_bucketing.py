@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from resume_jd_matcher_spark.plans.optimize import physical_plan
+from conftest import physical_plan
 from resume_jd_matcher_spark.sources.io import load_table
 
 SF = "/root/testdata/sf0.001"

@@ -176,7 +176,7 @@ def test_simhash_neardup_banded_equals_allpairs(spark):
     its physical plan must contain no cross join."""
     from pyspark.sql import functions as F
 
-    from resume_jd_matcher_spark.plans.optimize import physical_plan
+    from conftest import physical_plan
     from resume_jd_matcher_spark.sources.io import load_table
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -204,7 +204,7 @@ def test_simhash_neardup_banded_equals_allpairs(spark):
 
 def test_ngram_jaccard_pruned_no_crossjoin(spark):
     """Shared-shingle candidate pruning: no cross join in the plan."""
-    from resume_jd_matcher_spark.plans.optimize import physical_plan
+    from conftest import physical_plan
     from resume_jd_matcher_spark.sources.io import load_table
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -257,48 +257,6 @@ def test_ngram_jaccard_cap_inactive_equals_uncapped(crafted):
         for r in dedup.ngram_jaccard_join(crafted, n=3, max_df=50).collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_semdedup_drops_lower_id_duplicates(spark):
-    # 8 seed vectors (the Lloyd seeds are the 8 lowest ids), plus two
-    # vectors colinear with seed 0: one exact copy, one scaled copy
-    # (cosine 1.0). Both land in seed 0's cluster and both have a
-    # lower-id near-dup mate -> dropped; everything else kept.
-    import math
-
-    def basis(i, dim=8, scale=1.0):
-        v = [0.0] * dim
-        v[i % dim] = scale
-        v[(i + 3) % dim] = 0.25 * scale * ((-1) ** i)
-        return v
-
-    rows = [(i, basis(i)) for i in range(8)]
-    rows.append((100, basis(0)))            # exact copy of vec 0
-    rows.append((101, basis(0, scale=2.0)))  # colinear: cosine == 1
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {
-        r.vec_id: (r.cid, r.is_kept)
-        for r in dedup.semdedup(emb, n_clusters=8, n_iter=1, tau=0.9).collect()
-    }
-    assert len(out) == 10  # corpus-sized output, one row per vector
-    assert out[100][1] == 0 and out[101][1] == 0
-    assert all(out[i][1] == 1 for i in range(8))
-    # the duplicates share vec 0's cluster
-    assert out[100][0] == out[0][0] == out[101][0]
-
-
-def test_semdedup_threshold_boundary(spark):
-    # cosine rounded to 4 dp before comparing: a pair at exactly tau
-    # is dropped, just below survives.
-    a = [1.0, 0.0]
-    b = [1.0, 1.0]  # cos(a,b) = 0.7071
-    emb = spark.createDataFrame(
-        [(0, a), (1, b)], ["vec_id", "embedding"]
-    )
-    dropped = dedup.semdedup(emb, n_clusters=1, n_iter=1, tau=0.7071)
-    assert {r.vec_id: r.is_kept for r in dropped.collect()} == {0: 1, 1: 0}
-    kept = dedup.semdedup(emb, n_clusters=1, n_iter=1, tau=0.7072)
-    assert {r.vec_id: r.is_kept for r in kept.collect()} == {0: 1, 1: 1}
 
 
 def test_line_dedup_keeps_first_occurrence(spark):

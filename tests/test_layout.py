@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from resume_jd_matcher_spark.plans.optimize import physical_plan
+from conftest import physical_plan
 from resume_jd_matcher_spark.sources.io import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -131,40 +131,6 @@ def test_range_partitioned_sorted_write(spark, tmp_path):
         assert hi1 <= lo2, f"overlapping ranges {(lo1, hi1)} vs {(lo2, hi2)}"
 
 
-def test_lsh_index_persist_and_probe(spark, tmp_path):
-    """V3 'index build' the Spark-native way: persist the LSH bucket
-    assignment (with its n_planes metadata) once, probe it later
-    without recomputing signatures — probe results equal the direct
-    in-flight path, and a mismatched n_planes probe is rejected
-    instead of silently returning an empty join."""
-    import pytest as _pytest
-
-    from resume_jd_matcher_spark.operators.ann import (
-        build_lsh_index,
-        lsh_bucket_topk,
-        probe_lsh_index,
-    )
-
-    out = str(tmp_path / "lsh_index")
-    emb = load_table(spark, SF, "embeddings")
-    build_lsh_index(emb.select("vec_id", "embedding"), out, n_planes=8)
-
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_embedding"),
-    )
-    direct = lsh_bucket_topk(emb.select("vec_id", "embedding"), q, k=5)
-    probed = probe_lsh_index(spark, out, q, k=5, n_planes=8)
-    assert sorted(map(tuple, direct.collect())) == sorted(
-        map(tuple, probed.collect())
-    )
-
-    with _pytest.raises(ValueError, match="n_planes=8"):
-        probe_lsh_index(spark, out, q, k=5, n_planes=16)
-    with _pytest.raises(ValueError, match="_lsh_meta"):
-        probe_lsh_index(spark, str(tmp_path / "nope"), q, k=5)
-
-
 def test_incremental_daily_processing_equals_full_batch(
     spark, partitioned_events, tmp_path
 ):
@@ -197,4 +163,3 @@ def test_incremental_daily_processing_equals_full_batch(
         .collect()
     )
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-

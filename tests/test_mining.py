@@ -33,7 +33,7 @@ class TestGlobalPrefix:
         bucket; the only unpartitioned window runs over the bounded
         per-bucket summary (n_buckets rows)."""
         from resume_jd_matcher_spark.operators.prefix import global_prefix
-        from resume_jd_matcher_spark.plans.optimize import physical_plan
+        from conftest import physical_plan
 
         df = spark.range(1000).select(
             F.col("id"), (F.col("id") % 97).alias("v")

@@ -1,5 +1,5 @@
 """Every library module is reachable from the program: each module under
-the operator, streaming, function, plan and source packages must be
+the operator, function, plan and source packages must be
 imported by some other non-test module of the package, by ``perfbench/``,
 by ``bench.py``, by a ``tools/`` script or by ``__spark_entry__.py``. A
 module only its own tests import is dead code that every tier-1 run
@@ -22,7 +22,7 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "resume_jd_matcher_spark"
-LIBRARY_PACKAGES = ("operators", "streaming", "functions", "plans", "sources")
+LIBRARY_PACKAGES = ("operators", "functions", "plans", "sources")
 
 
 def _module_name(path: str) -> str:
@@ -81,10 +81,7 @@ def test_every_library_module_has_a_non_test_importer():
 # when its test-only caller is deleted or a program path starts using
 # it; the list may only shrink.
 TEST_ONLY_DEFINITIONS = {
-    "operators.ann": {"build_lsh_index", "probe_lsh_index", "kmeans_partition"},
     "operators.similarity": {"topk_similarity"},
-    "streaming.events": {"run_stream_to_memory", "read_embeddings_stream"},
-    "plans.optimize": {"assert_pushed_filter"},
     "sources.io": {"decode_documents"},
 }
 

@@ -1,25 +1,16 @@
 """Physical-plan shape assertions (SURVEY.md §4): broadcasts happen,
-filters reach the parquet scan, UDF stages stay out of native paths."""
+scans prune columns, UDF stages stay out of native paths."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from resume_jd_matcher_spark.plans.optimize import (
-    assert_pushed_filter,
-    physical_plan,
+from conftest import physical_plan
+from resume_jd_matcher_spark.queries.vector_q import (
+    q_neardup_embedding,
+    q_topk_similarity,
 )
-from resume_jd_matcher_spark.queries.vector_q import q_topk_similarity
 from resume_jd_matcher_spark.sources.io import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_filter_pushed_to_scan(spark):
-    df = load_table(spark, SF, "customer").filter(F.col("c_acctbal") > 9000).select(
-        "c_custkey"
-    )
-    assert_pushed_filter(df, "c_acctbal")
 
 
 def test_scan_prunes_columns(spark):
@@ -35,56 +26,11 @@ def test_topk_shuffles_only_partials(spark):
     plan = physical_plan(q_topk_similarity(spark, SF))
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_choose_similarity_strategy(spark):
-    from resume_jd_matcher_spark.plans.optimize import choose_similarity_strategy
-
-    emb = load_table(spark, SF, "embeddings")
-    small = emb.limit(10)
-    assert choose_similarity_strategy(small, small) == "exact"
-    assert (
-        choose_similarity_strategy(emb, emb, max_exact_pairs=1000) == "lsh"
-    )
-
-
-def test_similarity_join_auto_routes_to_lsh(spark):
-    """Above the pair-count threshold the router must engage the
-    LSH-bucketed route: equi-join on the bucket id (no crossJoin, no
-    MapInPandas), and every emitted pair must be a true under-threshold
-    pair (precision 1.0 — LSH trades recall, never correctness)."""
-    from resume_jd_matcher_spark.operators.similarity import (
-        similarity_join_auto,
-    )
-    from resume_jd_matcher_spark.plans.optimize import (
-        choose_similarity_strategy,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    left = emb.select(
-        F.col("vec_id").alias("left_id"),
-        F.col("embedding").alias("left_embedding"),
-    )
-    right = emb.select(
-        F.col("vec_id").alias("right_id"),
-        F.col("embedding").alias("right_embedding"),
-    )
-    assert choose_similarity_strategy(left, right, max_exact_pairs=100) == "lsh"
-
-    routed = similarity_join_auto(
-        left, right, threshold=1.2, dedup_pairs=True, max_exact_pairs=100
-    )
-    plan = physical_plan(routed)
+    # The similarity self-join takes the same BLAS mapInPandas route
+    # against a broadcast probe matrix: no pair-space join.
+    plan = physical_plan(q_neardup_embedding(spark, SF))
+    assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
-    assert "MapInPandas" not in plan  # not the BLAS route
-
-    exact = similarity_join_auto(left, right, threshold=1.2, dedup_pairs=True)
-    assert "MapInPandas" in physical_plan(exact)  # default: BLAS route
-
-    got = {(r.left_id, r.right_id) for r in routed.collect()}
-    want = {(r.left_id, r.right_id) for r in exact.collect()}
-    assert got <= want          # no false pairs
-    assert len(got) > 0         # buckets do surface near pairs
 
 
 def test_winnow_single_window_sort(spark):
@@ -121,15 +67,7 @@ def test_registry_wide_no_cartesian_products(spark):
     bnlj_by_design = {
         # bounded broadcast side by construction:
         "topk_similarity", "cosine_topk", "similarity_join", "knn_per_label",
-        "shortlist_e2e", "neardup_embedding", "ann_lsh_topk", "ann_ivf_topk",
-        "mllib_lsh_join", "kmeans_ivf_topk", "pipeline_e2e",
-        # coarse Lloyd fit/routing: crossJoin against a broadcast
-        # centroid table of <= nlist (=4) rows, same shape as
-        # kmeans_ivf_topk (the PQ half is pure equi-joins):
-        "ivf_pq_topk",
-        # Lloyd fit (<=8-row broadcast centroids) feeding the
-        # within-cluster pair scan, which itself is a cid equi-join:
-        "semdedup",
+        "shortlist_e2e", "neardup_embedding", "pipeline_e2e",
         # single-row broadcast total (unigram mass) crossed into the
         # per-bigram scorer:
         "ngram_lm_score",
@@ -182,9 +120,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # inverse-CDF map + a single-row total crossed in:
         "quantile_normalize",
         # -- round 8 --
-        # 3-row broadcast query side crossed into the corpus for the
-        # exact ground-truth ranking (the standard similarity shape):
-        "ndcg_eval",
         # single-row broadcast character-budget total crossed into the
         # ranked document grain:
         "token_budget_curriculum",
@@ -300,9 +235,6 @@ def test_registry_wide_no_cartesian_products(spark):
         # 1-row global-mean-frequency + 1-row weight-total broadcasts
         # crossed into the |sources|-bounded grain:
         "doremi_reweight",
-        # calendar-bounded day spine broadcast crossed into the
-        # |event_types| dim to build the zero-fill grid:
-        "burstiness_fano",
         # -- round 12 --
         # global_prefix's 1-row (min, max) bucket-stats broadcast
         # crossed into the token-count projection (the

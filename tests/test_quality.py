@@ -1,13 +1,8 @@
-"""Repetition-based quality filters (operators/quality.py) and
-product quantization (operators/pq.py)."""
+"""Repetition-based quality filters (operators/quality.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from resume_jd_matcher_spark.operators.quality import repetition_stats
-
-SF = "/root/testdata/sf0.001"
 
 
 def _docs(spark, rows):
@@ -55,130 +50,6 @@ def test_repetition_empty_and_short_docs(spark):
     assert got[1]["dup_trigram_frac"] == 0.0
     assert got[2]["keep"] == 1
     assert got[2]["top_bigram_frac"] == 0.0
-
-
-def test_pq_determinism_and_recall(spark):
-    """PQ codes are bit-stable across runs (deterministic Lloyd), the
-    codebook is m x k, and ADC top-5 finds the query's own vector at
-    rank 1 (dist to self ~ quantization error, far below other
-    vectors') for most queries."""
-    from resume_jd_matcher_spark.operators.pq import pq_adc_topk, pq_fit_encode
-    from resume_jd_matcher_spark.sources.io import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    codes1, books1 = pq_fit_encode(emb, m=4, k=4, n_iter=2)
-    codes2, _ = pq_fit_encode(emb, m=4, k=4, n_iter=2)
-    assert sorted(map(tuple, codes1.collect())) == sorted(
-        map(tuple, codes2.collect())
-    )
-    assert books1.count() == 16  # 4 subspaces x 4 codes
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_embedding"),
-    )
-    topk = pq_adc_topk(codes1, books1, qs, k_top=5, m=4).collect()
-    assert len(topk) == 50
-    by_q = {}
-    for r in topk:
-        by_q.setdefault(r["query_id"], []).append(r)
-    # with 4^4=256 possible codes over 50 vectors, a query's own code
-    # cell is tiny -> self should usually win rank 1
-    self_hits = sum(
-        1
-        for q, rows in by_q.items()
-        if any(r["vec_id"] == q and r["rn"] == 1 for r in rows)
-    )
-    assert self_hits >= 6  # of 10; quantization can merge close pairs
-
-
-def test_pq_fit_is_sample_bounded(spark):
-    """The codebook fit must scan only the fit_sample_rows lowest-id
-    vectors: fitting the full corpus with a cap of 20 yields the exact
-    codebooks of fitting the 20-row prefix uncapped — and the ENCODE
-    still covers every corpus row."""
-    from resume_jd_matcher_spark.operators.pq import pq_fit_encode
-    from resume_jd_matcher_spark.sources.io import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    n = emb.count()
-    assert n > 20  # the cap must actually bite
-    codes_capped, books_capped = pq_fit_encode(
-        emb, m=4, k=4, n_iter=2, fit_sample_rows=20
-    )
-    prefix = emb.orderBy("vec_id").limit(20)
-    _, books_prefix = pq_fit_encode(prefix, m=4, k=4, n_iter=2)
-    assert sorted(map(tuple, books_capped.collect())) == sorted(
-        map(tuple, books_prefix.collect())
-    )
-    assert codes_capped.count() == n  # full corpus encoded
-
-
-def test_pq_capped_fit_matches_full_fit_when_cap_covers_corpus(spark):
-    """With the cap above the corpus size (the default at test scale),
-    the prefix sample IS the corpus — codebooks and codes must be
-    bit-identical to an uncapped fit, which is why the pq_topk oracle
-    needs no sample clause."""
-    from resume_jd_matcher_spark.operators.pq import pq_fit_encode
-    from resume_jd_matcher_spark.sources.io import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    codes_a, books_a = pq_fit_encode(emb, m=4, k=4, n_iter=2)
-    codes_b, books_b = pq_fit_encode(
-        emb, m=4, k=4, n_iter=2, fit_sample_rows=10**9
-    )
-    assert sorted(map(tuple, books_a.collect())) == sorted(
-        map(tuple, books_b.collect())
-    )
-    assert sorted(map(tuple, codes_a.collect())) == sorted(
-        map(tuple, codes_b.collect())
-    )
-
-
-def test_ivf_pq_composition_prunes_and_ranks(spark):
-    """IVF-PQ results must (a) only contain vectors from the query's
-    probed partitions, (b) agree with full-corpus PQ ADC ranking
-    restricted to those candidates — i.e. routing prunes, ADC ranks,
-    and the two compose without changing either's math."""
-    from resume_jd_matcher_spark.operators.ann import lloyd_kmeans_partition
-    from resume_jd_matcher_spark.operators.pq import (
-        ivf_pq_topk,
-        pq_adc_topk,
-        pq_fit_encode,
-    )
-    from resume_jd_matcher_spark.sources.io import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    parted, coarse = lloyd_kmeans_partition(
-        emb.select("vec_id", "embedding"), n_clusters=4, n_iter=2, out_col="cid"
-    )
-    codes, books = pq_fit_encode(emb, m=4, k=4, n_iter=2)
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_embedding"),
-    )
-    topk, routed = ivf_pq_topk(
-        codes, books, parted, coarse, qs, k_top=5, n_probe=2, m=4
-    )
-    got = topk.collect()
-    assert {r["query_id"] for r in got} == {0, 1, 2, 3, 4}
-
-    # (a) every result sits in a probed partition of its query
-    probed = {(r["query_id"], r["cid"]) for r in routed.collect()}
-    assign = {r["vec_id"]: r["cid"] for r in parted.select("vec_id", "cid").collect()}
-    assert all((r["query_id"], assign[r["vec_id"]]) in probed for r in got)
-
-    # (b) == full PQ ranking restricted to the candidate set
-    full = pq_adc_topk(codes, books, qs, k_top=10**6, m=4).collect()
-    cand_rank: dict[int, list] = {}
-    for r in sorted(full, key=lambda r: (r["query_id"], r["dist"], r["vec_id"])):
-        if (r["query_id"], assign[r["vec_id"]]) in probed:
-            cand_rank.setdefault(r["query_id"], []).append(r["vec_id"])
-    want = {
-        (q, v, i + 1)
-        for q, vs in cand_rank.items()
-        for i, v in enumerate(vs[:5])
-    }
-    assert {(r["query_id"], r["vec_id"], r["rn"]) for r in got} == want
 
 
 def test_ngram_lm_score_rare_text_scores_lower(spark):

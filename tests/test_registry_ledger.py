@@ -175,3 +175,19 @@ def test_driver_priority_covers_the_window():
         "_DRIVER_PRIORITY no longer fills the driver's window; "
         "extend it so rotation stays explicit"
     )
+
+
+def test_every_window_query_has_an_oracle():
+    """The driver hash-checks the first-50 window against DuckDB, so a
+    rows-only query there spends a slot on a check that cannot fail.
+    Rows-only names queue below the boundary."""
+    from resume_jd_matcher_spark import queries as Q
+
+    window = list(Q.queries())[:DRIVER_WINDOW]
+    oracled = Q.oracle_sql()
+    rows_only = [n for n in window if n not in oracled]
+    assert not rows_only, (
+        f"rows-only queries inside the driver's first-{DRIVER_WINDOW} "
+        f"window (move them below the boundary in _DRIVER_PRIORITY): "
+        f"{rows_only}"
+    )

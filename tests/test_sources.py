@@ -164,7 +164,7 @@ def test_sql_api_views_share_plan_space(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from resume_jd_matcher_spark.api import register_tables
-    from resume_jd_matcher_spark.plans.optimize import physical_plan
+    from conftest import physical_plan
     from resume_jd_matcher_spark.sources.io import load_table
 
     names = register_tables(spark, sf_dir)
