@@ -17,4 +17,13 @@ Design principles (SURVEY.md §4, §7):
   ``DataFrame -> DataFrame`` function designed to survive 100 TB.
 """
 
+from pyspark.core.files import SparkFiles
+
 __version__ = "0.1.0"
+
+# Unpickling any engine UDF imports this package inside a Python worker:
+# make that worker's per-task import-cache invalidation cheap from then on.
+if SparkFiles._is_running_on_worker:
+    from resume_jd_matcher_spark.functions import worker
+
+    worker.install()

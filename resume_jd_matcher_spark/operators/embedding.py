@@ -33,10 +33,14 @@ DEFAULT_DIM = 8
 
 
 def _hash_embed_one(text: str, dim: int) -> list[float]:
+    # md5(f"{text}#dim{d}") per dimension, with the text hashed once:
+    # each dimension resumes a copy of the text's md5 state.
+    base = hashlib.md5(text.encode("utf-8"))
     out = []
     for d in range(dim):
-        h = hashlib.md5(f"{text}#dim{d}".encode("utf-8")).hexdigest()[:8]
-        out.append(round(int(h, 16) / 4294967296.0 * 2.0 - 1.0, 6))
+        h = base.copy()
+        h.update(b"#dim%d" % d)
+        out.append(round(int(h.hexdigest()[:8], 16) / 4294967296.0 * 2.0 - 1.0, 6))
     return out
 
 

@@ -24,7 +24,15 @@ from pyspark.sql import types as T
 
 from resume_jd_matcher_spark.functions.parsing import SECTION_PATTERNS
 
+# Every vocabulary word starts with one of these letters. A leading
+# lookahead on them lets the regex engine skip other positions fast;
+# under the same IGNORECASE it accepts exactly the alternation's first
+# characters (``ſ`` still matches ``s``), so the matches are unchanged.
+_FIRST_LETTERS = sorted(
+    {word[0] for p in SECTION_PATTERNS.values() for word in p.strip("()").split("|")}
+)
 _HEADER_RE = re.compile(
+    r"(?=[" + "".join(_FIRST_LETTERS) + r"])"
     r"(?P<header>(" + "|".join(SECTION_PATTERNS.values()) + r"))\s*[:\n]",
     re.IGNORECASE,
 )

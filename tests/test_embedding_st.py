@@ -7,11 +7,13 @@ path is exercised against a test-only stand-in that returns RECORDED
 input→vector pairs — the same fake-dependency/golden pattern as
 tests/test_llm_http.py uses for the Ollama seam. One copy of the fake
 is injected driver-side (unit contract), one is shipped to executor
-Python workers via addPyFile (full pandas_udf path).
+Python workers via addPyFile (full pandas_udf path). The hash backend's
+kernel is checked here too, against its per-dimension formula.
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import types
 
@@ -77,6 +79,30 @@ def test_st_backend_driver_contract(monkeypatch):
     assert n_loads["n"] == 1  # one model per worker, amortized
 
 
+def _hash_embed_reference(text: str, dim: int) -> list[float]:
+    """The hash embedding spec, one md5 per dimension: the first 8 hex
+    digits of md5("<text>#dim<d>") mapped to [-1, 1), rounded to 6."""
+    return [
+        round(
+            int(hashlib.md5(f"{text}#dim{d}".encode("utf-8")).hexdigest()[:8], 16)
+            / 4294967296.0 * 2.0 - 1.0,
+            6,
+        )
+        for d in range(dim)
+    ]
+
+
+@pytest.mark.parametrize("dim", [8, 64])
+def test_hash_backend_equals_per_dimension_formula(dim):
+    from resume_jd_matcher_spark.operators.embedding import _make_hash_backend
+
+    texts = ["", None, "spark engine", "Résumé — 東京, naïve ſkills\n#dim3"]
+    got = list(_make_hash_backend(dim)(pd.Series(texts)))
+    want = [_hash_embed_reference(t if t is not None else "", dim) for t in texts]
+    assert got == want
+    assert got[1] == got[0]  # None embeds as ""
+
+
 @pytest.mark.slow
 def test_st_backend_udf_end_to_end(spark, tmp_path):
     """Backend selection through embed_documents(backend=
@@ -110,8 +136,6 @@ def test_pca_top_component_captures_planted_direction(spark):
     eigenvalue must be the dominant variance; projections of points on
     opposite sides of the mean have opposite signs."""
     import math
-
-    from pyspark.sql import functions as F
 
     from resume_jd_matcher_spark.operators.embedding import pca_power_top1
 

@@ -11,7 +11,6 @@ import datetime as dt
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 

@@ -8,7 +8,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.operators.quality import (
     classifier_weights,

@@ -3,6 +3,13 @@ exercised through the same code path the queries use."""
 
 from __future__ import annotations
 
+import re
+from unittest import mock
+
+from hypothesis import given, settings, strategies as st
+
+from resume_jd_matcher_spark.functions.parsing import SECTION_PATTERNS
+from resume_jd_matcher_spark.operators import sectioner
 from resume_jd_matcher_spark.operators.sectioner import _chunk_one
 
 
@@ -67,3 +74,31 @@ def test_bodies_stripped():
 def test_multiword_header():
     out = chunks("Professional Experience:\nbuilt things")
     assert out == {"experience": "built things"}
+
+
+# The header pattern without its first-letter lookahead: the reference
+# for ``_HEADER_RE``'s prefilter.
+_UNPREFIXED_HEADER_RE = re.compile(
+    r"(?P<header>(" + "|".join(SECTION_PATTERNS.values()) + r"))\s*[:\n]",
+    re.IGNORECASE,
+)
+
+# Vocabulary words, case variants, separators and characters whose case
+# folding is special (long s, Kelvin sign, dotted I, sharp s, ff ligature).
+_piece = st.one_of(
+    st.sampled_from(
+        [w for p in SECTION_PATTERNS.values() for w in p.strip("()").split("|")]
+    ).map(lambda w: w.upper() if len(w) % 2 else w.title()),
+    st.sampled_from(["ſkills", "ſummary", "ſtrengths", "\u212aey", "\u0130", "ß", "\ufb00"]),
+    st.sampled_from([":", "\n", " ", "\t", " :\n"]),
+    st.text(alphabet="acemopqstwſ\u212a\u0130ß\ufb00 :\nxyz", max_size=12),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_piece, max_size=30).map("".join))
+def test_header_prefilter_matches_unprefixed_pattern(text):
+    got = _chunk_one(text)
+    with mock.patch.object(sectioner, "_HEADER_RE", _UNPREFIXED_HEADER_RE):
+        want = _chunk_one(text)
+    assert got == want
