@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from resume_jd_matcher_spark.operators import score_pass
+
 
 def _stub_tokens(s: str) -> set[str]:
     return set(s.lower().split())
@@ -157,6 +159,14 @@ def _http_backend(
     return generate
 
 
+def _backend(
+    task: str, backend: str, backend_url: str, model: str
+) -> Callable[[pd.DataFrame], pd.Series]:
+    if backend == "stub":
+        return _stub_backend(task)
+    return _http_backend(task, backend_url, model)
+
+
 def llm_transform(
     df: DataFrame,
     task: str,
@@ -174,12 +184,34 @@ def llm_transform(
     ``backend='http'`` speaks the Ollama /api/generate protocol to
     ``backend_url`` (reference default localhost:11434, constants.py:3)
     — same DAG, same schema, contract-tested against a fake server in
-    tests/test_llm_http.py."""
+    tests/test_llm_http.py.
+
+    With ``task='score_prompt'``, given exactly an ``assemble_prompt``
+    frame of a scoring pass (``operators.score_pass``), uncached and
+    with this id column, it joins that pass: the same backend answers
+    each task's prompts inside the pass's Python node."""
     if backend not in ("stub", "http"):
         raise NotImplementedError(
             "backends: 'stub' (deterministic) or 'http' (Ollama protocol); "
             f"got {backend!r}"
         )
+    if task == "score_prompt":
+        fused = score_pass.extend(
+            df,
+            (id_col, "prompt"),
+            score_pass.Step(
+                "responses",
+                (T.StructField(out_col, T.StringType()),),
+                lambda prompts: list(
+                    _backend(task, backend, backend_url, model)(
+                        pd.DataFrame({"prompt": prompts})
+                    )
+                ),
+                lambda response: [(response,)],
+            ),
+        )
+        if fused is not None:
+            return fused
 
     schema = T.StructType(
         [
@@ -189,11 +221,7 @@ def llm_transform(
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fn = (
-            _stub_backend(task)
-            if backend == "stub"
-            else _http_backend(task, backend_url, model)
-        )
+        fn = _backend(task, backend, backend_url, model)
         for pdf in batches:
             if not len(pdf):
                 continue

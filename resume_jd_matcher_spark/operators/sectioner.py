@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from resume_jd_matcher_spark.functions.parsing import SECTION_PATTERNS
+from resume_jd_matcher_spark.operators import score_pass
 
 # Every vocabulary word starts with one of these letters. A leading
 # lookahead on them lets the regex engine skip other positions fast;
@@ -74,6 +75,11 @@ def chunk_by_section(
     (measured: 5000 rows chunked in 0.9 s of pure Python but ~2.3 s
     as a stage). Flat Arrow arrays + a cardinality-changing batch
     keep the boundary cheap; only (id, text) cross into Python.
+
+    The frame returned over a LongType id starts a scoring pass
+    (``operators.score_pass``): ``assemble_prompt`` given exactly this
+    frame, uncached, joins it and runs ``_chunk_one`` inside its own
+    Python node instead of after this one.
     """
     import pyarrow as pa
 
@@ -106,4 +112,7 @@ def chunk_by_section(
                     names=[id_col, "section", "body"],
                 )
 
-    return df.select(id_col, text_col).mapInArrow(gen, out_schema)
+    source = df.select(id_col, text_col)
+    return score_pass.record_sections(
+        source.mapInArrow(gen, out_schema), out_schema, source, _chunk_one
+    )

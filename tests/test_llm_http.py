@@ -121,6 +121,37 @@ def test_scoring_chain_calls_the_llm_once_per_document(spark, fake_ollama):
     assert len(_GENERATE_CALLS) == n
 
 
+def test_a_persisted_llm_frame_is_parsed_without_calling_the_llm_again(spark, fake_ollama):
+    """A cached frame never joins a scoring pass: parsing and averaging
+    a persisted ``llm_transform`` frame reads the cache, so the model
+    sees each document once in all, not once more per consumer."""
+    from resume_jd_matcher_spark.functions.parsing import (
+        assemble_prompt,
+        mean_score,
+        parse_scores,
+    )
+    from resume_jd_matcher_spark.operators.scoring import llm_transform
+    from resume_jd_matcher_spark.operators.sectioner import chunk_by_section
+
+    n = 20
+    df = spark.createDataFrame(
+        [(i, f"Skills:\npython spark {i}\nExperience:\n{i} years") for i in range(n)],
+        ["doc_id", "text"],
+    )
+    prompts = assemble_prompt(chunk_by_section(df), "needs spark")
+    responses = llm_transform(
+        prompts, "score_prompt", backend="http", backend_url=fake_ollama
+    ).persist()
+    _GENERATE_CALLS.clear()
+    try:
+        assert responses.count() == n
+        rows = mean_score(parse_scores(responses)).collect()
+    finally:
+        responses.unpersist()
+    assert len(rows) == n
+    assert len(_GENERATE_CALLS) == n
+
+
 def test_llm_transform_unknown_backend_still_rejected(spark):
     from resume_jd_matcher_spark.operators.scoring import llm_transform
 

@@ -71,14 +71,6 @@ def test_whitespace_stripped_like_str_strip(spark, pad):
     assert got == {(1, "Skills"): 3, (1, "Experience"): 8}
 
 
-def test_whitespace_set_is_str_isspace():
-    from resume_jd_matcher_spark.functions.parsing import _WHITESPACE
-
-    assert set(_WHITESPACE) == {
-        chr(c) for c in range(0x110000) if chr(c).isspace()
-    }
-
-
 def test_mean_score_rounding(spark):
     df = spark.createDataFrame(
         [(1, "a", 7), (1, "b", 8), (2, "a", 1)], ["doc_id", "section", "score"]
