@@ -11,13 +11,12 @@ The reference deduplicates nothing (every upload re-embeds everything,
 ``/root/reference/app.py:145-157``); this operator is the [EXT]
 scale-path completion of V8 in SURVEY.md §2.C.
 
-Implementation: cost-routed. A graph of at most ``LOCAL_GRAPH_EDGES``
-edges (the common case — LSH pairs are a sliver of the corpus)
-collapses to a driver-side union-find in one bounded ``take()`` and
-comes back as a local relation (``sources.io.driver_frame``), whose
-consumers run no Spark job. Over candidates that are a local relation
-themselves (what ``dedup.minhash_lsh_candidates`` returns for a small
-batch) the ``take()`` runs no job either. Larger graphs run the
+Implementation: cost-routed. A graph within the small-row limit of
+``sources.io.DRIVER_LIMITS`` (the common case — LSH pairs are a sliver
+of the corpus) collapses to a driver-side union-find after one bounded
+fetch (``sources.io.driver_fetch``) and comes back as a local relation
+(``sources.io.driver_frame``), whose consumers run no Spark job. Every
+operator here that routes by size uses that limit. Larger graphs run the
 large-star/small-star alternation (Kiveris et al., "Connected
 Components in MapReduce and Beyond"): O(log² n) rounds regardless of
 graph diameter, so long chains of borderline matches converge as fast
@@ -45,26 +44,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from resume_jd_matcher_spark.sources.io import driver_frame
-
-# Graphs of at most this many edges resolve on the driver, for every
-# operator here that routes by size. The bound is sized to the real
-# driver cost: take() yields Python Row objects (~100+ bytes each, not
-# 16 raw bytes of two longs) and the driver builds dicts over both
-# endpoints — ~100 MB of driver heap at the limit. Raise it only with
-# driver memory to spare.
-LOCAL_GRAPH_EDGES = 100_000
+from resume_jd_matcher_spark.sources.io import DRIVER_LIMITS, driver_fetch, driver_frame
 
 
-def _small_edge_list(edges: DataFrame) -> list[tuple] | None:
-    """The first two columns of ``edges`` as driver tuples when it has
-    at most ``LOCAL_GRAPH_EDGES`` rows, else None. The bounded take()
-    both sizes and fetches: at most one row over the limit transits the
-    driver, and a small graph is materialized exactly once."""
-    probe = edges.take(LOCAL_GRAPH_EDGES + 1)
-    if len(probe) > LOCAL_GRAPH_EDGES:
-        return None
-    return [(r[0], r[1]) for r in probe]
+def _pairs(edges) -> list[tuple]:
+    """A fetched two-column Arrow edge table as driver tuples."""
+    return list(zip(edges.column(0).to_pylist(), edges.column(1).to_pylist()))
 
 
 def connected_components(
@@ -79,14 +64,14 @@ def connected_components(
     ``cluster_rep`` is the minimum node id reachable from ``node`` —
     the deterministic canonical representative.
 
-    Cost-based routing: a graph of at most ``LOCAL_GRAPH_EDGES`` edges
-    resolves with a driver-side union-find in one pass; a larger one
+    Cost-based routing: a graph within the small-row limit resolves
+    with a driver-side union-find in one pass; a larger one
     runs the large-star/small-star loop for at most ``max_iter``
     rounds. Both routes produce identical labels.
     """
-    pairs = _small_edge_list(edges.select(src, dst))
-    if pairs is not None:
-        return _cc_local_df(edges.sparkSession, pairs)
+    small = driver_fetch(edges.select(src, dst), DRIVER_LIMITS["small_rows"])
+    if small is not None:
+        return _cc_local_df(edges.sparkSession, _pairs(small))
     return _cc_star(edges, src, dst, max_iter)
 
 
@@ -114,7 +99,7 @@ def _uf_find(parent: dict, x):
 
 def _union_find(pairs) -> dict:
     """Driver-side union-find over an edge list (small-graph fast
-    path; bounded by ``LOCAL_GRAPH_EDGES`` rows of two longs)."""
+    path; bounded by the small-row limit)."""
     parent: dict = {}
 
     for a, b in pairs:
@@ -267,12 +252,12 @@ def dedup_clusters(
     representative per near-dup cluster). Routed like
     ``connected_components``.
     """
-    pairs = _small_edge_list(candidates.select(src, dst))
-    if pairs is not None:
+    small = driver_fetch(candidates.select(src, dst), DRIVER_LIMITS["small_rows"])
+    if small is not None:
         # Small-graph fast path end to end: ONE materialization of the
         # candidate pairs; labels AND sizes resolve driver-side, zero
         # extra shuffles.
-        parent = _union_find(pairs)
+        parent = _union_find(_pairs(small))
         labels = {n: _uf_find(parent, n) for n in parent}
         sizes = Counter(labels.values())
         return _local_df(
@@ -526,8 +511,8 @@ def k_core(
     100k-edge LPA discipline): a near-dup candidate graph is usually
     a small fraction of the corpus, and each distributed peel round
     costs a checkpointed shuffle + two semi-joins of pure latency.
-    When the deduped edge list fits on the driver (bounded take, ≤
-    ``LOCAL_GRAPH_EDGES`` edges) the identical fixed-round peel runs in
+    When the deduped edge list fits on the driver (one bounded fetch,
+    within the small-row limit) the identical fixed-round peel runs in
     one Python pass — exact integer degree counts, same edge-drop
     rule, same final filter, so the trajectory and output are
     bit-identical to the distributed loop. Above the bound the
@@ -538,9 +523,9 @@ def k_core(
         .filter(F.col("a") < F.col("b"))
         .distinct()
     )
-    small = _small_edge_list(dedup_e)
+    small = driver_fetch(dedup_e, DRIVER_LIMITS["small_rows"])
     if small is not None:
-        return _k_core_local_df(pairs.sparkSession, small, k, n_rounds)
+        return _k_core_local_df(pairs.sparkSession, _pairs(small), k, n_rounds)
     e = dedup_e.localCheckpoint()
     for _ in range(n_rounds):
         deg = (
@@ -598,16 +583,16 @@ def label_propagation_sync(
     replayable (no RNG, no rounding, no convergence test).
 
     Cost-based routing, same philosophy as ``connected_components``:
-    a bounded ``take()`` doubles as the fetch — at or below
-    ``LOCAL_GRAPH_EDGES`` edges the trajectory runs driver-side in one
+    one bounded fetch doubles as the size probe — within the small-row
+    limit the trajectory runs driver-side in one
     pass (each distributed round costs two shuffles, which at small
     edge counts is pure stage latency); above it, the DataFrame loop
     runs with the identical vote/tie semantics. Output: one row per
     node ``(node, community)``.
     """
-    pairs = _small_edge_list(edges.select(src, dst))
-    if pairs is not None:
-        return _lpa_local_df(edges.sparkSession, pairs, n_iter)
+    small = driver_fetch(edges.select(src, dst), DRIVER_LIMITS["small_rows"])
+    if small is not None:
+        return _lpa_local_df(edges.sparkSession, _pairs(small), n_iter)
     return _lpa_distributed(edges, n_iter, src, dst)
 
 

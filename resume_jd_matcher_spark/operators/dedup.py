@@ -8,11 +8,11 @@ reproducible in the DuckDB oracle — no RNG, no JVM-specific hashes.
 Scale notes:
 - exact dedup: one hash-aggregate on the fingerprint — the cheapest
   possible shuffle key (32 hex chars), map-side combined.
-- MinHash/LSH: an input of at most ``LOCAL_MINHASH_DOCS`` documents
-  (an upload batch) resolves on the driver after one bounded fetch of
-  its Spark-tokenized distinct tokens: the same hash family, bands and
-  estimate in NumPy, returned as a local relation — the pattern of
-  ``cluster.dedup_clusters``' union-find. Above the limit, signatures
+- MinHash/LSH: an input within the document limit of
+  ``sources.io.DRIVER_LIMITS`` (an upload batch) resolves on the driver
+  after one bounded fetch of its Spark-tokenized distinct tokens: the
+  same hash family, bands and estimate in NumPy, returned as a local
+  relation, like ``cluster.dedup_clusters``. Above the limit, signatures
   are a groupBy over (doc, seed) partials; candidate generation is an
   equi-join on (band_id, band_sig) — Catalyst hash-partitions it, so
   candidate volume (not corpus²) drives cost. This is the textbook
@@ -43,22 +43,13 @@ from resume_jd_matcher_spark.functions.text import (
 )
 from resume_jd_matcher_spark.functions.vector import round_values
 from resume_jd_matcher_spark.plans.optimize import ensure_parallelism
-from resume_jd_matcher_spark.sources.io import driver_frame
+from resume_jd_matcher_spark.sources.io import DRIVER_LIMITS, driver_fetch, driver_frame
 
 # DataFrames persisted by operators in this module (MinHash signatures
 # feed three consumers, so they cache). Long-lived sessions — bench
 # loops, services — call release_persisted() after materializing a
 # result so storage memory doesn't accumulate across queries.
 _PERSISTED: list[DataFrame] = []
-
-# minhash_lsh_candidates resolves inputs of at most this many documents
-# (with an id and a text) on the driver. Sized to the driver's cost at
-# the limit: the fetch holds every document's distinct tokens (a few
-# hundred per resume: ~3M strings, some tens of MB of Arrow), the md5
-# family runs n_hashes times per distinct token (a few 10^4 tokens,
-# ~1 s), and the signatures are a 10^4 × n_hashes int64 matrix. The
-# limit counts documents, not bytes: it assumes resume-length texts.
-LOCAL_MINHASH_DOCS = 10_000
 
 
 def release_persisted() -> None:
@@ -160,8 +151,8 @@ def minhash_lsh_candidates(
 
     Cost-routed like ``cluster.dedup_clusters``: one bounded fetch of
     each document's distinct tokens (Spark tokenizes, so both routes
-    hash the same tokens) doubles as the size probe. At or below
-    ``LOCAL_MINHASH_DOCS`` documents with an id and a text, the
+    hash the same tokens) doubles as the size probe. Within the
+    document limit, counting documents with an id and a text, the
     signatures, bands and estimates are computed on the driver with the
     same hash family and returned as a local relation, whose consumers
     run no Spark job. Above it, the Spark route runs. Rows with a null
@@ -176,13 +167,13 @@ def minhash_lsh_candidates(
     nothing either way.
     """
     # a non-null text splits into at least one token (maybe "")
-    fetched = (
-        df.where(F.col(id_col).isNotNull() & F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.array_distinct(tokens(text_col)).alias("toks"))
-        .limit(LOCAL_MINHASH_DOCS + 1)
-        .toArrow()
+    fetched = driver_fetch(
+        df.where(F.col(id_col).isNotNull() & F.col(text_col).isNotNull()).select(
+            F.col(id_col), F.array_distinct(tokens(text_col)).alias("toks")
+        ),
+        DRIVER_LIMITS["docs"],
     )
-    if fetched.num_rows <= LOCAL_MINHASH_DOCS:
+    if fetched is not None:
         return _minhash_lsh_local(
             df.sparkSession, fetched, df.schema[id_col].dataType, n_hashes, rows_per_band
         )

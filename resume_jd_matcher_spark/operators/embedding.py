@@ -163,7 +163,7 @@ def embed_query(
     pandas frame, which Spark keeps as an Arrow local relation: the
     query costs no Spark job and no Python worker round trip, and a
     consumer on the driver reads the vector back without collecting it
-    (``sources.io.driver_rows``)."""
+    (``sources.io.driver_fetch``)."""
     fn = _make_backend(backend, dim, backend_url, model_name)
     vec = fn(pd.Series([jd_text])).iloc[0]
     pdf = pd.DataFrame({"query_id": [0], "query_embedding": [vec]})

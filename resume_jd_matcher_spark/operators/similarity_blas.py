@@ -10,10 +10,10 @@ arithmetic belongs in a BLAS kernel.
 
 Shape (the idiomatic Spark pattern for brute-force vector search):
 
-  bounded side (queries / dedup probes) → driver pandas → a Q×d
+  bounded side (queries / dedup probes) → driver Arrow → a Q×d
   float64 matrix shipped via explicit ``sc.broadcast`` (torrent, once
-  per executor — never re-serialized per task), guarded by a max-rows
-  ceiling; corpus → ``mapInPandas`` — per Arrow batch, B×d @ d×chunk
+  per executor — never re-serialized per task), guarded by the vector
+  row limit; corpus → ``mapInPandas`` — per Arrow batch, B×d @ d×chunk
   matmuls over bounded probe chunks, emit only survivors (top-k
   candidates or under-threshold pairs).
 
@@ -23,12 +23,12 @@ final survivors, and executors stream batches at Arrow speed. At
 the reduce side only sees k rows per (query, partition).
 
 Top-k against a cached corpus is cost-routed: a corpus within the
-probe ceiling is copied to the driver once, on first use, and every
-later request is answered and scored there with the same kernel — no
-Spark job, no corpus re-shipped into Python, no shuffle. The JVM
-sees two local relations per request, embed_query's row (which the
-operator reads back on the driver, see ``sources.io.driver_rows``)
-and the answer; nothing is collected or projected in between. This is the interactive
+vector limit (``sources.io.DRIVER_LIMITS``) is copied to the driver
+once, on first use, and every later request is answered and scored
+there with the same kernel — no Spark job, no corpus re-shipped into
+Python, no shuffle. The JVM sees two local relations per request,
+embed_query's row (read back on the driver, ``sources.io.driver_fetch``)
+and the answer; nothing is collected in between. This is the interactive
 ``/shortlist`` shape (one JD against a standing index), which the
 reference serves from an in-memory FAISS flat index
 (rag_model_mass.py:17-47). Uncached or larger corpora take the
@@ -51,21 +51,31 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from resume_jd_matcher_spark.functions.vector import faiss_score, faiss_score_values
 from resume_jd_matcher_spark.plans.optimize import ensure_parallelism
-from resume_jd_matcher_spark.sources.io import driver_rows
+from resume_jd_matcher_spark.sources.io import DRIVER_LIMITS, driver_fetch, driver_frame, driver_rows
 
 
-def _query_matrix(queries_pdf: pd.DataFrame, id_col: str, vec_col: str):
-    qids = queries_pdf[id_col].to_numpy()
-    if not len(qids):  # empty probe: the chunk loops emit no rows
-        return qids, np.empty((0, 0))
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    return qids, qmat
+def _matrix(table: pa.Table, id_col: str, vec_col: str):
+    """(ids, float64 row-per-vector matrix) of a fetched table. A null
+    vector, or vectors of unequal length, are a ValueError."""
+    ids = table.column(id_col).to_numpy()
+    vecs = table.column(vec_col).combine_chunks()
+    if not len(vecs):  # empty probe: the chunk loops emit no rows
+        return ids, np.empty((0, 0))
+    if vecs.null_count:
+        raise ValueError(f"{vec_col}: {vecs.null_count} null vectors")
+    lens = pc.list_value_length(vecs).to_numpy()
+    if (lens != lens[0]).any():
+        raise ValueError(f"{vec_col}: vectors of unequal length")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return ids, flat.reshape(len(vecs), lens[0])
 
 
 # Probe-side columns are processed this many queries at a time inside
@@ -73,24 +83,20 @@ def _query_matrix(queries_pdf: pd.DataFrame, id_col: str, vec_col: str):
 # how large the probe set is.
 _PROBE_CHUNK = 1024
 
-# Hard ceiling on probe rows materialized to the driver. At 64-dim
-# float64 this is ~100 MB of matrix.
-MAX_PROBE_DRIVER_ROWS = 200_000
-
 
 def _probe_matrix(df: DataFrame, id_col: str, vec_col: str):
     """Materialize the bounded probe side on the driver as (ids, Q×d
-    matrix). A frame built on the driver (``driver_frame``, such as
-    embed_query's row) is read back without a Spark call."""
-    pdf = driver_rows(df)
-    if pdf is None:
-        pdf = df.select(id_col, vec_col).toPandas()
-    if len(pdf) > MAX_PROBE_DRIVER_ROWS:
-        raise ValueError(
-            f"probe side has {len(pdf)} rows > {MAX_PROBE_DRIVER_ROWS}, "
-            "the most the driver materializes"
-        )
-    return _query_matrix(pdf, id_col, vec_col)
+    matrix), or raise once more rows than the vector limit arrive. A
+    frame built on the driver (``driver_frame``, such as embed_query's
+    row) is read back whole, without a Spark call; any other probe is
+    projected to its two columns first."""
+    if driver_rows(df) is None:
+        df = df.select(id_col, vec_col)
+    limit = DRIVER_LIMITS["vectors"]
+    table = driver_fetch(df, limit)
+    if table is None:
+        raise ValueError(f"probe side has more than {limit} rows, the most the driver materializes")
+    return _matrix(table, id_col, vec_col)
 
 
 def _broadcast_probe(df: DataFrame, id_col: str, vec_col: str):
@@ -145,25 +151,25 @@ def _topk_candidates(
 
 # Driver copies of cached corpora, per DataFrame object (an entry goes
 # with its frame) and (id_col, vec_col): (ids, float64 matrix, squared
-# row norms), or None for an empty corpus or one over
-# MAX_PROBE_DRIVER_ROWS, which the distributed path serves.
+# row norms), or None for an empty corpus or one over the vector
+# limit, which the distributed path serves.
 _RESIDENT: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _resident(corpus: DataFrame, id_col: str, vec_col: str):
     """The driver copy of ``corpus`` if it is cached, non-empty and
-    within the ceiling, else None. Pulled with one collect on first
-    use."""
+    within the vector limit, else None. Pulled with one bounded fetch
+    on first use."""
     if not corpus.is_cached:
         _RESIDENT.pop(corpus, None)
         return None
     per_cols = _RESIDENT.setdefault(corpus, {})
     if (id_col, vec_col) not in per_cols:
-        pdf = corpus.select(id_col, vec_col).limit(MAX_PROBE_DRIVER_ROWS + 1).toPandas()
-        if not 0 < len(pdf) <= MAX_PROBE_DRIVER_ROWS:
+        table = driver_fetch(corpus.select(id_col, vec_col), DRIVER_LIMITS["vectors"])
+        if table is None or not table.num_rows:
             per_cols[(id_col, vec_col)] = None
         else:
-            ids, mat = _query_matrix(pdf, id_col, vec_col)
+            ids, mat = _matrix(table, id_col, vec_col)
             per_cols[(id_col, vec_col)] = (ids, mat, (mat * mat).sum(axis=1))
     return per_cols[(id_col, vec_col)]
 
@@ -237,7 +243,7 @@ def topk_similarity_blas(
     """V5 fast path: (query, id, dist, score) for each query's k
     nearest corpus rows by squared L2, ties broken by smallest id.
 
-    A cached corpus within ``MAX_PROBE_DRIVER_ROWS`` is answered on the
+    A cached corpus within the vector limit is answered on the
     driver from its resident copy (see ``_resident``) and scored there
     with ``faiss_score_values``; the result is a local relation.
     Otherwise: per-partition partial top-k (BLAS
@@ -274,9 +280,8 @@ def topk_similarity_blas(
             {query_id_col: qid[keep], id_col: rid[keep], "dist": dist[keep]}
         )
         top["score"] = faiss_score_values(top["dist"].to_numpy())
-        return queries.sparkSession.createDataFrame(
-            top, T.StructType(out_schema.fields + [T.StructField("score", T.DoubleType())])
-        )
+        schema = T.StructType(out_schema.fields + [T.StructField("score", T.DoubleType())])
+        return driver_frame(queries.sparkSession, top, schema)
 
     bc = _broadcast_probe(queries, query_id_col, query_vec_col)
 

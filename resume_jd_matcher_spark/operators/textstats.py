@@ -6,10 +6,13 @@ no Python in any of these plans.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from resume_jd_matcher_spark.functions.text import tokens
+from resume_jd_matcher_spark.sources.io import DRIVER_LIMITS, driver_fetch, driver_frame
 
 # Tiny per-language stopword lists for the n-gram/keyword heuristic.
 # Ordered dict — evaluation order is the deterministic tie-break.
@@ -591,14 +594,36 @@ def psi_drift(
     )
 
 
-def _bpe_local_loop(word_counts, n_merges: int):
+_MERGES_SCHEMA = T.StructType(
+    [T.StructField("step", T.IntegerType())]
+    + [T.StructField(c, T.StringType()) for c in ("left_sym", "right_sym", "merged")]
+    + [T.StructField("pair_count", T.LongType())]
+)
+
+
+def _merges_frame(spark, merges: list[tuple]) -> DataFrame:
+    """The learned merge rules as a local relation."""
+    return driver_frame(spark, pd.DataFrame(merges, columns=_MERGES_SCHEMA.names), _MERGES_SCHEMA)
+
+
+def _word_types(df: DataFrame, text_col: str) -> DataFrame:
+    """The (w, cnt) frequency table of ``df``'s ``[a-z0-9]+`` words."""
+    return (
+        df.select(F.explode(tokens(text_col)).alias("w"))
+        .filter(F.col("w").rlike("^[a-z0-9]+$"))
+        .groupBy("w")
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
+def _bpe_local_loop(vocab, n_merges: int):
     """Driver-side twin of the distributed BPE merge loop over a
-    (bounded) word-type vocabulary: identical delimiter encoding,
-    leftmost-non-overlapping replace, exact integer pair counts, and
-    (count desc, a, b) argmax tie-break. Returns (merges, final
-    vocab as {word: sym})."""
-    syms = {w: "·" + "··".join(w) + "·" for w, _ in word_counts}
-    cnts = dict(word_counts)
+    fetched Arrow (w, cnt) word-type vocabulary: identical delimiter
+    encoding, leftmost-non-overlapping replace, exact integer pair
+    counts, and (count desc, a, b) argmax tie-break. Returns (merges,
+    final vocab as {word: sym})."""
+    cnts = dict(zip(vocab.column("w").to_pylist(), vocab.column("cnt").to_pylist()))
+    syms = {w: "·" + "··".join(w) + "·" for w in cnts}
     merges = []
     for step in range(1, n_merges + 1):
         pair_n: dict = {}
@@ -621,67 +646,11 @@ def _bpe_local_loop(word_counts, n_merges: int):
     return merges, syms
 
 
-def bpe_learn_merges(
-    df: DataFrame,
-    n_merges: int = 6,
-    text_col: str = "text",
-    local_threshold: int = 100_000,
-) -> DataFrame:
-    """Byte-pair-encoding vocabulary learning (Sennrich et al. 2016),
-    the tokenizer-training step, as a distributed DataFrame program:
-    learn the top ``n_merges`` merge rules over the corpus word-type
-    frequency table.
-
-    Scale shape — the insight that makes BPE distributable is that it
-    operates on WORD TYPES, not the token stream: one corpus-scale agg
-    builds the (word, count) vocabulary, and every merge iteration
-    touches only that vocab-sized table (pair-count agg, map-side
-    combined) plus a 1-row argmax collect. Symbol sequences are
-    encoded as delimiter-wrapped strings (``·a··b··c·``) so applying a
-    merge is ONE native replace() — leftmost non-overlapping, exactly
-    BPE's left-to-right merge convention, byte-identical across
-    engines (no per-row Python).
-
-    Words are restricted to ``[a-z0-9]+`` so the delimiter can never
-    collide with content (mirrored in the oracle). Output: one row per
-    learned rule — (step, left_sym, right_sym, merged, pair_count) —
-    ties broken by (count desc, left asc, right asc).
-
-    Cache discipline: the argmax ``collect`` at step N materializes
-    vocab generation N in cache, at which point generation N−1 is
-    superseded and unpersisted INSIDE the loop — peak cached copies is
-    2 regardless of ``n_merges`` (pinned by a getPersistentRDDs
-    pytest). Every ~8 merges the vocab is ``localCheckpoint``-ed so
-    lineage (one withColumn+replace per merge) stays bounded.
-
-    Cost-based routing (r13 — the connected_components / k_core
-    discipline): BPE's loop state is the WORD-TYPE vocabulary, which
-    is sub-linear in corpus size; when it fits on the driver (bounded
-    take, ≤ ``local_threshold`` types) the identical merge loop runs
-    in one Python pass — same delimiter encoding, same
-    leftmost-non-overlapping replace (str.replace), same exact
-    integer pair counts and (count desc, a, b) argmax — instead of
-    ``n_merges`` sequential argmax jobs. Above the threshold the
-    distributed loop runs unchanged; both routes produce identical
-    merge rows (pinned by a pytest).
-    """
-    vocab = (
-        df.select(F.explode(tokens(text_col)).alias("w"))
-        .filter(F.col("w").rlike("^[a-z0-9]+$"))
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    if local_threshold:
-        probe = vocab.take(local_threshold + 1)
-        if len(probe) <= local_threshold:
-            merges, _ = _bpe_local_loop(
-                [(r["w"], r["cnt"]) for r in probe], n_merges
-            )
-            return df.sparkSession.createDataFrame(
-                merges,
-                "step INT, left_sym STRING, right_sym STRING, "
-                "merged STRING, pair_count BIGINT",
-            )
+def _bpe_merge_loop(vocab: DataFrame, n_merges: int):
+    """The distributed merge loop over a (w, cnt) word-type vocabulary:
+    returns (merges, the final (w, cnt, sym) vocabulary). The persists
+    only speed up the loop's eager argmax collects and are all released
+    on return; the final vocabulary's plan recomputes lazily."""
     vocab = vocab.withColumn(
         "sym", F.regexp_replace("w", "(.)", "·$1·")
     ).persist()
@@ -733,9 +702,81 @@ def bpe_learn_merges(
         vocab.unpersist()
         if prev is not None:
             prev.unpersist()
-    return df.sparkSession.createDataFrame(
-        merges,
-        "step INT, left_sym STRING, right_sym STRING, merged STRING, pair_count BIGINT",
+    return merges, vocab
+
+
+def bpe_learn_merges(
+    df: DataFrame,
+    n_merges: int = 6,
+    text_col: str = "text",
+) -> DataFrame:
+    """Byte-pair-encoding vocabulary learning (Sennrich et al. 2016),
+    the tokenizer-training step, as a distributed DataFrame program:
+    learn the top ``n_merges`` merge rules over the corpus word-type
+    frequency table.
+
+    Scale shape — the insight that makes BPE distributable is that it
+    operates on WORD TYPES, not the token stream: one corpus-scale agg
+    builds the (word, count) vocabulary, and every merge iteration
+    touches only that vocab-sized table (pair-count agg, map-side
+    combined) plus a 1-row argmax collect. Symbol sequences are
+    encoded as delimiter-wrapped strings (``·a··b··c·``) so applying a
+    merge is ONE native replace() — leftmost non-overlapping, exactly
+    BPE's left-to-right merge convention, byte-identical across
+    engines (no per-row Python).
+
+    Words are restricted to ``[a-z0-9]+`` so the delimiter can never
+    collide with content (mirrored in the oracle). Output: one row per
+    learned rule — (step, left_sym, right_sym, merged, pair_count) —
+    ties broken by (count desc, left asc, right asc).
+
+    Cache discipline: the argmax ``collect`` at step N materializes
+    vocab generation N in cache, at which point generation N−1 is
+    superseded and unpersisted INSIDE the loop — peak cached copies is
+    2 regardless of ``n_merges`` (pinned by a getPersistentRDDs
+    pytest). Every ~8 merges the vocab is ``localCheckpoint``-ed so
+    lineage (one withColumn+replace per merge) stays bounded.
+
+    Cost-based routing (r13 — the connected_components / k_core
+    discipline): BPE's loop state is the WORD-TYPE vocabulary, which
+    is sub-linear in corpus size; when it fits on the driver (one
+    bounded fetch, within the small-row limit of
+    ``sources.io.DRIVER_LIMITS``) the identical merge loop runs
+    in one Python pass — same delimiter encoding, same
+    leftmost-non-overlapping replace (str.replace), same exact
+    integer pair counts and (count desc, a, b) argmax — instead of
+    ``n_merges`` sequential argmax jobs. Above the limit the
+    distributed loop runs unchanged; both routes produce identical
+    merge rows (pinned by a pytest).
+    """
+    vocab = _word_types(df, text_col)
+    small = driver_fetch(vocab, DRIVER_LIMITS["small_rows"])
+    if small is not None:
+        return _merges_frame(df.sparkSession, _bpe_local_loop(small, n_merges)[0])
+    return _merges_frame(df.sparkSession, _bpe_merge_loop(vocab, n_merges)[0])
+
+
+def _fertility(df: DataFrame, lookup: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document word and symbol counts of ``df``'s ``[a-z0-9]+``
+    words, looked up in a (w, n_sym) word→symbol-count table."""
+    words = df.select(
+        F.col(id_col), F.explode(tokens(text_col)).alias("w")
+    ).filter(F.col("w").rlike("^[a-z0-9]+$"))
+    return (
+        words.join(F.broadcast(lookup), "w")
+        .groupBy(id_col)
+        .agg(
+            F.count("*").alias("n_words"),
+            F.sum("n_sym").alias("n_symbols"),
+        )
+        .select(
+            id_col,
+            "n_words",
+            F.col("n_symbols").cast("bigint").alias("n_symbols"),
+            F.round(
+                F.col("n_symbols") / F.col("n_words").cast("double"), 4
+            ).alias("symbols_per_word"),
+        )
     )
 
 
@@ -744,7 +785,6 @@ def bpe_encode_stats(
     n_merges: int = 6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Apply learned BPE merges and measure tokenizer fertility per
     document — the encode half of the tokenizer loop, done the way
@@ -763,118 +803,25 @@ def bpe_encode_stats(
     Same r13 cost routing as ``bpe_learn_merges``: when the word-type
     vocabulary fits the driver, the merge trajectory replays locally
     and only the word→symbol-count LOOKUP returns to the cluster (a
-    broadcast-sized createDataFrame) — the corpus word stream and the
+    broadcast-sized local relation) — the corpus word stream and the
     per-document aggregate stay distributed on both routes."""
-    vocab0 = (
-        df.select(F.explode(tokens(text_col)).alias("w"))
-        .filter(F.col("w").rlike("^[a-z0-9]+$"))
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    if local_threshold:
-        probe = vocab0.take(local_threshold + 1)
-        if len(probe) <= local_threshold:
-            _, syms = _bpe_local_loop(
-                [(r["w"], r["cnt"]) for r in probe], n_merges
-            )
-            lkp_rows = [
-                (w, len(sym.strip("·").split("··"))) for w, sym in syms.items()
-            ]
-            lookup = df.sparkSession.createDataFrame(
-                lkp_rows, "w STRING, n_sym INT"
-            )
-            words = df.select(
-                F.col(id_col), F.explode(tokens(text_col)).alias("w")
-            ).filter(F.col("w").rlike("^[a-z0-9]+$"))
-            return (
-                words.join(F.broadcast(lookup), "w")
-                .groupBy(id_col)
-                .agg(
-                    F.count("*").alias("n_words"),
-                    F.sum("n_sym").alias("n_symbols"),
-                )
-                .select(
-                    id_col,
-                    "n_words",
-                    F.col("n_symbols").cast("bigint").alias("n_symbols"),
-                    F.round(
-                        F.col("n_symbols") / F.col("n_words").cast("double"), 4
-                    ).alias("symbols_per_word"),
-                )
-            )
-    vocab = vocab0.withColumn(
-        "sym", F.regexp_replace("w", "(.)", "·$1·")
-    ).persist()
-    prev = None
-    try:
-        for step in range(1, n_merges + 1):
-            arr = F.split(F.expr("trim(BOTH '·' FROM sym)"), "··")
-            pair_arr = F.when(
-                F.size(arr) >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(arr) - 1),
-                    lambda i: F.struct(
-                        F.element_at(arr, i).alias("a"),
-                        F.element_at(arr, i + 1).alias("b"),
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-            best = (
-                vocab.select("cnt", F.explode(pair_arr).alias("p"))
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("cnt").alias("n"))
-                .orderBy(F.col("n").desc(), F.col("a"), F.col("b"))
-                .limit(1)
-                .collect()
-            )
-            # Same cache discipline as bpe_learn_merges: the collect
-            # materialized the current generation, so its parent is
-            # superseded — peak cached copies stays at 2.
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            if not best:
-                break
-            a, b = best[0]["a"], best[0]["b"]
-            nxt = vocab.withColumn(
-                "sym",
-                F.replace(
-                    F.col("sym"), F.lit(f"·{a}··{b}·"), F.lit(f"·{a}{b}·")
-                ),
-            )
-            if step % 8 == 0:
-                nxt = nxt.localCheckpoint(eager=False)
-            prev, vocab = vocab, nxt.persist()
-        lookup = vocab.select(
-            "w",
-            F.size(F.split(F.expr("trim(BOTH '·' FROM sym)"), "··")).alias(
-                "n_sym"
+    vocab0 = _word_types(df, text_col)
+    small = driver_fetch(vocab0, DRIVER_LIMITS["small_rows"])
+    if small is not None:
+        _, syms = _bpe_local_loop(small, n_merges)
+        lookup = driver_frame(
+            df.sparkSession,
+            pd.DataFrame(
+                [(w, len(sym.strip("·").split("··"))) for w, sym in syms.items()],
+                columns=["w", "n_sym"],
+            ),
+            T.StructType(
+                [T.StructField("w", T.StringType()), T.StructField("n_sym", T.IntegerType())]
             ),
         )
-        words = df.select(
-            F.col(id_col), F.explode(tokens(text_col)).alias("w")
-        ).filter(F.col("w").rlike("^[a-z0-9]+$"))
-        out = (
-            words.join(F.broadcast(lookup), "w")
-            .groupBy(id_col)
-            .agg(
-                F.count("*").alias("n_words"),
-                F.sum("n_sym").alias("n_symbols"),
-            )
-            .select(
-                id_col,
-                "n_words",
-                F.col("n_symbols").cast("bigint").alias("n_symbols"),
-                F.round(
-                    F.col("n_symbols") / F.col("n_words").cast("double"), 4
-                ).alias("symbols_per_word"),
-            )
-        )
-        return out
-    finally:
-        # The persists only accelerate the merge-learning loop's eager
-        # collects; the returned plan recomputes the (vocab-sized)
-        # chain lazily, so releasing here is safe and leak-free.
-        vocab.unpersist()
-        if prev is not None:
-            prev.unpersist()
+        return _fertility(df, lookup, id_col, text_col)
+    lookup = _bpe_merge_loop(vocab0, n_merges)[1].select(
+        "w",
+        F.size(F.split(F.expr("trim(BOTH '·' FROM sym)"), "··")).alias("n_sym"),
+    )
+    return _fertility(df, lookup, id_col, text_col)

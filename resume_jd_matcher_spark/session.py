@@ -15,9 +15,9 @@ from pyspark.sql import SparkSession
 
 # ORDER BY ... LIMIT n runs as an in-memory top-K only up to this n;
 # above it, a spilling sort. Spark's default (Int.MaxValue) sizes each
-# task's top-K heap by n up front, so a "no cap" limit such as
-# pq_fit_encode(fit_sample_rows=10**9) allocates gigabytes per task on
-# a 500-row input.
+# task's top-K heap by n up front, so a caller-sized cut used as "no
+# cap", such as sampling.weighted_sample(n=10**9), would allocate
+# gigabytes per task on a 500-row input.
 TOPK_SORT_FALLBACK_ROWS = 1_000_000
 
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import weakref
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,16 +37,30 @@ TABLES = (
 SUPPORTED_FORMATS = ("pdf", "docx", "txt")
 
 
+# Row limits of the driver routes, read when an operator is called: an
+# input within its limit is fetched once (``driver_fetch``) and computed
+# on the driver, a larger one takes its Spark route. All zero force every
+# Spark route (and make any probe side an error). Sizing at the limit:
+# - docs (MinHash): ~3M distinct tokens, tens of MB of Arrow, ~1 s of
+#   hashing; it assumes resume-length texts.
+# - small_rows (graph edges, BPE word types): 16 bytes of Arrow per two
+#   longs, but ~100+ bytes an edge as Python tuples and dicts over both
+#   endpoints: ~100 MB of driver heap.
+# - vectors (resident top-k index, probe side): ~100 MB of float64 at 64
+#   dimensions.
+DRIVER_LIMITS = {"docs": 10_000, "small_rows": 100_000, "vectors": 200_000}
+
+
 # Driver-built local relations, per DataFrame object: the pandas frame
-# each was made from. An entry goes with its frame.
+# each was made from, with its schema. An entry goes with its frame.
 _DRIVER_ROWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def driver_frame(spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
     """``spark.createDataFrame(pdf, schema)``, an Arrow local relation,
     remembering ``pdf`` so that a consumer on the driver reads the rows
-    back with ``driver_rows`` instead of collecting them. ``pdf`` must
-    not change afterwards.
+    back (``driver_rows``, ``driver_fetch``) instead of collecting them.
+    ``pdf`` must not change afterwards.
 
     An empty ``pdf`` is built from an empty Arrow table: PySpark sends
     an empty pandas frame down its non-Arrow path, an RDD whose
@@ -54,14 +69,40 @@ def driver_frame(spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType) -
         df = spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     else:
         df = spark.createDataFrame(pdf, schema)
-    _DRIVER_ROWS[df] = pdf
+    _DRIVER_ROWS[df] = (pdf, schema)
     return df
 
 
 def driver_rows(df: DataFrame) -> pd.DataFrame | None:
     """The pandas frame ``df`` was built from by ``driver_frame``, or
     None for any other frame (a frame derived from it included)."""
-    return _DRIVER_ROWS.get(df)
+    entry = _DRIVER_ROWS.get(df)
+    return None if entry is None else entry[0]
+
+
+def driver_fetch(df: DataFrame, limit: int) -> pa.Table | None:
+    """``df``'s rows as an Arrow table if it has at most ``limit`` rows,
+    else None: the size probe and the fetch of every driver route in
+    one, with at most ``limit + 1`` rows reaching the driver.
+
+    A frame built by ``driver_frame`` is read back with no Py4J call.
+    Any other frame is fetched as ``limit(limit + 1).toArrow()``, except
+    that a plan Spark runs as a local table scan (a filter of a
+    driver-built frame, say) is collected as rows: that runs no Spark
+    job, where an Arrow collect always runs one."""
+    entry = _DRIVER_ROWS.get(df)
+    if entry is not None:
+        pdf, schema = entry
+        table = pa.Table.from_pandas(pdf, to_arrow_schema(schema), preserve_index=False)
+    else:
+        bounded = df.limit(limit + 1)
+        plan = bounded._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "LocalTableScanExec":
+            rows = [r.asDict(recursive=True) for r in bounded.collect()]
+            table = pa.Table.from_pylist(rows, to_arrow_schema(df.schema))
+        else:
+            table = bounded.toArrow()
+    return table if table.num_rows <= limit else None
 
 
 # Opt-in shared-scan cache: one persisted DataFrame per (sf_dir,

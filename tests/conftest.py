@@ -51,6 +51,21 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def spark_route(monkeypatch):
+    """``spark_route()`` zeroes every driver row limit
+    (``sources.io.DRIVER_LIMITS``) for the rest of the test, so each
+    size-routed operator called after it takes its Spark route; a probe
+    side of any size is then over its limit."""
+    from resume_jd_matcher_spark.sources.io import DRIVER_LIMITS
+
+    def force():
+        for name in DRIVER_LIMITS:
+            monkeypatch.setitem(DRIVER_LIMITS, name, 0)
+
+    return force
+
+
 _SYNTH_VOCAB = [f"tok{i:03d}" for i in range(400)]
 
 

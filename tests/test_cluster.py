@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from resume_jd_matcher_spark.operators import cluster
 from resume_jd_matcher_spark.operators.cluster import (
     connected_components,
     dedup_clusters,
@@ -44,7 +43,7 @@ def test_cc_long_chain_converges(spark):
     assert len(rows) == n + 1
 
 
-def test_cc_local_equals_distributed(spark, monkeypatch):
+def test_cc_local_equals_distributed(spark, spark_route):
     # both routes must produce identical labels and cluster sizes,
     # a node whose only edge is a self-loop included
     pairs = [
@@ -55,7 +54,7 @@ def test_cc_local_equals_distributed(spark, monkeypatch):
     # small graph -> driver union-find
     local_cc = {tuple(r) for r in connected_components(e).collect()}
     local_dc = {tuple(r) for r in dedup_clusters(e).collect()}
-    monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)  # force the star loop
+    spark_route()  # force the star loop
     assert local_cc == {tuple(r) for r in connected_components(e).collect()}
     assert local_dc == {tuple(r) for r in dedup_clusters(e).collect()}
     assert (40, 40) in local_cc and (40, 40, 1) in local_dc
@@ -225,7 +224,7 @@ def test_text_ops_survive_degenerate_docs(spark):
 
 
 @pytest.mark.slow
-def test_dedup_pipeline_at_scale_smoke(spark, synth_docs, monkeypatch):
+def test_dedup_pipeline_at_scale_smoke(spark, synth_docs, spark_route):
     """Scale smoke: 20k generated docs (40x the sf0.01 fixture)
     through MinHash-LSH candidates -> DISTRIBUTED connected
     components (local route disabled). Verifies the planted near-dup
@@ -233,7 +232,7 @@ def test_dedup_pipeline_at_scale_smoke(spark, synth_docs, monkeypatch):
     driver-side shortcuts are off."""
     from resume_jd_matcher_spark.operators import dedup
 
-    monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+    spark_route()
     docs = synth_docs(20000, seed=11)
     edges = dedup.minhash_lsh_candidates(docs, n_hashes=16, rows_per_band=4).filter(
         F.col("est_jaccard") >= 0.9
@@ -299,13 +298,13 @@ def test_winnow_neardup_at_scale_smoke(spark, synth_docs):
     assert planted_hits > 1200  # ~2000 planted; drop-out noise loses some
 
 
-def test_connected_components_star_warns_on_iteration_cap(spark, monkeypatch):
+def test_connected_components_star_warns_on_iteration_cap(spark, spark_route):
     """The large-star/small-star loop's final hi->lo labeling is only
     valid at the star fixpoint — exiting via max_iter must warn
     instead of returning silently non-transitive labels."""
     import warnings
 
-    monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+    spark_route()
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["left_id", "right_id"]
     )
@@ -387,12 +386,12 @@ class TestStarCC:
     def _labels(self, df):
         return {r["node"]: r["cluster_rep"] for r in df.collect()}
 
-    def test_long_chain_converges_fast(self, spark, monkeypatch):
+    def test_long_chain_converges_fast(self, spark, spark_route):
         """A 200-node path graph (diameter 199, which a per-round
         label-propagation loop needs 199 rounds for): large-star/
         small-star must resolve it to one component labeled by the
         minimum within its 30-round cap."""
-        monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+        spark_route()
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(200)], "left_id long, right_id long"
         )
@@ -400,7 +399,7 @@ class TestStarCC:
         assert set(got.values()) == {0}
         assert len(got) == 201
 
-    def test_matches_union_find_on_random_graph(self, spark, monkeypatch):
+    def test_matches_union_find_on_random_graph(self, spark, spark_route):
         """Star labels == driver union-find labels on a multi-component
         random graph (both use min-id representatives)."""
         import random
@@ -414,6 +413,6 @@ class TestStarCC:
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, "left_id long, right_id long")
         uf = self._labels(connected_components(df))
-        monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+        spark_route()
         star = self._labels(connected_components(df))
         assert star == uf

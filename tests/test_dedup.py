@@ -62,7 +62,7 @@ ROUTE_CASES = {
 
 @pytest.mark.parametrize("case", sorted(ROUTE_CASES))
 @pytest.mark.parametrize("n_hashes,rows_per_band", [(16, 4), (7, 3)])
-def test_minhash_driver_route_equals_spark_route(spark, monkeypatch, case, n_hashes, rows_per_band):
+def test_minhash_driver_route_equals_spark_route(spark, spark_route, case, n_hashes, rows_per_band):
     """Both routes give identical rows, est_jaccard included, and the
     same schema: below the size limit the driver route runs and answers
     with a local relation; a limit of 0 forces the Spark route."""
@@ -70,7 +70,7 @@ def test_minhash_driver_route_equals_spark_route(spark, monkeypatch, case, n_has
     kw = dict(n_hashes=n_hashes, rows_per_band=rows_per_band)
     local = dedup.minhash_lsh_candidates(df, **kw)
     assert local._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
-    monkeypatch.setattr(dedup, "LOCAL_MINHASH_DOCS", 0)
+    spark_route()
     distributed = dedup.minhash_lsh_candidates(df, **kw)
     try:
         driver = sorted(tuple(r) for r in local.collect())

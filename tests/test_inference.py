@@ -1132,13 +1132,12 @@ class TestKCore:
         ).collect()}
         assert out == {1, 2, 3, 4}
 
-    def test_local_and_distributed_routes_agree(self, spark, monkeypatch):
+    def test_local_and_distributed_routes_agree(self, spark, spark_route):
         """r13 cost routing: the driver-side peel (bounded take) and
         the distributed per-round loop (forced via a zero
-        LOCAL_GRAPH_EDGES) must produce identical (node, core_deg)
+        driver row limit) must produce identical (node, core_deg)
         sets — the connected_components routing contract applied to
         k_core."""
-        from resume_jd_matcher_spark.operators import cluster
         from resume_jd_matcher_spark.operators.cluster import k_core
 
         edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
@@ -1147,7 +1146,7 @@ class TestKCore:
         pairs = self._pairs(spark, edges)
         local = {(r["node"], r["core_deg"])
                  for r in k_core(pairs, k=3).collect()}
-        monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+        spark_route()
         dist = {(r["node"], r["core_deg"])
                 for r in k_core(pairs, k=3).collect()}
         assert local == dist

@@ -136,10 +136,10 @@ class TestBPE:
         assert got[7]["n_symbols"] == 1  # "cd" merged at step 3
         assert got[0]["symbols_per_word"] == 1.0
 
-    def test_local_and_distributed_routes_agree(self, spark):
+    def test_local_and_distributed_routes_agree(self, spark, spark_route):
         """r13 cost routing: the driver-side merge loop (bounded
         vocab take) and the distributed per-merge argmax loop
-        (forced via local_threshold=0) must learn the identical rule
+        (forced via zero driver row limits) must learn the identical rule
         sequence, and the encode halves must emit identical
         fertility rows."""
         from resume_jd_matcher_spark.operators.textstats import (
@@ -150,26 +150,20 @@ class TestBPE:
         rows = [(i, f"abab cd ab ce de x{i % 5}y qrs") for i in range(20)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         local = [tuple(r) for r in bpe_learn_merges(df, n_merges=5).collect()]
-        dist = [
-            tuple(r)
-            for r in bpe_learn_merges(
-                df, n_merges=5, local_threshold=0
-            ).collect()
-        ]
-        assert local == dist and len(local) == 5
         enc_l = {
             r["doc_id"]: tuple(r)
             for r in bpe_encode_stats(df, n_merges=5).collect()
         }
+        spark_route()
+        dist = [tuple(r) for r in bpe_learn_merges(df, n_merges=5).collect()]
+        assert local == dist and len(local) == 5
         enc_d = {
             r["doc_id"]: tuple(r)
-            for r in bpe_encode_stats(
-                df, n_merges=5, local_threshold=0
-            ).collect()
+            for r in bpe_encode_stats(df, n_merges=5).collect()
         }
         assert enc_l == enc_d and len(enc_l) == 20
 
-    def test_merge_loop_caps_cached_generations(self, spark, monkeypatch):
+    def test_merge_loop_caps_cached_generations(self, spark, monkeypatch, spark_route):
         """The merge loop unpersists the superseded vocab generation
         inside the loop: peak simultaneously-persisted DataFrames must
         stay at 2 regardless of n_merges, and everything is released
@@ -199,10 +193,11 @@ class TestBPE:
         rows = [(i, f"ab cd ab ce de x{i % 5}y qrs") for i in range(40)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
-        # local_threshold=0 forces the distributed loop — the cache
+        # zero driver row limits force the distributed loop — the cache
         # discipline under test only exists on that route (r13 added
         # a driver-side route for vocabularies that fit a bounded take)
-        merges = bpe_learn_merges(df, n_merges=10, local_threshold=0).collect()
+        spark_route()
+        merges = bpe_learn_merges(df, n_merges=10).collect()
         assert len(merges) >= 5  # the loop genuinely iterated
         assert live["peak"] <= 2, f"peak cached vocab generations {live['peak']}"
         assert live["n"] == 0, "a vocab generation leaked past the loop"

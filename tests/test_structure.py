@@ -51,10 +51,9 @@ class TestLabelPropagation:
         assert out[1] == out[2] == out[3] == 1
         assert out[10] == out[11] == out[12] == 10
 
-    def test_distributed_path_matches_local(self, spark, monkeypatch):
-        """Force the DataFrame loop (a zero LOCAL_GRAPH_EDGES) and
+    def test_distributed_path_matches_local(self, spark, spark_route):
+        """Force the DataFrame loop (zero driver row limits) and
         compare labels with the driver path on the same graph."""
-        from resume_jd_matcher_spark.operators import cluster
         from resume_jd_matcher_spark.operators.cluster import (
             label_propagation_sync,
         )
@@ -68,7 +67,7 @@ class TestLabelPropagation:
             r["node"]: r["community"]
             for r in label_propagation_sync(sym, n_iter=4).collect()
         }
-        monkeypatch.setattr(cluster, "LOCAL_GRAPH_EDGES", 0)
+        spark_route()
         dist = {
             r["node"]: r["community"]
             for r in label_propagation_sync(sym, n_iter=4).collect()

@@ -142,7 +142,7 @@ def test_blas_large_probe_side_chunked(spark):
     assert out.filter(F.col("dist") == 0.0).count() == n_probes
 
 
-def test_blas_probe_ceiling_raises(spark):
+def test_blas_probe_ceiling_raises(spark, spark_route):
     from pyspark.sql import functions as F
 
     from resume_jd_matcher_spark.operators.similarity_blas import (
@@ -159,15 +159,9 @@ def test_blas_probe_ceiling_raises(spark):
     )
     import pytest as _pytest
 
-    from resume_jd_matcher_spark.operators import similarity_blas as sb
-
-    old = sb.MAX_PROBE_DRIVER_ROWS
-    try:
-        sb.MAX_PROBE_DRIVER_ROWS = 10
-        with _pytest.raises(ValueError, match="probe side"):
-            similarity_join_blas(left, right, threshold=1.0)
-    finally:
-        sb.MAX_PROBE_DRIVER_ROWS = old
+    spark_route()
+    with _pytest.raises(ValueError, match="probe side"):
+        similarity_join_blas(left, right, threshold=1.0)
 
 
 def test_blas_empty_probe_gives_no_rows(emb):
